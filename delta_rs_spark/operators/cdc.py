@@ -69,7 +69,7 @@ def can_fuse_cdc_write(snapshot: Snapshot) -> bool:
 
 
 def write_data_and_change_files(
-    df, table_path: str, part_cols: list[str], snapshot: Snapshot
+    df, table_path: str, part_cols: list[str], snapshot: Snapshot, validate=None
 ) -> tuple[list, list[AddCDCFile]]:
     """ONE Spark job writes a mutation's rewritten data files AND its
     change-data files from a single evaluation of ``df`` (guide §1.2 /
@@ -82,6 +82,10 @@ def write_data_and_change_files(
     writes both kinds of parquet files itself via pyarrow, so the input
     is scanned exactly once, nothing is persisted, and the mutation
     pays one write job instead of two.
+
+    ``validate`` (no-arg callable) runs after the job has written every
+    file into staging and before any file leaves it; if it raises, the
+    staging directory is discarded and the error propagates.
 
     Returns (data Adds with footer stats, AddCDCFiles). Layout is
     byte-compatible with write_files + write_change_data: data files in
@@ -114,35 +118,31 @@ def write_data_and_change_files(
         phys = cmap.logical_to_physical(schema)
         part_cols = [phys.get(c, c) for c in part_cols]
 
-    work = df
     pv_names: list[str] = []
-    if not part_cols:
-        # Size-adaptive output partitioning (guide §6, r13): mutation
-        # frames are usually PERSISTED upstream (the merge's acted
-        # frame, the sync gates' change batches), and a cached plan's
-        # partitioning is the one thing AQE cannot re-coalesce — a
-        # 1-file MERGE was emitting 32+1 tiny files (one per cache
-        # partition). REBALANCE re-splits by the advisory partition
-        # size: tiny rewrites collapse to one file, 100 TB rewrites
-        # split to advisory-sized files. Round-robin rebalance sorts
-        # before repartitioning (SPARK-23207), so task retries stay
-        # deterministic.
-        work = work.hint("rebalance")
     if part_cols:
         # co-locate each partition's rows into few tasks (same map-side
         # file-count control as write_files) and carry the DIRECTORY
         # string form of every partition value alongside the row — the
         # Delta serialization of a partition value is its SQL string
         # cast, which Spark's k=v readers parse back
-        work = work.repartition(*[F.col(f"`{c}`") for c in part_cols])
         pv_names = [f"__pv_{i}" for i in range(len(part_cols))]
-        work = work.select(
+        work = df.repartition(*[F.col(f"`{c}`") for c in part_cols]).select(
             "*",
             *[
                 F.col(f"`{c}`").cast("string").alias(n)
                 for c, n in zip(part_cols, pv_names)
             ],
         )
+    else:
+        # Size-adaptive output partitioning (guide §6): a frame read
+        # from a cache keeps one partition per cached block, which AQE
+        # cannot re-coalesce (a 1-file MERGE over a pinned frame once
+        # emitted 32+1 tiny files). REBALANCE re-splits by the advisory
+        # partition size: tiny rewrites collapse to one file, 100 TB
+        # rewrites split to advisory-sized files. Round-robin rebalance
+        # sorts before repartitioning (SPARK-23207), so task retries
+        # stay deterministic.
+        work = df.hint("rebalance")
 
     stage = os.path.join(table_path, f"_staging_fused_{uuid.uuid4().hex}")
     os.makedirs(stage, exist_ok=True)
@@ -238,6 +238,8 @@ def write_data_and_change_files(
     moved_data: list[tuple[str, str, dict[str, str | None]]] = []
     cdc_actions: list[AddCDCFile] = []
     try:
+        if validate is not None:
+            validate()
         for r in file_rows:
             pv_list = _json.loads(r["pv"])
             part_vals = dict(zip(part_cols, pv_list))

@@ -1,26 +1,31 @@
-"""MERGE INTO — clause builder + two-job execution.
+"""MERGE INTO — clause builder + execution.
 
 Mirrors the reference's merge operation (reference:
 crates/core/src/operations/merge/mod.rs — full outer join :1022, ordered
 WHEN clauses compiled to a CASE action column :1214-1216,1287-1402;
-python surface python/deltalake/table.py:1403-1851) with delta-spark's
-two-job physical shape, which is the scalable strategy on Spark:
+python surface python/deltalake/table.py:1403-1851). Execution has three
+phases:
 
-* job A (insert path): source LEFT ANTI join target-candidates on the
-  join predicate -> ordered not-matched clause predicates -> insert rows.
-* job B (rewrite path): target rows from *rewrite files only* LEFT OUTER
-  join source -> ordered CASE over matched / not-matched-by-source
-  clauses -> copy/update/delete per row.
+* early filter (merge/filter.rs): one aggregation over the source gives
+  min/max (or the distinct partition values) of the equi-join keys, and
+  the target files are pruned by stats/partitions to the candidates;
+* touched-file discovery (merge/barrier.rs): candidates INNER JOIN source
+  yields the files holding at least one match — files with zero matched
+  rows are never rewritten. With not-matched-by-source clauses every file
+  is a rewrite file (those clauses touch unmatched target rows anywhere);
+* one write pass: target rows of the rewrite files FULL OUTER JOIN the
+  source (left outer without not-matched clauses; the source alone, or
+  anti-joined to the candidates for insert-only merges, when no target
+  row can match), a CASE action per row, one window per target row that
+  picks the winning pair, and ``observe()`` for duplicate-match
+  validation (merge/validation.rs) plus the per-action counts. One
+  ``inline()`` emits each row's data row and, with change data feed, its
+  change rows; the writer consumes the frame once, and the validation
+  runs after its files land in staging and before any leaves it.
 
-Rewrite files are chosen like the reference's early filter + MergeBarrier
-(merge/filter.rs, merge/barrier.rs): source min/max over equi-join keys
-prune target files by stats/partitions; files with zero matched rows are
-never rewritten. When not-matched-by-source clauses exist every file is
-a rewrite file (those clauses touch unmatched target rows anywhere).
-
-Duplicate-match validation (merge/validation.rs): if any target row
-matches more than one source row while matched update/delete clauses
-exist, the merge errors out.
+Duplicate-match validation: if any target row matches more than one
+source row while matched update/delete clauses exist, the merge errors
+out and nothing is committed.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
 
 from delta_rs_spark.log import commit as commit_mod
@@ -50,9 +55,14 @@ _ACTION = "__delta_rs_action"
 _TMARK = "__delta_rs_t"
 _SMARK = "__delta_rs_s"
 _TID = "__delta_rs_tid"
+_SID = "__delta_rs_sid"
 _CLS = "__delta_rs_match_cls"
+_BAD = "__delta_rs_bad"
 
-COPY, DELETE = -1, -2
+# action codes below 0; clause i (matched, then not-matched-by-source,
+# then not-matched) has code i. SKIP: a source-only row no insert
+# clause takes
+COPY, DELETE, SKIP = -1, -2, -3
 # duplicate-match participation classes (reference merge/mod.rs:561)
 _CLS_IGNORE, _CLS_NOOP, _CLS_UNCOND_DELETE, _CLS_ACTION = 0, 1, 2, 3
 
@@ -78,10 +88,11 @@ def _sql_literal(v: Any) -> str:
 
 
 def _recompute_generated(df: DataFrame, schema, cols: list[str], coded_clauses) -> DataFrame:
-    """Recompute generated columns on rows an update clause touched,
-    unless that clause assigned the column explicitly — evaluated over the
-    post-update projection so generation expressions see new values
-    (reference: write/generated_columns.rs applied to merge)."""
+    """Compute generated columns on rows an update or insert clause
+    produced, unless that clause assigned the column explicitly —
+    evaluated over the post-clause projection so generation expressions
+    see new values (reference: write/generated_columns.rs applied to
+    merge)."""
     from delta_rs_spark.writer import GENERATION_KEY
 
     out = []
@@ -94,7 +105,7 @@ def _recompute_generated(df: DataFrame, schema, cols: list[str], coded_clauses) 
         recompute_codes = [
             code
             for code, cl in coded_clauses
-            if cl.kind == "update" and c not in (cl.updates or {})
+            if cl.kind in ("update", "insert") and c not in (cl.updates or {})
         ]
         if not recompute_codes:
             out.append(F.col(c))
@@ -593,8 +604,21 @@ class TableMerger:
         return " AND ".join(conj) if conj else None
 
     def execute(self) -> dict[str, Any]:
+        from delta_rs_spark.writer import _to_spark_df
+
+        # every frame pinned during the merge is released on all paths,
+        # a failed validation included
+        source_df = _to_spark_df(self.source, self.dt.spark).persist()
+        pins = [source_df]
+        try:
+            return self._execute(source_df, pins)
+        finally:
+            for p in pins:
+                p.unpersist()
+
+    def _execute(self, source_df: DataFrame, pins: list[DataFrame]) -> dict[str, Any]:
         from delta_rs_spark.table import read_snapshot_df
-        from delta_rs_spark.writer import _to_spark_df, write_files
+        from delta_rs_spark.writer import enforce_write_rules, write_files
 
         spark = self.dt.spark
         table_path = self.dt.table_uri
@@ -617,13 +641,7 @@ class TableMerger:
 
         _idents = _ident.identity_fields(schema)
 
-        source_df = _to_spark_df(self.source, spark)
         src_cols = set(source_df.columns)
-        source_df = source_df.persist()
-        # num_source_rows (metrics-only) rides the early-filter
-        # aggregation when that runs a complete pass (r12: was its own
-        # job); the fallback count at the end reads the cached blocks
-        num_source_rows: int | None = None
 
         schema_changed = False
         if self.merge_schema:
@@ -681,8 +699,9 @@ class TableMerger:
         )
         from delta_rs_spark.plans.column_mapping import snapshot_physical_of
 
+        # num_source_rows (metrics-only) rides the early-filter
+        # aggregation when that makes a complete pass
         early = self._strip_target_only_predicate(source_df, part_cols)
-        num_source_rows = self._n_source
         candidates = (
             prune_files(all_adds, early, part_cols, col_types, snapshot_physical_of(snapshot))
             if early
@@ -731,7 +750,6 @@ class TableMerger:
         else:
             rewrite_adds = []
 
-        # ---- job B: rewrite path ----------------------------------------
         # DV mode (delta.enableDeletionVectors=true): acted target rows
         # (updated/deleted) are DV-marked dead in place and only updated
         # rows are re-written; COPY rows stay in their files untouched —
@@ -742,402 +760,315 @@ class TableMerger:
             dv_write_enabled,
             group_rows_by_file,
         )
-
-        dv_mode = dv_write_enabled(snapshot)
-        # r13: fused data+CDC write — one job, one pass, no insert
-        # persist (falls back for variant columns / write rules)
-        fuse_cdc = cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot)
-        out_parts: list[DataFrame] = []
-        metrics_rows: dict[int, int] = {}
-        n_updated = n_deleted = n_copied = n_nmbs_updated = 0
-        acted = None
-        acted_pairs: list = []
         from delta_rs_spark.plans import row_tracking as _rt
 
+        dv_mode = dv_write_enabled(snapshot)
+        cdf_on = cdf_enabled(snapshot)
         rt_on = _rt.enabled(snapshot.configuration)
         _mat_id, _mat_ver = _rt.materialized_names(snapshot.configuration)
-        if rewrite_adds:
-            t_df = read_snapshot_df(
-                spark,
-                snapshot,
-                table_path,
-                files=rewrite_adds,
-                file_path_col="__delta_rs_fp" if (dv_mode or rt_on) else None,
-                row_index_col="__delta_rs_ri" if (dv_mode or rt_on) else None,
-                extra_physical_cols=[_mat_id, _mat_ver] if rt_on else None,
-            )
-            if rt_on:
-                # materialize every target row's CURRENT id/version; the
-                # rewrite projection below keeps the id for updated rows
-                # and nulls their version (reader falls back to this
-                # commit's defaultRowCommitVersion)
-                _fmap = _rt.file_map_df(spark, rewrite_adds, table_path)
-                t_df = (
-                    t_df.join(
-                        F.broadcast(_fmap),
-                        F.col("__delta_rs_fp") == F.col("__rt_fp"),
-                        "left",
-                    )
-                    .withColumn(
-                        _mat_id,
-                        F.coalesce(
-                            F.col(_mat_id),
-                            F.col("__rt_base") + F.col("__delta_rs_ri"),
-                        ),
-                    )
-                    .withColumn(
-                        _mat_ver, F.coalesce(F.col(_mat_ver), F.col("__rt_ver"))
-                    )
-                    .drop("__rt_fp", "__rt_base", "__rt_ver")
-                )
-                if not dv_mode:
-                    t_df = t_df.drop("__delta_rs_fp", "__delta_rs_ri")
-            for f in schema.fields:  # evolved columns read as NULL from old files
-                if f.name not in t_df.columns:
-                    t_df = t_df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            t_df = t_df.withColumn(_TMARK, F.lit(1)).withColumn(
-                _TID, F.monotonically_increasing_id()
-            )
-            s_df = source_df.withColumn(_SMARK, F.lit(1))
-            if self.matched:
-                joined = t_df.alias(t).join(
-                    s_df.alias(s), F.expr(self.predicate), "left_outer"
-                )
-            else:
-                # nmbs-only merge: clauses read target columns only, so a
-                # semi/anti split keeps exactly one row per target row — a
-                # left_outer join would duplicate targets matched by
-                # multiple source rows (allowed without matched clauses)
-                tt = t_df.alias(t)
-                ss = s_df.alias(s)
-                sem = tt.join(ss, F.expr(self.predicate), "left_semi").withColumn(
-                    _SMARK, F.lit(1)
-                )
-                ant = tt.join(ss, F.expr(self.predicate), "left_anti").withColumn(
-                    _SMARK, F.lit(None).cast("int")
-                )
-                joined = sem.unionByName(ant).alias(t)
+        hidden = [_mat_id, _mat_ver] if rt_on else []
 
-            matched_cond = F.col(_SMARK).isNotNull()
-            action = None
-            # (condition, action code, participation class): the class
-            # drives duplicate-match validation (reference
-            # merge/mod.rs:561 MatchParticipationClass + validation.rs):
-            # per target row, >1 ACTION pairs — or an ACTION alongside an
-            # UNCONDITIONAL DELETE — is ambiguous and errors; duplicate
-            # no-ops and duplicate unconditional deletes are deterministic
-            # and collapse to one winner instead.
-            branches: list[tuple[Column, int, int]] = []
-            code = 0
-            coded_clauses: list[tuple[int, _Clause]] = []
-            for cl in self.matched:
-                cond = matched_cond
-                if cl.predicate:
-                    cond = cond & F.expr(cl.predicate)
-                if cl.kind == "delete":
-                    cls_v = _CLS_UNCOND_DELETE if cl.predicate is None else _CLS_ACTION
-                else:
-                    cls_v = _CLS_ACTION
+        # ---- the write frame (see the module docstring) -----------------
+        # A source row matches target rows only inside the rewrite files
+        # (every match pair lives in a touched file; with
+        # not-matched-by-source clauses they are the whole table), so the
+        # join's source-only rows are exactly the not-matched rows.
+        is_t = F.col(_TMARK).isNotNull()
+        matched_cond = is_t & F.col(_SMARK).isNotNull()
+        # (condition, action code, participation class): the class
+        # drives duplicate-match validation (reference
+        # merge/mod.rs:561 MatchParticipationClass + validation.rs):
+        # per target row, >1 ACTION pairs — or an ACTION alongside an
+        # UNCONDITIONAL DELETE — is ambiguous and errors; duplicate
+        # no-ops and duplicate unconditional deletes are deterministic
+        # and collapse to one winner instead. Not-matched-by-source
+        # and insert rows occur once per key, so they never conflict.
+        branches: list[tuple[Column, int, int]] = []
+        coded_clauses: list[tuple[int, _Clause]] = []
+        groups = (
+            (matched_cond, self.matched),
+            (is_t & ~matched_cond, self.not_matched_by_source),
+            (~is_t, self.not_matched),
+        )
+        for gi, (base, clauses) in enumerate(groups):
+            for cl in clauses:
+                code = len(coded_clauses)
+                cond = base & F.expr(cl.predicate) if cl.predicate else base
+                cls_v = _CLS_IGNORE
+                if gi == 0:
+                    uncond_delete = cl.kind == "delete" and cl.predicate is None
+                    cls_v = _CLS_UNCOND_DELETE if uncond_delete else _CLS_ACTION
                 branches.append((cond, DELETE if cl.kind == "delete" else code, cls_v))
                 coded_clauses.append((code, cl))
-                code += 1
-            for cl in self.not_matched_by_source:
-                cond = ~matched_cond
-                if cl.predicate:
-                    cond = cond & F.expr(cl.predicate)
-                # nmbs pairs can't duplicate (one row per unmatched target)
-                branches.append((cond, DELETE if cl.kind == "delete" else code, _CLS_IGNORE))
-                coded_clauses.append((code, cl))
-                code += 1
+        action = F.when(is_t, F.lit(COPY)).otherwise(F.lit(SKIP))
+        cls = F.when(matched_cond, F.lit(_CLS_NOOP)).otherwise(F.lit(_CLS_IGNORE))
+        for cond, c, cls_v in reversed(branches):
+            action = F.when(cond, F.lit(c)).otherwise(action)
+            cls = F.when(cond, F.lit(cls_v)).otherwise(cls)
 
-            action = F.lit(COPY)
-            cls = F.when(matched_cond, F.lit(_CLS_NOOP)).otherwise(F.lit(_CLS_IGNORE))
-            for cond, c, cls_v in reversed(branches):
-                action = F.when(cond, F.lit(c)).otherwise(action)
-                cls = F.when(cond, F.lit(cls_v)).otherwise(cls)
-            acted = joined.withColumn(_ACTION, action).withColumn(_CLS, cls).persist()
-            live = acted
+        upd_codes = [c for c, cl in coded_clauses if cl.kind == "update"]
+        ins_codes = [c for c, cl in coded_clauses if cl.kind == "insert"]
+        matched_upd_codes = [
+            c for c, cl in coded_clauses[: len(self.matched)] if cl.kind == "update"
+        ]
 
-            if self.matched:
-                # ONE job computes duplicate-match validation AND the
-                # per-action winner counts (r12: these were two separate
-                # passes over the persisted frame). Per target row:
-                # winner = the max-(_CLS, _ACTION) pair — deterministic,
-                # because rows tying on _CLS always carry the same
-                # action (NOOP rows are all COPY, unconditional-delete
-                # rows all DELETE, and two distinct ACTION codes on one
-                # row is exactly the ambiguity error below).
-                per_tid = acted.groupBy(_TID).agg(
-                    F.max(F.struct(F.col(_CLS), F.col(_ACTION))).alias("__w"),
-                    F.sum((F.col(_CLS) == _CLS_ACTION).cast("int")).alias("__na"),
-                    F.sum(
-                        (F.col(_CLS) == _CLS_UNCOND_DELETE).cast("int")
-                    ).alias("__nu"),
+        def _is(codes) -> Column:
+            return F.col(_ACTION).isin(*codes) if codes else F.lit(False)
+
+        tally: dict[int, int] = {}
+        acted_pairs: list = []
+        new_adds: list[Add] = []
+        cdc_actions: list = []
+        has_target = bool(rewrite_adds)
+        if has_target or self.not_matched:
+            if has_target:
+                t_df = read_snapshot_df(
+                    spark,
+                    snapshot,
+                    table_path,
+                    files=rewrite_adds,
+                    file_path_col="__delta_rs_fp" if (dv_mode or rt_on) else None,
+                    row_index_col="__delta_rs_ri" if (dv_mode or rt_on) else None,
+                    extra_physical_cols=hidden or None,
                 )
-                summary = (
-                    per_tid.groupBy(F.col(f"__w.{_ACTION}").alias(_ACTION))
-                    .agg(
-                        F.count(F.lit(1)).alias("count"),
-                        F.max(
-                            (
-                                (F.col("__na") > 1)
-                                | ((F.col("__na") > 0) & (F.col("__nu") > 0))
-                            ).cast("int")
-                        ).alias("__bad"),
+                if rt_on:
+                    # materialize every target row's CURRENT id/version;
+                    # the projection below keeps the id for updated rows
+                    # and nulls their version (reader falls back to this
+                    # commit's defaultRowCommitVersion)
+                    _fmap = _rt.file_map_df(spark, rewrite_adds, table_path)
+                    t_df = (
+                        t_df.join(
+                            F.broadcast(_fmap),
+                            F.col("__delta_rs_fp") == F.col("__rt_fp"),
+                            "left",
+                        )
+                        .withColumn(
+                            _mat_id,
+                            F.coalesce(
+                                F.col(_mat_id),
+                                F.col("__rt_base") + F.col("__delta_rs_ri"),
+                            ),
+                        )
+                        .withColumn(
+                            _mat_ver, F.coalesce(F.col(_mat_ver), F.col("__rt_ver"))
+                        )
+                        .drop("__rt_fp", "__rt_base", "__rt_ver")
                     )
-                    .collect()
+                for f in schema.fields:  # evolved columns read as NULL from old files
+                    if f.name not in t_df.columns:
+                        t_df = t_df.withColumn(f.name, F.lit(None).cast(f.dataType))
+            else:
+                # no target row can match, so the target side is empty
+                # (limit 0: the optimizer drops the join against it): with
+                # matched clauses the early filter and the empty discovery
+                # join prove it; an insert-only merge first anti-joins the
+                # source against the candidate files
+                t_df = spark.range(1).select(
+                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields],
+                    *[F.lit(None).cast("long").alias(h) for h in hidden],
+                ).limit(0)
+            src = source_df
+            if not (self.matched or self.not_matched_by_source) and candidates:
+                src = source_df.alias(s).join(
+                    read_snapshot_df(spark, snapshot, table_path, files=candidates).alias(t),
+                    F.expr(self.predicate),
+                    "left_anti",
                 )
-                if any(r["__bad"] for r in summary):
-                    raise MergeError(
-                        "MERGE matched a target row with multiple source rows "
-                        "that satisfy duplicate relevant WHEN MATCHED clauses"
-                    )
-                counts = {r[_ACTION]: r["count"] for r in summary}
+            joined = (
+                t_df.withColumn(_TMARK, F.lit(1))
+                .withColumn(_TID, F.monotonically_increasing_id())
+                .alias(t)
+                .join(
+                    src.withColumn(_SMARK, F.lit(1))
+                    .withColumn(_SID, F.monotonically_increasing_id())
+                    .alias(s),
+                    F.expr(self.predicate),
+                    "full_outer" if self.not_matched else "left_outer",
+                )
+            )
+
+            frame = joined.withColumn(_ACTION, action).withColumn(_CLS, cls)
+            if has_target:
                 # winner per target row: the acting pair if any, else one
                 # no-op pair (all no-op/unconditional-delete winners
-                # produce identical output rows, so the tie is immaterial)
-                win = W.partitionBy(_TID).orderBy(F.desc(_CLS))
-                live = (
-                    live.withColumn("__rn", F.row_number().over(win))
+                # produce identical output rows, so the tie is
+                # immaterial). Rows tying on _CLS carry the same action,
+                # except two ACTION pairs — exactly the error flagged.
+                # Source-only rows key on their own id, so they do not
+                # all land in one window partition.
+                win = W.partitionBy(
+                    F.col(_TID), F.when(F.col(_TID).isNull(), F.col(_SID))
+                ).orderBy(F.desc(_CLS))
+                whole = win.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+                n_act = F.sum((F.col(_CLS) == _CLS_ACTION).cast("int")).over(whole)
+                n_ud = F.sum((F.col(_CLS) == _CLS_UNCOND_DELETE).cast("int")).over(whole)
+                frame = (
+                    frame.select(
+                        "*",
+                        F.row_number().over(win).alias("__rn"),
+                        ((n_act > 1) | ((n_act > 0) & (n_ud > 0))).alias(_BAD),
+                    )
                     .filter(F.col("__rn") == 1)
                     .drop("__rn")
                 )
             else:
-                counts = None
+                frame = frame.withColumn(_BAD, F.lit(False))
+            tallied = [COPY, DELETE, *upd_codes, *ins_codes]
+            obs = Observation()
+            frame = frame.observe(
+                obs,
+                F.max(F.col(_BAD).cast("int")).alias("bad"),
+                *[
+                    F.sum((F.col(_ACTION) == c).cast("long")).alias(f"n{i}")
+                    for i, c in enumerate(tallied)
+                ],
+            )
 
-            if dv_mode:
+            def check() -> None:
+                """Runs once the frame's first action has finished —
+                before any written file leaves staging."""
+                got = obs.get
+                if got["bad"]:
+                    raise MergeError(
+                        "MERGE matched a target row with multiple source rows "
+                        "that satisfy duplicate relevant WHEN MATCHED clauses"
+                    )
+                tally.update({c: int(got[f"n{i}"] or 0) for i, c in enumerate(tallied)})
+
+            if dv_mode and has_target:
                 # rows the merge acts on die in place; collect their
-                # physical addresses for DV marking (O(rows acted on))
+                # physical addresses for DV marking (O(rows acted on)).
+                # This collect is the frame's second consumer, so the
+                # frame is pinned; being the first action, it also
+                # carries the validation
+                frame = frame.persist()
+                pins.append(frame)
                 acted_pairs = (
-                    live.filter(F.col(_ACTION) != COPY)
+                    frame.filter(is_t & (F.col(_ACTION) != COPY))
                     .groupBy(F.col("__delta_rs_fp").alias("fp"))
                     .agg(F.collect_list("__delta_rs_ri").alias("ris"))
                     .collect()
                 )
-            if counts is None:
-                counts = {
-                    r[_ACTION]: r["count"]
-                    for r in live.groupBy(_ACTION).count().collect()
-                }
-            n_deleted = sum(
-                v for k, v in counts.items() if k == DELETE
-            )
-            upd_codes = {c for c, cl in coded_clauses if cl.kind == "update"}
-            matched_upd_codes = {c for c, cl in coded_clauses[: len(self.matched)] if cl.kind == "update"}
-            n_updated = sum(v for k, v in counts.items() if k in matched_upd_codes)
-            n_nmbs_updated = sum(v for k, v in counts.items() if k in upd_codes - matched_upd_codes)
-            n_copied = counts.get(COPY, 0)
+                check()
 
+            # per row: the data row (copy / postimage / insert) and, with
+            # CDF, the preimage or delete row — one generator, one pass
             proj = []
             for c in cols:
                 col_expr = F.col(f"{t}.`{c}`")
                 for code_i, cl in reversed(coded_clauses):
-                    if cl.kind == "update":
-                        upd = cl.updates or {}
-                        if c in upd:
-                            # cast INSIDE the branch: when/otherwise
-                            # coerces mismatched branch types with an
-                            # implicit strict cast, which would bypass
-                            # the safe (try_cast) mode
-                            col_expr = F.when(
-                                F.col(_ACTION) == code_i,
-                                self._out_cast(F.expr(upd[c]), schema[c]),
-                            ).otherwise(col_expr)
+                    upd = cl.updates or {}
+                    if c in upd or cl.kind == "insert":
+                        # cast INSIDE the branch: when/otherwise coerces
+                        # mismatched branch types with an implicit strict
+                        # cast, which would bypass the safe (try_cast) mode
+                        col_expr = F.when(
+                            F.col(_ACTION) == code_i,
+                            self._out_cast(
+                                F.expr(upd[c]) if c in upd else F.lit(None), schema[c]
+                            ),
+                        ).otherwise(col_expr)
                 proj.append(col_expr.cast(schema[c].dataType).alias(c))
-            out_flt = F.col(_ACTION) != DELETE
-            if dv_mode:  # COPY rows stay in their (DV'd) files
-                out_flt = out_flt & (F.col(_ACTION) != COPY)
-            proj_rt = []
             if rt_on:
-                _is_upd = (
-                    F.col(_ACTION).isin(*upd_codes) if upd_codes else F.lit(False)
-                )
-                proj_rt = [
+                proj += [
                     F.col(f"{t}.`{_mat_id}`").alias(_mat_id),
-                    F.when(_is_upd, F.lit(None).cast("long"))
+                    F.when(_is(upd_codes), F.lit(None).cast("long"))
                     .otherwise(F.col(f"{t}.`{_mat_ver}`"))
                     .alias(_mat_ver),
                 ]
-            rewritten = live.filter(out_flt).select(
-                *proj, *proj_rt, F.col(_ACTION)
-            )
-            rewritten = _recompute_generated(
-                rewritten, schema, cols, coded_clauses
-            )
-            if fuse_cdc:
-                # r13 (VERDICT r12 #2): tag the rewrite rows for the
-                # fused single-job writer — updated rows are
-                # update_postimage (routed to data files AND
-                # _change_data/), everything else NULL (data only)
-                rewritten = rewritten.withColumn(
-                    CHANGE_TYPE_COL,
-                    F.when(
-                        F.col(_ACTION).isin(*upd_codes), F.lit("update_postimage")
-                    ).otherwise(F.lit(None).cast("string"))
-                    if upd_codes
-                    else F.lit(None).cast("string"),
-                )
-            rewritten = rewritten.drop(_ACTION)
-            out_parts.append(rewritten)
-
-            if cdf_enabled(snapshot):
-                t_proj = [F.col(f"{t}.`{c}`").alias(c) for c in cols]
-                deleted_cdf = live.filter(F.col(_ACTION) == DELETE).select(*t_proj).withColumn(
-                    CHANGE_TYPE_COL, F.lit("delete")
-                )
-                upd_filter = F.col(_ACTION).isin(*upd_codes) if upd_codes else F.lit(False)
-                pre = live.filter(upd_filter).select(*t_proj).withColumn(
-                    CHANGE_TYPE_COL, F.lit("update_preimage")
-                )
-                if fuse_cdc:
-                    # postimage rows ride the tagged rewrite (one
-                    # evaluation serves both sinks); delete/preimage
-                    # rows join the same fused frame — align hidden
-                    # row-tracking columns for the union (the writer
-                    # drops them from change files anyway)
-                    if rt_on:
-                        for _h in (_mat_id, _mat_ver):
-                            deleted_cdf = deleted_cdf.withColumn(
-                                _h, F.lit(None).cast("long")
-                            )
-                            pre = pre.withColumn(_h, F.lit(None).cast("long"))
-                    self._cdf_parts = [deleted_cdf, pre]
-                else:
-                    post = live.filter(upd_filter).select(*proj).withColumn(
-                        CHANGE_TYPE_COL, F.lit("update_postimage")
-                    )
-                    self._cdf_parts = [deleted_cdf, pre, post]
-            else:
-                self._cdf_parts = []
-        else:
-            self._cdf_parts = []
-
-        # ---- job A: insert path -----------------------------------------
-        n_inserted = 0
-        insert_df = None
-        insert_persisted = False
-        if self.not_matched:
-            # r13 (VERDICT r12 #3, share the apply scan): when the
-            # rewrite pass ran, the persisted `acted` frame already
-            # holds every target row the anti-join could match against
-            # — rewrite_adds covers the touched files (every match pair
-            # lives in a touched file by definition, r12 #10b) and in
-            # the nmbs case the whole table; rows outside `candidates`
-            # satisfy the predicate for no source row (the early filter
-            # proves it), so anti-joining against acted's target rows
-            # is exactly equivalent to re-scanning the files — minus
-            # the scan. Only insert-only merges (no rewrite pass) still
-            # read the candidate files.
-            if acted is not None:
-                anti_tgt = acted.select(
-                    *[F.col(f"{t}.`{c}`").alias(c) for c in cols]
-                )
-            else:
-                anti_tgt = read_snapshot_df(
-                    spark, snapshot, table_path, files=candidates
-                )
-            unmatched_src = source_df.alias(s).join(
-                anti_tgt.alias(t), F.expr(self.predicate), "left_anti"
-            )
-            remaining = unmatched_src
-            pieces = []
-            for cl in self.not_matched:
-                sel = remaining
-                if cl.predicate:
-                    sel = remaining.filter(F.expr(cl.predicate))
-                    remaining = remaining.filter(~F.expr(cl.predicate).eqNullSafe(F.lit(True)))
-                else:
-                    remaining = remaining.limit(0)
-                upd = cl.updates or {}
-                proj = [
-                    self._out_cast(
-                        F.expr(upd[c]) if c in upd else F.lit(None), schema[c]
-                    ).alias(c)
-                    for c in cols
+            pre = [
+                F.col(f"{t}.`{c}`").cast(schema[c].dataType).alias(f"__pre{i}")
+                for i, c in enumerate(cols)
+            ] if cdf_on else []
+            out = frame.select(*proj, *pre, F.col(_ACTION))
+            out = _recompute_generated(out, schema, cols, coded_clauses)
+            for c in id_plan:
+                gen_codes = [
+                    code
+                    for code, cl in coded_clauses
+                    if cl.kind == "insert" and c not in (cl.updates or {})
                 ]
-                piece = sel.select(*proj)
-                # inserted rows: compute generated columns not set explicitly
-                from delta_rs_spark.writer import GENERATION_KEY
-
-                gen_missing = {
-                    c: (schema[c].metadata or {}).get(GENERATION_KEY)
-                    for c in cols
-                    if c not in upd and (schema[c].metadata or {}).get(GENERATION_KEY)
-                }
-                if gen_missing:
-                    piece = piece.select(
-                        *[
-                            F.expr(gen_missing[c]).cast(schema[c].dataType).alias(c)
-                            if c in gen_missing
-                            else F.col(c)
-                            for c in cols
-                        ]
-                    )
-                # identity generation is per CLAUSE: flag the rows this
-                # clause leaves unassigned (another clause may assign the
-                # same column explicitly under BY DEFAULT)
-                for c, info in id_plan.items():
-                    if not info["explicit"]:
-                        piece = piece.withColumn(
-                            f"__idgen_{c}", F.lit(c not in upd)
-                        )
-                pieces.append(piece)
-            insert_df = pieces[0]
-            for p_df in pieces[1:]:
-                insert_df = insert_df.unionByName(p_df)
-            for c, info in id_plan.items():
-                if info["explicit"]:
+                if not gen_codes:
                     continue
                 # same scheme as the write path (plans/identity.py):
                 # next-beyond-watermark + step * monotonically_increasing_id
-                # — unique under any runtime partition count (mid's
-                # partition ids span the whole union job), progression
-                # membership and >watermark by construction; the persist
-                # below pins the generated values before the write job
+                # — unique under any runtime partition count, progression
+                # membership and >watermark by construction; the frame is
+                # evaluated once, so data and change rows agree
                 start, step, hwm, _allow = _ident._params(schema[c])
                 nxt = start if hwm is None else hwm + step
                 gen = (
                     F.lit(nxt) + F.lit(step) * F.monotonically_increasing_id()
                 ).cast(schema[c].dataType)
-                insert_df = insert_df.withColumn(
-                    c,
-                    F.when(F.col(f"__idgen_{c}"), gen).otherwise(F.col(f"`{c}`")),
-                ).drop(f"__idgen_{c}")
-            if rt_on and out_parts:
-                # the rewrite part carries materialized columns; inserted
-                # rows take NULLs — fresh ids from the new file's base
-                insert_df = insert_df.withColumn(
-                    _mat_id, F.lit(None).cast("long")
-                ).withColumn(_mat_ver, F.lit(None).cast("long"))
-            if fuse_cdc:
-                # r13: the fused writer routes "insert"-tagged rows to
-                # BOTH sinks from one evaluation — no persist, no
-                # second job (identity generation stays deterministic:
-                # the frame is evaluated exactly once)
-                insert_df = insert_df.withColumn(
-                    CHANGE_TYPE_COL, F.lit("insert")
+                out = out.withColumn(
+                    c, F.when(_is(gen_codes), gen).otherwise(F.col(f"`{c}`"))
                 )
-                out_parts.append(insert_df)
-            elif cdf_enabled(snapshot):
-                # fallback: the CDF branch evaluates the insert frame a
-                # second time — persist pins it (and any generated
-                # identity values) across the two write jobs; without
-                # CDF the frame is consumed exactly once inside the
-                # write job, so neither a persist nor the r11 count job
-                # is needed (n_inserted derives from the written files'
-                # stats)
-                insert_df = insert_df.persist()
-                insert_persisted = True
-                out_parts.append(insert_df)
-                self._cdf_parts.append(
-                    insert_df.drop(_mat_id, _mat_ver).withColumn(
-                        CHANGE_TYPE_COL, F.lit("insert")
-                    )
+
+            keep = ~F.col(_ACTION).isin(DELETE, SKIP)
+            if dv_mode:  # COPY rows stay in their (DV'd) files
+                keep = keep & (F.col(_ACTION) != COPY)
+            data_cols = [F.col(f"`{c}`") for c in cols + hidden]
+            if cdf_on:
+                tag = (
+                    F.when(_is(upd_codes), F.lit("update_postimage"))
+                    .when(_is(ins_codes), F.lit("insert"))
+                    .otherwise(F.lit(None).cast("string"))
+                )
+                pre_tag = F.when(F.col(_ACTION) == DELETE, F.lit("delete")).when(
+                    _is(upd_codes), F.lit("update_preimage")
+                )
+                rows = F.array(
+                    F.when(keep, F.struct(*data_cols, tag.alias(CHANGE_TYPE_COL))),
+                    F.when(
+                        pre_tag.isNotNull(),
+                        F.struct(
+                            *[F.col(f"__pre{i}").alias(c) for i, c in enumerate(cols)],
+                            *[F.lit(None).cast("long").alias(h) for h in hidden],
+                            pre_tag.alias(CHANGE_TYPE_COL),
+                        ),
+                    ),
+                )
+                out = out.select(F.inline(F.filter(rows, lambda r: r.isNotNull())))
+            else:
+                out = out.filter(keep).select(*data_cols)
+
+            if cdf_on and can_fuse_cdc_write(snapshot):
+                # ONE job writes data + change files from one pass
+                new_adds, cdc_actions = write_data_and_change_files(
+                    out, table_path, part_cols, snapshot, validate=check
                 )
             else:
-                out_parts.append(insert_df)
+                data = out
+                if cdf_on:
+                    # two writes read the frame: pin it, so both see the
+                    # same evaluation (identity values included)
+                    out = out.persist()
+                    pins.append(out)
+                    ct = F.col(CHANGE_TYPE_COL)
+                    data = out.filter(
+                        ct.isNull() | ~ct.isin("delete", "update_preimage")
+                    ).drop(CHANGE_TYPE_COL)
+                checked = enforce_write_rules(data, snapshot)
+                if checked is not data:
+                    pins.append(checked)
+                # a cached input keeps its cache partitioning (cached
+                # plans defeat AQE coalescing) — rebalance unpartitioned
+                # writes to size-adaptive output files (guide §6;
+                # partitioned writes get the same control from
+                # write_files' repartition)
+                new_adds = write_files(
+                    checked if part_cols else checked.hint("rebalance"),
+                    table_path,
+                    part_cols,
+                    validate=check,
+                )
+                if cdf_on:
+                    cdc_actions = write_change_data(
+                        out.filter(F.col(CHANGE_TYPE_COL).isNotNull()), table_path
+                    )
 
-        # ---- write + commit ---------------------------------------------
+        # ---- commit -----------------------------------------------------
         actions: list = []
         if schema_changed:
             from delta_rs_spark.log.actions import Metadata
@@ -1154,38 +1085,7 @@ class TableMerger:
                     created_time=meta.created_time,
                 )
             )
-        new_adds: list[Add] = []
-        fused_cdc_actions: list = []
-        if out_parts:
-            result = out_parts[0]
-            for p_df in out_parts[1:]:
-                result = result.unionByName(p_df)
-            if fuse_cdc:
-                # ONE job writes data + change files from one pass over
-                # the (cached) acted frame and the insert frame; the
-                # delete/preimage branches union in as CDC-only rows
-                for p_df in self._cdf_parts:
-                    result = result.unionByName(p_df)
-                self._cdf_parts = []
-                new_adds, fused_cdc_actions = write_data_and_change_files(
-                    result, table_path, part_cols, snapshot
-                )
-            else:
-                from delta_rs_spark.writer import enforce_write_rules
-
-                result = enforce_write_rules(result, snapshot)
-                try:
-                    # unpartitioned rewrites inherit the persisted acted
-                    # frame's cache partitioning (32 tiny files per
-                    # merge at local shuffle counts; cached plans defeat
-                    # AQE coalescing) — rebalance to size-adaptive
-                    # output files (guide §6; partitioned writes get the
-                    # same control from write_files' repartition)
-                    out_df = result if part_cols else result.hint("rebalance")
-                    new_adds = write_files(out_df, table_path, part_cols)
-                finally:
-                    result.unpersist()
-            actions.extend(new_adds)
+        actions.extend(new_adds)
         if id_plan and new_adds:
             # advance each written identity column's high watermark in
             # the SAME commit (writer.py does the same for appends) —
@@ -1218,13 +1118,7 @@ class TableMerger:
                             created_time=meta.created_time,
                         )
                     )
-        if fused_cdc_actions:
-            actions.extend(fused_cdc_actions)
-        if self._cdf_parts:
-            cdf_all = self._cdf_parts[0]
-            for p_df in self._cdf_parts[1:]:
-                cdf_all = cdf_all.unionByName(p_df)
-            actions.extend(write_change_data(cdf_all, table_path))
+        actions.extend(cdc_actions)
 
         ts = now_ms()
         if dv_mode:
@@ -1235,7 +1129,6 @@ class TableMerger:
             removes, dv_readds, _ = dv_mark_rows(table_path, by_rel, rewrite_adds, ts)
             actions.extend(removes)
             actions.extend(dv_readds)
-            n_copied = 0  # nothing is rewritten in DV mode
         else:
             removes = [
                 Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
@@ -1243,29 +1136,23 @@ class TableMerger:
             ]
             actions.extend(removes)
 
+        num_source_rows = self._n_source
         if num_source_rows is None:
-            # early filter never made a complete source pass; the frame
-            # is cached by now, so this is a cheap cached count
+            # the early filter never made a complete source pass; the
+            # source is cached, so this is a cheap cached count
             num_source_rows = source_df.count()
-        if insert_df is not None:
-            # r12: the dedicated insert-count job is gone — the written
-            # files' footer stats already hold the total output row
-            # count, and the rewrite path's exact per-action counts say
-            # how many of those rows it contributed (in DV mode COPY
-            # rows stay in place and n_copied is already zeroed above)
-            if all(a.num_records() is not None for a in new_adds):
-                n_inserted = sum(a.num_records() for a in new_adds) - (
-                    int(n_copied) + int(n_updated) + int(n_nmbs_updated)
-                )
-            else:  # footer stats unavailable — fall back to counting
-                n_inserted = insert_df.count()
+        n_updated = sum(tally.get(c, 0) for c in matched_upd_codes)
         metrics = {
             "num_source_rows": num_source_rows,
-            "num_target_rows_inserted": int(n_inserted),
-            "num_target_rows_updated": int(n_updated),
-            "num_target_rows_deleted": int(n_deleted),
-            "num_target_rows_copied": int(n_copied),
-            "num_target_rows_updated_by_source_miss": int(n_nmbs_updated),
+            "num_target_rows_inserted": sum(tally.get(c, 0) for c in ins_codes),
+            "num_target_rows_updated": n_updated,
+            "num_target_rows_deleted": tally.get(DELETE, 0),
+            # in DV mode nothing is rewritten: COPY rows stay in place
+            "num_target_rows_copied": 0 if dv_mode else tally.get(COPY, 0),
+            "num_target_rows_updated_by_source_miss": sum(
+                tally.get(c, 0) for c in upd_codes
+            )
+            - n_updated,
             "num_target_files_added": len(new_adds),
             "num_target_files_removed": len(removes),
             # early-filter visibility (reference mod.rs:691-693): how many
@@ -1297,14 +1184,13 @@ class TableMerger:
             },
             operation_metrics=metrics,
         )
-        # the read set is every CANDIDATE file (the insert anti-join scans
-        # them and file selection consults their stats), not just the
-        # rewritten ones; with not_matched_by_source clauses or no early
-        # filter the whole table was read (ADVICE r01: a concurrent DELETE
-        # of a scanned-but-not-rewritten file must raise
+        # the read set is every CANDIDATE file (touched-file discovery or
+        # the insert-only anti-join scans them, and file selection
+        # consults their stats), not just the rewritten ones; with
+        # not_matched_by_source clauses or no early filter the whole table
+        # was read (ADVICE r01: a concurrent DELETE of a
+        # scanned-but-not-rewritten file must raise
         # ConcurrentDeleteReadError)
-        from delta_rs_spark.plans import row_tracking as _rt
-
         txn = TransactionInfo(
             blind_append=False,
             read_files={a.path for a in candidates},
@@ -1325,10 +1211,5 @@ class TableMerger:
             post_commit=self.post_commithook_properties,
         )
 
-        source_df.unpersist()
-        if acted is not None:
-            acted.unpersist()
-        if insert_persisted:
-            insert_df.unpersist()
         self.dt.refresh()
         return metrics

@@ -241,13 +241,17 @@ def write_files(
     configuration: dict[str, str] | None = None,
     table_schema_json: str | None = None,
     preserve_layout: bool = False,
+    validate=None,
 ) -> list[Add]:
     """Write df as parquet files into the table directory; return Adds.
 
     ``target_file_size`` (bytes — reference write_deltalake arg) is
     honored via maxRecordsPerFile with a sampled bytes/row estimate;
     ``writer_properties`` maps onto Spark parquet writer options
-    (see properties.WriterProperties.spark_write_options)."""
+    (see properties.WriterProperties.spark_write_options).
+    ``validate`` (no-arg callable) runs after the Spark job has written
+    the staging directory and before any file leaves it; if it raises,
+    the staging directory is discarded and the error propagates."""
     from delta_rs_spark.plans import column_mapping as cmap
 
     # resolve table config up front: column-mapped tables write PHYSICAL
@@ -299,6 +303,12 @@ def write_files(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(stage)
+    if validate is not None:
+        try:
+            validate()
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
 
     adds: list[Add] = []
     moved: list[tuple[str, str, dict[str, str | None]]] = []  # (abs, rel, partvals)

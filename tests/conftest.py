@@ -38,3 +38,23 @@ def sample_df(spark):
 @pytest.fixture(scope="session")
 def lineitem(spark):
     return spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, Spark jobs it ran)``.
+
+    Jobs are attributed by job-id range — every job newer than the
+    newest one seen before the call — read from the status store after
+    the listener bus drains, the same method as perfbench's tracer. Job
+    groups are not used, so a group set inside the package cannot hide a
+    job."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+
+    seen = max(job_ids(), default=-1)
+    out = fn()
+    return out, sum(1 for j in job_ids() if j > seen)

@@ -1,8 +1,11 @@
-"""r12 merge internals: num_source_rows rides the early-filter
-aggregation when that pass is complete, and falls back to a cached
-count otherwise; the duplicate-match validation and winner counts are
-one aggregation. These tests pin the METRIC VALUES through every
-branch so the fusion can never drift them."""
+"""MERGE internals: num_source_rows rides the early-filter aggregation
+when that pass is complete, and falls back to a cached count otherwise;
+duplicate-match validation and the per-action counts ride the write
+frame's observe(). These tests pin the METRIC VALUES through every
+branch so the fusion can never drift them, and pin that a failed
+validation leaves nothing behind."""
+
+import os
 
 import pytest
 
@@ -73,24 +76,125 @@ def test_source_count_fallback_without_equi_pairs(spark, target):
     assert m["num_target_rows_inserted"] == 3
 
 
-def test_duplicate_match_validation_still_raises(spark, target):
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _tree(root):
+    """Every file under the table root, and any _staging_* dir."""
+    files, staging = set(), []
+    for d, dirs, names in os.walk(root):
+        staging += [x for x in dirs if x.startswith("_staging")]
+        files.update(os.path.relpath(os.path.join(d, n), root) for n in names)
+    return files, staging
+
+
+def test_duplicate_match_validation_still_raises(spark, tmp_path):
+    """A duplicate match fails before anything leaves staging, on the
+    fused CDF writer and on the plain writer alike: same table version,
+    no staging dir, no new data or change file, no pinned frame."""
     from delta_rs_spark.operators.merge import MergeError
+    from delta_rs_spark.session import drop_cached_intermediates
 
     dup = spark.createDataFrame(
         [(5, 1, 1), (5, 1, 2)], "id long, part long, v long"
     )
-    with pytest.raises(MergeError):
-        _merge(spark, target, dup)
+    for cdf in (False, True):
+        path = str(tmp_path / f"cdf_{cdf}")
+        write_deltalake(
+            path,
+            spark.range(20).selectExpr("id", "id % 4 AS part", "id * 10 AS v"),
+            partition_by=["part"],
+            configuration={"delta.enableChangeDataFeed": str(cdf).lower()},
+        )
+        version = DeltaTable(path, spark=spark).version()
+        files, _ = _tree(path)
+        drop_cached_intermediates(spark)
+        with pytest.raises(MergeError):
+            _merge(spark, path, dup)
+        after, staging = _tree(path)
+        assert DeltaTable(path, spark=spark).version() == version
+        assert staging == []
+        assert {f for f in after - files if f.endswith(".parquet")} == set()
+        assert _persistent_rdds(spark) == 0
+
+
+def test_nmbs_only_merge_counts(spark, target):
+    """Not-matched-by-source clauses only: a target row matched by two
+    source rows is still one COPY row (no validation applies), and the
+    counts equal the rows each clause produced."""
+    src = spark.createDataFrame(
+        [(1, 0, 0), (1, 0, 0), (2, 0, 0)], "id long, part long, v long"
+    )
+    m = (
+        DeltaTable(target, spark=spark)
+        .merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_not_matched_by_source_delete("t.id >= 15")
+        .when_not_matched_by_source_update({"v": "-1"})
+        .execute()
+    )
+    assert m["num_target_rows_deleted"] == 5
+    assert m["num_target_rows_updated_by_source_miss"] == 13
+    assert m["num_target_rows_copied"] == 2
+    assert m["num_target_rows_updated"] == m["num_target_rows_inserted"] == 0
+    got = {r["id"]: r["v"] for r in DeltaTable(target, spark=spark).to_spark().collect()}
+    assert sorted(got) == list(range(15))
+    assert got[1] == 10 and got[2] == 20 and got[0] == got[14] == -1
+
+
+def test_dv_mode_merge_counts(spark, tmp_path):
+    """Deletion-vector table: the pinned frame's first consumer (the
+    acted-row collect) carries validation and counts."""
+    path = str(tmp_path / "dv")
+    write_deltalake(
+        path,
+        spark.range(20).selectExpr("id", "id * 10 AS v").coalesce(1),
+        configuration={"delta.enableDeletionVectors": "true"},
+    )
+    src = spark.createDataFrame(
+        [(3, 1), (4, 1), (5, 0), (30, 7)], "id long, v long"
+    )
+    m = (
+        DeltaTable(path, spark=spark)
+        .merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_matched_delete("s.v = 0")
+        .when_matched_update({"v": "s.v"})
+        .when_not_matched_insert({"id": "s.id", "v": "s.v"})
+        .execute()
+    )
+    assert m["num_target_rows_updated"] == 2
+    assert m["num_target_rows_deleted"] == 1
+    assert m["num_target_rows_inserted"] == 1
+    assert m["num_target_rows_copied"] == 0  # copies stay in the DV'd file
+    assert m["num_deletion_vectors_added"] >= 1
+    got = {r["id"]: r["v"] for r in DeltaTable(path, spark=spark).to_spark().collect()}
+    assert len(got) == 20 and 5 not in got
+    assert got[3] == got[4] == 1 and got[30] == 7 and got[6] == 60
+
+
+def _spy_scans(monkeypatch):
+    """Record the file set of every read_snapshot_df call. merge.execute()
+    imports read_snapshot_df from the table module at call time, so
+    patching the table module intercepts every scan."""
+    import delta_rs_spark.table as table_mod
+
+    calls = []
+    real = table_mod.read_snapshot_df
+
+    def spy(*args, **kw):
+        calls.append(kw.get("files"))
+        return real(*args, **kw)
+
+    monkeypatch.setattr(table_mod, "read_snapshot_df", spy)
+    return calls
 
 
 def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch):
-    """r12: with matched clauses (and no not-matched-by-source), the
-    insert path's anti-join reads only the TOUCHED files — every match
-    pair lives in a touched file by definition — while insert-only and
-    nmbs merges keep the candidate fallback. Instrument read_snapshot_df
-    to record the file set each caller passes."""
-    import delta_rs_spark.table as table_mod
-
+    """With matched clauses (and no not-matched-by-source), MERGE reads
+    only the TOUCHED files after discovery — every match pair lives in a
+    touched file by definition — while insert-only merges anti-join the
+    candidates. Instrument read_snapshot_df to record the file set each
+    caller passes."""
     path = str(tmp_path / "scan")
     # 4 single-file commits -> 4 files with disjoint id ranges
     for lo in (0, 100, 200, 300):
@@ -102,16 +206,7 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
     dt = DeltaTable(path, spark=spark)
     assert len(dt.files()) == 4
 
-    calls = []
-    real = table_mod.read_snapshot_df
-
-    def spy(spark_, snapshot, table_path, **kw):
-        calls.append(kw.get("files"))
-        return real(spark_, snapshot, table_path, **kw)
-
-    # merge.execute() imports read_snapshot_df from the table module at
-    # call time, so patching the table module intercepts every scan
-    monkeypatch.setattr(table_mod, "read_snapshot_df", spy)
+    calls = _spy_scans(monkeypatch)
 
     src = spark.createDataFrame(
         [(150, 1), (900, 9)], "id long, v long"
@@ -125,8 +220,9 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
     assert m["num_target_rows_updated"] == 1
     assert m["num_target_rows_inserted"] == 1
     assert m["num_target_files_removed"] == 1
-    # r13: the insert anti-join reads the persisted rewrite-join frame,
-    # not the files — calls: [discovery candidates, rewrite touched]
+    # the insert rows are the source-only rows of the touched files'
+    # full outer join, so nothing re-scans for them — calls:
+    # [discovery candidates, rewrite touched]
     assert len(calls) == 2, "insert anti-join must not re-scan files"
     assert len(calls[1]) == 1, "rewrite must scan only touched files"
 
@@ -145,3 +241,31 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
     )
     assert m2["num_target_rows_inserted"] == 1  # 150 matches, must not insert
     assert len(calls) == 1 and len(calls[0]) >= 1  # candidates, not []
+
+
+def test_no_match_merge_inserts_from_source_alone(spark, tmp_path, monkeypatch):
+    """Matched clauses, but discovery finds no touched file: the early
+    filter and the empty discovery join prove every source row
+    unmatched, so the inserts come from the source alone — no candidate
+    re-scan, no anti-join."""
+    path = str(tmp_path / "nomatch")
+    # even ids only: odd source keys fall inside the file's min/max, so
+    # the file is a candidate, but match no row
+    write_deltalake(
+        path, spark.range(0, 200, 2).selectExpr("id", "id AS v").coalesce(1)
+    )
+    calls = _spy_scans(monkeypatch)
+    src = spark.createDataFrame([(51, 1), (151, 2)], "id long, v long")
+    m = (
+        DeltaTable(path, spark=spark)
+        .merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_matched_update({"v": "s.v"})
+        .when_not_matched_insert({"id": "s.id", "v": "s.v"})
+        .execute()
+    )
+    assert m["num_target_files_scanned"] == 1
+    assert m["num_target_rows_inserted"] == 2
+    assert m["num_target_rows_updated"] == m["num_target_files_removed"] == 0
+    assert len(calls) == 1, "only discovery may scan the candidates"
+    got = {r["id"]: r["v"] for r in DeltaTable(path, spark=spark).to_spark().collect()}
+    assert len(got) == 102 and got[51] == 1 and got[151] == 2
