@@ -86,7 +86,7 @@ def _contention_gate(max_wait_s: int, poll_s: int = 5) -> list[tuple[int, str]]:
 
 def main() -> None:
     import __spark_entry__ as entry_mod
-    from delta_rs_spark.session import get_spark
+    from delta_rs_spark.session import drop_cached_intermediates, get_spark
 
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     try:
@@ -182,17 +182,6 @@ def main() -> None:
                 # a failed build means the timed loop re-pays construction
                 # inside the measurement — make that visible, never silent
                 print(f"WARN: ANN index prebuild failed for {name}: {e}", file=sys.stderr)
-    def drop_persistent_rdds() -> None:
-        """Unpersist every cached/checkpointed RDD left behind by the
-        previous query. Several operators localCheckpoint multi-branch
-        intermediates; without this, dozens of queries' worth of pinned
-        blocks accumulate in the single local-mode heap and later
-        queries pay their GC bill (measured 0.6s -> 7s swings on the
-        same query depending on suite position)."""
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            it.next().getValue().unpersist(False)
-
     # N timed samples per query, report the MIN — the same reduction
     # divan/pytest-benchmark apply; single-sample runs of the 2-4s
     # shuffle-heavy queries showed ±50% run-to-run noise (GC/page-cache
@@ -245,7 +234,10 @@ def main() -> None:
         for name, fn in qs.items():
             if i >= n_floor_samples and name in n1_queries:
                 continue
-            drop_persistent_rdds()
+            # the previous query's pinned blocks would otherwise pile up
+            # in the one local-mode heap and bill later queries for GC
+            # (measured 0.6 s -> 7 s swings on one query by suite position)
+            drop_cached_intermediates(spark)
             t0 = time.time()
             df = fn(spark, SF_DIR)
             # force full execution without driver materialization

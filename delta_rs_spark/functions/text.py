@@ -577,6 +577,30 @@ def line_dedup(
     )
 
 
+MAX_DOC_TOKENS = 100_000
+
+
+def ingest_gate(
+    lang_pred: Column,
+    quality: Column,
+    n_tokens: Column,
+    lang: str,
+    min_quality: float,
+    min_tokens: int,
+    max_tokens: int = MAX_DOC_TOKENS,
+) -> list[tuple[str, Column]]:
+    """The ingest gate's content filters over a doc's language, quality
+    and token-count signals, as ordered ``(reason, failing condition)``
+    pairs. corpus_filter_report labels a doc with the first reason whose
+    condition holds; process_corpus_batch keeps a doc when none does."""
+    return [
+        ("lang", lang_pred != lang),
+        ("low_quality", quality < min_quality),
+        ("too_short", n_tokens < min_tokens),
+        ("too_long", n_tokens > max_tokens),
+    ]
+
+
 def corpus_filter_report(
     df: DataFrame,
     text_col: str = "text",
@@ -584,7 +608,7 @@ def corpus_filter_report(
     lang: str = "en",
     min_quality: float = 0.5,
     min_tokens: int = 20,
-    max_tokens: int = 100_000,
+    max_tokens: int = MAX_DOC_TOKENS,
 ) -> DataFrame:
     """The composed pretraining-ingest gate: exact-dedup canonical
     election + language filter + quality floor + Gopher-style length
@@ -607,14 +631,13 @@ def corpus_filter_report(
         fingerprint(text_col).alias("__fp"),
     )
     keep_id = F.min("doc_id").over(W.partitionBy("__fp"))
-    reason = (
-        F.when(F.col("doc_id") != keep_id, F.lit("duplicate"))
-        .when(F.col("lang_pred") != lang, F.lit("lang"))
-        .when(F.col("quality") < min_quality, F.lit("low_quality"))
-        .when(F.col("n_tokens") < min_tokens, F.lit("too_short"))
-        .when(F.col("n_tokens") > max_tokens, F.lit("too_long"))
-        .otherwise(F.lit("kept"))
-    )
+    reason = F.when(F.col("doc_id") != keep_id, F.lit("duplicate"))
+    for why, fails in ingest_gate(
+        F.col("lang_pred"), F.col("quality"), F.col("n_tokens"),
+        lang, min_quality, min_tokens, max_tokens,
+    ):
+        reason = reason.when(fails, F.lit(why))
+    reason = reason.otherwise(F.lit("kept"))
     return base.select(
         "doc_id",
         "lang_pred",

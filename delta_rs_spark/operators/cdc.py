@@ -44,28 +44,10 @@ def cdf_enabled(snapshot: Snapshot) -> bool:
 
 def can_fuse_cdc_write(snapshot: Snapshot) -> bool:
     """Whether the single-job fused data+CDC writer applies to this
-    table. The fused path writes parquet with pyarrow inside tasks, so
-    it cannot serve VARIANT columns (pyarrow cannot write them); tables
-    with write rules (CHECK constraints / invariants / generated
-    columns) keep the two-write path, whose validation scan is scoped
-    to exactly the rows the data write commits."""
-    if '"variant"' in (snapshot.schema_string or "").lower():
-        return False
-    try:
-        from delta_rs_spark.operators.alter import table_constraints
-        from delta_rs_spark.writer import GENERATION_KEY, INVARIANTS_KEY
-
-        if table_constraints(snapshot.configuration):
-            return False
-        import json as _json
-
-        for f in _json.loads(snapshot.schema_string).get("fields", []):
-            md = f.get("metadata") or {}
-            if GENERATION_KEY in md or INVARIANTS_KEY in md:
-                return False
-    except Exception:
-        return False
-    return True
+    table: every table except one with VARIANT columns, which pyarrow
+    cannot write inside the fused writer's tasks. Write rules ride the
+    fused write through the ``validate`` hook (writer.gate_rules)."""
+    return '"variant"' not in (snapshot.schema_string or "").lower()
 
 
 def write_data_and_change_files(

@@ -125,18 +125,19 @@ def plan_predicate_removal(
         )
         new_adds = data_adds + cdc_actions  # type: ignore[operator]
     elif cdf_enabled(snapshot):
-        # fallback (variant columns / write rules): pin the touched
-        # files across the two writes (r12; bounded by the touched-file
-        # set, the rewrite's own envelope)
-        touched_df = touched_df.persist()
-        keep_df = touched_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True)))
-        new_adds = write_files(keep_df, table_path, part_cols)
-        deleted_df = touched_df.filter(F.expr(predicate)).withColumn(
-            CHANGE_TYPE_COL, F.lit("delete")
-        )
-        cdc_actions = write_change_data(deleted_df, table_path)
-        new_adds = new_adds + cdc_actions  # type: ignore[operator]
-        touched_df.unpersist(False)  # rewrite + change data both written
+        # VARIANT fallback: pin the touched files across the two writes
+        # (bounded by the touched-file set, the rewrite's own envelope)
+        touched_df.persist()
+        try:
+            keep_df = touched_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True)))
+            new_adds = write_files(keep_df, table_path, part_cols)
+            deleted_df = touched_df.filter(F.expr(predicate)).withColumn(
+                CHANGE_TYPE_COL, F.lit("delete")
+            )
+            cdc_actions = write_change_data(deleted_df, table_path)
+            new_adds = new_adds + cdc_actions  # type: ignore[operator]
+        finally:
+            touched_df.unpersist(False)
     else:
         keep_df = touched_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True)))
         new_adds = write_files(keep_df, table_path, part_cols)

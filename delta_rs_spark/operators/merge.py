@@ -618,7 +618,7 @@ class TableMerger:
 
     def _execute(self, source_df: DataFrame, pins: list[DataFrame]) -> dict[str, Any]:
         from delta_rs_spark.table import read_snapshot_df
-        from delta_rs_spark.writer import enforce_write_rules, write_files
+        from delta_rs_spark.writer import gate_rules, observed_metrics, write_files, write_rules
 
         spark = self.dt.spark
         table_path = self.dt.table_uri
@@ -915,20 +915,25 @@ class TableMerger:
             else:
                 frame = frame.withColumn(_BAD, F.lit(False))
             tallied = [COPY, DELETE, *upd_codes, *ins_codes]
-            obs = Observation()
-            frame = frame.observe(
-                obs,
+            summary = [
                 F.max(F.col(_BAD).cast("int")).alias("bad"),
                 *[
                     F.sum((F.col(_ACTION) == c).cast("long")).alias(f"n{i}")
                     for i, c in enumerate(tallied)
                 ],
-            )
+            ]
+            unobserved, obs = frame, Observation()
+            frame = frame.observe(obs, *summary)
 
             def check() -> None:
                 """Runs once the frame's first action has finished —
                 before any written file leaves staging."""
-                got = obs.get
+                got = observed_metrics(obs)
+                if got is None:
+                    # no row reached the write (every one deleted or
+                    # skipped), so AQE dropped the observed stage: one
+                    # more pass recovers validation and counts
+                    got = unobserved.agg(*summary).first().asDict()
                 if got["bad"]:
                     raise MergeError(
                         "MERGE matched a target row with multiple source rows "
@@ -1033,35 +1038,41 @@ class TableMerger:
             else:
                 out = out.filter(keep).select(*data_cols)
 
-            if cdf_on and can_fuse_cdc_write(snapshot):
+            fused = cdf_on and can_fuse_cdc_write(snapshot)
+            data = out
+            if cdf_on and not fused:
+                # VARIANT fallback: two writes read the frame — pin it,
+                # so both see the same evaluation (identity values
+                # included)
+                out = out.persist()
+                pins.append(out)
+                ct = F.col(CHANGE_TYPE_COL)
+                data = out.filter(
+                    ct.isNull() | ~ct.isin("delete", "update_preimage")
+                ).drop(CHANGE_TYPE_COL)
+            # the rule gate skips a fused frame's preimage/delete rows
+            data, rules_ok = gate_rules(data, write_rules(snapshot))
+
+            def validate() -> None:
+                check()
+                rules_ok()
+
+            if fused:
                 # ONE job writes data + change files from one pass
                 new_adds, cdc_actions = write_data_and_change_files(
-                    out, table_path, part_cols, snapshot, validate=check
+                    data, table_path, part_cols, snapshot, validate=validate
                 )
             else:
-                data = out
-                if cdf_on:
-                    # two writes read the frame: pin it, so both see the
-                    # same evaluation (identity values included)
-                    out = out.persist()
-                    pins.append(out)
-                    ct = F.col(CHANGE_TYPE_COL)
-                    data = out.filter(
-                        ct.isNull() | ~ct.isin("delete", "update_preimage")
-                    ).drop(CHANGE_TYPE_COL)
-                checked = enforce_write_rules(data, snapshot)
-                if checked is not data:
-                    pins.append(checked)
                 # a cached input keeps its cache partitioning (cached
                 # plans defeat AQE coalescing) — rebalance unpartitioned
                 # writes to size-adaptive output files (guide §6;
                 # partitioned writes get the same control from
                 # write_files' repartition)
                 new_adds = write_files(
-                    checked if part_cols else checked.hint("rebalance"),
+                    data if part_cols else data.hint("rebalance"),
                     table_path,
                     part_cols,
-                    validate=check,
+                    validate=validate,
                 )
                 if cdf_on:
                     cdc_actions = write_change_data(

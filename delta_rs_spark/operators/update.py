@@ -92,7 +92,7 @@ def update(
     target type become NULL for NULLABLE columns instead of erroring;
     non-nullable columns keep the strict cast."""
     from delta_rs_spark.table import read_snapshot_df
-    from delta_rs_spark.writer import write_files
+    from delta_rs_spark.writer import gate_rules, write_files, write_rules
 
     if not updates:
         raise DeltaError("update requires at least one column assignment")
@@ -204,12 +204,6 @@ def update(
     else:
         touched_df = read_snapshot_df(spark, snapshot, table_path, files=touched_adds)
     fused = cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot)
-    if cdf_enabled(snapshot) and not fused:
-        # fallback (variant columns / write rules): the CDF branch
-        # reads the touched files twice more (pre/post images) on top
-        # of the rewrite — pin them once (r12; bounded by the
-        # touched-file set, the same envelope the rewrite holds)
-        touched_df = touched_df.persist()
     schema_cols = [f.name for f in touched_df.schema.fields]
     # CASE-guard every updated column (reference: update.rs:357-358).
     # cond is pinned to the PRE-update row via a marker column so the
@@ -264,19 +258,46 @@ def update(
             _mat_ver,
             F.when(upd_flag, F.lit(None).cast("long")).otherwise(F.col(_mat_ver)),
         )
-    updated_df = updated_df.drop("__delta_rs_upd")
+    updated_df, check = gate_rules(
+        updated_df.drop("__delta_rs_upd"), write_rules(snapshot)
+    )
+    cdc_actions = []
     if fused:
         new_adds, cdc_actions = write_data_and_change_files(
-            updated_df, table_path, part_cols, snapshot
+            updated_df, table_path, part_cols, snapshot, validate=check
         )
-    else:
-        from delta_rs_spark.writer import enforce_write_rules
-
-        updated_df = enforce_write_rules(updated_df, snapshot)
+    elif cdf_enabled(snapshot):
+        # VARIANT fallback: the rewrite and the pre/post images each
+        # read the touched files — pin them once (bounded by the
+        # touched-file set, the same envelope the rewrite holds)
+        touched_df.persist()
         try:
-            new_adds = write_files(updated_df, table_path, part_cols)
+            new_adds = write_files(updated_df, table_path, part_cols, validate=check)
+            pre = touched_df.filter(cond).withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
+            post = (
+                _recompute_generated_cols(
+                    touched_df.filter(cond).select(
+                        *[
+                            _ucast(
+                                F.expr(updates[c]), c, touched_df.schema[c].dataType
+                            ).alias(c)
+                            if c in updates
+                            else F.col(c)
+                            for c in schema_cols
+                        ]
+                    ),
+                    touched_df.schema,
+                    updates,
+                    schema_cols,
+                    F.lit(True),
+                )
+                .withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
+            )
+            cdc_actions = write_change_data(pre.unionByName(post), table_path)
         finally:
-            updated_df.unpersist()
+            touched_df.unpersist(False)
+    else:
+        new_adds = write_files(updated_df, table_path, part_cols, validate=check)
     # live rows only: DV'd files contribute physical rows minus cardinality
     n_total = sum(
         (a.num_records() or 0)
@@ -284,33 +305,7 @@ def update(
         for a in touched_adds
     )
 
-    actions: list = list(new_adds)
-    if fused:
-        actions.extend(cdc_actions)
-    elif cdf_enabled(snapshot):
-        pre = touched_df.filter(cond).withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-        post = (
-            _recompute_generated_cols(
-                touched_df.filter(cond).select(
-                    *[
-                        _ucast(
-                            F.expr(updates[c]), c, touched_df.schema[c].dataType
-                        ).alias(c)
-                        if c in updates
-                        else F.col(c)
-                        for c in schema_cols
-                    ]
-                ),
-                touched_df.schema,
-                updates,
-                schema_cols,
-                F.lit(True),
-            )
-            .withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-        )
-        actions.extend(write_change_data(pre.unionByName(post), table_path))
-        touched_df.unpersist(False)  # rewrite + pre/post images all done
-
+    actions: list = list(new_adds) + list(cdc_actions)
     removes = [Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in touched_adds]
     actions.extend(removes)
     metrics.update(
@@ -456,6 +451,7 @@ def _dv_update_commit(
         dv_mark_rows,
         group_rows_by_file,
     )
+    from delta_rs_spark.writer import gate_rules, write_files, write_rules
 
     rows = (
         matched_df.groupBy(F.col("__delta_rs_fp").alias("fp"))
@@ -501,37 +497,33 @@ def _dv_update_commit(
         schema_cols,
         F.lit(True),
     )
+    actions = list(removes) + list(dv_adds)
     if cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot):
         # r13: ONE write job emits the updated-row files AND the
-        # pre/post change files — both branches read the checkpointed
+        # pre/post change files — both branches read the pinned
         # matched frame, postimage rows route to data + _change_data/,
         # preimage rows to _change_data/ only
-        tagged = new_rows.withColumn(
-            CHANGE_TYPE_COL, F.lit("update_postimage")
-        ).unionByName(
-            base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
+        tagged, check = gate_rules(
+            new_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage")).unionByName(
+                base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
+            ),
+            write_rules(snapshot),
         )
         new_adds, cdc_actions = write_data_and_change_files(
-            tagged, table_path, snapshot.partition_columns, snapshot
+            tagged, table_path, snapshot.partition_columns, snapshot, validate=check
         )
-        actions = list(removes) + list(dv_adds) + list(new_adds)
-        actions.extend(cdc_actions)
+        actions += new_adds + cdc_actions
     else:
-        from delta_rs_spark.writer import enforce_write_rules, write_files
-
-        new_rows = enforce_write_rules(new_rows, snapshot)
-        try:
-            new_adds = write_files(new_rows, table_path, snapshot.partition_columns)
-
-            actions = list(removes) + list(dv_adds) + list(new_adds)
-            if cdf_enabled(snapshot):
-                # postimage reads the same (possibly cached) frame the
-                # write committed, so CDF rows match the table rows
-                pre = base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-                post = new_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-                actions.extend(write_change_data(pre.unionByName(post), table_path))
-        finally:
-            new_rows.unpersist()
+        gated, check = gate_rules(new_rows, write_rules(snapshot))
+        new_adds = write_files(
+            gated, table_path, snapshot.partition_columns, validate=check
+        )
+        actions += new_adds
+        if cdf_enabled(snapshot):
+            # both images read the pinned matched frame
+            pre = base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
+            post = new_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
+            actions += write_change_data(pre.unionByName(post), table_path)
 
     metrics.update(
         {

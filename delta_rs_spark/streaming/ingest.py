@@ -29,6 +29,7 @@ stream-vs-replay differential test and the driver-gate oracle rely on.
 from __future__ import annotations
 
 from collections.abc import Iterable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,7 +56,12 @@ def process_corpus_batch(
         update_band_index,
         update_fingerprint_index,
     )
-    from delta_rs_spark.functions.text import lang_id, quality_score, token_count
+    from delta_rs_spark.functions.text import (
+        ingest_gate,
+        lang_id,
+        quality_score,
+        token_count,
+    )
     from delta_rs_spark.writer import write_deltalake
 
     spark = batch_df.sparkSession
@@ -81,13 +87,11 @@ def process_corpus_batch(
     # job, once in the outer frame) plus a window shuffle; this runs it
     # once. eqNullSafe keeps the report's first-failing-WHEN NULL
     # semantics exactly: a NULL signal fails no gate, as in the report.
-    n_tok = token_count(text_col)
-    fails = (
-        (lang_id(text_col) != lang).eqNullSafe(True)
-        | (quality_score(text_col) < min_quality).eqNullSafe(True)
-        | (n_tok < min_tokens).eqNullSafe(True)
-        | (n_tok > 100_000).eqNullSafe(True)  # report's max_tokens default
+    gate = ingest_gate(
+        lang_id(text_col), quality_score(text_col), token_count(text_col),
+        lang, min_quality, min_tokens,
     )
+    fails = reduce(lambda a, b: a | b, [cond.eqNullSafe(True) for _, cond in gate])
     kept = fresh.filter(~fails)
     # The survivor frame is consumed 2-3x below (corpus append, fp index
     # append, optional band index append) — pin the batch-sized result so

@@ -23,9 +23,9 @@ import os
 import shutil
 import urllib.parse
 import uuid
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -237,7 +237,6 @@ def write_files(
     partition_by: list[str],
     max_records_per_file: int | None = None,
     writer_properties=None,
-    target_file_size: int | None = None,
     configuration: dict[str, str] | None = None,
     table_schema_json: str | None = None,
     preserve_layout: bool = False,
@@ -245,8 +244,8 @@ def write_files(
 ) -> list[Add]:
     """Write df as parquet files into the table directory; return Adds.
 
-    ``target_file_size`` (bytes — reference write_deltalake arg) is
-    honored via maxRecordsPerFile with a sampled bytes/row estimate;
+    The Spark write job is the first and only action on ``df``, so a
+    frame gated by ``gate_rules`` is checked over every row it writes.
     ``writer_properties`` maps onto Spark parquet writer options
     (see properties.WriterProperties.spark_write_options).
     ``validate`` (no-arg callable) runs after the Spark job has written
@@ -293,8 +292,6 @@ def write_files(
         # repartition here would destroy the clustering they just built.
         writer = df.repartition(*partition_by)
     w = writer.write.mode("overwrite")
-    if target_file_size and not max_records_per_file:
-        max_records_per_file = _estimate_rows_for_bytes(df, target_file_size)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
     if writer_properties is not None:
@@ -441,18 +438,33 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
-def _validate_field_rules(df: DataFrame, schema: T.StructType, provided: set[str]) -> None:
-    """Enforce generated-column equality for provided values and column
-    invariants (reference: generated_columns.rs validation;
-    kernel/schema/schema.rs:21-28 invariants)."""
+def _fails(sql: str) -> Column:
+    """A row fails a SQL rule unless the rule is TRUE (NULL fails)."""
+    return ~F.expr(sql).eqNullSafe(F.lit(True))
+
+
+def write_rules(snapshot, schema: T.StructType | None = None) -> list[tuple[str, Column]]:
+    """Every rule a committed row must satisfy, as ordered ``(label,
+    violated)`` pairs: the table's CHECK constraints, then each field's
+    generation expression and invariant (reference:
+    crates/core/src/delta_datafusion/data_validation.rs, applied to every
+    operation that produces rows). ``schema`` defaults to the snapshot's;
+    a write that changes the schema passes the one it writes."""
     import json as _json
 
-    checks: list[tuple[str, F.Column]] = []
+    from delta_rs_spark.operators.alter import table_constraints
+
+    rules = [
+        (f"CHECK constraint {name!r} ({expr}) violated", _fails(expr))
+        for name, expr in table_constraints(snapshot.configuration).items()
+    ]
+    if schema is None:
+        schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
     for f in schema.fields:
         meta = f.metadata or {}
         gen_expr = meta.get(GENERATION_KEY)
-        if gen_expr and f.name in provided:
-            checks.append(
+        if gen_expr:
+            rules.append(
                 (
                     f"generated column {f.name} != {gen_expr}",
                     ~F.col(f.name).eqNullSafe(F.expr(gen_expr).cast(f.dataType)),
@@ -465,96 +477,59 @@ def _validate_field_rules(df: DataFrame, schema: T.StructType, provided: set[str
             except (ValueError, KeyError, TypeError):
                 expr = None
             if expr:
-                checks.append(
-                    (
-                        f"invariant violated on {f.name}: {expr}",
-                        ~F.expr(expr).eqNullSafe(F.lit(True)),
-                    )
-                )
-    for label, bad_cond in checks:
-        if df.filter(bad_cond).limit(1).count():
-            raise DeltaError(label)
+                rules.append((f"invariant violated on {f.name}: {expr}", _fails(expr)))
+    return rules
 
 
-def enforce_write_rules(df: DataFrame, snapshot) -> DataFrame:
-    """Shared write-side data validation for MUTATION rewrites (UPDATE /
-    MERGE and their DV variants): CHECK constraints from table config
-    plus per-field invariants — the reference applies its
-    DeltaDataChecker on every operation that produces rows
-    (crates/core/src/delta_datafusion/data_validation.rs), not just
-    appends. Pass only the CHANGED/INSERTED rows where the caller can:
-    copied rows already satisfied the rules when they were written.
+def gate_rules(
+    df: DataFrame, rules: list[tuple[str, Column]]
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Make the write job itself check ``rules``: one ``observe()`` with
+    one ``max`` per rule on the frame the writer consumes — no persist,
+    no extra scan. Returns that frame and the check to pass as the
+    writer's ``validate``, which raises the first violated rule's label
+    before any file leaves staging. With no rules ``df`` is returned
+    unchanged.
 
-    Returns the DataFrame the caller MUST write (and unpersist after):
-    when any rule exists the frame is persisted so the validation scan
-    materializes exactly the rows the write will commit — without the
-    cache, a non-deterministic rewrite expression (rand(),
-    current_timestamp) could validate one set of rows and write
-    another, and even deterministic rewrites would pay a second full
-    evaluation. The zero-rules common case returns ``df`` untouched
-    (no caching, no extra scan)."""
-    import json as _json
+    The returned frame's FIRST action must be the write: an observation
+    reports the first action that finishes, so an earlier sample
+    (``limit().toPandas()``) would check the sample only. Rows whose
+    ``_change_type`` keeps them out of data files (preimage and delete
+    rows of a fused CDF frame) are not checked. The writers shuffle the
+    gated frame directly, so an observation dropped with its empty stage
+    (see ``observed_metrics``) means no row reached the writer."""
+    if not rules:
+        return df, lambda: None
+    from delta_rs_spark.operators.cdc import _DATA_EXCLUDE, CHANGE_TYPE_COL
 
-    from delta_rs_spark.operators.alter import table_constraints
+    live = F.lit(True)
+    if CHANGE_TYPE_COL in df.columns:
+        ct = F.col(CHANGE_TYPE_COL)
+        live = ct.isNull() | ~ct.isin(*_DATA_EXCLUDE)
+    obs = Observation()
+    df = df.observe(
+        obs,
+        *[F.max((live & bad).cast("int")).alias(f"r{i}") for i, (_, bad) in enumerate(rules)],
+    )
 
-    checks: list[tuple[str, F.Column]] = []
-    for cname, cexpr in table_constraints(snapshot.configuration).items():
-        checks.append(
-            (
-                f"CHECK constraint {cname!r} ({cexpr}) violated",
-                ~F.expr(cexpr).eqNullSafe(F.lit(True)),
-            )
-        )
-    schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
-    for f in schema.fields:
-        # a generated column must equal its expression in every committed
-        # row — catches an UPDATE/MERGE clause explicitly assigning a
-        # wrong value (recomputed ones satisfy this by construction)
-        gen_expr = (f.metadata or {}).get(GENERATION_KEY)
-        if gen_expr:
-            checks.append(
-                (
-                    f"generated column {f.name} != {gen_expr}",
-                    ~F.col(f.name).eqNullSafe(
-                        F.expr(gen_expr).cast(f.dataType)
-                    ),
-                )
-            )
-        inv = (f.metadata or {}).get(INVARIANTS_KEY)
-        if inv:
-            try:
-                expr = _json.loads(inv)["expression"]["expression"]
-            except (ValueError, KeyError, TypeError):
-                continue
-            checks.append(
-                (
-                    f"invariant violated on {f.name}: {expr}",
-                    ~F.expr(expr).eqNullSafe(F.lit(True)),
-                )
-            )
-    if not checks:
-        return df
-    from pyspark import StorageLevel
+    def check() -> None:
+        got = observed_metrics(obs) or {}
+        for i, (label, _) in enumerate(rules):
+            if got.get(f"r{i}"):
+                raise DeltaError(label)
 
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    bad = checks[0][1]
-    for _, cond in checks[1:]:
-        bad = bad | cond
-    try:
-        # the zero-violations conclusion requires scanning every
-        # partition, so this one job fully materializes the cache the
-        # subsequent write reads
-        if df.filter(bad).limit(1).count():
-            # one combined pass to detect, a second (cache-read) only on
-            # failure to name the violated rule
-            for label, cond in checks:
-                if df.filter(cond).limit(1).count():
-                    raise DeltaError(label)
-            raise DeltaError("write rule violated")
-    except BaseException:
-        df.unpersist()
-        raise
-    return df
+    return df, check
+
+
+def observed_metrics(obs: Observation) -> dict[str, Any] | None:
+    """``obs.get`` once its action has finished, or None when that action
+    reported nothing for it: AQE removes a finished stage that produced
+    no rows from the final plan, and an observation inside that stage
+    goes unreported (Spark then holds an empty row, which
+    ``Observation.get`` cannot convert)."""
+    if obs._jo.getRow().size() == 0:
+        return None
+    return obs.get
 
 
 def write_deltalake(
@@ -802,40 +777,39 @@ def write_deltalake(
                     created_time=meta.created_time,
                 )
             )
-        provided = set(df.columns)
         if _ident.identity_fields(table_schema):
             df, id_plan = _ident.generate(df, table_schema)
         df = _conform(df, table_schema)
-        _validate_field_rules(df, table_schema, provided)
-
-    # enforce CHECK constraints before any file lands
-    # (reference: crates/core/src/delta_datafusion/data_validation.rs:55-60)
-    if snapshot is not None:
-        from delta_rs_spark.operators.alter import table_constraints
-
-        for cname, cexpr in table_constraints(snapshot.configuration).items():
-            if df.filter(~F.expr(cexpr).eqNullSafe(F.lit(True))).limit(1).count():
-                raise DeltaError(
-                    f"CHECK constraint {cname!r} ({cexpr}) violated by incoming data"
-                )
 
     if target_file_size is None and snapshot is not None:
         # honor the table-level default (reference table/config.rs:149)
         tfs = snapshot.configuration.get("delta.targetFileSize")
         if tfs:
             target_file_size = int(tfs)
+    if target_file_size and not max_records_per_file:
+        # sampled before the gate: the gated frame's first action must
+        # be the write itself
+        max_records_per_file = _estimate_rows_for_bytes(df, target_file_size)
+    check = None
+    if snapshot is not None:
+        rules = write_rules(snapshot, table_schema)
+        if predicate:
+            rules.append(
+                (f"replaceWhere: input rows violate predicate {predicate!r}", _fails(predicate))
+            )
+        df, check = gate_rules(df, rules)
     adds = write_files(
         df,
         table_path,
         part_cols,
         max_records_per_file,
         writer_properties=writer_properties,
-        target_file_size=target_file_size,
         configuration=(
             snapshot.configuration if snapshot is not None else configuration
         ),
         table_schema_json=table_schema.json(),
         preserve_layout=preserve_layout,
+        validate=check,
     )
     if id_plan:
         # advance the identity high watermark over the values that just
@@ -883,8 +857,13 @@ def write_deltalake(
             rt_watermark=_rt_cached_watermark(snapshot),
         )
         if predicate:
-            removes, extra_adds, n_removed = _replace_where(
-                spark, snapshot, table_path, df, predicate, table_schema, part_cols
+            # transactional replaceWhere (reference: write/mod.rs:228
+            # with_replace_where): the rule gate checked every incoming
+            # row against the predicate; existing matching rows go
+            from delta_rs_spark.operators.delete import plan_predicate_removal
+
+            removes, extra_adds, n_removed = plan_predicate_removal(
+                spark, snapshot, table_path, predicate
             )
             actions.extend(extra_adds)
             actions.extend(removes)
@@ -931,27 +910,3 @@ def write_deltalake(
         commit_properties=commit_properties,
         post_commit=post_commithook_properties,
     )
-
-
-def _replace_where(
-    spark: SparkSession,
-    snapshot: snap_mod.Snapshot,
-    table_path: str,
-    new_df: DataFrame,
-    predicate: str,
-    table_schema: T.StructType,
-    part_cols: list[str],
-) -> tuple[list[Remove], list[Add], int]:
-    """Transactional replaceWhere (reference: write/mod.rs:228
-    with_replace_where): delete existing rows matching the predicate,
-    after validating that every incoming row satisfies it."""
-    from delta_rs_spark.operators.delete import plan_predicate_removal
-    from delta_rs_spark.table import read_snapshot_df
-
-    bad = new_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True))).limit(1).count()
-    if bad:
-        raise DeltaError(f"replaceWhere: input rows violate predicate {predicate!r}")
-    removes, rewrite_adds, n_deleted = plan_predicate_removal(
-        spark, snapshot, table_path, predicate
-    )
-    return removes, rewrite_adds, n_deleted

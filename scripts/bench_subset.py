@@ -32,7 +32,7 @@ def main() -> None:
             names.append(args[i]); i += 1
 
     import __spark_entry__ as entry
-    from delta_rs_spark.session import get_spark
+    from delta_rs_spark.session import drop_cached_intermediates, get_spark
 
     spark = get_spark("bench-subset")
     qs = entry.queries()
@@ -44,11 +44,6 @@ def main() -> None:
     spark.range(n_cores * 4, numPartitions=n_cores).mapInPandas(
         _noop_batch, "id long"
     ).write.format("noop").mode("overwrite").save()
-
-    def drop_persistent_rdds() -> None:
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            it.next().getValue().unpersist(False)
 
     probes = {}
     pinned = "/root/testdata/sf0.01/lineitem.parquet"
@@ -77,7 +72,7 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(n):
         for name in names:
-            drop_persistent_rdds()
+            drop_cached_intermediates(spark)
             t0 = time.time()
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.time() - t0, 3))

@@ -83,8 +83,6 @@ def main() -> None:
         n_docs = docs.count()
         rec = {"k": k, "n_docs": n_docs}
         for name, op in ops.items():
-            for it in spark.sparkContext._jsc.getPersistentRDDs().entrySet():
-                pass  # keep the corpus checkpoint; ops do their own cleanup
             rec[name] = timed(lambda: op(docs))
         docs.unpersist()
         rows.append(rec)

@@ -58,3 +58,16 @@ def spark_jobs(spark, fn):
     seen = max(job_ids(), default=-1)
     out = fn()
     return out, sum(1 for j in job_ids() if j > seen)
+
+
+def persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def table_tree(root):
+    """Every file under the table root, and any _staging_* dir."""
+    files, staging = set(), []
+    for d, dirs, names in os.walk(root):
+        staging += [x for x in dirs if x.startswith("_staging")]
+        files.update(os.path.relpath(os.path.join(d, n), root) for n in names)
+    return files, staging

@@ -119,9 +119,13 @@ def test_fused_merge_upsert_counts_and_cdf(spark, tmp_table):
     assert kinds["update_postimage"] == set(range(15, 20))
 
 
-def test_write_rules_fall_back_to_two_write_path(spark, tmp_table):
-    """Tables with CHECK constraints keep the legacy path (validation
-    stays scoped to the rows the data write commits) and stay correct."""
+def test_write_rules_take_the_fused_writer(spark, tmp_table):
+    """A CHECK constraint rides the fused writer's job (the rule gate's
+    observe()), so a constrained CDF table fuses, stays correct, and a
+    violating UPDATE still fails without committing."""
+    from delta_rs_spark.log.commit import DeltaError
+    from delta_rs_spark.log.snapshot import load_snapshot
+
     write_deltalake(
         tmp_table,
         spark.range(0, 10).selectExpr("id", "cast(id as double) AS v"),
@@ -129,13 +133,86 @@ def test_write_rules_fall_back_to_two_write_path(spark, tmp_table):
     )
     t = DeltaTable(tmp_table)
     t.alter.add_constraint({"v_nonneg": "v >= 0"})
-    from delta_rs_spark.log.snapshot import load_snapshot
-
-    assert not can_fuse_cdc_write(load_snapshot(tmp_table))
+    assert can_fuse_cdc_write(load_snapshot(tmp_table))
     t.delete("id >= 8")
     assert {r["id"] for r in t.to_spark().collect()} == set(range(8))
     got = t.load_cdf(starting_version=2, ending_version=2).collect()
     assert {r["id"] for r in got if r["_change_type"] == "delete"} == {8, 9}
+    with pytest.raises(DeltaError, match="v_nonneg"):
+        t.update({"v": "-1.0"}, predicate="id = 3")
+    t.refresh()
+    assert t.version() == 2
+    assert not [d for d in os.listdir(tmp_table) if d.startswith("_staging")]
+
+
+def test_rule_gate_skips_preimage_rows(spark, tmp_table):
+    """Only rows that reach a data file are checked: an UPDATE that
+    repairs a row written before its constraint held commits, although
+    the row's preimage (a change-data row) violates the constraint."""
+    write_deltalake(
+        tmp_table,
+        spark.range(0, 4).selectExpr("id", "cast(id - 1 as double) AS v"),
+        configuration={
+            "delta.enableChangeDataFeed": "true",
+            "delta.constraints.v_nonneg": "v >= 0",
+        },
+    )
+    t = DeltaTable(tmp_table)
+    t.update({"v": "0.0"}, predicate="v < 0")
+    assert {r["id"]: r["v"] for r in t.to_spark().collect()} == {0: 0.0, 1: 0.0, 2: 1.0, 3: 2.0}
+    got = t.load_cdf(starting_version=1, ending_version=1).collect()
+    assert {(r["_change_type"], r["v"]) for r in got} == {
+        ("update_preimage", -1.0),
+        ("update_postimage", 0.0),
+    }
+
+
+def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
+    """VARIANT columns are the one case the fused writer cannot serve
+    (pyarrow cannot write them): DELETE, UPDATE and an upsert MERGE on a
+    VARIANT CDF table take the two-write fallback and emit the same
+    table rows and change rows."""
+    from delta_rs_spark.log.snapshot import load_snapshot
+
+    write_deltalake(
+        tmp_table,
+        spark.range(0, 10).selectExpr(
+            "id", "id AS v", "parse_json(concat('{\"k\":', id, '}')) AS doc"
+        ),
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    t = DeltaTable(tmp_table)
+    assert not can_fuse_cdc_write(load_snapshot(tmp_table))
+
+    def kinds(version):
+        got = {}
+        for r in t.load_cdf(starting_version=version, ending_version=version).collect():
+            got[r["_change_type"]] = got.get(r["_change_type"], 0) + 1
+        return got
+
+    t.delete("id >= 8")
+    assert kinds(1) == {"delete": 2}
+    t.update({"v": "v * 10"}, predicate="id = 1")
+    assert kinds(2) == {"update_preimage": 1, "update_postimage": 1}
+    src = spark.range(5, 12).selectExpr(
+        "id", "-id AS v", "parse_json(concat('{\"k\":', -id, '}')) AS doc"
+    )
+    (
+        t.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert kinds(3) == {"insert": 4, "update_preimage": 3, "update_postimage": 3}
+    t.refresh()
+    got = {
+        r["id"]: (r["v"], r["k"])
+        for r in t.to_spark().selectExpr("id", "v", "variant_get(doc, '$.k', 'int') AS k").collect()
+    }
+    want = {i: (i, i) for i in range(5)}
+    want[1] = (10, 1)
+    want.update({i: (-i, -i) for i in range(5, 12)})
+    assert got == want
 
 
 def test_fused_dv_update_pre_post_images(spark, tmp_table):

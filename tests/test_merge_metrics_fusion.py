@@ -5,9 +5,8 @@ frame's observe(). These tests pin the METRIC VALUES through every
 branch so the fusion can never drift them, and pin that a failed
 validation leaves nothing behind."""
 
-import os
-
 import pytest
+from conftest import persistent_rdds, table_tree
 
 from delta_rs_spark import DeltaTable, write_deltalake
 
@@ -76,19 +75,6 @@ def test_source_count_fallback_without_equi_pairs(spark, target):
     assert m["num_target_rows_inserted"] == 3
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def _tree(root):
-    """Every file under the table root, and any _staging_* dir."""
-    files, staging = set(), []
-    for d, dirs, names in os.walk(root):
-        staging += [x for x in dirs if x.startswith("_staging")]
-        files.update(os.path.relpath(os.path.join(d, n), root) for n in names)
-    return files, staging
-
-
 def test_duplicate_match_validation_still_raises(spark, tmp_path):
     """A duplicate match fails before anything leaves staging, on the
     fused CDF writer and on the plain writer alike: same table version,
@@ -108,15 +94,43 @@ def test_duplicate_match_validation_still_raises(spark, tmp_path):
             configuration={"delta.enableChangeDataFeed": str(cdf).lower()},
         )
         version = DeltaTable(path, spark=spark).version()
-        files, _ = _tree(path)
+        files, _ = table_tree(path)
         drop_cached_intermediates(spark)
         with pytest.raises(MergeError):
             _merge(spark, path, dup)
-        after, staging = _tree(path)
+        after, staging = table_tree(path)
         assert DeltaTable(path, spark=spark).version() == version
         assert staging == []
         assert {f for f in after - files if f.endswith(".parquet")} == set()
-        assert _persistent_rdds(spark) == 0
+        assert persistent_rdds(spark) == 0
+
+
+def test_merge_deleting_every_written_row(spark, target):
+    """A merge whose touched files lose every row leaves the write job
+    no input, and AQE then drops the observed stage from the plan: the
+    counts and the duplicate-match check must still come out right."""
+    from delta_rs_spark.operators.merge import MergeError
+
+    def delete_matched(src):
+        return (
+            DeltaTable(target, spark=spark)
+            .merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+            .when_matched_delete("s.v >= 0")
+            .execute()
+        )
+
+    # part 2's file holds ids 2, 6, 10, 14, 18; id 2 matches twice
+    dup = spark.createDataFrame(
+        [(i, 0) for i in (2, 2, 6, 10, 14, 18)], "id long, v long"
+    )
+    with pytest.raises(MergeError):
+        delete_matched(dup)
+    m = delete_matched(spark.range(1, 20, 4).selectExpr("id", "0L AS v"))
+    assert m["num_target_rows_deleted"] == 5
+    assert m["num_target_rows_copied"] == 0
+    assert m["num_target_files_added"] == 0
+    got = sorted(r["id"] for r in DeltaTable(target, spark=spark).to_spark().collect())
+    assert got == [i for i in range(20) if i % 4 != 1]
 
 
 def test_nmbs_only_merge_counts(spark, target):

@@ -2,6 +2,7 @@
 test_update.py, test_merge.py)."""
 
 import pytest
+from conftest import persistent_rdds, table_tree
 from pyspark.sql import functions as F
 
 from delta_rs_spark import DeltaTable, write_deltalake
@@ -213,33 +214,56 @@ def test_update_new_values_literals(spark, tmp_table):
         t.update(new_values={"v": object()})
 
 
-def test_constraints_enforced_on_update_and_merge(spark, tmp_table, sample_df):
+def test_constraints_enforced_on_update_and_merge(spark, tmp_path, sample_df):
     """CHECK constraints apply to every operation that produces rows
     (reference DeltaDataChecker), not just appends — UPDATE and MERGE
-    must abort without committing when the new values violate one."""
-    from delta_rs_spark import write_deltalake
+    must abort without committing when the new values violate one, on a
+    change-data-feed table (fused writer) and a plain one alike. A
+    failure leaves no staging dir and no new parquet file, and no
+    operation, failed or not, leaves a pinned frame behind."""
+    from delta_rs_spark.session import drop_cached_intermediates
 
-    write_deltalake(tmp_table, sample_df)
-    t = DeltaTable(tmp_table)
-    t.alter.add_constraint({"price_nonneg": "price >= 0"})
-    t.refresh()
-    v = t.version()
-    with pytest.raises(DeltaError, match="price_nonneg"):
-        t.update({"price": "-99"}, predicate="id = '1'")
-    src = spark.createDataFrame([("2", -50)], "id string, price long")
-    with pytest.raises(DeltaError, match="price_nonneg"):
-        (
-            t.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
-            .when_matched_update({"price": "s.price"})
-            .execute()
+    def merge(t, rows, insert=False):
+        src = spark.createDataFrame(rows, "id string, price long")
+        mb = t.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        mb = mb.when_matched_update({"price": "s.price"})
+        if insert:
+            mb = mb.when_not_matched_insert({"id": "s.id", "price": "s.price"})
+        return mb.execute()
+
+    for cdf in (False, True):
+        path = str(tmp_path / f"cdf_{cdf}")
+        write_deltalake(
+            path,
+            sample_df,
+            configuration={"delta.enableChangeDataFeed": str(cdf).lower()},
         )
-    t.refresh()
-    assert t.version() == v  # nothing committed
-    assert sorted(r.price for r in t.to_df().collect()) == [0, 1, 2, 3, 4]
-    # valid mutations still pass
-    t.update({"price": "price + 1"}, predicate="id = '1'")
-    t.refresh()
-    assert sorted(r.price for r in t.to_df().collect()) == [1, 1, 2, 3, 4]
+        t = DeltaTable(path)
+        t.alter.add_constraint({"price_nonneg": "price >= 0"})
+        t.refresh()
+        v = t.version()
+        drop_cached_intermediates(spark)
+        for op in (
+            lambda: t.update({"price": "-99"}, predicate="id = '1'"),
+            lambda: merge(t, [("2", -50)]),
+        ):
+            files, _ = table_tree(path)
+            with pytest.raises(DeltaError, match="price_nonneg"):
+                op()
+            after, staging = table_tree(path)
+            assert staging == []
+            assert {f for f in after - files if f.endswith(".parquet")} == set()
+            assert persistent_rdds(spark) == 0
+        t.refresh()
+        assert t.version() == v  # nothing committed
+        assert sorted(r.price for r in t.to_df().collect()) == [0, 1, 2, 3, 4]
+        # valid mutations still pass
+        t.update({"price": "price + 1"}, predicate="id = '1'")
+        assert persistent_rdds(spark) == 0
+        merge(t, [("2", 7), ("6", 5)], insert=True)
+        assert persistent_rdds(spark) == 0
+        t.refresh()
+        assert sorted(r.price for r in t.to_df().collect()) == [1, 2, 3, 4, 5, 7]
 
 
 def test_constraints_enforced_on_dv_update(spark, tmp_path, sample_df):

@@ -2,6 +2,7 @@
 test_table_read.py)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -151,11 +152,68 @@ def test_timestamp_time_travel(spark, tmp_table, sample_df):
     assert t.version() == 0
 
 
+def _parquet_files(root):
+    return {
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(root)
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
 def test_replace_where_validation(spark, tmp_table, lineitem):
+    """Input rows outside the predicate fail the write before any file
+    leaves staging: same version, no new parquet file, no staging dir."""
     write_deltalake(tmp_table, lineitem, partition_by=["l_returnflag"])
+    files = _parquet_files(tmp_table)
     bad = lineitem.limit(50)  # mixed flags violate the predicate
-    with pytest.raises(DeltaError):
+    with pytest.raises(DeltaError, match="replaceWhere: input rows violate predicate"):
         write_deltalake(tmp_table, bad, mode="overwrite", predicate="l_returnflag = 'A'")
+    assert DeltaTable(tmp_table).version() == 0
+    assert _parquet_files(tmp_table) == files
+    assert not [d for d in os.listdir(tmp_table) if d.startswith("_staging")]
+
+
+def test_append_rule_violation_after_size_sample(spark, tmp_table):
+    """With delta.targetFileSize set the append samples its first 1,024
+    rows to size files; a violation past the sample must still fail the
+    write, since the rule check rides the write job, not the sample."""
+    write_deltalake(
+        tmp_table,
+        spark.range(10).selectExpr("id", "id AS v"),
+        configuration={"delta.targetFileSize": str(1 << 20)},
+    )
+    t = DeltaTable(tmp_table)
+    t.alter.add_constraint({"v_nonneg": "v >= 0"})
+    t.refresh()
+    v = t.version()
+    late = spark.range(5000).selectExpr(
+        "id", "IF(id = 4000, -1, id) AS v"
+    ).coalesce(1)
+    with pytest.raises(DeltaError, match="v_nonneg"):
+        write_deltalake(tmp_table, late, mode="append")
+    t.refresh()
+    assert t.version() == v
+
+
+def test_empty_append_to_constrained_partitioned_table(spark, tmp_table):
+    """An empty append shuffles nothing into the partitioned write, so
+    AQE drops the stage holding the rule check: the append still
+    commits (an empty one)."""
+    write_deltalake(
+        tmp_table,
+        spark.range(10).selectExpr("id", "id % 2 AS p", "id AS v"),
+        partition_by=["p"],
+    )
+    t = DeltaTable(tmp_table)
+    t.alter.add_constraint({"v_nonneg": "v >= 0"})
+    t.refresh()
+    v = t.version()
+    empty = spark.range(10).selectExpr("id", "id % 2 AS p", "id AS v").filter("id > 100")
+    write_deltalake(tmp_table, empty, mode="append")
+    t.refresh()
+    assert t.version() == v + 1
+    assert t.to_df().count() == 10
 
 
 def test_metadata_count_no_scan(spark, tmp_table, sample_df):
