@@ -1,12 +1,16 @@
-"""Change-data-file writer shared by DELETE/UPDATE/MERGE/WRITE.
+"""The one mutation writer: DELETE, UPDATE and MERGE hand
+``write_mutation`` one frame of the rows they produce.
 
-Mirrors the reference's CDC tracker (reference:
-crates/core/src/operations/cdc.rs:14-51): when
-``delta.enableChangeDataFeed=true``, mutation operators persist the
-changed rows (with a ``_change_type`` column) as parquet under
-``_change_data/`` and commit AddCDCFile actions alongside the data
-actions. Readers synthesize insert/delete rows for plain append /
-overwrite commits (see operators/cdf.py).
+Mirrors the reference's write execution, which splits a mutation's
+rows into data rows and change rows by ``_change_type`` (reference:
+crates/core/src/operations/write/execution.rs:888-905), and its CDC
+tracker (operations/cdc.rs:14-51): when
+``delta.enableChangeDataFeed=true`` the change rows land as parquet
+under ``_change_data/`` and AddCDCFile actions commit alongside the
+data actions. ``write_mutation`` alone picks the writer: the fused
+one-job data+CDC writer, the two-write fallback for VARIANT tables, or
+a data-only write. Readers synthesize insert/delete rows for plain
+append / overwrite commits (see operators/cdf.py).
 """
 
 from __future__ import annotations
@@ -15,7 +19,8 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from delta_rs_spark.log.actions import AddCDCFile
 from delta_rs_spark.log.snapshot import Snapshot
@@ -23,7 +28,7 @@ from delta_rs_spark.log.snapshot import Snapshot
 CHANGE_TYPE_COL = "_change_type"
 CDC_DIR = "_change_data"
 
-# Routing rule for the fused data+CDC write — the reference's split
+# Routing rule for a mutation's rows — the reference's split
 # (reference: crates/core/src/operations/write/execution.rs:888-905):
 # the data writer takes every row whose _change_type is NOT one of
 # these (the column itself is removed before writing) ...
@@ -35,6 +40,21 @@ _DATA_EXCLUDE = ("delete", "source_delete", "update_preimage")
 _CDC_INCLUDE = ("delete", "insert", "update_preimage", "update_postimage")
 
 
+def is_data_row(ct):
+    """Whether a row tagged ``ct`` belongs in a data file: a NULL tag (a
+    copied row) or any tag outside _DATA_EXCLUDE. ``ct`` is a Spark
+    Column, or a pyarrow array inside the fused writer's tasks."""
+    if isinstance(ct, Column):
+        return ct.isNull() | ~ct.isin(*_DATA_EXCLUDE)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    # is_in yields null for a NULL tag
+    return pc.fill_null(
+        pc.invert(pc.is_in(ct, value_set=pa.array(_DATA_EXCLUDE))), True
+    )
+
+
 def cdf_enabled(snapshot: Snapshot) -> bool:
     return (
         snapshot.configuration.get("delta.enableChangeDataFeed", "false").lower()
@@ -43,11 +63,58 @@ def cdf_enabled(snapshot: Snapshot) -> bool:
 
 
 def can_fuse_cdc_write(snapshot: Snapshot) -> bool:
-    """Whether the single-job fused data+CDC writer applies to this
-    table: every table except one with VARIANT columns, which pyarrow
-    cannot write inside the fused writer's tasks. Write rules ride the
-    fused write through the ``validate`` hook (writer.gate_rules)."""
+    """Whether ``write_mutation`` may use the single-job fused data+CDC
+    writer: every table except one with VARIANT columns, which pyarrow
+    cannot write inside the fused writer's tasks."""
     return '"variant"' not in (snapshot.schema_string or "").lower()
+
+
+def write_mutation(
+    df: DataFrame, snapshot: Snapshot, validate=None
+) -> tuple[list, list[AddCDCFile]]:
+    """Write one mutation's rows into ``snapshot``'s table; return (data
+    Adds, AddCDCFiles).
+
+    ``df`` holds table columns, plus row tracking's hidden columns when
+    the table has them, plus an optional ``_change_type``: NULL for a
+    copied row, else insert / delete / update_preimage /
+    update_postimage. Its rows are routed by is_data_row and
+    _CDC_INCLUDE. Without the column, or on a table without CDF, only
+    the data rows are written. ``validate`` (no-arg callable) runs
+    after the data files are written to staging and before any leaves
+    it; a frame gated by writer.gate_rules is checked over every row by
+    the first write."""
+    from delta_rs_spark.writer import write_files
+
+    table_path, part_cols = snapshot.table_path, snapshot.partition_columns
+
+    def write_data(data: DataFrame) -> list:
+        return write_files(
+            data,
+            table_path,
+            part_cols,
+            snapshot.configuration,
+            snapshot.schema_string,
+            validate=validate,
+        )
+
+    ct = F.col(CHANGE_TYPE_COL)
+    if CHANGE_TYPE_COL not in df.columns:
+        return write_data(df), []
+    if not cdf_enabled(snapshot):
+        return write_data(df.filter(is_data_row(ct)).drop(CHANGE_TYPE_COL)), []
+    if can_fuse_cdc_write(snapshot):
+        return write_data_and_change_files(
+            df, table_path, part_cols, snapshot, validate=validate
+        )
+    # VARIANT: two writes read the frame, so it is pinned and both see
+    # one evaluation (identity values included)
+    df = df.persist()
+    try:
+        adds = write_data(df.filter(is_data_row(ct)).drop(CHANGE_TYPE_COL))
+        return adds, write_change_data(df.filter(ct.isin(*_CDC_INCLUDE)), snapshot)
+    finally:
+        df.unpersist(False)
 
 
 def write_data_and_change_files(
@@ -76,24 +143,16 @@ def write_data_and_change_files(
     row-tracking's hidden materialized columns dropped."""
     import json as _json
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from delta_rs_spark.log.actions import Add
-    from delta_rs_spark.log.stats import (
-        collect_stats_parallel,
-        stats_config,
-        stats_json,
-    )
     from delta_rs_spark.plans import column_mapping as cmap
     from delta_rs_spark.plans.row_tracking import materialized_names
-    from delta_rs_spark.writer import _encode_partition_value
+    from delta_rs_spark.writer import _encode_partition_value, data_file_adds
 
     cfg = snapshot.configuration
     schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
     hidden = [c for c in df.columns if c in materialized_names(cfg)]
-    mapped = cmap.mapping_mode(cfg) != "none"
-    if mapped:
+    if cmap.mapping_mode(cfg) != "none":
         df = cmap.rename_to_physical(
             df, schema, extra_cols=hidden + [CHANGE_TYPE_COL]
         )
@@ -132,7 +191,7 @@ def write_data_and_change_files(
     data_drop = list(pv_names) + list(part_cols) + [ct_col]
     cdc_drop = list(pv_names) + list(part_cols) + list(hidden)
     n_parts = len(part_cols)
-    data_exclude, cdc_include = _DATA_EXCLUDE, _CDC_INCLUDE
+    cdc_include = _CDC_INCLUDE
 
     def _task(batches):
         import pyarrow as pa
@@ -185,16 +244,11 @@ def write_data_and_change_files(
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             ct = tbl[ct_col]
-            # NULL _change_type = plain data row: is_in yields null
-            # there, so fill data-side nulls to True, cdc-side to False
-            data_mask = pc.fill_null(
-                pc.invert(pc.is_in(ct, value_set=pa.array(data_exclude))),
-                True,
-            )
+            # is_in yields null for a NULL tag: no change row
             cdc_mask = pc.fill_null(
                 pc.is_in(ct, value_set=pa.array(cdc_include)), False
             )
-            _write("d", tbl.filter(data_mask))
+            _write("d", tbl.filter(is_data_row(ct)))
             _write("c", tbl.filter(cdc_mask))
 
         out_kind, out_path, out_pv = [], [], []
@@ -258,157 +312,55 @@ def write_data_and_change_files(
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
-    # footer stats for the data files — same contract as write_files
-    n_idx, stats_cols = stats_config(cfg)
-    if stats_cols and mapped:
-        phys = cmap.logical_to_physical(schema)
-        stats_cols = [phys.get(c, c) for c in stats_cols]
-    stats = collect_stats_parallel([m[0] for m in moved_data], n_idx, stats_cols)
-    hidden_stat_cols = set(materialized_names(cfg))
-    adds: list[Add] = []
-    for (abs_path, rel_path, part_vals), st in zip(moved_data, stats):
-        if st is None:
-            # the fused path never writes variant columns (can_fuse
-            # gate) and never emits 0-row files, so a missing footer
-            # stat means an unexpected parse failure — recover the row
-            # count directly rather than misreading the file as empty
-            import pyarrow.parquet as _pq
-
-            st = {"numRecords": _pq.ParquetFile(abs_path).metadata.num_rows}
-        for k in ("minValues", "maxValues", "nullCount"):
-            d = st.get(k)
-            if d:
-                for name in list(d):
-                    if name in hidden_stat_cols:
-                        del d[name]
-        if st.get("numRecords") == 0:
-            os.unlink(abs_path)
-            continue
-        adds.append(
-            Add(
-                path=rel_path.replace(os.sep, "/"),
-                size=os.path.getsize(abs_path),
-                modification_time=int(os.path.getmtime(abs_path) * 1000),
-                data_change=True,
-                partition_values=part_vals,
-                stats=stats_json(st),
-            )
-        )
+    adds = data_file_adds(df.sparkSession, moved_data, cfg, snapshot.schema_string)
     return adds, cdc_actions
 
 
-def write_change_data(change_df: DataFrame, table_path: str) -> list[AddCDCFile]:
-    """Write rows (must already carry _change_type) under _change_data/.
-    On column-mapped tables CDC files carry PHYSICAL column names like
-    the data files (Delta protocol: change data follows the table's
-    column mapping); load_cdf renames back.
+def write_change_data(change_df: DataFrame, snapshot: Snapshot) -> list[AddCDCFile]:
+    """Write change rows (carrying _change_type) under _change_data/
+    with Spark's writer, in the fused writer's layout: PHYSICAL column
+    names on column-mapped tables (Delta protocol: change data follows
+    the table's column mapping; load_cdf renames back); on partitioned
+    tables one ``k=v`` directory per partition, the partition columns
+    kept out of the files, their values on the AddCDCFile action's
+    partitionValues, which load_cdf prunes by (reference
+    load_cdf.rs:357-359); row tracking's hidden columns dropped."""
+    import json as _json
 
-    On PARTITIONED tables the stage write splits by DUPLICATED partition
-    key columns — the real columns stay inside the files (readers stay
-    self-contained, no directory decoding on read) while the per-file
-    partitionValues land on the AddCDCFile action, which is what lets
-    load_cdf prune change files by a partition predicate (reference
-    load_cdf.rs:357-359 prunes change_files the same way)."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from delta_rs_spark.plans import column_mapping as cmap
-
-    from delta_rs_spark.log import snapshot as snap_mod
     from delta_rs_spark.plans.row_tracking import materialized_names
+    from delta_rs_spark.writer import move_staged
 
-    try:
-        snap = snap_mod.load_snapshot(table_path)
-    except Exception:
-        snap = None
-
+    cfg = snapshot.configuration
     # row tracking's hidden materialized columns ride rewrite frames;
-    # CDC files carry TABLE columns only (change consumers never see
-    # physical row ids). The names come from the table CONFIGURATION
-    # (delta.rowTracking.materialized*ColumnName) — a foreign writer may
-    # not follow our '_row-id-col-' prefix convention.
-    hidden = [
-        c
-        for c in change_df.columns
-        if c in materialized_names(snap.configuration if snap else None)
-    ]
+    # change consumers never see physical row ids. The names come from
+    # the table CONFIGURATION — a foreign writer may not follow our
+    # '_row-id-col-' prefix convention.
+    hidden = [c for c in change_df.columns if c in materialized_names(cfg)]
     if hidden:
         change_df = change_df.drop(*hidden)
-
-    part_phys: list[str] = []
-    try:
-        if snap is None:
-            raise ValueError("no snapshot")
-        mapped = cmap.mapping_mode(snap.configuration) != "none"
-        if mapped:
-            import json as _json
-
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(_json.loads(snap.schema_string))
-            # rename the table columns, carry _change_type through as-is
-            cols = []
-            for f in schema.fields:
-                c = F.col(f"`{f.name}`")
-                pt = cmap._physical_type(f.dataType)
-                if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
-                    c = c.cast(pt)
-                cols.append(c.alias(cmap._physical_name(f)))
-            change_df = change_df.select(*cols, F.col(CHANGE_TYPE_COL))
-            phys = cmap.logical_to_physical(schema)
-            part_phys = [phys.get(c, c) for c in snap.partition_columns]
-        else:
-            part_phys = list(snap.partition_columns)
-    except Exception:
-        part_phys = []
-    stage = os.path.join(table_path, f"_staging_cdc_{uuid.uuid4().hex}")
-    stage_keys: list[str] = []
-    if part_phys and all(p in change_df.columns for p in part_phys):
-        for i, p in enumerate(part_phys):
-            change_df = change_df.withColumn(f"__cdc_p_{i}", F.col(f"`{p}`"))
-        stage_keys = [f"__cdc_p_{i}" for i in range(len(part_phys))]
-        change_df.write.mode("overwrite").partitionBy(*stage_keys).parquet(stage)
-    else:
-        part_phys = []
-        change_df.write.mode("overwrite").parquet(stage)
-    out_dir = os.path.join(table_path, CDC_DIR)
-    os.makedirs(out_dir, exist_ok=True)
-    actions: list[AddCDCFile] = []
-    for root, _dirs, files in os.walk(stage):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            src = os.path.join(root, fn)
-            if os.path.getsize(src) == 0:
-                continue
-            part_vals: dict[str, str | None] = {}
-            rel_dir = os.path.relpath(root, stage)
-            dst_dir = out_dir
-            if part_phys and rel_dir != ".":
-                from delta_rs_spark.writer import (
-                    _decode_partition_dir,
-                    _encode_partition_value,
-                )
-
-                for seg in rel_dir.split(os.sep):
-                    k, v = _decode_partition_dir(seg)
-                    part_vals[part_phys[int(k.rsplit("_", 1)[1])]] = v
-                # delta-spark's CDC layout: nested partition dirs under
-                # _change_data/ with the REAL column names
-                dst_dir = os.path.join(
-                    out_dir,
-                    *[
-                        f"{c}={_encode_partition_value(v)}"
-                        for c, v in part_vals.items()
-                    ],
-                )
-                os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, f"cdc-{uuid.uuid4().hex}.snappy.parquet")
-            os.rename(src, dst)
-            rel = os.path.relpath(dst, table_path).replace(os.sep, "/")
-            actions.append(
-                AddCDCFile(
-                    path=rel, size=os.path.getsize(dst), partition_values=part_vals
-                )
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-    return actions
+    part_cols = snapshot.partition_columns
+    if cmap.mapping_mode(cfg) != "none":
+        schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
+        change_df = cmap.rename_to_physical(
+            change_df, schema, extra_cols=[CHANGE_TYPE_COL]
+        )
+        phys = cmap.logical_to_physical(schema)
+        part_cols = [phys.get(c, c) for c in part_cols]
+    stage = os.path.join(snapshot.table_path, f"_staging_cdc_{uuid.uuid4().hex}")
+    w = change_df.write.mode("overwrite")
+    if part_cols:
+        w = w.partitionBy(*part_cols)
+    w.parquet(stage)
+    return [
+        AddCDCFile(
+            path=rel.replace(os.sep, "/"),
+            size=os.path.getsize(dst),
+            partition_values=part_vals,
+        )
+        for dst, rel, part_vals in move_staged(
+            stage, snapshot.table_path, "cdc", CDC_DIR
+        )
+    ]

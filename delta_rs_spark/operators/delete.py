@@ -10,8 +10,10 @@ metadata-only file removal (:472-535); otherwise scan candidate files
 reference. CDF rows are emitted when enabled (:598-617).
 
 Scale: phase 1 collects only distinct matched *file paths* to the driver
-(O(files), never O(rows)); phase 2 reads and rewrites only touched files
-with Spark's parallel writer.
+(O(files), never O(rows)); phase 2 reads only the touched files and
+hands their rows, matched ones tagged "delete", to cdc.write_mutation,
+which rewrites the survivors (and, with CDF, writes the deleted rows as
+change data) in one pass.
 """
 
 from __future__ import annotations
@@ -32,10 +34,9 @@ from delta_rs_spark.plans.row_tracking import (
 )
 from delta_rs_spark.operators.cdc import (
     CHANGE_TYPE_COL,
-    can_fuse_cdc_write,
     cdf_enabled,
     write_change_data,
-    write_data_and_change_files,
+    write_mutation,
 )
 from delta_rs_spark.operators.util import _rel_candidates, match_touched_files
 from delta_rs_spark.plans.skipping import (
@@ -54,7 +55,6 @@ def plan_predicate_removal(
     """Shared by DELETE and replaceWhere: compute (removes, rewrite adds,
     deleted row count) for removing all rows matching predicate."""
     from delta_rs_spark.table import read_snapshot_df
-    from delta_rs_spark.writer import write_files
 
     from delta_rs_spark.plans.column_mapping import snapshot_physical_of
 
@@ -108,39 +108,16 @@ def plan_predicate_removal(
         )
     else:
         touched_df = read_snapshot_df(spark, snapshot, table_path, files=touched_adds)
-    if cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot):
-        # r13 (VERDICT r12 #2): ONE write job emits the survivor files
-        # AND the change-data files from a single scan of the touched
-        # files — matched rows are tagged "delete" (routed to
-        # _change_data/ only), survivors keep a NULL tag (data files
-        # only). No persist, no second job, one read pass.
-        tagged = touched_df.withColumn(
-            CHANGE_TYPE_COL,
-            F.when(F.expr(predicate), F.lit("delete")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-        data_adds, cdc_actions = write_data_and_change_files(
-            tagged, table_path, part_cols, snapshot
-        )
-        new_adds = data_adds + cdc_actions  # type: ignore[operator]
-    elif cdf_enabled(snapshot):
-        # VARIANT fallback: pin the touched files across the two writes
-        # (bounded by the touched-file set, the rewrite's own envelope)
-        touched_df.persist()
-        try:
-            keep_df = touched_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True)))
-            new_adds = write_files(keep_df, table_path, part_cols)
-            deleted_df = touched_df.filter(F.expr(predicate)).withColumn(
-                CHANGE_TYPE_COL, F.lit("delete")
-            )
-            cdc_actions = write_change_data(deleted_df, table_path)
-            new_adds = new_adds + cdc_actions  # type: ignore[operator]
-        finally:
-            touched_df.unpersist(False)
-    else:
-        keep_df = touched_df.filter(~F.expr(predicate).eqNullSafe(F.lit(True)))
-        new_adds = write_files(keep_df, table_path, part_cols)
+    # matched rows are tagged "delete" (change data only), survivors
+    # keep a NULL tag (data files only)
+    tagged = touched_df.withColumn(
+        CHANGE_TYPE_COL,
+        F.when(F.expr(predicate), F.lit("delete")).otherwise(
+            F.lit(None).cast("string")
+        ),
+    )
+    data_adds, cdc_actions = write_mutation(tagged, snapshot)
+    new_adds = data_adds + cdc_actions  # type: ignore[operator]
 
     removes = [
         Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in touched_adds
@@ -291,10 +268,12 @@ def plan_dv_delete(
     removes, new_adds, n_deleted = dv_mark_rows(table_path, by_rel, candidates, ts)
 
     if cdf_enabled(snapshot):
+        # change rows only: write_mutation's fused writer would add its
+        # rebalance job for no data file
         deleted_df = df.filter(F.expr(predicate)).drop(
             "__delta_rs_fp", "__delta_rs_ri"
         ).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-        new_adds = new_adds + write_change_data(deleted_df, table_path)  # type: ignore[operator]
+        new_adds = new_adds + write_change_data(deleted_df, snapshot)  # type: ignore[operator]
     return removes, new_adds, n_deleted
 
 

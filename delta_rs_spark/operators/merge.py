@@ -41,13 +41,7 @@ from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
-from delta_rs_spark.operators.cdc import (
-    CHANGE_TYPE_COL,
-    can_fuse_cdc_write,
-    cdf_enabled,
-    write_change_data,
-    write_data_and_change_files,
-)
+from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import match_touched_files
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
@@ -618,7 +612,7 @@ class TableMerger:
 
     def _execute(self, source_df: DataFrame, pins: list[DataFrame]) -> dict[str, Any]:
         from delta_rs_spark.table import read_snapshot_df
-        from delta_rs_spark.writer import gate_rules, observed_metrics, write_files, write_rules
+        from delta_rs_spark.writer import gate_rules, observed_metrics, write_rules
 
         spark = self.dt.spark
         table_path = self.dt.table_uri
@@ -1038,46 +1032,22 @@ class TableMerger:
             else:
                 out = out.filter(keep).select(*data_cols)
 
-            fused = cdf_on and can_fuse_cdc_write(snapshot)
-            data = out
-            if cdf_on and not fused:
-                # VARIANT fallback: two writes read the frame — pin it,
-                # so both see the same evaluation (identity values
-                # included)
-                out = out.persist()
-                pins.append(out)
-                ct = F.col(CHANGE_TYPE_COL)
-                data = out.filter(
-                    ct.isNull() | ~ct.isin("delete", "update_preimage")
-                ).drop(CHANGE_TYPE_COL)
-            # the rule gate skips a fused frame's preimage/delete rows
-            data, rules_ok = gate_rules(data, write_rules(snapshot))
+            # the rule gate skips preimage/delete rows
+            out, rules_ok = gate_rules(out, write_rules(snapshot))
+            if not part_cols:
+                # the frame leaves a join over the pinned source (and in
+                # DV mode is pinned itself): a cached input keeps its
+                # cache partitioning, which defeats AQE coalescing —
+                # rebalance to size-adaptive output files (guide §6;
+                # partitioned writes repartition by partition value).
+                # The fused writer's own rebalance collapses into this.
+                out = out.hint("rebalance")
 
             def validate() -> None:
                 check()
                 rules_ok()
 
-            if fused:
-                # ONE job writes data + change files from one pass
-                new_adds, cdc_actions = write_data_and_change_files(
-                    data, table_path, part_cols, snapshot, validate=validate
-                )
-            else:
-                # a cached input keeps its cache partitioning (cached
-                # plans defeat AQE coalescing) — rebalance unpartitioned
-                # writes to size-adaptive output files (guide §6;
-                # partitioned writes get the same control from
-                # write_files' repartition)
-                new_adds = write_files(
-                    data if part_cols else data.hint("rebalance"),
-                    table_path,
-                    part_cols,
-                    validate=validate,
-                )
-                if cdf_on:
-                    cdc_actions = write_change_data(
-                        out.filter(F.col(CHANGE_TYPE_COL).isNotNull()), table_path
-                    )
+            new_adds, cdc_actions = write_mutation(out, snapshot, validate=validate)
 
         # ---- commit -----------------------------------------------------
         actions: list = []

@@ -116,7 +116,12 @@ class TableOptimizer:
             if n_out < len(files):
                 df = df.coalesce(n_out)
             new_adds = write_files(
-                df, table_path, part_cols, max_records_per_file=rows_per_file
+                df,
+                table_path,
+                part_cols,
+                snapshot.configuration,
+                snapshot.schema_string,
+                max_records_per_file=rows_per_file,
             )
             for a in new_adds:
                 a.data_change = False
@@ -255,7 +260,9 @@ class TableOptimizer:
             df = _rt.read_with_materialized(spark, snapshot, table_path, targets)
         else:
             df = read_snapshot_df(spark, snapshot, table_path, files=targets)
-        new_adds = write_files(df, table_path, part_cols)
+        new_adds = write_files(
+            df, table_path, part_cols, snapshot.configuration, snapshot.schema_string
+        )
         ts = now_ms()
         for a in new_adds:
             a.data_change = False
@@ -475,7 +482,12 @@ class TableOptimizer:
         # preserve_layout: the range partitioning + within-partition sort
         # IS the z-clustering; write_files' hash repartition would undo it
         new_adds = write_files(
-            rewritten, table_path, part_cols, preserve_layout=True
+            rewritten,
+            table_path,
+            part_cols,
+            snapshot.configuration,
+            snapshot.schema_string,
+            preserve_layout=True,
         )
         cube_bytes = sum(a.size for a in new_adds)
         for a in new_adds:

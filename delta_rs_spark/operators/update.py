@@ -24,13 +24,7 @@ from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.plans.row_tracking import (
     cached_watermark as _rt_cached_watermark,
 )
-from delta_rs_spark.operators.cdc import (
-    CHANGE_TYPE_COL,
-    can_fuse_cdc_write,
-    cdf_enabled,
-    write_change_data,
-    write_data_and_change_files,
-)
+from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import match_touched_files
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
@@ -92,7 +86,7 @@ def update(
     target type become NULL for NULLABLE columns instead of erroring;
     non-nullable columns keep the strict cast."""
     from delta_rs_spark.table import read_snapshot_df
-    from delta_rs_spark.writer import gate_rules, write_files, write_rules
+    from delta_rs_spark.writer import gate_rules, write_rules
 
     if not updates:
         raise DeltaError("update requires at least one column assignment")
@@ -203,7 +197,7 @@ def update(
         touched_df = rt.read_with_materialized(spark, snapshot, table_path, touched_adds)
     else:
         touched_df = read_snapshot_df(spark, snapshot, table_path, files=touched_adds)
-    fused = cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot)
+    cdf_on = cdf_enabled(snapshot)
     schema_cols = [f.name for f in touched_df.schema.fields]
     # CASE-guard every updated column (reference: update.rs:357-358).
     # cond is pinned to the PRE-update row via a marker column so the
@@ -211,14 +205,13 @@ def update(
     # still knows which rows the predicate selected.
     marked = touched_df.withColumn("__delta_rs_upd", cond)
     upd_flag = F.col("__delta_rs_upd")
-    if fused:
-        # r13 (VERDICT r12 #2): ONE scan, ONE write job. Each matched
-        # row explodes into an update_postimage row (new values, routed
-        # to data + _change_data/) and an update_preimage row (old
-        # values, _change_data/ only); unmatched rows carry a NULL tag
-        # (data only). The value projection below keys off the tag, so
-        # preimage rows keep the pre-update values. No persist, no
-        # second write job, one read pass of the touched files.
+    if cdf_on:
+        # each matched row explodes into an update_postimage row (new
+        # values, routed to data + _change_data/) and an
+        # update_preimage row (old values, _change_data/ only);
+        # unmatched rows carry a NULL tag (data only). The value
+        # projection below keys off the tag, so preimage rows keep the
+        # pre-update values.
         marked = marked.select(
             "*",
             F.explode(
@@ -247,7 +240,7 @@ def update(
             for c in schema_cols
         ],
         "__delta_rs_upd",
-        *([CHANGE_TYPE_COL] if fused else []),
+        *([CHANGE_TYPE_COL] if cdf_on else []),
     )
     updated_df = _recompute_generated_cols(
         updated_df, touched_df.schema, updates, schema_cols, upd_flag
@@ -261,43 +254,7 @@ def update(
     updated_df, check = gate_rules(
         updated_df.drop("__delta_rs_upd"), write_rules(snapshot)
     )
-    cdc_actions = []
-    if fused:
-        new_adds, cdc_actions = write_data_and_change_files(
-            updated_df, table_path, part_cols, snapshot, validate=check
-        )
-    elif cdf_enabled(snapshot):
-        # VARIANT fallback: the rewrite and the pre/post images each
-        # read the touched files — pin them once (bounded by the
-        # touched-file set, the same envelope the rewrite holds)
-        touched_df.persist()
-        try:
-            new_adds = write_files(updated_df, table_path, part_cols, validate=check)
-            pre = touched_df.filter(cond).withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-            post = (
-                _recompute_generated_cols(
-                    touched_df.filter(cond).select(
-                        *[
-                            _ucast(
-                                F.expr(updates[c]), c, touched_df.schema[c].dataType
-                            ).alias(c)
-                            if c in updates
-                            else F.col(c)
-                            for c in schema_cols
-                        ]
-                    ),
-                    touched_df.schema,
-                    updates,
-                    schema_cols,
-                    F.lit(True),
-                )
-                .withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-            )
-            cdc_actions = write_change_data(pre.unionByName(post), table_path)
-        finally:
-            touched_df.unpersist(False)
-    else:
-        new_adds = write_files(updated_df, table_path, part_cols, validate=check)
+    new_adds, cdc_actions = write_mutation(updated_df, snapshot, validate=check)
     # live rows only: DV'd files contribute physical rows minus cardinality
     n_total = sum(
         (a.num_records() or 0)
@@ -365,7 +322,6 @@ def _dv_update(
         group_rows_by_file,
     )
     from delta_rs_spark.table import read_snapshot_df
-    from delta_rs_spark.writer import write_files
 
     from delta_rs_spark.plans import row_tracking as rt
 
@@ -451,7 +407,7 @@ def _dv_update_commit(
         dv_mark_rows,
         group_rows_by_file,
     )
-    from delta_rs_spark.writer import gate_rules, write_files, write_rules
+    from delta_rs_spark.writer import gate_rules, write_rules
 
     rows = (
         matched_df.groupBy(F.col("__delta_rs_fp").alias("fp"))
@@ -497,33 +453,15 @@ def _dv_update_commit(
         schema_cols,
         F.lit(True),
     )
-    actions = list(removes) + list(dv_adds)
-    if cdf_enabled(snapshot) and can_fuse_cdc_write(snapshot):
-        # r13: ONE write job emits the updated-row files AND the
-        # pre/post change files — both branches read the pinned
-        # matched frame, postimage rows route to data + _change_data/,
-        # preimage rows to _change_data/ only
-        tagged, check = gate_rules(
-            new_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage")).unionByName(
-                base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-            ),
-            write_rules(snapshot),
-        )
-        new_adds, cdc_actions = write_data_and_change_files(
-            tagged, table_path, snapshot.partition_columns, snapshot, validate=check
-        )
-        actions += new_adds + cdc_actions
-    else:
-        gated, check = gate_rules(new_rows, write_rules(snapshot))
-        new_adds = write_files(
-            gated, table_path, snapshot.partition_columns, validate=check
-        )
-        actions += new_adds
-        if cdf_enabled(snapshot):
-            # both images read the pinned matched frame
-            pre = base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-            post = new_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-            actions += write_change_data(pre.unionByName(post), table_path)
+    if cdf_enabled(snapshot):
+        # both images read the pinned matched frame: postimage rows
+        # route to data + _change_data/, preimage rows to _change_data/
+        new_rows = new_rows.withColumn(
+            CHANGE_TYPE_COL, F.lit("update_postimage")
+        ).unionByName(base.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage")))
+    gated, check = gate_rules(new_rows, write_rules(snapshot))
+    new_adds, cdc_actions = write_mutation(gated, snapshot, validate=check)
+    actions = list(removes) + list(dv_adds) + new_adds + cdc_actions
 
     metrics.update(
         {

@@ -140,32 +140,27 @@ def _encode_partition_value(v: str | None) -> str:
 
 
 def _spark_stats_fallback(
-    df: DataFrame,
-    moved: list,
+    spark: SparkSession,
+    paths: list[str],
     stats: list,
     num_indexed_cols: int,
     stats_columns: list[str] | None,
-    partition_by: list[str] | None = None,
 ) -> list:
     """Per-file Delta stats via one Spark aggregation, for files whose
     parquet footer pyarrow cannot parse (VARIANT logical type). Same
     contract as log.stats.collect_file_stats: numRecords + min/max/
-    nullCount for the first-N (or name-selected) TOP-LEVEL columns;
-    variant/nested/binary columns carry no min/max (they do not in
-    footer stats either). One scan of only the affected files, grouped
-    by _metadata.file_path — no driver-side row materialization beyond
-    |files| stat rows."""
+    nullCount for the first-N (or name-selected) TOP-LEVEL columns of
+    the files; variant/nested/binary columns carry no min/max (they do
+    not in footer stats either). One scan of only the affected files,
+    grouped by _metadata.file_path — no driver-side row materialization
+    beyond |files| stat rows."""
     from delta_rs_spark.log.stats import _scalar
 
-    spark = df.sparkSession
     todo = [i for i, st in enumerate(stats) if st is None]
-    paths = [moved[i][0] for i in todo]
-
-    # partition columns are directory-encoded, not stored in the files;
-    # the per-path scan below sees only physical columns (matching
-    # collect_file_stats, which stats footer columns only)
-    part = set(partition_by or ())
-    fields = [f for f in df.schema.fields if f.name not in part]
+    files = spark.read.parquet(*[paths[i] for i in todo])
+    # the files' own columns: partition values are directory-encoded,
+    # and a read of explicit file paths infers no partition columns
+    fields = files.schema.fields
     if stats_columns is not None:
         eligible = [f for f in fields if f.name in set(stats_columns)]
     elif num_indexed_cols < 0:
@@ -185,8 +180,7 @@ def _spark_stats_fallback(
         aggs.append(F.max(c).alias(f"__mx{i}"))
         aggs.append(F.sum(c.isNull().cast("long")).alias(f"__nc{i}"))
     rows = (
-        spark.read.parquet(*paths)
-        .groupBy(F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__file"))
+        files.groupBy(F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__file"))
         .agg(*aggs)
         .collect()
     )
@@ -209,7 +203,7 @@ def _spark_stats_fallback(
         by_name[d["__file"]] = st
     out = list(stats)
     for i in todo:
-        out[i] = by_name.get(os.path.basename(moved[i][0]))
+        out[i] = by_name.get(os.path.basename(paths[i]))
     return out
 
 
@@ -231,50 +225,121 @@ def _estimate_rows_for_bytes(df: DataFrame, target_bytes: int) -> int:
     return max(int(target_bytes / bytes_per_row), 1)
 
 
+def move_staged(
+    stage: str, table_path: str, prefix: str, subdir: str = ""
+) -> list[tuple[str, str, dict[str, str | None]]]:
+    """Move every parquet file Spark wrote under ``stage`` into
+    ``table_path/subdir``, keeping its Hive ``k=v`` directories, as
+    ``<prefix>-<uuid>.snappy.parquet``; return (absolute path, path
+    relative to the table, partition values) per file. The staging
+    directory is removed."""
+    moved = []
+    try:
+        for root, _dirs, files in os.walk(stage):
+            rel_dir = os.path.relpath(root, stage)
+            segs = rel_dir.split(os.sep) if rel_dir != "." else []
+            part_vals = dict(_decode_partition_dir(seg) for seg in segs)
+            dst_dir = os.path.join(table_path, subdir, *segs)
+            for fn in files:
+                if not fn.endswith(".parquet"):
+                    continue
+                os.makedirs(dst_dir, exist_ok=True)
+                dst = os.path.join(dst_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet")
+                os.rename(os.path.join(root, fn), dst)
+                moved.append((dst, os.path.relpath(dst, table_path), part_vals))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return moved
+
+
+def data_file_adds(
+    spark: SparkSession,
+    moved: list[tuple[str, str, dict[str, str | None]]],
+    configuration: dict[str, str] | None,
+    table_schema_json: str,
+) -> list[Add]:
+    """Adds for data files just moved into the table, as (absolute path,
+    path relative to the table, partition values): footer stats under
+    the table's data-skipping configuration, whose column names are
+    translated to the physical names the footers carry on column-mapped
+    tables. A file without rows is deleted and gets no Add."""
+    from delta_rs_spark.plans import column_mapping as cmap
+    from delta_rs_spark.plans.row_tracking import materialized_names
+
+    n_idx, stats_cols = stats_config(configuration)
+    if stats_cols and cmap.mapping_mode(configuration or {}) != "none":
+        import json as _json
+
+        schema = T.StructType.fromJson(_json.loads(table_schema_json))
+        phys = cmap.logical_to_physical(schema)
+        stats_cols = [phys.get(c, c) for c in stats_cols]
+    paths = [m[0] for m in moved]
+    stats = collect_stats_parallel(paths, n_idx, stats_cols)
+    if any(st is None for st in stats):
+        # pyarrow could not read some footers (VARIANT logical type):
+        # compute the same stats with ONE Spark aggregation over just
+        # those files — Spark reads its own variant output fine
+        stats = _spark_stats_fallback(spark, paths, stats, n_idx, stats_cols)
+    # row tracking's hidden materialized columns are physical-only —
+    # keep them out of the skipping stats (they are not queryable).
+    # Resolve the CONFIGURED names (delta.rowTracking.materialized*
+    # ColumnName): a table written by another engine may name them
+    # without our '_row-id-col-' prefix convention.
+    hidden = set(materialized_names(configuration))
+    adds: list[Add] = []
+    for (abs_path, rel_path, part_vals), st in zip(moved, stats):
+        # a file still without stats after the fallback scanned exactly
+        # these paths contributed no rows to the grouped count: empty
+        if st is None or st.get("numRecords") == 0:
+            os.unlink(abs_path)
+            continue
+        for k in ("minValues", "maxValues", "nullCount"):
+            for name in list(st.get(k) or ()):
+                if name in hidden:
+                    del st[k][name]
+        adds.append(
+            Add(
+                path=rel_path.replace(os.sep, "/"),
+                size=os.path.getsize(abs_path),
+                modification_time=int(os.path.getmtime(abs_path) * 1000),
+                data_change=True,
+                partition_values=part_vals,
+                stats=stats_json(st),
+            )
+        )
+    return adds
+
+
 def write_files(
     df: DataFrame,
     table_path: str,
     partition_by: list[str],
+    configuration: dict[str, str] | None,
+    table_schema_json: str,
     max_records_per_file: int | None = None,
     writer_properties=None,
-    configuration: dict[str, str] | None = None,
-    table_schema_json: str | None = None,
     preserve_layout: bool = False,
     validate=None,
 ) -> list[Add]:
     """Write df as parquet files into the table directory; return Adds.
 
-    The Spark write job is the first and only action on ``df``, so a
-    frame gated by ``gate_rules`` is checked over every row it writes.
-    ``writer_properties`` maps onto Spark parquet writer options
-    (see properties.WriterProperties.spark_write_options).
-    ``validate`` (no-arg callable) runs after the Spark job has written
-    the staging directory and before any file leaves it; if it raises,
-    the staging directory is discarded and the error propagates."""
+    ``configuration`` and ``table_schema_json`` are the table's (for a
+    create, the ones it is created with): column-mapped tables write
+    PHYSICAL column names into parquet, partition dirs, and (via the
+    footers) stats keys. The Spark write job is the first and only
+    action on ``df``, so a frame gated by ``gate_rules`` is checked
+    over every row it writes. ``writer_properties`` maps onto Spark
+    parquet writer options (see
+    properties.WriterProperties.spark_write_options). ``validate``
+    (no-arg callable) runs after the Spark job has written the staging
+    directory and before any file leaves it; if it raises, the staging
+    directory is discarded and the error propagates."""
     from delta_rs_spark.plans import column_mapping as cmap
 
-    # resolve table config up front: column-mapped tables write PHYSICAL
-    # column names into parquet, partition dirs, and (via the footers)
-    # stats keys — every writer (append, delete/update/merge rewrites,
-    # optimize) flows through here, so the rename happens exactly once
-    cfg = configuration
-    table_schema = table_schema_json
-    if table_schema is None or cfg is None:
-        try:
-            from delta_rs_spark.log import snapshot as _snap0
-
-            if _snap0.is_delta_table(table_path):
-                _s = _snap0.load_snapshot(table_path)
-                if cfg is None:
-                    cfg = _s.configuration
-                if table_schema is None:
-                    table_schema = _s.schema_string
-        except Exception:
-            pass
-    if cmap.mapping_mode(cfg or {}) != "none" and table_schema is not None:
+    if cmap.mapping_mode(configuration or {}) != "none":
         import json as _json
 
-        schema = T.StructType.fromJson(_json.loads(table_schema))
+        schema = T.StructType.fromJson(_json.loads(table_schema_json))
         _extra = [
             c for c in df.columns if c not in {f.name for f in schema.fields}
         ]  # hidden physical columns (row tracking materialization)
@@ -306,81 +371,8 @@ def write_files(
         except BaseException:
             shutil.rmtree(stage, ignore_errors=True)
             raise
-
-    adds: list[Add] = []
-    moved: list[tuple[str, str, dict[str, str | None]]] = []  # (abs, rel, partvals)
-    for root, _dirs, files in os.walk(stage):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            src = os.path.join(root, fn)
-            rel_dir = os.path.relpath(root, stage)
-            part_vals: dict[str, str | None] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, v = _decode_partition_dir(seg)
-                    part_vals[k] = v
-            new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-            dst_dir = os.path.join(table_path, rel_dir) if rel_dir != "." else table_path
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, new_name)
-            os.rename(src, dst)
-            rel_path = os.path.relpath(dst, table_path)
-            moved.append((dst, rel_path, part_vals))
-    shutil.rmtree(stage, ignore_errors=True)
-
-    # data-skipping stats knobs come from the same resolved configuration;
-    # under column mapping the name-based selection is translated to the
-    # physical names the footers carry
-    n_idx, stats_cols = stats_config(cfg)
-    if stats_cols and cmap.mapping_mode(cfg or {}) != "none" and table_schema is not None:
-        import json as _json
-
-        schema = T.StructType.fromJson(_json.loads(table_schema))
-        phys = cmap.logical_to_physical(schema)
-        stats_cols = [phys.get(c, c) for c in stats_cols]
-    stats = collect_stats_parallel([m[0] for m in moved], n_idx, stats_cols)
-    if any(st is None for st in stats):
-        # pyarrow could not read some footers (VARIANT logical type):
-        # compute the same stats with ONE Spark aggregation over just
-        # those files — Spark reads its own variant output fine
-        stats = _spark_stats_fallback(
-            df, moved, stats, n_idx, stats_cols, partition_by
-        )
-    # row tracking's hidden materialized columns are physical-only —
-    # keep them out of the skipping stats (they are not queryable).
-    # Resolve the CONFIGURED names (delta.rowTracking.materialized*
-    # ColumnName): a table written by another engine may name them
-    # without our '_row-id-col-' prefix convention.
-    from delta_rs_spark.plans.row_tracking import materialized_names
-
-    hidden_stat_cols = set(materialized_names(cfg))
-    for st in stats:
-        for k in ("minValues", "maxValues", "nullCount"):
-            d = (st or {}).get(k)
-            if d:
-                for name in list(d):
-                    if name in hidden_stat_cols:
-                        del d[name]
-    for (abs_path, rel_path, part_vals), st in zip(moved, stats):
-        # a file still without stats after the fallback scanned exactly
-        # these paths contributed no rows to the grouped count: empty
-        if st is None:
-            st = {"numRecords": 0}
-        if st.get("numRecords") == 0:
-            os.unlink(abs_path)
-            continue
-        adds.append(
-            Add(
-                path=rel_path.replace(os.sep, "/"),
-                size=os.path.getsize(abs_path),
-                modification_time=int(os.path.getmtime(abs_path) * 1000),
-                data_change=True,
-                partition_values=part_vals,
-                stats=stats_json(st),
-            )
-        )
-    return adds
+    moved = move_staged(stage, table_path, "part")
+    return data_file_adds(df.sparkSession, moved, configuration, table_schema_json)
 
 
 def _merge_schemas(existing: T.StructType, new: T.StructType) -> T.StructType:
@@ -495,17 +487,17 @@ def gate_rules(
     reports the first action that finishes, so an earlier sample
     (``limit().toPandas()``) would check the sample only. Rows whose
     ``_change_type`` keeps them out of data files (preimage and delete
-    rows of a fused CDF frame) are not checked. The writers shuffle the
-    gated frame directly, so an observation dropped with its empty stage
-    (see ``observed_metrics``) means no row reached the writer."""
+    rows of a mutation frame, see cdc.is_data_row) are not checked. The
+    writers shuffle the gated frame directly, so an observation dropped
+    with its empty stage (see ``observed_metrics``) means no row reached
+    the writer."""
     if not rules:
         return df, lambda: None
-    from delta_rs_spark.operators.cdc import _DATA_EXCLUDE, CHANGE_TYPE_COL
+    from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, is_data_row
 
     live = F.lit(True)
     if CHANGE_TYPE_COL in df.columns:
-        ct = F.col(CHANGE_TYPE_COL)
-        live = ct.isNull() | ~ct.isin(*_DATA_EXCLUDE)
+        live = is_data_row(F.col(CHANGE_TYPE_COL))
     obs = Observation()
     df = df.observe(
         obs,
@@ -802,12 +794,10 @@ def write_deltalake(
         df,
         table_path,
         part_cols,
+        snapshot.configuration if snapshot is not None else configuration,
+        table_schema.json(),
         max_records_per_file,
         writer_properties=writer_properties,
-        configuration=(
-            snapshot.configuration if snapshot is not None else configuration
-        ),
-        table_schema_json=table_schema.json(),
         preserve_layout=preserve_layout,
         validate=check,
     )

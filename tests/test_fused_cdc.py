@@ -215,6 +215,41 @@ def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
     assert got == want
 
 
+def test_change_only_write_keeps_partition_columns_out_of_cdc_files(spark, tmp_path):
+    """The Spark change-data write (a VARIANT table's two-write
+    fallback, a DV table's DELETE) lays out CDC files like the fused
+    writer: partition values in ``k=v`` directories and on the
+    AddCDCFile action, never inside the file (load_cdf reads them as
+    directory values). Schemas are read with Spark: pyarrow cannot
+    read VARIANT footers."""
+    cdf = {"delta.enableChangeDataFeed": "true"}
+    for name, extra, conf in (
+        ("variant", ["parse_json(concat('{\"k\":', id, '}')) AS doc"], cdf),
+        ("dv", [], {**cdf, "delta.enableDeletionVectors": "true"}),
+    ):
+        path = str(tmp_path / name)
+        write_deltalake(
+            path,
+            spark.range(0, 30).selectExpr("id", "id % 3 AS p", *extra),
+            partition_by=["p"],
+            configuration=conf,
+        )
+        t = DeltaTable(path)
+        t.delete("id >= 20")
+        files = _cdc_files(path)
+        assert files, name
+        for f in files:
+            assert os.path.basename(os.path.dirname(f)).startswith("p="), f
+            assert spark.read.parquet(f).columns == [
+                "id", *(["doc"] if extra else []), "_change_type"
+            ], f
+        got = {
+            (r["id"], r["p"], r["_change_type"])
+            for r in t.load_cdf(starting_version=1, ending_version=1).collect()
+        }
+        assert got == {(i, i % 3, "delete") for i in range(20, 30)}, name
+
+
 def test_fused_dv_update_pre_post_images(spark, tmp_table):
     """DV-mode UPDATE with CDF: one fused job writes the updated-row
     files and the pre/post change files; values and CDF rows match the

@@ -218,9 +218,11 @@ def test_constraints_enforced_on_update_and_merge(spark, tmp_path, sample_df):
     """CHECK constraints apply to every operation that produces rows
     (reference DeltaDataChecker), not just appends — UPDATE and MERGE
     must abort without committing when the new values violate one, on a
-    change-data-feed table (fused writer) and a plain one alike. A
-    failure leaves no staging dir and no new parquet file, and no
-    operation, failed or not, leaves a pinned frame behind."""
+    change-data-feed table (fused writer), a plain one, and a VARIANT
+    change-data-feed table (whose gated frame is pinned and read by two
+    writes) alike. A failure leaves no staging dir and no new parquet
+    file, and no operation, failed or not, leaves a pinned frame
+    behind."""
     from delta_rs_spark.session import drop_cached_intermediates
 
     def merge(t, rows, insert=False):
@@ -231,11 +233,11 @@ def test_constraints_enforced_on_update_and_merge(spark, tmp_path, sample_df):
             mb = mb.when_not_matched_insert({"id": "s.id", "price": "s.price"})
         return mb.execute()
 
-    for cdf in (False, True):
-        path = str(tmp_path / f"cdf_{cdf}")
+    for cdf, variant in ((False, False), (True, False), (True, True)):
+        path = str(tmp_path / f"cdf_{cdf}_variant_{variant}")
         write_deltalake(
             path,
-            sample_df,
+            sample_df.withColumn("doc", F.expr("parse_json(id)")) if variant else sample_df,
             configuration={"delta.enableChangeDataFeed": str(cdf).lower()},
         )
         t = DeltaTable(path)
