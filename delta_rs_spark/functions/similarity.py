@@ -398,7 +398,7 @@ def build_ivf_index(
     ID-CLUSTERED (sortWithinPartitions(id), written layout-preserved)
     and capped at ``max_records_per_file`` rows. Queries don't care —
     they prune on the partition value — but ``sync_ivf_index``'s MERGE
-    does: tight per-file id stats let its touched-file discovery prune
+    does: tight per-file id stats let its early filter prune
     untouched files, and the cap bounds rewrite amplification at
     (touched files x file cap) instead of (touched PARTITIONS x
     partition size). Measured at 1.28M rows / 1k churned: one file per

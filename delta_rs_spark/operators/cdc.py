@@ -160,6 +160,7 @@ def write_data_and_change_files(
         part_cols = [phys.get(c, c) for c in part_cols]
 
     pv_names: list[str] = []
+    work = df
     if part_cols:
         # co-locate each partition's rows into few tasks (same map-side
         # file-count control as write_files) and carry the DIRECTORY
@@ -174,19 +175,8 @@ def write_data_and_change_files(
                 for c, n in zip(part_cols, pv_names)
             ],
         )
-    else:
-        # Size-adaptive output partitioning (guide §6): a frame read
-        # from a cache keeps one partition per cached block, which AQE
-        # cannot re-coalesce (a 1-file MERGE over a pinned frame once
-        # emitted 32+1 tiny files). REBALANCE re-splits by the advisory
-        # partition size: tiny rewrites collapse to one file, 100 TB
-        # rewrites split to advisory-sized files. Round-robin rebalance
-        # sorts before repartitioning (SPARK-23207), so task retries
-        # stay deterministic.
-        work = df.hint("rebalance")
 
     stage = os.path.join(table_path, f"_staging_fused_{uuid.uuid4().hex}")
-    os.makedirs(stage, exist_ok=True)
     ct_col = CHANGE_TYPE_COL
     data_drop = list(pv_names) + list(part_cols) + [ct_col]
     cdc_drop = list(pv_names) + list(part_cols) + list(hidden)
@@ -266,14 +256,14 @@ def write_data_and_change_files(
             names=["kind", "path", "pv"],
         )
 
-    file_rows = work.mapInArrow(
-        _task, "kind string, path string, pv string"
-    ).collect()
-
     cdc_out_dir = os.path.join(table_path, CDC_DIR)
     moved_data: list[tuple[str, str, dict[str, str | None]]] = []
     cdc_actions: list[AddCDCFile] = []
+    os.makedirs(stage, exist_ok=True)
     try:
+        file_rows = work.mapInArrow(
+            _task, "kind string, path string, pv string"
+        ).collect()
         if validate is not None:
             validate()
         for r in file_rows:
@@ -353,14 +343,16 @@ def write_change_data(change_df: DataFrame, snapshot: Snapshot) -> list[AddCDCFi
     w = change_df.write.mode("overwrite")
     if part_cols:
         w = w.partitionBy(*part_cols)
-    w.parquet(stage)
+    try:
+        w.parquet(stage)
+        moved = move_staged(stage, snapshot.table_path, "cdc", CDC_DIR)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return [
         AddCDCFile(
             path=rel.replace(os.sep, "/"),
             size=os.path.getsize(dst),
             partition_values=part_vals,
         )
-        for dst, rel, part_vals in move_staged(
-            stage, snapshot.table_path, "cdc", CDC_DIR
-        )
+        for dst, rel, part_vals in moved
     ]

@@ -9,7 +9,8 @@ metadata-only file removal (:472-535); otherwise scan candidate files
 ``NOT (predicate IS TRUE)`` rows (:583-596) — null-safe exactly like the
 reference. CDF rows are emitted when enabled (:598-617).
 
-Scale: phase 1 collects only distinct matched *file paths* to the driver
+Scale: phase 1 (util.find_touched_files, one Spark job) collects only
+the set of matched file paths and the matched-row count to the driver
 (O(files), never O(rows)); phase 2 reads only the touched files and
 hands their rows, matched ones tagged "delete", to cdc.write_mutation,
 which rewrites the survivors (and, with CDF, writes the deleted rows as
@@ -38,7 +39,7 @@ from delta_rs_spark.operators.cdc import (
     write_change_data,
     write_mutation,
 )
-from delta_rs_spark.operators.util import _rel_candidates, match_touched_files
+from delta_rs_spark.operators.util import find_touched_files, scanned_add_path
 from delta_rs_spark.plans.skipping import (
     col_types_from_schema_json,
     partition_only_predicate,
@@ -80,20 +81,9 @@ def plan_predicate_removal(
 
     # tier 3: candidate scan -> touched files -> rewrite
     candidates = prune_files(adds, predicate, part_cols, col_types, physical_of)
-    if not candidates:
-        return [], [], 0
-    cand_df = read_snapshot_df(
-        spark, snapshot, table_path, files=candidates, file_path_col="__delta_rs_fp"
+    touched, n_deleted = find_touched_files(
+        spark, snapshot, table_path, candidates, predicate
     )
-    touched_rows = (
-        cand_df.filter(F.expr(predicate))
-        .select(F.col("__delta_rs_fp").alias("fp"))
-        .groupBy("fp")
-        .count()
-        .collect()
-    )
-    touched = match_touched_files(touched_rows, table_path, candidates)
-    n_deleted = int(sum(touched.values()))
     if not touched:
         return [], [], 0
     touched_adds = [a for a in candidates if a.path in touched]
@@ -144,14 +134,7 @@ def group_rows_by_file(
     known = {a.path for a in candidates}
     by_rel: dict[str, list[int]] = {}
     for r in matched:
-        rel = next(
-            (c for c in _rel_candidates(r["fp"], table_path) if c in known),
-            None,
-        )
-        if rel is None:
-            raise RuntimeError(
-                f"scanned file {r['fp']} not found among snapshot adds under {table_path}"
-            )
+        rel = scanned_add_path(r["fp"], table_path, known)
         by_rel.setdefault(rel, []).extend(int(i) for i in r["ris"])
     return by_rel
 
@@ -268,8 +251,7 @@ def plan_dv_delete(
     removes, new_adds, n_deleted = dv_mark_rows(table_path, by_rel, candidates, ts)
 
     if cdf_enabled(snapshot):
-        # change rows only: write_mutation's fused writer would add its
-        # rebalance job for no data file
+        # change rows only: there is no data file to write
         deleted_df = df.filter(F.expr(predicate)).drop(
             "__delta_rs_fp", "__delta_rs_ri"
         ).withColumn(CHANGE_TYPE_COL, F.lit("delete"))

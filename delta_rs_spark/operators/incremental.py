@@ -250,8 +250,8 @@ def maintain_aggregate(
         | (F.col("d_nvals") != 0)
         | (F.col("d_total").isNotNull() & (F.col("d_total") != 0))
     )
-    # MERGE scans its source several times (metrics, touched-file
-    # discovery, partition IN-list, apply); without a persist each scan
+    # MERGE scans its source several times (metrics, partition
+    # IN-list, apply); without a persist each scan
     # re-runs the whole delta derivation — the CDF range read (or the
     # diff leg's two snapshot reads + churned-file union) plus the
     # groupBy. The deltas frame is per-GROUP-sized (bounded by the

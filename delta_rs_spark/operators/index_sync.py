@@ -194,8 +194,8 @@ def sync_fingerprint_index(
         fingerprint(text_col).alias("fp"),
         F.col(_CT).alias("__act"),
     )
-    # MERGE scans its source several times (early filter, touched-file
-    # discovery, apply, insert path); re-running this frame per scan
+    # MERGE scans its source several times (early filter, apply,
+    # insert path); re-running this frame per scan
     # multiplies the whole change derivation — the diff leg's snapshot
     # reads + two aggs + full-outer join, and (r12) equally the CDF
     # leg's range read + final-state window + per-row fingerprint md5.
@@ -472,9 +472,9 @@ def sync_ivf_index(
     nearer a different centroid migrates to that list's partition via
     the merge rewrite), insert -> row added.
 
-    Cost: the merge's touched-file discovery reads the index's ``id``
-    column (column-pruned scan), the rewrite touches only files
-    containing changed ids, and the change frame is O(churn) — the
+    Cost: the merge scans the candidate files its early filter keeps,
+    the rewrite touches only files containing changed ids, and the
+    change frame is O(churn) — the
     index is never rebuilt and the source never rescanned.
 
     DRIFT: every sync ends with ``ivf_index_balance`` (add-action

@@ -8,17 +8,19 @@ phases:
 
 * early filter (merge/filter.rs): one aggregation over the source gives
   min/max (or the distinct partition values) of the equi-join keys, and
-  the target files are pruned by stats/partitions to the candidates;
-* touched-file discovery (merge/barrier.rs): candidates INNER JOIN source
-  yields the files holding at least one match — files with zero matched
-  rows are never rewritten. With not-matched-by-source clauses every file
-  is a rewrite file (those clauses touch unmatched target rows anywhere);
-* one write pass: target rows of the rewrite files FULL OUTER JOIN the
+  the target files are pruned by stats/partitions to the candidates
+  (with not-matched-by-source clauses every file is a target file: those
+  clauses touch unmatched target rows anywhere);
+* one write pass: target rows of the target files FULL OUTER JOIN the
   source (left outer without not-matched clauses; the source alone, or
   anti-joined to the candidates for insert-only merges, when no target
-  row can match), a CASE action per row, one window per target row that
-  picks the winning pair, and ``observe()`` for duplicate-match
-  validation (merge/validation.rs) plus the per-action counts. One
+  row can match) and a CASE action per row. Two windows share one
+  exchange: the barrier (merge/barrier.rs) keeps a file's rows only when
+  the merge acts on one of them — a file without an updated or deleted
+  row is neither rewritten nor removed — and a window per target row
+  picks the winning pair. ``observe()`` carries duplicate-match
+  validation (merge/validation.rs), the per-action counts and the set of
+  files the barrier let through, whose Removes the commit carries. One
   ``inline()`` emits each row's data row and, with change data feed, its
   change rows; the writer consumes the frame once, and the validation
   runs after its files land in staging and before any leaves it.
@@ -42,7 +44,7 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
-from delta_rs_spark.operators.util import match_touched_files
+from delta_rs_spark.operators.util import scanned_add_path
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
 _ACTION = "__delta_rs_action"
@@ -52,6 +54,8 @@ _TID = "__delta_rs_tid"
 _SID = "__delta_rs_sid"
 _CLS = "__delta_rs_match_cls"
 _BAD = "__delta_rs_bad"
+_FP = "__delta_rs_fp"
+_SOLO = "__delta_rs_solo"  # a source-only row's own id: its file key
 
 # action codes below 0; clause i (matched, then not-matched-by-source,
 # then not-matched) has code i. SKIP: a source-only row no insert
@@ -506,7 +510,7 @@ class TableMerger:
         interval that can cover the whole table — the index-maintenance
         shape exactly (takedown ids at the low end + new-crawl ids at
         the high end spanned every id-clustered file, so an O(changes)
-        sync still SCANNED O(corpus) at discovery). For each numeric
+        sync still SCANNED O(corpus) in its write). For each numeric
         stats-pair column, histogram the source values into
         ``_UNION_BUCKETS`` equal-width buckets (one distinct-bucket job
         over the change-batch-sized source, <= buckets rows collected),
@@ -717,32 +721,15 @@ class TableMerger:
                     snapshot_physical_of(snapshot),
                 )
 
-        # ---- choose rewrite files ---------------------------------------
+        # ---- target files: every file a match can live in ---------------
+        # (with not-matched-by-source clauses, every file); the write
+        # frame's barrier picks the ones it rewrites
         if self.not_matched_by_source:
-            rewrite_adds = all_adds
+            target_adds = all_adds
         elif self.matched:
-            # the fp column is bound inside the scan (before any
-            # select/union/alias — hidden metadata columns do not survive
-            # those, and DV tables union two branches)
-            cand_fp = read_snapshot_df(
-                spark,
-                snapshot,
-                table_path,
-                files=candidates,
-                file_path_col="__delta_rs_fp",
-            )
-            touched_rows = (
-                cand_fp.alias(t)
-                .join(source_df.alias(s), F.expr(self.predicate), "inner")
-                .select(F.col("__delta_rs_fp").alias("fp"))
-                .groupBy("fp")
-                .count()
-                .collect()
-            )
-            touched = match_touched_files(touched_rows, table_path, candidates)
-            rewrite_adds = [a for a in candidates if a.path in touched]
+            target_adds = candidates
         else:
-            rewrite_adds = []
+            target_adds = []
 
         # DV mode (delta.enableDeletionVectors=true): acted target rows
         # (updated/deleted) are DV-marked dead in place and only updated
@@ -763,10 +750,8 @@ class TableMerger:
         hidden = [_mat_id, _mat_ver] if rt_on else []
 
         # ---- the write frame (see the module docstring) -----------------
-        # A source row matches target rows only inside the rewrite files
-        # (every match pair lives in a touched file; with
-        # not-matched-by-source clauses they are the whole table), so the
-        # join's source-only rows are exactly the not-matched rows.
+        # A source row matches target rows only inside the target files,
+        # so the join's source-only rows are exactly the not-matched rows.
         is_t = F.col(_TMARK).isNotNull()
         matched_cond = is_t & F.col(_SMARK).isNotNull()
         # (condition, action code, participation class): the class
@@ -810,18 +795,22 @@ class TableMerger:
             return F.col(_ACTION).isin(*codes) if codes else F.lit(False)
 
         tally: dict[int, int] = {}
+        touched_fps: set[str] = set()
         acted_pairs: list = []
         new_adds: list[Add] = []
         cdc_actions: list = []
-        has_target = bool(rewrite_adds)
+        has_target = bool(target_adds)
         if has_target or self.not_matched:
             if has_target:
+                # the fp column is bound inside the scan (before any
+                # select/union/alias — hidden metadata columns do not
+                # survive those, and DV tables union two branches)
                 t_df = read_snapshot_df(
                     spark,
                     snapshot,
                     table_path,
-                    files=rewrite_adds,
-                    file_path_col="__delta_rs_fp" if (dv_mode or rt_on) else None,
+                    files=target_adds,
+                    file_path_col=_FP,
                     row_index_col="__delta_rs_ri" if (dv_mode or rt_on) else None,
                     extra_physical_cols=hidden or None,
                 )
@@ -830,11 +819,11 @@ class TableMerger:
                     # the projection below keeps the id for updated rows
                     # and nulls their version (reader falls back to this
                     # commit's defaultRowCommitVersion)
-                    _fmap = _rt.file_map_df(spark, rewrite_adds, table_path)
+                    _fmap = _rt.file_map_df(spark, target_adds, table_path)
                     t_df = (
                         t_df.join(
                             F.broadcast(_fmap),
-                            F.col("__delta_rs_fp") == F.col("__rt_fp"),
+                            F.col(_FP) == F.col("__rt_fp"),
                             "left",
                         )
                         .withColumn(
@@ -855,12 +844,13 @@ class TableMerger:
             else:
                 # no target row can match, so the target side is empty
                 # (limit 0: the optimizer drops the join against it): with
-                # matched clauses the early filter and the empty discovery
-                # join prove it; an insert-only merge first anti-joins the
-                # source against the candidate files
+                # matched clauses the early filter proves it; an
+                # insert-only merge first anti-joins the source against
+                # the candidate files
                 t_df = spark.range(1).select(
                     *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields],
                     *[F.lit(None).cast("long").alias(h) for h in hidden],
+                    F.lit(None).cast("string").alias(_FP),
                 ).limit(0)
             src = source_df
             if not (self.matched or self.not_matched_by_source) and candidates:
@@ -884,16 +874,29 @@ class TableMerger:
 
             frame = joined.withColumn(_ACTION, action).withColumn(_CLS, cls)
             if has_target:
+                # the barrier (reference merge/barrier.rs): a target file
+                # is rewritten only when the merge acts on one of its
+                # rows; the rows of every other file leave the frame and
+                # the file stays live. Source-only rows key on their own
+                # id, so they do not all land in one window partition. The
+                # key is a column, so both windows partition by the same
+                # attributes.
+                frame = (
+                    frame.withColumn(_SOLO, F.when(F.col(_TID).isNull(), F.col(_SID)))
+                    .withColumn(
+                        "__hit", F.max(F.col(_ACTION) != COPY).over(W.partitionBy(_FP, _SOLO))
+                    )
+                    .filter("__hit")
+                    .drop("__hit")
+                )
                 # winner per target row: the acting pair if any, else one
                 # no-op pair (all no-op/unconditional-delete winners
                 # produce identical output rows, so the tie is
                 # immaterial). Rows tying on _CLS carry the same action,
                 # except two ACTION pairs — exactly the error flagged.
-                # Source-only rows key on their own id, so they do not
-                # all land in one window partition.
-                win = W.partitionBy(
-                    F.col(_TID), F.when(F.col(_TID).isNull(), F.col(_SID))
-                ).orderBy(F.desc(_CLS))
+                # Partitioned by the barrier's key plus the target row,
+                # this window reuses the barrier's exchange.
+                win = W.partitionBy(_FP, _SOLO, _TID).orderBy(F.desc(_CLS))
                 whole = win.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
                 n_act = F.sum((F.col(_CLS) == _CLS_ACTION).cast("int")).over(whole)
                 n_ud = F.sum((F.col(_CLS) == _CLS_UNCOND_DELETE).cast("int")).over(whole)
@@ -915,6 +918,8 @@ class TableMerger:
                     F.sum((F.col(_ACTION) == c).cast("long")).alias(f"n{i}")
                     for i, c in enumerate(tallied)
                 ],
+                # the files the barrier let through: the rewritten ones
+                F.collect_set(_FP).alias("touched"),
             ]
             unobserved, obs = frame, Observation()
             frame = frame.observe(obs, *summary)
@@ -926,7 +931,8 @@ class TableMerger:
                 if got is None:
                     # no row reached the write (every one deleted or
                     # skipped), so AQE dropped the observed stage: one
-                    # more pass recovers validation and counts
+                    # more pass recovers validation, counts and the
+                    # rewritten files
                     got = unobserved.agg(*summary).first().asDict()
                 if got["bad"]:
                     raise MergeError(
@@ -934,6 +940,7 @@ class TableMerger:
                         "that satisfy duplicate relevant WHEN MATCHED clauses"
                     )
                 tally.update({c: int(got[f"n{i}"] or 0) for i, c in enumerate(tallied)})
+                touched_fps.update(got["touched"])
 
             if dv_mode and has_target:
                 # rows the merge acts on die in place; collect their
@@ -945,7 +952,7 @@ class TableMerger:
                 pins.append(frame)
                 acted_pairs = (
                     frame.filter(is_t & (F.col(_ACTION) != COPY))
-                    .groupBy(F.col("__delta_rs_fp").alias("fp"))
+                    .groupBy(F.col(_FP).alias("fp"))
                     .agg(F.collect_list("__delta_rs_ri").alias("ris"))
                     .collect()
                 )
@@ -1039,8 +1046,7 @@ class TableMerger:
                 # DV mode is pinned itself): a cached input keeps its
                 # cache partitioning, which defeats AQE coalescing —
                 # rebalance to size-adaptive output files (guide §6;
-                # partitioned writes repartition by partition value).
-                # The fused writer's own rebalance collapses into this.
+                # partitioned writes repartition by partition value)
                 out = out.hint("rebalance")
 
             def validate() -> None:
@@ -1106,14 +1112,17 @@ class TableMerger:
             # only files with acted rows change; remove tombstones the old
             # (path, DV) pairing, the re-add carries the merged DV —
             # remove precedes its re-add (sequential replay)
-            by_rel = group_rows_by_file(acted_pairs, table_path, rewrite_adds)
-            removes, dv_readds, _ = dv_mark_rows(table_path, by_rel, rewrite_adds, ts)
+            by_rel = group_rows_by_file(acted_pairs, table_path, target_adds)
+            removes, dv_readds, _ = dv_mark_rows(table_path, by_rel, target_adds, ts)
             actions.extend(removes)
             actions.extend(dv_readds)
         else:
+            known = {a.path for a in target_adds}
+            rewritten = {scanned_add_path(fp, table_path, known) for fp in touched_fps}
             removes = [
                 Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
-                for a in rewrite_adds
+                for a in target_adds
+                if a.path in rewritten
             ]
             actions.extend(removes)
 
@@ -1165,9 +1174,9 @@ class TableMerger:
             },
             operation_metrics=metrics,
         )
-        # the read set is every CANDIDATE file (touched-file discovery or
-        # the insert-only anti-join scans them, and file selection
-        # consults their stats), not just the rewritten ones; with
+        # the read set is every CANDIDATE file (the write frame or the
+        # insert-only anti-join scans them, and file selection consults
+        # their stats), not just the rewritten ones; with
         # not_matched_by_source clauses or no early filter the whole table
         # was read (ADVICE r01: a concurrent DELETE of a
         # scanned-but-not-rewritten file must raise

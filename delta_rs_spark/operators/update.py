@@ -25,7 +25,7 @@ from delta_rs_spark.plans.row_tracking import (
     cached_watermark as _rt_cached_watermark,
 )
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
-from delta_rs_spark.operators.util import match_touched_files
+from delta_rs_spark.operators.util import find_touched_files
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
 
@@ -130,22 +130,9 @@ def update(
         "num_updated_rows": 0,
         "num_copied_rows": 0,
     }
-    if not candidates:
-        op = CommitInfo("UPDATE", {"predicate": predicate or ""}, operation_metrics=metrics)
-        commit_mod.commit(
-            table_path,
-            [],
-            op,
-            snapshot.version,
-            TransactionInfo(blind_append=False),
-            commit_properties=commit_properties,
-            post_commit=post_commithook_properties,
-        )
-        return metrics
-
     from delta_rs_spark.operators.delete import dv_write_enabled
 
-    if dv_write_enabled(snapshot):
+    if candidates and dv_write_enabled(snapshot):
         return _dv_update(
             spark,
             snapshot,
@@ -160,18 +147,9 @@ def update(
             safe_cast=safe_cast,
         )
 
-    cand_df = read_snapshot_df(
-        spark, snapshot, table_path, files=candidates, file_path_col="__delta_rs_fp"
+    touched, n_updated = find_touched_files(
+        spark, snapshot, table_path, candidates, predicate
     )
-    touched_rows = (
-        cand_df.filter(cond)
-        .select(F.col("__delta_rs_fp").alias("fp"))
-        .groupBy("fp")
-        .count()
-        .collect()
-    )
-    touched = match_touched_files(touched_rows, table_path, candidates)
-    n_updated = int(sum(touched.values()))
     touched_adds = [a for a in candidates if a.path in touched]
     if not touched_adds:
         op = CommitInfo("UPDATE", {"predicate": predicate or ""}, operation_metrics=metrics)

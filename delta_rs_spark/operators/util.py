@@ -116,24 +116,47 @@ def _rel_candidates(
     )
 
 
-def match_touched_files(
-    touched_rows: list, table_path: str, candidates: list[Add]
-) -> dict[str, int]:
-    """Map (file_path, count) rows from a ``_metadata.file_path`` groupBy
-    back to Add.path keys. Unmatched rows raise — a silent miss would
-    turn a rewrite into data loss."""
-    known = {a.path for a in candidates}
-    out: dict[str, int] = {}
-    for r in touched_rows:
-        for cand in _rel_candidates(r["fp"], table_path):
-            if cand in known:
-                out[cand] = out.get(cand, 0) + int(r["count"])
-                break
-        else:
-            raise RuntimeError(
-                f"scanned file {r['fp']} not found among snapshot adds under {table_path}"
-            )
-    return out
+def scanned_add_path(fp: str, table_path: str, known) -> str:
+    """A scanned file path (the ``file_path_col`` of read_snapshot_df)
+    back to its Add.path key in ``known``. A path matching none raises —
+    a silent miss would turn a rewrite into data loss."""
+    for cand in _rel_candidates(fp, table_path):
+        if cand in known:
+            return cand
+    raise RuntimeError(
+        f"scanned file {fp} not found among snapshot adds under {table_path}"
+    )
+
+
+def find_touched_files(
+    spark, snapshot, table_path: str, candidates: list[Add], predicate: str | None
+) -> tuple[set[str], int]:
+    """(Add.paths of the candidate files holding a row that matches
+    ``predicate``, matching rows) — None matches every row; the
+    reference's find_files (crates/core/src/operations/delete.rs,
+    update.rs). One Spark job and no shuffle: the scan reads only the
+    predicate's columns and the file path, a no-op sink drains it, and
+    an ``observe()`` on it collects the file set (O(files), never
+    O(rows)) and the row count. The observation sits in the job's final
+    stage, so AQE cannot drop it (see writer.observed_metrics)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from delta_rs_spark.table import read_snapshot_df
+
+    if not candidates:
+        return set(), 0
+    df = read_snapshot_df(
+        spark, snapshot, table_path, files=candidates, file_path_col="__delta_rs_fp"
+    )
+    if predicate:
+        df = df.filter(F.expr(predicate))
+    obs = Observation()
+    df.select("__delta_rs_fp").observe(
+        obs, F.collect_set("__delta_rs_fp").alias("fps"), F.count(F.lit(1)).alias("n")
+    ).write.format("noop").mode("overwrite").save()
+    got, known = obs.get, {a.path for a in candidates}
+    return {scanned_add_path(fp, table_path, known) for fp in got["fps"]}, got["n"]
 
 
 def parse_rfc3339(s: str):

@@ -231,24 +231,21 @@ def move_staged(
     """Move every parquet file Spark wrote under ``stage`` into
     ``table_path/subdir``, keeping its Hive ``k=v`` directories, as
     ``<prefix>-<uuid>.snappy.parquet``; return (absolute path, path
-    relative to the table, partition values) per file. The staging
-    directory is removed."""
+    relative to the table, partition values) per file. The caller
+    removes the staging directory."""
     moved = []
-    try:
-        for root, _dirs, files in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            segs = rel_dir.split(os.sep) if rel_dir != "." else []
-            part_vals = dict(_decode_partition_dir(seg) for seg in segs)
-            dst_dir = os.path.join(table_path, subdir, *segs)
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                os.makedirs(dst_dir, exist_ok=True)
-                dst = os.path.join(dst_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet")
-                os.rename(os.path.join(root, fn), dst)
-                moved.append((dst, os.path.relpath(dst, table_path), part_vals))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    for root, _dirs, files in os.walk(stage):
+        rel_dir = os.path.relpath(root, stage)
+        segs = rel_dir.split(os.sep) if rel_dir != "." else []
+        part_vals = dict(_decode_partition_dir(seg) for seg in segs)
+        dst_dir = os.path.join(table_path, subdir, *segs)
+        for fn in files:
+            if not fn.endswith(".parquet"):
+                continue
+            os.makedirs(dst_dir, exist_ok=True)
+            dst = os.path.join(dst_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet")
+            os.rename(os.path.join(root, fn), dst)
+            moved.append((dst, os.path.relpath(dst, table_path), part_vals))
     return moved
 
 
@@ -364,14 +361,15 @@ def write_files(
             w = w.option(k, v)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(stage)
-    if validate is not None:
-        try:
+    # the stage goes on every path: a failed job, a failed validation
+    # or a finished move
+    try:
+        w.parquet(stage)
+        if validate is not None:
             validate()
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-    moved = move_staged(stage, table_path, "part")
+        moved = move_staged(stage, table_path, "part")
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return data_file_adds(df.sparkSession, moved, configuration, table_schema_json)
 
 

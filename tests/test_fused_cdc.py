@@ -294,8 +294,10 @@ def test_rebalanced_writes_bound_output_file_count(spark, tmp_table, tmp_path):
     """r13 size-adaptive output partitioning: a mutation whose source is
     a PERSISTED many-partition frame must not emit one tiny file per
     cache partition (the merge used to replace 1 removed file with 33
-    adds). Covers the fused CDF write, the plain merge write, and the
-    ingest-style append."""
+    adds). Covers the fused CDF write and the plain merge write. A CDF
+    DELETE or UPDATE writes without a rebalance: Spark's scan packs the
+    small files it rewrites into splits, so it does not emit one file
+    per touched file either."""
     df = spark.range(0, 2000).selectExpr("id AS k", "cast(id % 7 as double) AS v")
     write_deltalake(
         tmp_table, df, configuration={"delta.enableChangeDataFeed": "true"}
@@ -338,3 +340,22 @@ def test_rebalanced_writes_bound_output_file_count(spark, tmp_table, tmp_path):
     finally:
         src2.unpersist()
     assert m2["num_target_files_added"] <= 4
+    assert m2["num_target_files_added"] <= 4
+
+    # 40 small files, a matching row in each
+    cores = spark.sparkContext.defaultParallelism
+    for name, op, rows_key in (
+        ("delete", lambda t: t.delete("k % 100 = 0"), "num_deleted_rows"),
+        ("update", lambda t: t.update({"v": "-1.0"}, predicate="k % 100 = 0"), "num_updated_rows"),
+    ):
+        small = str(tmp_path / name)
+        write_deltalake(
+            small,
+            spark.range(0, 4000, numPartitions=40).selectExpr(
+                "id AS k", "cast(id % 7 as double) AS v"
+            ),
+            configuration={"delta.enableChangeDataFeed": "true"},
+        )
+        m = op(DeltaTable(small))
+        assert (m["num_removed_files"], m[rows_key]) == (40, 40), name
+        assert m["num_added_files"] <= cores and m["num_added_files"] < 40, name

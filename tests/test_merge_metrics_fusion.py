@@ -204,11 +204,12 @@ def _spy_scans(monkeypatch):
 
 
 def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch):
-    """With matched clauses (and no not-matched-by-source), MERGE reads
-    only the TOUCHED files after discovery — every match pair lives in a
-    touched file by definition — while insert-only merges anti-join the
-    candidates. Instrument read_snapshot_df to record the file set each
-    caller passes."""
+    """With matched clauses (and no not-matched-by-source), MERGE scans
+    the early filter's candidates once, in its write frame, and rewrites
+    only the TOUCHED files (the barrier keeps the others live); its
+    inserts are that join's source-only rows. Insert-only merges
+    anti-join the candidates. Instrument read_snapshot_df to record the
+    file set each caller passes."""
     path = str(tmp_path / "scan")
     # 4 single-file commits -> 4 files with disjoint id ranges
     for lo in (0, 100, 200, 300):
@@ -219,6 +220,7 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
         )
     dt = DeltaTable(path, spark=spark)
     assert len(dt.files()) == 4
+    before = set(dt.files())
 
     calls = _spy_scans(monkeypatch)
 
@@ -234,11 +236,13 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
     assert m["num_target_rows_updated"] == 1
     assert m["num_target_rows_inserted"] == 1
     assert m["num_target_files_removed"] == 1
-    # the insert rows are the source-only rows of the touched files'
-    # full outer join, so nothing re-scans for them — calls:
-    # [discovery candidates, rewrite touched]
-    assert len(calls) == 2, "insert anti-join must not re-scan files"
-    assert len(calls[1]) == 1, "rewrite must scan only touched files"
+    # the insert rows are the source-only rows of the write frame's full
+    # outer join, so nothing re-scans for them — calls: [candidates]
+    assert len(calls) == 1, "insert anti-join must not re-scan files"
+    assert len(calls[0]) == m["num_target_files_scanned"] == 3
+    assert len(before - set(DeltaTable(path, spark=spark).files())) == 1, (
+        "rewrite must replace only the touched file"
+    )
 
     # insert-only merge: no discovery -> anti-join scans the candidates
     calls.clear()
@@ -258,10 +262,9 @@ def test_insert_anti_join_scans_only_touched_files(spark, tmp_path, monkeypatch)
 
 
 def test_no_match_merge_inserts_from_source_alone(spark, tmp_path, monkeypatch):
-    """Matched clauses, but discovery finds no touched file: the early
-    filter and the empty discovery join prove every source row
-    unmatched, so the inserts come from the source alone — no candidate
-    re-scan, no anti-join."""
+    """Matched clauses, but no candidate row matches: the write frame's
+    one scan of the candidate finds every source row unmatched, the
+    barrier keeps the file live, and the inserts need no anti-join."""
     path = str(tmp_path / "nomatch")
     # even ids only: odd source keys fall inside the file's min/max, so
     # the file is a candidate, but match no row
@@ -280,6 +283,6 @@ def test_no_match_merge_inserts_from_source_alone(spark, tmp_path, monkeypatch):
     assert m["num_target_files_scanned"] == 1
     assert m["num_target_rows_inserted"] == 2
     assert m["num_target_rows_updated"] == m["num_target_files_removed"] == 0
-    assert len(calls) == 1, "only discovery may scan the candidates"
+    assert len(calls) == 1, "only the write frame may scan the candidates"
     got = {r["id"]: r["v"] for r in DeltaTable(path, spark=spark).to_spark().collect()}
     assert len(got) == 102 and got[51] == 1 and got[151] == 2

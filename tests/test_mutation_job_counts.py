@@ -3,11 +3,15 @@
 cdc.write_mutation differently: the fused data+CDF writer (CDF, with
 and without partitions), the data-only write (plain), the pinned
 two-write VARIANT fallback, and the deletion-vector tier. Each bound
-is the count before the writers were unified; no operation may leave a
-pinned frame behind. MERGE validates and counts through observe() on
-its single write frame. Write rules ride the same write job, so a
-constrained table runs the unconstrained counts."""
+is the measured count: DELETE and UPDATE find their touched files in
+one job (operators.util.find_touched_files) and write without a
+rebalance; MERGE has no discovery pass — its one write frame gates
+rewrites per file (the barrier) and validates, counts and names the
+rewritten files through observe(). No operation may leave a pinned
+frame behind. Write rules ride the same write job, so a constrained
+table runs the unconstrained counts."""
 
+import duckdb
 import pytest
 from conftest import persistent_rdds, spark_jobs
 from pyspark.sql import functions as F
@@ -20,13 +24,14 @@ _DV = {"delta.enableDeletionVectors": "true"}
 # shape -> (configuration, VARIANT column, partitioned, job bounds for
 # DELETE, UPDATE, upsert MERGE)
 SHAPES = {
-    "cdf": (_CDF, False, False, (4, 4, 11)),
-    "plain": ({}, False, False, (3, 3, 11)),
-    "variant_cdf": (_CDF, True, False, (7, 7, 16)),
-    "variant_cdf_partitioned": (_CDF, True, True, (9, 9, 16)),
-    "dv_cdf": ({**_CDF, **_DV}, False, False, (3, 5, 14)),
-    "dv_plain": (_DV, False, False, (2, 4, 14)),
-    "cdf_partitioned": (_CDF, False, True, (4, 4, 11)),
+    "cdf": (_CDF, False, False, (2, 2, 8)),
+    "plain": ({}, False, False, (2, 2, 8)),
+    "variant_cdf": (_CDF, True, False, (6, 6, 13)),
+    "variant_cdf_partitioned": (_CDF, True, True, (8, 8, 13)),
+    "dv_cdf": ({**_CDF, **_DV}, False, False, (3, 4, 11)),
+    "dv_plain": (_DV, False, False, (2, 4, 11)),
+    "cdf_partitioned": (_CDF, False, True, (3, 3, 8)),
+    "plain_partitioned": ({}, False, True, (3, 3, 8)),
 }
 
 
@@ -105,12 +110,12 @@ def test_constrained_table_job_counts(spark, tmp_path):
     assert jobs <= 1, f"500-row append ran {jobs} Spark jobs"
     m, jobs = spark_jobs(spark, lambda: dt.delete("k >= 2100 AND k < 2400"))
     assert m["num_deleted_rows"] == 150
-    assert jobs <= 4, f"one-file DELETE ran {jobs} Spark jobs"
+    assert jobs <= 2, f"one-file DELETE ran {jobs} Spark jobs"
     m, jobs = spark_jobs(
         spark, lambda: dt.update({"v": "v + 1"}, predicate="k >= 4100 AND k < 4400")
     )
     assert m["num_updated_rows"] == 150
-    assert jobs <= 4, f"one-file UPDATE ran {jobs} Spark jobs"
+    assert jobs <= 2, f"one-file UPDATE ran {jobs} Spark jobs"
     src = spark.range(6100, 6500).selectExpr("id AS k", "-1L AS v")
     m, jobs = spark_jobs(
         spark,
@@ -120,4 +125,56 @@ def test_constrained_table_job_counts(spark, tmp_path):
         .execute(),
     )
     assert (m["num_target_rows_updated"], m["num_target_rows_inserted"]) == (200, 200)
-    assert jobs <= 11, f"one-file upsert ran {jobs} Spark jobs"
+    assert jobs <= 8, f"one-file upsert ran {jobs} Spark jobs"
+
+
+def test_barrier_keeps_candidate_without_match(spark, tmp_path):
+    """The early filter's candidates include a file no source key
+    matches (the odd key 4101 lies inside the third file's range, but
+    the table holds even keys only): the barrier keeps that file live at
+    its path and removes only the file the merge acted on."""
+    path = str(tmp_path / "t")
+    dt = _table(spark, path)
+    versions = [set(DeltaTable(path, version=v, spark=spark).files()) for v in (1, 2)]
+    (unmatched,) = versions[1] - versions[0]  # the 4000-5998 file
+    src = spark.createDataFrame([(2100, -1), (4101, -1)], "k long, v long")
+    m = (
+        dt.merge(src, "t.k = s.k", source_alias="s", target_alias="t")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert (m["num_target_rows_updated"], m["num_target_rows_inserted"]) == (1, 1)
+    assert m["num_target_files_scanned"] == 2
+    assert m["num_target_files_removed"] == 1
+    assert m["num_target_rows_copied"] == 999
+    dt.refresh()
+    assert unmatched in dt.files()
+    assert len(versions[1] - set(dt.files())) == 1
+    rows = dt.to_spark()
+    assert rows.count() == rows.select("k").distinct().count() == 4001
+    assert rows.where("k = 2100").first().v == -1
+
+
+def test_barrier_commits_removes_when_no_row_reaches_the_write(spark, tmp_path):
+    """A merge that deletes every row of its only touched file shuffles
+    no row into the partitioned write, so AQE drops the stage holding
+    the write frame's observation: the fallback pass must still name
+    the rewritten file, or the commit would leave its deleted rows
+    live."""
+    dt = _table(spark, str(tmp_path / "t"), "plain_partitioned")
+    src = spark.range(2000, 4000, 2).selectExpr("id AS k")
+    m = (
+        dt.merge(src, "t.k = s.k", source_alias="s", target_alias="t")
+        .when_matched_delete()
+        .execute()
+    )
+    assert m["num_target_rows_deleted"] == 1000
+    assert (m["num_target_files_removed"], m["num_target_files_added"]) == (1, 0)
+    dt.refresh()
+    assert len(dt.files()) == 3
+    rows = dt.to_spark()
+    assert rows.count() == rows.select("k").distinct().count() == 3000
+    assert rows.where("k >= 2000 AND k < 4000").count() == 0
+    files = ", ".join(f"'{p}'" for p in dt.file_uris())
+    assert duckdb.sql(f"SELECT count(*) FROM read_parquet([{files}])").fetchone()[0] == 3000

@@ -268,6 +268,37 @@ def test_constraints_enforced_on_update_and_merge(spark, tmp_path, sample_df):
         assert sorted(r.price for r in t.to_df().collect()) == [1, 2, 3, 4, 5, 7]
 
 
+@pytest.mark.parametrize(
+    "cdf, variant", [(True, False), (False, False), (True, True)], ids=["cdf", "plain", "variant_cdf"]
+)
+def test_failed_write_job_leaves_no_staging(spark, tmp_path, sample_df, cdf, variant):
+    """A task failure inside the write job of an UPDATE or a MERGE (the
+    fused writer, the data-only write, the VARIANT two-write route)
+    leaves no staging dir — VACUUM never reclaims one — commits nothing
+    and leaves no pinned frame."""
+    path = str(tmp_path / "t")
+    write_deltalake(
+        path,
+        sample_df.withColumn("doc", F.expr("parse_json(id)")) if variant else sample_df,
+        configuration={"delta.enableChangeDataFeed": str(cdf).lower()},
+    )
+    t = DeltaTable(path)
+    v = t.version()
+    src = spark.createDataFrame([("2", 7)], "id string, price long")
+    for op in (
+        lambda: t.update({"price": "raise_error('boom')"}, predicate="id = '1'"),
+        lambda: t.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_matched_update({"price": "raise_error('boom')"})
+        .execute(),
+    ):
+        with pytest.raises(Exception, match="boom"):
+            op()
+        assert table_tree(path)[1] == []
+        assert persistent_rdds(spark) == 0
+        t.refresh()
+        assert t.version() == v
+
+
 def test_constraints_enforced_on_dv_update(spark, tmp_path, sample_df):
     """Same enforcement on the deletion-vector UPDATE variant (changed
     rows are appended, not rewritten — they still must satisfy rules)."""
