@@ -13,6 +13,11 @@ kernel/transaction/conflict_checker.rs:27-90 conflict classes):
 3. on collision, replay the winning commits against this transaction's
    read set and isolation level; retry up to ``max_retries`` (15) or
    raise the matching concurrency error.
+
+A commit builds on one base snapshot, the table at ``read_version``
+(none for a create), which ``commit()`` loads itself. Every table-state
+decision reads it or the commit's own Metadata: the append-only check,
+the row-id watermark, in-commit timestamps and the post-commit hooks.
 """
 
 from __future__ import annotations
@@ -88,7 +93,9 @@ class DeltaProtocolError(DeltaError):
 
 @dataclass
 class TransactionInfo:
-    """What this transaction read — drives conflict detection."""
+    """What this transaction read — drives conflict detection. Table
+    state (configuration, row-id watermark) is not carried here: commit()
+    reads it from the base snapshot at ``read_version``."""
 
     read_files: set[str] = field(default_factory=set)
     read_whole_table: bool = False
@@ -96,14 +103,6 @@ class TransactionInfo:
     app_ids: set[str] = field(default_factory=set)
     isolation_level: str = "WriteSerializable"
     written_domains: set[str] = field(default_factory=set)
-    # table configuration as of the read snapshot, when the operator
-    # already holds it — saves commit() a full log replay for the
-    # append-only check (None = commit loads it on demand)
-    table_config: dict[str, str] | None = None
-    # row-id high watermark as of the read snapshot (row-tracking
-    # tables), when the operator already holds the snapshot — saves
-    # commit() another full log replay (None = compute on demand)
-    rt_watermark: int | None = None
 
 
 class LogStore:
@@ -280,6 +279,14 @@ def commit(
 ) -> int:
     """Write actions as the next commit; returns the committed version.
 
+    The commit builds on the snapshot at ``read_version`` (a create when
+    it is negative): delta.appendOnly is checked against that snapshot's
+    configuration; row tracking, in-commit timestamps and the post-commit
+    hooks follow the configuration of this commit's Metadata action, or
+    the snapshot's when it carries none; row ids are allocated above the
+    snapshot's high watermark. A snapshot that fails to load fails the
+    commit.
+
     ``commit_properties`` (CommitProperties) merges custom_metadata into
     the commitInfo (userMetadata promoted to the protocol string field),
     overrides the retry budget, and appends app-transaction watermarks
@@ -326,26 +333,26 @@ def commit(
     txn_info = txn_info or TransactionInfo(blind_append=False, read_whole_table=True)
     store = log_store or _DEFAULT_LOG_STORE
     our_removes = {a.path for a in actions if isinstance(a, Remove)}
+    # the base snapshot: every table-state decision below reads it (the
+    # caller has just loaded this version, so this is a cache hit)
+    read = snap_mod.load_snapshot(table_path, read_version) if read_version >= 0 else None
+    read_cfg = read.configuration if read is not None else {}
+    # the table config once this commit lands: its own Metadata wins
+    meta = next((a for a in actions if isinstance(a, Metadata)), None)
+    cfg = (meta.configuration or {}) if meta is not None else read_cfg
     # delta.appendOnly: reject any commit that removes DATA (reference
     # table/config.rs appendOnly + per-operation checks). Removes with
     # dataChange=false (OPTIMIZE's rearrangements) stay allowed, as do
     # table-redefinition commits (CREATE OR REPLACE carries Metadata).
-    if read_version >= 0 and any(
-        isinstance(a, Remove) and a.data_change for a in actions
+    if (
+        read_cfg.get("delta.appendOnly", "").lower() == "true"
+        and not operation.operation.startswith("CREATE")
+        and any(isinstance(a, Remove) and a.data_change for a in actions)
     ):
-        redefines = operation.operation.startswith("CREATE")
-        if not redefines:
-            cfg = txn_info.table_config if txn_info is not None else None
-            if cfg is None:
-                try:
-                    cfg = snap_mod.load_snapshot(table_path, read_version).configuration
-                except Exception:
-                    cfg = {}
-            if cfg.get("delta.appendOnly", "").lower() == "true":
-                raise DeltaError(
-                    f"table is append-only (delta.appendOnly=true): "
-                    f"{operation.operation} would remove data"
-                )
+        raise DeltaError(
+            f"table is append-only (delta.appendOnly=true): "
+            f"{operation.operation} would remove data"
+        )
     os.makedirs(snap_mod.log_dir(table_path), exist_ok=True)
     attempt_version = read_version + 1
 
@@ -355,66 +362,30 @@ def commit(
     # attempt, and OCC retries first advance the watermark past whatever
     # the winning commits claimed (scanned below from the same replay
     # that drives conflict checking).
-    rt_wm: int | None = None
-    if any(isinstance(a, Add) for a in actions):
-        from delta_rs_spark.plans import row_tracking as _rt
+    from delta_rs_spark.plans import row_tracking as _rt
 
-        _rt_snap = None  # one load shared by cfg fallback + watermark
-        _rt_cfg = None
-        for a in actions:
-            if isinstance(a, Metadata):
-                _rt_cfg = a.configuration or {}
-                break
-        if _rt_cfg is None and txn_info is not None:
-            _rt_cfg = txn_info.table_config
-        if _rt_cfg is None and read_version >= 0:
-            try:
-                _rt_snap = snap_mod.load_snapshot(table_path, read_version)
-                _rt_cfg = _rt_snap.configuration
-            except Exception:
-                _rt_cfg = {}
-        if _rt.enabled(_rt_cfg):
-            if txn_info is not None and txn_info.rt_watermark is not None:
-                rt_wm = txn_info.rt_watermark
-            elif read_version >= 0:
-                if _rt_snap is None:
-                    _rt_snap = snap_mod.load_snapshot(table_path, read_version)
-                rt_wm = _rt.high_watermark(_rt_snap)
-            else:
-                rt_wm = -1
+    rt_wm: int | None = None
+    if _rt.enabled(cfg) and any(isinstance(a, Add) for a in actions):
+        rt_wm = _rt.high_watermark(read) if read is not None else -1
 
     # in-commit timestamps (Delta PROTOCOL.md "In-Commit Timestamps"):
     # when enabled, the commit's own inCommitTimestamp is the table's
     # clock — monotonically increasing regardless of filesystem mtimes,
     # so timestamp time travel survives log copies/restores
-    ict_enabled = (
-        (txn_info.table_config or {}).get(
-            "delta.enableInCommitTimestamps", ""
-        ).lower()
-        == "true"
-        if txn_info is not None and txn_info.table_config
-        else False
+    ict_key = "delta.enableInCommitTimestamps"
+    ict_enabled = cfg.get(ict_key, "").lower() == "true"
+    # mid-life enablement: when this very commit's Metadata flips the
+    # property on an existing table that did not have it, the SAME commit
+    # records the enablement version and timestamp — readers use them to
+    # know where the mtime clock ends and the ICT clock begins. (A table
+    # created with ICT never sets these.)
+    enabling_meta = (
+        meta
+        if ict_enabled
+        and read is not None
+        and read_cfg.get(ict_key, "").lower() != "true"
+        else None
     )
-    # mid-life enablement (PROTOCOL.md "In-Commit Timestamps"): when this
-    # very commit's Metadata flips the property on a table that did not
-    # have it, the SAME commit must record the enablement version and
-    # timestamp — readers use them to know where the mtime clock ends and
-    # the ICT clock begins. (A table created with ICT never sets these.)
-    enabling_meta = None
-    if not ict_enabled:
-        from delta_rs_spark.log.actions import Metadata as _Metadata
-
-        for a in actions:
-            if (
-                isinstance(a, _Metadata)
-                and (a.configuration or {})
-                .get("delta.enableInCommitTimestamps", "")
-                .lower()
-                == "true"
-            ):
-                enabling_meta = a
-                ict_enabled = True
-                break
 
     def _prev_ict(version: int) -> int | None:
         if version < 0:
@@ -436,7 +407,7 @@ def commit(
             ict = max(operation.timestamp, (prev or 0) + 1)
             operation.extra["inCommitTimestamp"] = ict
             operation.timestamp = ict
-            if enabling_meta is not None and attempt_version > 0:
+            if enabling_meta is not None:
                 enabling_meta.configuration[
                     "delta.inCommitTimestampEnablementVersion"
                 ] = str(attempt_version)
@@ -445,8 +416,6 @@ def commit(
                 ] = str(ict)
         attempt_actions = actions
         if rt_wm is not None:
-            from delta_rs_spark.plans import row_tracking as _rt
-
             attempt_actions, _ = _rt.assign_base_row_ids(
                 actions, rt_wm, attempt_version
             )
@@ -456,21 +425,10 @@ def commit(
         target = snap_mod.commit_file(table_path, attempt_version)
         try:
             store.put_if_absent(target, "\n".join(lines) + "\n")
-            # effective table config AFTER this commit: a Metadata action
-            # in the commit wins, else the transaction's read-snapshot
-            # config. Hooks use it to decide cheaply whether they fire at
-            # all — the common all-disabled case then costs zero log
-            # replays per commit instead of up to three.
-            post_cfg = None
-            for a in actions:
-                if isinstance(a, Metadata):
-                    post_cfg = a.configuration or {}
-            if post_cfg is None and txn_info is not None:
-                post_cfg = txn_info.table_config
             if create_checkpoint:
-                _maybe_checkpoint(table_path, attempt_version, post_cfg)
-            _maybe_cleanup_logs(table_path, cleanup_logs, post_cfg)
-            _maybe_autocompact(table_path, operation, txn_info, post_cfg)
+                _maybe_checkpoint(table_path, attempt_version, cfg)
+            _maybe_cleanup_logs(table_path, cleanup_logs, cfg)
+            _maybe_autocompact(table_path, operation, cfg)
             return attempt_version
         except FileExistsError:
             # replay winning commit(s), check conflicts, then retry on top
@@ -487,71 +445,52 @@ def commit(
                 winning = snap_mod.read_commit_actions(table_path, v)
                 _check_conflicts(winning, txn_info, our_removes)
                 if rt_wm is not None:
-                    from delta_rs_spark.plans import row_tracking as _rt
-
                     rt_wm = _rt.advance_watermark_from(winning, rt_wm)
             attempt_version = latest + 1
     raise CommitFailedError(f"exceeded {max_retries} commit retries at {table_path}")
 
 
 def _maybe_cleanup_logs(
-    table_path: str, override: bool | None, cfg: dict[str, str] | None = None
+    table_path: str, override: bool | None, cfg: dict[str, str]
 ) -> None:
     """Post-commit hook: delete expired log files when
     PostCommitHookProperties.cleanup_expired_logs is True, or when it is
     None and the table sets delta.enableExpiredLogCleanup (reference
     transaction.py:33-38 — config decides unless overridden). ``cfg``
-    is the committing transaction's effective table config; when known,
-    the disabled case decides without any log replay."""
+    is the table config as of the new commit."""
+    enabled = override
+    if enabled is None:
+        enabled = cfg.get("delta.enableExpiredLogCleanup", "false").lower() == "true"
+    if not enabled:
+        return
     try:
-        enabled = override
-        if enabled is None and cfg is not None:
-            enabled = (
-                cfg.get("delta.enableExpiredLogCleanup", "false").lower() == "true"
-            )
-        if enabled is None:
-            snapshot = snap_mod.load_snapshot(table_path)
-            enabled = (
-                snapshot.configuration.get("delta.enableExpiredLogCleanup", "false").lower()
-                == "true"
-            )
-        if enabled:
-            from delta_rs_spark.operators.vacuum import cleanup_metadata
+        from delta_rs_spark.operators.vacuum import cleanup_metadata
 
-            cleanup_metadata(table_path)
+        cleanup_metadata(table_path)
     except Exception:
         # log cleanup is an optimization; never fail the commit for it
         pass
 
 
-def _maybe_checkpoint(
-    table_path: str, version: int, cfg: dict[str, str] | None = None
-) -> None:
+def _maybe_checkpoint(table_path: str, version: int, cfg: dict[str, str]) -> None:
     """Post-commit hook: parquet checkpoint every delta.checkpointInterval
     commits (reference: protocol/checkpoints.rs + transaction post-commit).
-    ``cfg`` is the committing transaction's effective table config; when
-    known, the off-interval case (every commit but one in
-    ``checkpointInterval``) decides without replaying the log."""
+    ``cfg`` is the table config as of the new commit, so the off-interval
+    case (every commit but one in ``checkpointInterval``) decides without
+    loading a snapshot."""
     try:
-        if cfg is not None:
-            pre_interval = int(
-                cfg.get("delta.checkpointInterval", CHECKPOINT_INTERVAL_DEFAULT)
-            )
-            if not (pre_interval > 0 and version > 0 and version % pre_interval == 0):
-                return
+        interval = int(cfg.get("delta.checkpointInterval", CHECKPOINT_INTERVAL_DEFAULT))
+        if not (interval > 0 and version > 0 and version % interval == 0):
+            return
         snapshot = snap_mod.load_snapshot(table_path, version)
-        interval = int(
-            snapshot.configuration.get("delta.checkpointInterval", CHECKPOINT_INTERVAL_DEFAULT)
+        # delta.checkpointPolicy=v2 (PROTOCOL.md): auto checkpoints use
+        # the V2 sidecar layout when the table feature allows; silently
+        # classic otherwise (the hook never fails a commit)
+        use_v2 = cfg.get("delta.checkpointPolicy", "classic") == "v2" and (
+            snapshot.protocol is not None
+            and "v2Checkpoint" in (snapshot.protocol.reader_features or [])
         )
-        if interval > 0 and version > 0 and version % interval == 0:
-            # delta.checkpointPolicy=v2 (PROTOCOL.md): auto checkpoints
-            # use the V2 sidecar layout when the table feature allows;
-            # silently classic otherwise (the hook never fails a commit)
-            policy = snapshot.configuration.get("delta.checkpointPolicy", "classic")
-            use_v2 = policy == "v2" and snapshot.protocol is not None and (
-                "v2Checkpoint" in (snapshot.protocol.reader_features or [])
-            )
-            snap_mod.write_checkpoint(table_path, snapshot, v2=use_v2)
+        snap_mod.write_checkpoint(table_path, snapshot, v2=use_v2)
     except Exception:
         # checkpointing is an optimization; never fail the commit for it
         pass
@@ -562,42 +501,28 @@ AUTOCOMPACT_MIN_FILES = 16
 
 
 def _maybe_autocompact(
-    table_path: str,
-    operation: CommitInfo,
-    txn_info: "TransactionInfo | None" = None,
-    cfg: dict[str, str] | None = None,
+    table_path: str, operation: CommitInfo, cfg: dict[str, str]
 ) -> None:
     """Post-commit hook: delta.autoOptimize.autoCompact=true compacts
     small files right after the write that crossed the threshold — the
     steady-state answer to streaming/micro-batch ingest fragmenting a
-    table (delta-spark's Auto Compaction semantics). Guarded against
-    recursion via the operation name; needs an active SparkSession
-    (driver-side hooks run where writes run)."""
+    table (delta-spark's Auto Compaction semantics). ``cfg`` is the table
+    config as of the new commit. Guarded against recursion via the
+    operation name; needs an active SparkSession (driver-side hooks run
+    where writes run)."""
     if operation.operation in ("OPTIMIZE", "REORG") or operation.operation.startswith(
         "VACUUM"
     ):
         return
-    # cheap pre-check from the commit's effective config (falling back to
-    # the transaction's read-snapshot config): the default (disabled)
-    # path must not pay a full log replay per commit
-    pre_cfg = cfg if cfg is not None else (
-        txn_info.table_config if txn_info is not None else None
-    )
-    if (
-        pre_cfg is not None
-        and pre_cfg.get("delta.autoOptimize.autoCompact", "").lower() != "true"
-    ):
+    if cfg.get("delta.autoOptimize.autoCompact", "").lower() != "true":
         return
     try:
-        snapshot = snap_mod.load_snapshot(table_path)
-        cfg = snapshot.configuration
-        if cfg.get("delta.autoOptimize.autoCompact", "").lower() != "true":
-            return
         from pyspark.sql import SparkSession
 
         spark = SparkSession.getActiveSession()
         if spark is None:
             return
+        snapshot = snap_mod.load_snapshot(table_path)
         target = int(cfg.get("delta.targetFileSize", 128 * 1024 * 1024))
         min_files = int(
             cfg.get("delta.autoOptimize.minNumFiles", AUTOCOMPACT_MIN_FILES)

@@ -30,9 +30,6 @@ from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import TransactionInfo
-from delta_rs_spark.plans.row_tracking import (
-    cached_watermark as _rt_cached_watermark,
-)
 from delta_rs_spark.operators.cdc import (
     CHANGE_TYPE_COL,
     cdf_enabled,
@@ -292,8 +289,6 @@ def delete(
             TransactionInfo(
                 blind_append=False,
                 read_whole_table=True,
-                table_config=snapshot.configuration,
-                rt_watermark=_rt_cached_watermark(snapshot),
             ),
             commit_properties=commit_properties,
             post_commit=post_commithook_properties,
@@ -342,8 +337,6 @@ def delete(
         blind_append=False,
         read_files={r.path for r in removes},
         read_whole_table=False,
-        table_config=snapshot.configuration,
-        rt_watermark=_rt_cached_watermark(snapshot),
         isolation_level=snapshot.configuration.get(
             "delta.isolationLevel", "WriteSerializable"
         ),

@@ -32,7 +32,7 @@ out and nothing is committed.
 
 from __future__ import annotations
 
-import re
+import functools
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -207,32 +207,18 @@ class TableMerger:
                 out[c] = f"{s}.`{c}`"
         return out
 
-    def _equi_join_pairs(self) -> list[tuple[str, str]]:
-        """(target_col, source_col) pairs from the join predicate's
-        top-level equality conjuncts, extracted from the Catalyst
-        expression AST (reference: merge/filter.rs rewrites the expression
-        tree the same way).
-
-        The predicate is parsed with the session's SQL parser, the
-        top-level ``And`` chain is flattened, and a conjunct binds a
-        (target_col, source_col, nullsafe) triple only when it is
-        ``EqualTo`` / ``EqualNullSafe`` between two 2-part attributes
-        qualified by the two aliases (either order; backquotes,
-        whitespace, and odd casing are the parser's problem, not ours).
-        Anything else — function-wrapped columns, arithmetic, OR/NOT
-        *inside* a conjunct — contributes nothing but, per AND
-        semantics, cannot invalidate pairs bound by sibling conjuncts. A predicate whose root is OR yields no conjuncts and
-        therefore no early filter. Falls back to conservative regex
-        matching when the JVM parser is unreachable."""
-        try:
-            root = (
-                self.dt.spark._jsparkSession.sessionState()
-                .sqlParser()
-                .parseExpression(self.predicate)
-            )
-        except Exception:
-            return self._equi_join_pairs_regex()
-        t, s = self._aliases()
+    @functools.cached_property
+    def _join_conjuncts(self) -> list:
+        """The join predicate's top-level ``And`` chain, flattened into
+        its Catalyst conjuncts — parsed once per merge with the session's
+        SQL parser (a malformed predicate raises its ParseException
+        here). Only these conjuncts bind every matched row: an OR/NOT at
+        the root makes the whole predicate one conjunct."""
+        root = (
+            self.dt.spark._jsparkSession.sessionState()
+            .sqlParser()
+            .parseExpression(self.predicate)
+        )
 
         def flatten_and(e):
             if e.getClass().getSimpleName() == "And":
@@ -240,6 +226,25 @@ class TableMerger:
                 yield from flatten_and(e.right())
             else:
                 yield e
+
+        return list(flatten_and(root))
+
+    def _equi_join_pairs(self) -> list[tuple[str, str]]:
+        """(target_col, source_col) pairs from the join predicate's
+        top-level equality conjuncts, extracted from the Catalyst
+        expression AST (reference: merge/filter.rs rewrites the expression
+        tree the same way).
+
+        A conjunct of ``_join_conjuncts`` binds a (target_col,
+        source_col, nullsafe) triple only when it is ``EqualTo`` /
+        ``EqualNullSafe`` between two 2-part attributes qualified by the
+        two aliases (either order; backquotes, whitespace, and odd
+        casing are the parser's problem, not ours). Anything else —
+        function-wrapped columns, arithmetic, OR/NOT *inside* a conjunct
+        — contributes nothing but, per AND semantics, cannot invalidate
+        pairs bound by sibling conjuncts. A predicate whose root is OR
+        yields no conjuncts and therefore no early filter."""
+        t, s = self._aliases()
 
         def attr(e) -> tuple[str, str] | None:
             if e.getClass().getSimpleName() != "UnresolvedAttribute":
@@ -250,7 +255,7 @@ class TableMerger:
             return str(parts.apply(0)).lower(), str(parts.apply(1))
 
         pairs = []
-        for conj in flatten_and(root):
+        for conj in self._join_conjuncts:
             cls = conj.getClass().getSimpleName()
             if cls not in ("EqualTo", "EqualNullSafe"):
                 continue
@@ -286,22 +291,7 @@ class TableMerger:
         the flattened top-level And chain qualify; the whitelist (cmp /
         IN / IS [NOT] NULL between a target-qualified attribute and
         literals) is exactly the language plans.skipping prunes on."""
-        try:
-            root = (
-                self.dt.spark._jsparkSession.sessionState()
-                .sqlParser()
-                .parseExpression(self.predicate)
-            )
-        except Exception:
-            return []
         t, _s = self._aliases()
-
-        def flatten_and(e):
-            if e.getClass().getSimpleName() == "And":
-                yield from flatten_and(e.left())
-                yield from flatten_and(e.right())
-            else:
-                yield e
 
         def tcol(e) -> str | None:
             if e.getClass().getSimpleName() != "UnresolvedAttribute":
@@ -315,7 +305,7 @@ class TableMerger:
             return e.sql() if e.getClass().getSimpleName() == "Literal" else None
 
         out: list[str] = []
-        for conj in flatten_and(root):
+        for conj in self._join_conjuncts:
             cls = conj.getClass().getSimpleName()
             if cls in self._STATIC_CMP:
                 op = self._STATIC_CMP[cls]
@@ -340,33 +330,6 @@ class TableMerger:
                         f"{c} IS NULL" if cls == "IsNull" else f"{c} IS NOT NULL"
                     )
         return out
-
-    def _equi_join_pairs_regex(self) -> list[tuple[str, str]]:
-        """Regex fallback (pre-AST formulation): whole-conjunct
-        ``t.col = s.col`` matching, disabled entirely under top-level
-        OR/NOT since textual splitting cannot prove precedence."""
-        from delta_rs_spark.plans.skipping import _has_top_level_or_not, split_conjuncts
-
-        if _has_top_level_or_not(self.predicate):
-            return []
-        t, s = self._aliases()
-        col = r"`?([\w]+)`?"
-        pat_ts = re.compile(
-            rf"^\s*{re.escape(t)}\.{col}\s*(<=>|==|=)\s*{re.escape(s)}\.{col}\s*$"
-        )
-        pat_st = re.compile(
-            rf"^\s*{re.escape(s)}\.{col}\s*(<=>|==|=)\s*{re.escape(t)}\.{col}\s*$"
-        )
-        pairs = []
-        for conj in split_conjuncts(self.predicate):
-            m = pat_ts.match(conj)
-            if m:
-                pairs.append((m.group(1), m.group(3), m.group(2) == "<=>"))
-                continue
-            m = pat_st.match(conj)
-            if m:
-                pairs.append((m.group(3), m.group(1), m.group(2) == "<=>"))
-        return pairs
 
     # distinct source partition combinations above this count fall back
     # to min/max BETWEEN (bounds the driver collect and the predicate
@@ -1185,8 +1148,6 @@ class TableMerger:
             blind_append=False,
             read_files={a.path for a in candidates},
             read_whole_table=(early is None or bool(self.not_matched_by_source)),
-            table_config=snapshot.configuration,
-            rt_watermark=_rt.cached_watermark(snapshot),
             isolation_level=snapshot.configuration.get(
                 "delta.isolationLevel", "WriteSerializable"
             ),

@@ -146,13 +146,9 @@ class TableOptimizer:
                 {"targetSize": target, **({"predicate": pred} if pred else {})},
                 operation_metrics=batch_metrics,
             )
-            from delta_rs_spark.plans import row_tracking as _rt
-
             txn = TransactionInfo(
                 blind_append=False,
                 read_files={r.path for r in removes},
-                table_config=snapshot.configuration,
-                rt_watermark=_rt.cached_watermark(snapshot),
             )
             return commit_mod.commit(
                 table_path, list(new_adds) + removes, op, read_version, txn
@@ -280,13 +276,9 @@ class TableOptimizer:
             {"applyPurge": True, **({"predicate": pred} if pred else {})},
             operation_metrics=metrics,
         )
-        from delta_rs_spark.plans import row_tracking as _rt
-
         txn = TransactionInfo(
             blind_append=False,
             read_files={r.path for r in removes},
-            table_config=snapshot.configuration,
-            rt_watermark=_rt.cached_watermark(snapshot),
         )
         commit_mod.commit(
             table_path,
@@ -527,13 +519,9 @@ class TableOptimizer:
             },
             operation_metrics=metrics,
         )
-        from delta_rs_spark.plans import row_tracking as _rt2
-
         txn = TransactionInfo(
             blind_append=False,
             read_files={r.path for r in removes},
-            table_config=snapshot.configuration,
-            rt_watermark=_rt2.cached_watermark(snapshot),
         )
         commit_mod.commit(table_path, list(new_adds) + removes, op, snapshot.version, txn)
         self.dt.refresh()

@@ -19,9 +19,6 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.operators.util import resolve_add_path
-from delta_rs_spark.plans.row_tracking import (
-    cached_watermark as _rt_cached_watermark,
-)
 
 
 def restore(
@@ -136,8 +133,6 @@ def restore(
         TransactionInfo(
             blind_append=False,
             read_whole_table=True,
-            table_config=current.configuration,
-            rt_watermark=_rt_cached_watermark(current),
         ),
         commit_properties=commit_properties,
         post_commit=post_commithook_properties,

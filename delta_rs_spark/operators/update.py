@@ -21,9 +21,6 @@ from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
-from delta_rs_spark.plans.row_tracking import (
-    cached_watermark as _rt_cached_watermark,
-)
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import find_touched_files
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
@@ -257,8 +254,6 @@ def update(
     txn = TransactionInfo(
         blind_append=False,
         read_files={r.path for r in removes},
-        table_config=snapshot.configuration,
-        rt_watermark=_rt_cached_watermark(snapshot),
         isolation_level=snapshot.configuration.get(
             "delta.isolationLevel", "WriteSerializable"
         ),
@@ -456,8 +451,6 @@ def _dv_update_commit(
     txn = TransactionInfo(
         blind_append=False,
         read_files={r.path for r in removes},
-        table_config=snapshot.configuration,
-        rt_watermark=_rt_cached_watermark(snapshot),
         isolation_level=snapshot.configuration.get(
             "delta.isolationLevel", "WriteSerializable"
         ),

@@ -88,16 +88,6 @@ def high_watermark(snapshot: "Snapshot") -> int:
     return wm
 
 
-def cached_watermark(snapshot) -> int | None:
-    """Watermark for TransactionInfo.rt_watermark: operators that hold
-    the read snapshot pass this so commit() never replays the log just
-    to find the allocation base. None when row tracking is off (commit
-    skips allocation entirely)."""
-    if not enabled(snapshot.configuration):
-        return None
-    return high_watermark(snapshot)
-
-
 def watermark_action(watermark: int):
     from delta_rs_spark.log.actions import DomainMetadata
 

@@ -609,19 +609,7 @@ def write_deltalake(
     actions: list = []
     id_plan: dict[str, dict] = {}
     metrics: dict[str, Any] = {}
-    from delta_rs_spark.plans.row_tracking import (
-        cached_watermark as _rt_cached_watermark,
-    )
-
-    txn_info = TransactionInfo(
-        blind_append=True,
-        table_config=(
-            snapshot.configuration if snapshot is not None else configuration
-        ),
-        rt_watermark=(
-            _rt_cached_watermark(snapshot) if snapshot is not None else None
-        ),
-    )
+    txn_info = TransactionInfo(blind_append=True)
 
     if snapshot is None:
         from delta_rs_spark.features import required_protocol
@@ -841,8 +829,6 @@ def write_deltalake(
         txn_info = TransactionInfo(
             blind_append=False,
             read_whole_table=True,
-            table_config=snapshot.configuration,
-            rt_watermark=_rt_cached_watermark(snapshot),
         )
         if predicate:
             # transactional replaceWhere (reference: write/mod.rs:228

@@ -591,6 +591,6 @@ def test_stale_append_racing_mapping_upgrade_conflicts(spark, tmp_path):
             list(adds),
             CommitInfo("WRITE", {"mode": "Append"}),
             pre.version,
-            TransactionInfo(blind_append=True, table_config=pre.configuration),
+            TransactionInfo(blind_append=True),
             max_retries=3,
         )

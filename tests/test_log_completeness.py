@@ -474,6 +474,97 @@ def test_ict_midlife_enablement(spark, tmp_path):
     assert snap_mod.version_at_timestamp(table, pre_ts) <= 1
 
 
+def _ict_table(spark, path):
+    write_deltalake(
+        path,
+        spark.range(5),
+        configuration={"delta.enableInCommitTimestamps": "true"},
+    )
+    return DeltaTable(path, spark=spark)
+
+
+def _log_actions(path, kind):
+    return [
+        (v, a)
+        for v in range(snap_mod.latest_version(path) + 1)
+        for a in snap_mod.read_commit_actions(path, v)
+        if isinstance(a, kind)
+    ]
+
+
+def test_ict_table_stamps_every_commit(spark, tmp_path):
+    """Once a table has in-commit timestamps, EVERY commit carries one
+    (PROTOCOL.md) — a no-match UPDATE, VACUUM START/END and an ALTER
+    included — and the stamps strictly increase."""
+    table = str(tmp_path / "ict_all")
+    t = _ict_table(spark, table)
+    t.update({"id": "id + 1"}, predicate="id = 99")  # matches no row
+    t.vacuum(retention_hours=0, enforce_retention_duration=False, dry_run=False)
+    t.alter.add_constraint({"id_nonneg": "id >= 0"})
+    infos = [a for _, a in _log_actions(table, CommitInfo)]
+    ops = [a.operation for a in infos]
+    assert ops == ["WRITE", "UPDATE", "VACUUM START", "VACUUM END", "ADD CONSTRAINT"]
+    icts = [a.extra.get("inCommitTimestamp") for a in infos]
+    assert None not in icts, list(zip(ops, icts))
+    assert all(b > a for a, b in zip(icts, icts[1:])), icts
+
+
+def test_ict_table_alter_records_no_enablement(spark, tmp_path):
+    """ALTERs on a table CREATED with in-commit timestamps must not
+    record a mid-life enablement: delta.inCommitTimestampEnablement*
+    would tell readers the mtime clock ran until that version."""
+    table = str(tmp_path / "ict_alter")
+    t = _ict_table(spark, table)
+    t.alter.add_constraint({"id_nonneg": "id >= 0"})
+    t.alter.set_table_properties({"delta.logRetentionDuration": "interval 30 days"})
+    metas = _log_actions(table, Metadata)
+    assert len(metas) == 3
+    assert [
+        (v, k)
+        for v, m in metas
+        for k in m.configuration
+        if k.startswith("delta.inCommitTimestampEnablement")
+    ] == []
+
+
+@pytest.mark.parametrize("row_tracking", [False, True], ids=["plain", "row_tracking"])
+def test_commit_loads_one_snapshot(spark, tmp_path, monkeypatch, row_tracking):
+    """commit() reads table state from ONE base snapshot: at most one
+    snapshot load per commit (no post-commit hook fires here), whatever
+    the operator passed in its TransactionInfo."""
+    table = str(tmp_path / "t")
+    cfg = {"delta.enableRowTracking": "true"} if row_tracking else {}
+    write_deltalake(table, spark.range(10), configuration=cfg)
+    loads: list[tuple[str, int]] = []
+    real_commit, real_load = commit_mod.commit, snap_mod.load_snapshot
+    active = []
+
+    def counting_load(*args, **kwargs):
+        if active:
+            active[-1] += 1
+        return real_load(*args, **kwargs)
+
+    def spied_commit(table_path, actions, op, *args, **kwargs):
+        active.append(0)
+        try:
+            return real_commit(table_path, actions, op, *args, **kwargs)
+        finally:
+            loads.append((op.operation, active.pop()))
+
+    monkeypatch.setattr(snap_mod, "load_snapshot", counting_load)
+    monkeypatch.setattr(commit_mod, "commit", spied_commit)
+    write_deltalake(table, spark.range(10, 20), mode="append")
+    t = DeltaTable(table, spark=spark)
+    t.update({"id": "id + 1"}, predicate="id = 99")  # matches no row
+    t.delete("id = 3")
+    t.alter.set_table_properties({"delta.logRetentionDuration": "interval 30 days"})
+    t.vacuum(retention_hours=0, enforce_retention_duration=False, dry_run=False)
+    assert [op for op, _ in loads] == [
+        "WRITE", "UPDATE", "DELETE", "SET TBLPROPERTIES", "VACUUM START", "VACUUM END",
+    ]
+    assert all(n <= 1 for _, n in loads), loads
+
+
 # ---------------------------------------------------------------------------
 # V2 checkpoint WRITE (r11) — sidecar splitting, UUID naming, feature gate
 # ---------------------------------------------------------------------------

@@ -299,6 +299,62 @@ def test_failed_write_job_leaves_no_staging(spark, tmp_path, sample_df, cdf, var
         assert t.version() == v
 
 
+@pytest.mark.parametrize("cdf", [True, False], ids=["cdf", "plain"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_mutation_losing_race_conflicts_cleanly(
+    spark, tmp_path, sample_df, monkeypatch, op, cdf
+):
+    """An OCC conflict at commit: a DELETE of the file the mutation
+    rewrites lands between the mutation's snapshot read and its commit.
+    The mutation raises (the winner removed a file it also removes, so
+    the conflict is delete-delete), the table stays at the winner's
+    version, nothing is staged or pinned, and the loser's written files
+    are orphans that VACUUM reclaims."""
+    from delta_rs_spark.log import commit as C
+    from delta_rs_spark.log import snapshot as snap_mod
+    from delta_rs_spark.log.commit import ConcurrentDeleteDeleteError
+
+    path = str(tmp_path / "t")
+    write_deltalake(
+        path, sample_df, configuration={"delta.enableChangeDataFeed": str(cdf).lower()}
+    )
+    t = DeltaTable(path)
+    src = spark.createDataFrame([("1", 7)], "id string, price long")
+    mutate = {
+        "delete": lambda: t.delete("id = '1'"),
+        "update": lambda: t.update({"price": "price + 100"}, predicate="id = '1'"),
+        "merge": lambda: t.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+        .when_matched_update({"price": "s.price"})
+        .execute(),
+    }[op]
+    real_commit = C.commit
+    winner = []
+
+    def racing_commit(table_path, actions, operation, read_version, *args, **kwargs):
+        if not winner:
+            winner.append(None)  # the winner's own commit passes through
+            winner[0] = DeltaTable(path).delete("id = '1'")
+        return real_commit(table_path, actions, operation, read_version, *args, **kwargs)
+
+    monkeypatch.setattr(C, "commit", racing_commit)
+    with pytest.raises(ConcurrentDeleteDeleteError):
+        mutate()
+    monkeypatch.setattr(C, "commit", real_commit)
+
+    assert winner and winner[0]["num_deleted_rows"] == 1
+    live = snap_mod.load_snapshot(path)
+    assert live.version == 1  # the winner's commit, nothing after it
+    assert sorted(r.id for r in DeltaTable(path).to_df().collect()) == ["2", "3", "4", "5"]
+    assert table_tree(path)[1] == []
+    assert persistent_rdds(spark) == 0
+    DeltaTable(path).vacuum(
+        retention_hours=0, enforce_retention_duration=False, dry_run=False, full=True
+    )
+    files, staging = table_tree(path)
+    data = {f for f in files if f.endswith(".parquet") and not f.startswith("_delta_log")}
+    assert staging == [] and data == set(live.files)
+
+
 def test_constraints_enforced_on_dv_update(spark, tmp_path, sample_df):
     """Same enforcement on the deletion-vector UPDATE variant (changed
     rows are appended, not rewritten — they still must satisfy rules)."""

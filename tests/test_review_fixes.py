@@ -285,12 +285,6 @@ def test_merge_equi_pairs_ast_precision(spark, tmp_table, sample_df):
     # 1-part and 3-part attributes never bind
     m5 = t.merge(src, "id = source.id AND cat.target.id = source.id")
     assert m5._equi_join_pairs() == []
-    # regex fallback: parenthesized OR is not top-level (safe to keep
-    # sibling pairs), but an unparenthesized top-level OR disables all
-    m6 = t.merge(src, "target.id = source.id AND (target.id = '1' OR source.id = '2')")
-    assert m6._equi_join_pairs_regex() == [("id", "id", False)]
-    m7 = t.merge(src, "target.id = source.id OR target.price = source.price")
-    assert m7._equi_join_pairs_regex() == []
 
 
 # --- r08 ADVICE fixes -------------------------------------------------
