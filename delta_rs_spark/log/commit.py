@@ -387,23 +387,13 @@ def commit(
         else None
     )
 
-    def _prev_ict(version: int) -> int | None:
-        if version < 0:
-            return None
-        try:
-            a = snap_mod.read_commit_info(table_path, version)
-            if a is not None:
-                v = a.extra.get("inCommitTimestamp") or a.timestamp
-                return int(v) if v else None
-        except Exception:
-            return None
-        return None
-
     for _attempt in range(max_retries + 1):
         operation.timestamp = now_ms()
         operation.read_version = read_version if read_version >= 0 else None
         if ict_enabled:
-            prev = _prev_ict(attempt_version - 1)
+            # strictly above the previous commit's timestamp (None
+            # before the first commit)
+            prev = snap_mod.commit_timestamp(table_path, attempt_version - 1)
             ict = max(operation.timestamp, (prev or 0) + 1)
             operation.extra["inCommitTimestamp"] = ict
             operation.timestamp = ict

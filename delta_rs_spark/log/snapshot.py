@@ -27,7 +27,6 @@ import pyarrow.parquet as pq
 from delta_rs_spark.log.actions import (
     Action,
     Add,
-    AddCDCFile,
     CheckpointMetadata,
     CommitInfo,
     DomainMetadata,
@@ -147,8 +146,9 @@ def latest_version(table_path: str) -> int | None:
     return max(candidates) if candidates else None
 
 
-def read_commit_actions(table_path: str, version: int) -> list[Action]:
-    path = commit_file(table_path, version)
+def _read_actions(path: str) -> list[Action]:
+    """The actions of a newline-delimited JSON log file (a commit, a
+    compacted range or a JSON checkpoint)."""
     actions: list[Action] = []
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -160,13 +160,15 @@ def read_commit_actions(table_path: str, version: int) -> list[Action]:
     return actions
 
 
+def read_commit_actions(table_path: str, version: int) -> list[Action]:
+    return _read_actions(commit_file(table_path, version))
+
+
 def read_commit_meta_actions(table_path: str, version: int) -> list[Action]:
     """Only the commit's CommitInfo + Metadata actions — a cheap
     substring prefilter skips the (possibly 10^5) add/remove lines
     without any JSON parse. For timestamp lookups (version_at_timestamp
     needs Metadata for the ICT enablement keys) on big-table logs."""
-    from delta_rs_spark.log.actions import CommitInfo, Metadata
-
     path = commit_file(table_path, version)
     out: list[Action] = []
     with open(path, encoding="utf-8") as f:
@@ -187,8 +189,6 @@ def read_commit_info(table_path: str, version: int):
     the typical cost is parsing a single line). Returns None when the
     commit has no commitInfo. Raises FileNotFoundError like
     read_commit_actions."""
-    from delta_rs_spark.log.actions import CommitInfo
-
     path = commit_file(table_path, version)
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -363,8 +363,7 @@ def write_checkpoint(
     carries extendedFileMetadata/partitionValues/size.
 
     ``v2=True`` writes a V2 spec checkpoint (PROTOCOL.md "V2 spec
-    checkpoints"; read side shipped earlier — Snapshot.apply replays
-    sidecar + checkpointMetadata actions): file actions split across
+    checkpoints"; read_checkpoint expands the sidecars): file actions split across
     ≤``sidecar_target_actions``-row parquet sidecars under
     ``_delta_log/_sidecars/``, the UUID-named top-level checkpoint
     carries protocol/metaData/txn/domainMetadata + the sidecar pointers
@@ -588,9 +587,7 @@ def _dv_dict(raw: dict | None) -> dict[str, Any] | None:
     return {k: v for k, v in raw.items() if v is not None}
 
 
-def read_checkpoint(
-    table_path: str, version: int, expand_sidecars: bool = True
-) -> list[Action]:
+def read_checkpoint(table_path: str, version: int) -> list[Action]:
     """All actions of the checkpoint at ``version``. V2 sidecar pointers
     are expanded here — fetched with a thread pool (parquet read +
     decompression release the GIL, so the bounded sidecar layout the
@@ -602,18 +599,11 @@ def read_checkpoint(
     parse line-wise; their sidecars are parquet and expand the same."""
     cp = find_checkpoint_file(table_path, version)
     if cp.endswith(".json"):
-        actions = []
-        with open(cp, encoding="utf-8") as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    a = parse_action(line)
-                    if a is not None:
-                        actions.append(a)
+        actions = _read_actions(cp)
     else:
         actions = _actions_from_arrow(pq.read_table(cp))
     sidecars = [a for a in actions if isinstance(a, Sidecar)]
-    if not expand_sidecars or not sidecars:
+    if not sidecars:
         return actions
     out = [a for a in actions if not isinstance(a, Sidecar)]
     from concurrent.futures import ThreadPoolExecutor
@@ -735,6 +725,8 @@ def _actions_from_arrow(table) -> list[Action]:
 
 
 def _actions_from_parquet_rows(rows: list[dict]) -> list[Action]:
+    """The non-file actions of checkpoint rows (file actions decode
+    columnar in _actions_from_arrow)."""
     actions: list[Action] = []
     for row in rows:
         proto = row.get("protocol")
@@ -748,8 +740,6 @@ def _actions_from_parquet_rows(rows: list[dict]) -> list[Action]:
                     proto.get("writerFeatures"),
                 )
             )
-        elif proto and proto.get("json"):  # pre-r02 wrapper format
-            actions.append(Protocol.from_json(json.loads(proto["json"])))
         elif meta and meta.get("schemaString"):
             actions.append(
                 Metadata(
@@ -762,44 +752,9 @@ def _actions_from_parquet_rows(rows: list[dict]) -> list[Action]:
                     created_time=meta.get("createdTime") or 0,
                 )
             )
-        elif meta and meta.get("json"):  # pre-r02 wrapper format
-            actions.append(Metadata.from_json(json.loads(meta["json"])))
         elif row.get("txn") and row["txn"].get("appId") is not None:
             t = row["txn"]
             actions.append(Txn(t["appId"], t["version"], t.get("lastUpdated") or 0))
-        elif row.get("remove") and row["remove"].get("path"):
-            r = row["remove"]
-            actions.append(
-                Remove(
-                    r["path"],
-                    r.get("deletionTimestamp") or 0,
-                    r.get("dataChange", True),
-                    partition_values=(
-                        dict(r["partitionValues"])
-                        if r.get("partitionValues") is not None
-                        else None
-                    ),
-                    size=r.get("size"),
-                    deletion_vector=_dv_dict(r.get("deletionVector")),
-                )
-            )
-        elif row.get("add") and row["add"].get("path"):
-            a = row["add"]
-            actions.append(
-                Add(
-                    path=a["path"],
-                    size=a.get("size") or 0,
-                    modification_time=a.get("modificationTime") or 0,
-                    data_change=False,
-                    partition_values=dict(a.get("partitionValues") or []),
-                    stats=a.get("stats"),
-                    tags=dict(a["tags"]) if a.get("tags") else None,
-                    deletion_vector=_dv_dict(a.get("deletionVector")),
-                    base_row_id=a.get("baseRowId"),
-                    default_row_commit_version=a.get("defaultRowCommitVersion"),
-                    clustering_provider=a.get("clusteringProvider"),
-                )
-            )
         elif row.get("domainMetadata") and row["domainMetadata"].get("domain"):
             actions.append(DomainMetadata.from_json(row["domainMetadata"]))
         elif row.get("sidecar") and row["sidecar"].get("path"):
@@ -823,12 +778,9 @@ class Snapshot:
     files: dict[str, Add] = field(default_factory=dict)
     tombstones: list[Remove] = field(default_factory=list)
     txns: dict[str, Txn] = field(default_factory=dict)
-    cdc_files: dict[int, list[AddCDCFile]] = field(default_factory=dict)
-    commit_infos: dict[int, CommitInfo] = field(default_factory=dict)
-    commit_timestamps: dict[int, int] = field(default_factory=dict)  # ms
     domain_metadata: dict[str, DomainMetadata] = field(default_factory=dict)
 
-    def apply(self, action: Action, version: int) -> None:
+    def apply(self, action: Action) -> None:
         if isinstance(action, Protocol):
             self.protocol = action
         elif isinstance(action, Metadata):
@@ -840,23 +792,12 @@ class Snapshot:
             self.tombstones.append(action)
         elif isinstance(action, Txn):
             self.txns[action.app_id] = action
-        elif isinstance(action, AddCDCFile):
-            self.cdc_files.setdefault(version, []).append(action)
-        elif isinstance(action, CommitInfo):
-            self.commit_infos[version] = action
         elif isinstance(action, DomainMetadata):
             # latest per domain wins; removed tombstones (actions.rs:1128)
             if action.removed:
                 self.domain_metadata.pop(action.domain, None)
             else:
                 self.domain_metadata[action.domain] = action
-        elif isinstance(action, Sidecar):
-            # V2 checkpoints split file actions into sidecar parquet files
-            # under _delta_log/_sidecars (Delta protocol, V2 spec)
-            for a in read_sidecar_actions(self.table_path, action.path):
-                self.apply(a, version)
-        elif isinstance(action, CheckpointMetadata):
-            pass  # self-description of the checkpoint; nothing to replay
 
     @property
     def schema_string(self) -> str:
@@ -956,32 +897,38 @@ def _validate_log(
 
 
 # ---------------------------------------------------------------------------
-# Snapshot cache (r12 optimization): process-local memo of replayed
-# snapshots. A Delta log is immutable once written — a commit file's
-# content at a given (path, version) never changes — so a replayed
-# snapshot can be reused for the process's lifetime, and a snapshot at
-# version N+k derives from the cached one at N by applying only the k
-# tail commits (the same incremental rule DeltaTable.update_incremental
-# already implements, and the reference's snapshot machinery applies on
-# refresh). Without this, every operator in a commit SEQUENCE (write ->
-# delete -> update -> merge, the index-maintenance shape) plus every
-# post-commit hook re-replayed the whole log per step: O(versions^2)
-# replay work per sequence, and at 100 TB (millions of add actions per
-# checkpoint) an O(files) re-parse per hook invocation.
+# Replay and the snapshot cache. A snapshot at version N is a base
+# snapshot advanced by replay() through N: the base is a cached snapshot
+# below N, else the newest checkpoint at or below N, else an empty
+# snapshot. DeltaTable.update_incremental advances its own snapshot with
+# the same replay(); load_cdf walks its version range one commit at a
+# time because it needs each commit's actions, not only the state.
+#
+# The cache is a process-local memo of replayed snapshots. A Delta log is
+# immutable once written — a commit file's content at a given (path,
+# version) never changes — so a replayed snapshot can be reused for the
+# process's lifetime, and a later version replays only the commits past
+# the newest cached one. Without it, every operator in a commit SEQUENCE
+# (write -> delete -> update -> merge) plus every post-commit hook
+# re-replayed the whole log per step: O(versions^2) replay work per
+# sequence, and at 100 TB (millions of add actions per checkpoint) an
+# O(files) re-parse per hook invocation.
 #
 # Safety:
 # * entries are validated by the stat identity (inode, mtime_ns, size)
 #   of the newest log file the replay consumed — a table that is
 #   rmtree'd and recreated at the same path (scratch fixtures) writes a
 #   fresh commit file and misses the cache;
+# * a cached base whose tail commit is gone (metadata cleanup) falls
+#   back to the checkpoint base;
 # * the cache stores a pristine instance and hands out shallow
-#   per-container copies, so callers that advance or annotate their
-#   snapshot (update_incremental, CDF's per-version replay) never
-#   mutate the cached state; Action objects are treated as immutable
-#   engine-wide (mutators like alter.py copy before writing);
+#   per-container copies, so callers that advance their snapshot
+#   (update_incremental, load_cdf) never mutate the cached state; Action
+#   objects are treated as immutable engine-wide (mutators copy before
+#   writing);
 # * cross-process writers only ever ADD log files, which changes the
 #   resolved target version, never a cached version's content.
-_SNAP_CACHE_MAX = int(os.environ.get("SPARK_GRAFT_SNAPSHOT_CACHE", "16"))
+_SNAP_CACHE_MAX = 16
 _snap_cache: dict[tuple[str, int], tuple[tuple, "Snapshot"]] = {}
 
 
@@ -994,9 +941,6 @@ def _copy_snapshot(snap: "Snapshot", table_path: str | None = None) -> "Snapshot
         files=dict(snap.files),
         tombstones=list(snap.tombstones),
         txns=dict(snap.txns),
-        cdc_files={k: list(v) for k, v in snap.cdc_files.items()},
-        commit_infos=dict(snap.commit_infos),
-        commit_timestamps=dict(snap.commit_timestamps),
         domain_metadata=dict(snap.domain_metadata),
     )
 
@@ -1044,114 +988,111 @@ def clear_snapshot_cache() -> None:
     _snap_cache.clear()
 
 
+def replay(snap: Snapshot, target: int, compacted: dict[int, int]) -> Snapshot:
+    """Advance ``snap`` in place from its version to ``target``. At each
+    version a compacted range (``list_compacted``) that starts there and
+    ends at or below ``target`` is applied whole (reference:
+    protocol/log_compaction.rs read path); otherwise the version's
+    commit. Raises FileNotFoundError when a needed commit file is gone."""
+    v = snap.version + 1
+    while v <= target:
+        end = compacted.get(v)
+        if end is not None and end <= target:
+            actions = _read_actions(compacted_file(snap.table_path, v, end))
+        else:
+            end = v
+            actions = read_commit_actions(snap.table_path, v)
+        for a in actions:
+            snap.apply(a)
+        snap.version = end
+        v = end + 1
+    return snap
+
+
+def _cached_base(
+    key_path: str,
+    target: int,
+    commit_set: set[int],
+    checkpoints: list[int],
+    compacted: dict[int, int],
+) -> Snapshot | None:
+    """A copy of the newest cached snapshot of this table below
+    ``target`` whose anchor file is unchanged (a recreated table or a
+    cleaned log invalidates it)."""
+    for (p, v0), (fp0, base) in sorted(_snap_cache.items(), key=lambda kv: -kv[0][1]):
+        if p != key_path or v0 >= target:
+            continue
+        if _anchor_fingerprint(key_path, v0, commit_set, checkpoints, compacted) == fp0:
+            return _copy_snapshot(base)
+    return None
+
+
 def load_snapshot(table_path: str, version: int | None = None) -> Snapshot:
+    """The table state at ``version`` (default: the latest). A cached
+    snapshot at exactly that version is returned as a copy; otherwise
+    replay() advances a base to it — the newest valid cached snapshot
+    below the version, else the newest checkpoint at or below it, else
+    an empty snapshot. A cached base whose tail lost a commit falls back
+    to the checkpoint base; a checkpoint base whose tail lost a commit
+    raises FileNotFoundError."""
     commits, checkpoints = list_log(table_path)
-    compacted_ranges = list_compacted(table_path)
-    if not commits and not checkpoints and not compacted_ranges:
+    compacted = list_compacted(table_path)
+    if not commits and not checkpoints and not compacted:
         from delta_rs_spark.log.commit import TableNotFoundError
 
         raise TableNotFoundError(f"not a Delta table (no _delta_log): {table_path}")
-    _validate_log(table_path, commits, checkpoints, compacted_ranges)
-    max_v = max(commits + checkpoints + list(compacted_ranges.values()))
+    _validate_log(table_path, commits, checkpoints, compacted)
+    max_v = max(commits + checkpoints + list(compacted.values()))
     target = max_v if version is None else version
     if version is not None and version > max_v:
         raise ValueError(f"version {version} > latest {max_v}")
 
     key_path = os.path.abspath(table_path)
-    commit_set_for_cache = set(commits)
-    fp = _anchor_fingerprint(
-        key_path, target, commit_set_for_cache, checkpoints, compacted_ranges
-    )
+    commit_set = set(commits)
+    fp = _anchor_fingerprint(key_path, target, commit_set, checkpoints, compacted)
+    snap = None
     if fp is not None:
         hit = _snap_cache.get((key_path, target))
         if hit is not None and hit[0] == fp:
             return _copy_snapshot(hit[1], table_path)
-        # incremental: newest cached version below target whose tail to
-        # target is all plain commits still present (and still valid)
-        for (p, v0), (fp0, base) in sorted(
-            _snap_cache.items(), key=lambda kv: -kv[0][1]
-        ):
-            if p != key_path or v0 >= target:
-                continue
-            if any(v not in commit_set_for_cache for v in range(v0 + 1, target + 1)):
-                break  # a gap (checkpoint/compaction tail) -> full replay
-            cur0 = _anchor_fingerprint(
-                key_path, v0, commit_set_for_cache, checkpoints, compacted_ranges
-            )
-            if cur0 != fp0:
-                break  # recreated table or cleaned log -> full replay
-            snap = _copy_snapshot(base)
+        base = _cached_base(key_path, target, commit_set, checkpoints, compacted)
+        if base is not None:
             try:
-                for v in range(v0 + 1, target + 1):
-                    for a in read_commit_actions(key_path, v):
-                        snap.apply(a, v)
-                    snap.version = v
-                    ci = snap.commit_infos.get(v)
-                    ts = ci.timestamp if ci else None
-                    if not ts:
-                        ts = int(
-                            os.path.getmtime(commit_file(key_path, v)) * 1000
-                        )
-                    snap.commit_timestamps[v] = ts
+                snap = replay(base, target, compacted)
             except FileNotFoundError:
-                break  # cleaned up mid-read -> full replay
-            _cache_put((key_path, target), fp, snap)
-            return _copy_snapshot(snap, table_path)
+                pass  # a tail commit was cleaned up: checkpoint base below
+    if snap is None:
+        snap = Snapshot(table_path=table_path)
+        usable_cp = [v for v in checkpoints if v <= target]
+        if usable_cp:
+            snap.version = max(usable_cp)
+            for a in read_checkpoint(table_path, snap.version):
+                snap.apply(a)
+        replay(snap, target, compacted)
+    if fp is None:
+        return snap
+    _cache_put((key_path, target), fp, snap)
+    return _copy_snapshot(snap, table_path)
 
-    snap = Snapshot(table_path=table_path)
-    start = 0
-    usable_cp = [v for v in checkpoints if v <= target]
-    if usable_cp:
-        cp_v = max(usable_cp)
-        for a in read_checkpoint(table_path, cp_v):
-            snap.apply(a, cp_v)
-        snap.version = cp_v
-        start = cp_v + 1
-    compacted = list_compacted(table_path)
-    commit_set = set(commits)
-    v = start
-    while v <= target:
-        # prefer a compacted range when it covers versions up to the target
-        # (reference: protocol/log_compaction.rs read path)
-        if v in compacted and compacted[v] <= target:
-            end = compacted[v]
-            path = compacted_file(table_path, v, end)
-            with open(path, encoding="utf-8") as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        a = parse_action(line)
-                        if a is not None:
-                            snap.apply(a, end)
-            snap.version = end
-            snap.commit_timestamps[end] = int(os.path.getmtime(path) * 1000)
-            v = end + 1
-            continue
-        if v not in commit_set and usable_cp and v <= max(usable_cp):
-            v += 1
-            continue  # compacted away below a checkpoint
-        try:
-            actions = read_commit_actions(table_path, v)
-        except FileNotFoundError:
-            if v in checkpoints:
-                v += 1
-                continue
-            raise
-        for a in actions:
-            snap.apply(a, v)
-        snap.version = v
-        ci = snap.commit_infos.get(v)
-        ts = ci.timestamp if ci else None
-        if not ts:
-            ts = int(os.path.getmtime(commit_file(table_path, v)) * 1000)
-        snap.commit_timestamps[v] = ts
-        v += 1
-    if snap.version < target:
-        snap.version = target
-    if fp is not None:
-        _cache_put((key_path, target), fp, snap)
-        return _copy_snapshot(snap, table_path)
-    return snap
+
+def commit_timestamp(
+    table_path: str, version: int, info: CommitInfo | None = None
+) -> int | None:
+    """The commit's timestamp in ms: its commitInfo's inCommitTimestamp
+    when it carries one (the table's own monotonic clock, PROTOCOL.md
+    "In-Commit Timestamps"), else commitInfo.timestamp, else the commit
+    file's mtime. ``info`` is the commit's CommitInfo when the caller
+    has parsed it already. None when the commit file is gone."""
+    try:
+        if info is None:
+            info = read_commit_info(table_path, version)
+        if info is not None:
+            ts = info.extra.get("inCommitTimestamp") or info.timestamp
+            if ts:
+                return int(ts)
+        return int(os.path.getmtime(commit_file(table_path, version)) * 1000)
+    except FileNotFoundError:
+        return None
 
 
 def version_at_timestamp(table_path: str, ts_ms: int) -> int:
@@ -1184,21 +1125,10 @@ def version_at_timestamp(table_path: str, ts_ms: int) -> int:
                     enable_ts = int(
                         cfg.get("delta.inCommitTimestampEnablementTimestamp", 0)
                     )
-        cts = next(
-            (
-                # in-commit timestamp wins when present: it is the
-                # table's own monotonic clock (PROTOCOL.md ICT)
-                int(a.extra.get("inCommitTimestamp") or a.timestamp)
-                for a in actions
-                if isinstance(a, CommitInfo) and a.timestamp
-            ),
-            None,
-        )
+        info = next((a for a in actions if isinstance(a, CommitInfo)), None)
+        cts = commit_timestamp(table_path, v, info)
         if cts is None:
-            try:
-                cts = int(os.path.getmtime(commit_file(table_path, v)) * 1000)
-            except OSError:
-                continue  # cleaned up mid-listing: not addressable by time
+            continue  # cleaned up mid-listing: not addressable by time
         seen.append((v, cts))
     if enable_v is not None and enable_ts is not None:
         if ts_ms >= enable_ts:

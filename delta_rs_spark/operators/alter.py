@@ -14,6 +14,7 @@ every subsequent write.
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import functions as F
@@ -63,15 +64,7 @@ class TableAlterer:
         # the remaining refresh->commit window)
         self.dt.refresh()
         m = self.dt.metadata()
-        return Metadata(
-            schema_string=m.schema_string,
-            partition_columns=list(m.partition_columns),
-            configuration=dict(m.configuration),
-            id=m.id,
-            name=m.name,
-            description=m.description,
-            created_time=m.created_time,
-        )
+        return replace(m, configuration=dict(m.configuration))
 
     def add_constraint(self, constraints: dict[str, str]) -> None:
         """ADD CONSTRAINT name CHECK (expr); validates existing rows first

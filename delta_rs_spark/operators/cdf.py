@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import Add, AddCDCFile, Remove
+from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL
 from delta_rs_spark.operators.util import resolve_add_path
@@ -42,27 +42,12 @@ def _parse_ts_ms(ts: str) -> int:
     return int(parsed.timestamp() * 1000)
 
 
-def _commit_ts_ms(table_path: str, version: int, ci_map=None) -> int:
-    """Commit timestamp: commitInfo.timestamp when present, else the
-    commit file's mtime (same fallback the per-version loop uses)."""
-    ci = (ci_map or {}).get(version)
-    if ci is not None and ci.timestamp:
-        return int(ci.timestamp)
-    try:
-        ci = snap_mod.read_commit_info(table_path, version)
-        if ci is not None and ci.timestamp:
-            return int(ci.timestamp)
-    except FileNotFoundError:
-        pass
-    try:
-        return int(
-            os.path.getmtime(snap_mod.commit_file(table_path, version)) * 1000
-        )
-    except OSError:
-        # checkpoint-only latest version (expired commit JSONs): no
-        # commit timestamp to compare against — treat as unbounded so
-        # the per-version filter below decides
-        return 2**62
+def _commit_ts_ms(table_path: str, version: int) -> int:
+    """The commit's timestamp (snapshot.commit_timestamp); a
+    checkpoint-only version (expired commit JSON) has none to compare
+    against and reads as unbounded, so the per-version filter decides."""
+    ts = snap_mod.commit_timestamp(table_path, version)
+    return 2**62 if ts is None else ts
 
 
 def load_cdf(
@@ -200,14 +185,13 @@ def load_cdf(
         pre_metadata = snap.metadata  # removed files conform to the PRE schema
         pre_files = dict(snap.files)
         for a in actions:
-            snap.apply(a, v)
+            snap.apply(a)
         snap.version = v
         if snap.metadata is None:
             continue
         schema = T.StructType.fromJson(json.loads(snap.schema_string))
-        ci = snap.commit_infos.get(v)
-        ts_ms = (ci.timestamp if ci else None) or int(
-            os.path.getmtime(snap_mod.commit_file(table_path, v)) * 1000
+        ts_ms = snap_mod.commit_timestamp(
+            table_path, v, next((a for a in actions if isinstance(a, CommitInfo)), None)
         )
         if (start_ts_ms is not None and ts_ms < start_ts_ms) or (
             end_ts_ms is not None and ts_ms > end_ts_ms

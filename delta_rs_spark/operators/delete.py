@@ -20,7 +20,6 @@ change data) in one pass.
 from __future__ import annotations
 
 import json
-import os
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -44,40 +43,66 @@ from delta_rs_spark.plans.skipping import (
 )
 
 
+def candidate_files(snapshot: snap_mod.Snapshot, predicate: str | None) -> list[Add]:
+    """The live files whose partition values and stats may hold rows
+    matching ``predicate`` — every file when there is none."""
+    from delta_rs_spark.plans.column_mapping import snapshot_physical_of
+
+    adds = list(snapshot.files.values())
+    if not predicate:
+        return adds
+    return prune_files(
+        adds,
+        predicate,
+        snapshot.partition_columns,
+        col_types_from_schema_json(json.loads(snapshot.schema_string)),
+        snapshot_physical_of(snapshot),
+    )
+
+
+def scan_txn(snapshot: snap_mod.Snapshot, candidates: list[Add]) -> TransactionInfo:
+    """The read set of a mutation that scanned ``candidates``: every
+    candidate file, not only the rewritten ones, so a racing commit that
+    removes a scanned file conflicts even when this mutation leaves the
+    file alone (or matches nothing at all)."""
+    return TransactionInfo(
+        blind_append=False,
+        read_files={a.path for a in candidates},
+        isolation_level=snapshot.configuration.get(
+            "delta.isolationLevel", "WriteSerializable"
+        ),
+    )
+
+
 def plan_predicate_removal(
     spark: SparkSession,
     snapshot: snap_mod.Snapshot,
     table_path: str,
     predicate: str,
+    candidates: list[Add],
 ) -> tuple[list[Remove], list[Add], int]:
     """Shared by DELETE and replaceWhere: compute (removes, rewrite adds,
-    deleted row count) for removing all rows matching predicate."""
+    deleted row count) for removing all rows matching predicate from
+    its ``candidate_files``."""
     from delta_rs_spark.table import read_snapshot_df
 
-    from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-    part_cols = snapshot.partition_columns
-    adds = list(snapshot.files.values())
     ts = now_ms()
     col_types = col_types_from_schema_json(json.loads(snapshot.schema_string))
-    physical_of = snapshot_physical_of(snapshot)
 
     # tier 2: exact partition-only predicate -> metadata-only removal
-    if partition_only_predicate(predicate, part_cols, col_types):
-        matched = prune_files(adds, predicate, part_cols, col_types, physical_of)
+    if partition_only_predicate(predicate, snapshot.partition_columns, col_types):
         removes = [
-            Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in matched
+            Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in candidates
         ]
         # live rows only: a DV'd file's deleted rows are already gone
         n_deleted = sum(
             (a.num_records() or 0)
             - int((a.deletion_vector or {}).get("cardinality") or 0)
-            for a in matched
+            for a in candidates
         )
         return removes, [], n_deleted
 
     # tier 3: candidate scan -> touched files -> rewrite
-    candidates = prune_files(adds, predicate, part_cols, col_types, physical_of)
     touched, n_deleted = find_touched_files(
         spark, snapshot, table_path, candidates, predicate
     )
@@ -299,23 +324,11 @@ def delete(
     use_dv = dv_write_enabled(snapshot) and not partition_only_predicate(
         predicate, snapshot.partition_columns, col_types
     )
-    if use_dv:
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-        candidates = prune_files(
-            list(snapshot.files.values()),
-            predicate,
-            snapshot.partition_columns,
-            col_types,
-            snapshot_physical_of(snapshot),
-        )
-        removes, new_adds, n_deleted = plan_dv_delete(
-            spark, snapshot, table_path, predicate, candidates
-        )
-    else:
-        removes, new_adds, n_deleted = plan_predicate_removal(
-            spark, snapshot, table_path, predicate
-        )
+    candidates = candidate_files(snapshot, predicate)
+    plan = plan_dv_delete if use_dv else plan_predicate_removal
+    removes, new_adds, n_deleted = plan(
+        spark, snapshot, table_path, predicate, candidates
+    )
     dv_adds = sum(
         1 for a in new_adds if isinstance(a, Add) and a.deletion_vector
     )
@@ -333,14 +346,6 @@ def delete(
     if use_dv:
         metrics["num_deletion_vectors_added"] = dv_adds
     op = CommitInfo("DELETE", {"predicate": predicate}, operation_metrics=metrics)
-    txn = TransactionInfo(
-        blind_append=False,
-        read_files={r.path for r in removes},
-        read_whole_table=False,
-        isolation_level=snapshot.configuration.get(
-            "delta.isolationLevel", "WriteSerializable"
-        ),
-    )
     # removes FIRST: a DV update tombstones and re-adds the SAME path in
     # one commit, and snapshot replay is sequential — add-then-remove
     # would drop the re-added file (rewrite deletes have disjoint paths,
@@ -350,7 +355,7 @@ def delete(
         list(removes) + list(new_adds),
         op,
         snapshot.version,
-        txn,
+        scan_txn(snapshot, candidates),
         commit_properties=commit_properties,
         post_commit=post_commithook_properties,
     )

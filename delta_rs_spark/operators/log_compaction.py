@@ -5,7 +5,7 @@
 
 Writes ``<start>.<end>.compacted.json`` with the range's reconciled
 actions (last Metadata/Protocol, surviving Adds, tombstones, latest Txn
-per app). Readers prefer the compacted file over replaying the
+per app, latest DomainMetadata per domain). Readers prefer the compacted file over replaying the
 individual commits; the originals stay on disk for history() and
 time travel until metadata cleanup removes them.
 """
@@ -20,6 +20,7 @@ from delta_rs_spark.log.actions import (
     Add,
     AddCDCFile,
     CommitInfo,
+    DomainMetadata,
     Metadata,
     Protocol,
     Remove,
@@ -46,6 +47,8 @@ def compact_logs(table_path: str, start: int | None = None, end: int | None = No
     adds: dict[str, Add] = {}
     removes: dict[str, Remove] = {}
     txns: dict[str, Txn] = {}
+    # latest per domain, removals included: replay applies them to the base
+    domains: dict[str, DomainMetadata] = {}
     for v in in_range:
         for a in snap_mod.read_commit_actions(table_path, v):
             if isinstance(a, Protocol):
@@ -61,6 +64,8 @@ def compact_logs(table_path: str, start: int | None = None, end: int | None = No
                 removes[a.path] = a
             elif isinstance(a, Txn):
                 txns[a.app_id] = a
+            elif isinstance(a, DomainMetadata):
+                domains[a.domain] = a
             # CommitInfo/AddCDCFile are per-commit facts — not carried
 
     actions: list[Action] = []
@@ -69,6 +74,7 @@ def compact_logs(table_path: str, start: int | None = None, end: int | None = No
     if metadata:
         actions.append(metadata)
     actions.extend(txns.values())
+    actions.extend(domains.values())
     actions.extend(removes.values())
     actions.extend(adds.values())
 

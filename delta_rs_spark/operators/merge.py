@@ -33,7 +33,7 @@ out and nothing is committed.
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, Window as W
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
-from delta_rs_spark.log.commit import DeltaError, TransactionInfo
+from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import scanned_add_path
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
@@ -703,6 +703,7 @@ class TableMerger:
             dv_mark_rows,
             dv_write_enabled,
             group_rows_by_file,
+            scan_txn,
         )
         from delta_rs_spark.plans import row_tracking as _rt
 
@@ -1021,20 +1022,7 @@ class TableMerger:
         # ---- commit -----------------------------------------------------
         actions: list = []
         if schema_changed:
-            from delta_rs_spark.log.actions import Metadata
-
-            meta = snapshot.metadata
-            actions.append(
-                Metadata(
-                    schema_string=schema.json(),
-                    partition_columns=part_cols,
-                    configuration=meta.configuration,
-                    id=meta.id,
-                    name=meta.name,
-                    description=meta.description,
-                    created_time=meta.created_time,
-                )
-            )
+            actions.append(replace(snapshot.metadata, schema_string=schema.json()))
         actions.extend(new_adds)
         if id_plan and new_adds:
             # advance each written identity column's high watermark in
@@ -1050,24 +1038,9 @@ class TableMerger:
                 configuration=snapshot.configuration,
             )
             if _new_schema is not None:
-                from delta_rs_spark.log.actions import Metadata
+                from delta_rs_spark.writer import amend_metadata
 
-                queued = [a for a in actions if isinstance(a, Metadata)]
-                if queued:
-                    queued[-1].schema_string = _new_schema
-                else:
-                    meta = snapshot.metadata
-                    actions.append(
-                        Metadata(
-                            schema_string=_new_schema,
-                            partition_columns=part_cols,
-                            configuration=meta.configuration,
-                            id=meta.id,
-                            name=meta.name,
-                            description=meta.description,
-                            created_time=meta.created_time,
-                        )
-                    )
+                amend_metadata(actions, snapshot, schema_string=_new_schema)
         actions.extend(cdc_actions)
 
         ts = now_ms()
@@ -1144,14 +1117,8 @@ class TableMerger:
         # was read (ADVICE r01: a concurrent DELETE of a
         # scanned-but-not-rewritten file must raise
         # ConcurrentDeleteReadError)
-        txn = TransactionInfo(
-            blind_append=False,
-            read_files={a.path for a in candidates},
-            read_whole_table=(early is None or bool(self.not_matched_by_source)),
-            isolation_level=snapshot.configuration.get(
-                "delta.isolationLevel", "WriteSerializable"
-            ),
-        )
+        txn = scan_txn(snapshot, candidates)
+        txn.read_whole_table = early is None or bool(self.not_matched_by_source)
         commit_mod.commit(
             table_path,
             actions,

@@ -11,7 +11,6 @@ CDF emits update_preimage/update_postimage pairs
 from __future__ import annotations
 
 import json
-import os
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -20,10 +19,9 @@ from pyspark.sql import functions as F
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import CommitInfo, Remove, now_ms
-from delta_rs_spark.log.commit import DeltaError, TransactionInfo
+from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import find_touched_files
-from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
 
 def _recompute_generated_cols(df, schema, updates, schema_cols, upd_flag):
@@ -109,15 +107,11 @@ def update(
         "UPDATE",
     )
 
-    from delta_rs_spark.plans.column_mapping import snapshot_physical_of
+    from delta_rs_spark.operators.delete import candidate_files, dv_write_enabled, scan_txn
 
-    adds = list(snapshot.files.values())
-    col_types = col_types_from_schema_json(json.loads(snapshot.schema_string))
-    candidates = (
-        prune_files(adds, predicate, part_cols, col_types, snapshot_physical_of(snapshot))
-        if predicate
-        else adds
-    )
+    candidates = candidate_files(snapshot, predicate)
+    # every commit of this UPDATE, the no-match ones included, reads them
+    txn = scan_txn(snapshot, candidates)
     ts = now_ms()
     cond = F.expr(predicate) if predicate else F.lit(True)
 
@@ -127,8 +121,6 @@ def update(
         "num_updated_rows": 0,
         "num_copied_rows": 0,
     }
-    from delta_rs_spark.operators.delete import dv_write_enabled
-
     if candidates and dv_write_enabled(snapshot):
         return _dv_update(
             spark,
@@ -138,6 +130,7 @@ def update(
             predicate,
             cond,
             candidates,
+            txn,
             metrics,
             commit_properties,
             post_commithook_properties,
@@ -155,7 +148,7 @@ def update(
             [],
             op,
             snapshot.version,
-            TransactionInfo(blind_append=False),
+            txn,
             commit_properties=commit_properties,
             post_commit=post_commithook_properties,
         )
@@ -251,13 +244,6 @@ def update(
     op = CommitInfo(
         "UPDATE", {"predicate": predicate or ""}, operation_metrics=metrics
     )
-    txn = TransactionInfo(
-        blind_append=False,
-        read_files={r.path for r in removes},
-        isolation_level=snapshot.configuration.get(
-            "delta.isolationLevel", "WriteSerializable"
-        ),
-    )
     commit_mod.commit(
         table_path,
         actions,
@@ -278,6 +264,7 @@ def _dv_update(
     predicate: str | None,
     cond,
     candidates,
+    txn,
     metrics: dict[str, Any],
     commit_properties,
     post_commithook_properties,
@@ -347,6 +334,7 @@ def _dv_update(
             table_path,
             snapshot,
             candidates,
+            txn,
             matched_df,
             updates,
             predicate,
@@ -366,6 +354,7 @@ def _dv_update_commit(
     table_path,
     snapshot,
     candidates,
+    txn,
     matched_df,
     updates,
     predicate,
@@ -396,7 +385,7 @@ def _dv_update_commit(
             [],
             op,
             snapshot.version,
-            TransactionInfo(blind_append=False),
+            txn,
             commit_properties=commit_properties,
             post_commit=post_commithook_properties,
         )
@@ -447,13 +436,6 @@ def _dv_update_commit(
     )
     op = CommitInfo(
         "UPDATE", {"predicate": predicate or ""}, operation_metrics=metrics
-    )
-    txn = TransactionInfo(
-        blind_append=False,
-        read_files={r.path for r in removes},
-        isolation_level=snapshot.configuration.get(
-            "delta.isolationLevel", "WriteSerializable"
-        ),
     )
     commit_mod.commit(
         table_path,

@@ -801,18 +801,16 @@ class DeltaTable:
         return dataset
 
     def update_incremental(self) -> None:
-        """Advance the handle to the latest version by applying ONLY the
-        new tail commits to the in-memory snapshot (reference:
-        python/deltalake/table.py update_incremental — 'incrementally
-        applying new versions'). On a deep log this is O(new commits),
-        not the O(checkpoint + tail) full replay refresh() pays — the
-        difference between a follower polling a busy 100 TB table every
-        few seconds and one that reloads millions of add actions each
-        poll. Falls back to refresh() when a tail commit is missing
-        (log compaction/cleanup ran concurrently) or the handle has no
+        """Advance the handle to the latest version by replaying ONLY the
+        new tail onto the in-memory snapshot with the loader's own
+        replay() (reference: python/deltalake/table.py update_incremental
+        — 'incrementally applying new versions'). On a deep log this is
+        O(new commits), not the O(checkpoint + tail) replay a cold load
+        pays — the difference between a follower polling a busy 100 TB
+        table every few seconds and one that reloads millions of add
+        actions each poll. Falls back to refresh() when a tail commit is
+        missing (metadata cleanup ran concurrently) or the handle has no
         loaded snapshot."""
-        import os as _os
-
         snap = self._snapshot
         latest = snap_mod.latest_version(self.table_uri)
         if latest is None or snap is None or snap.version < 0:
@@ -820,24 +818,11 @@ class DeltaTable:
             return
         if latest <= snap.version:
             return
-        from delta_rs_spark.log.snapshot import commit_file, read_commit_actions
-
-        for v in range(snap.version + 1, latest + 1):
-            try:
-                actions = read_commit_actions(self.table_uri, v)
-            except FileNotFoundError:
-                self.refresh()  # gap: compacted/cleaned under us
-                return
-            for a in actions:
-                snap.apply(a, v)
-            snap.version = v
-            ci = snap.commit_infos.get(v)
-            ts = ci.timestamp if ci else None
-            if not ts:
-                ts = int(
-                    _os.path.getmtime(commit_file(self.table_uri, v)) * 1000
-                )
-            snap.commit_timestamps[v] = ts
+        try:
+            snap_mod.replay(snap, latest, snap_mod.list_compacted(self.table_uri))
+        except FileNotFoundError:
+            self.refresh()  # gap: cleaned up under us
+            return
         # a tail commit may have upgraded the protocol — the same gate
         # the constructor/refresh apply must run here too
         self._check_read_protocol()

@@ -23,6 +23,7 @@ import os
 import shutil
 import urllib.parse
 import uuid
+from dataclasses import replace
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -522,6 +523,17 @@ def observed_metrics(obs: Observation) -> dict[str, Any] | None:
     return obs.get
 
 
+def amend_metadata(actions: list, snapshot, **changes) -> None:
+    """Apply ``changes`` to the Metadata action ``actions`` already
+    queues for this commit, or else queue the snapshot's Metadata with
+    them applied."""
+    for i in range(len(actions) - 1, -1, -1):
+        if isinstance(actions[i], Metadata):
+            actions[i] = replace(actions[i], **changes)
+            return
+    actions.append(replace(snapshot.metadata, **changes))
+
+
 def write_deltalake(
     table_or_uri: str,
     data: Any,
@@ -714,14 +726,12 @@ def write_deltalake(
             table_schema = df.schema
             meta = snapshot.metadata
             actions.append(
-                Metadata(
+                replace(
+                    meta,
                     schema_string=table_schema.json(),
-                    partition_columns=part_cols,
                     configuration=merged_config or meta.configuration,
-                    id=meta.id,
                     name=name or meta.name,
                     description=description or meta.description,
-                    created_time=meta.created_time,
                 )
             )
             merged_config = None  # emitted with the schema change
@@ -730,14 +740,10 @@ def write_deltalake(
             if merged.json() != table_schema.json():
                 meta = snapshot.metadata
                 actions.append(
-                    Metadata(
+                    replace(
+                        meta,
                         schema_string=merged.json(),
-                        partition_columns=part_cols,
                         configuration=merged_config or meta.configuration,
-                        id=meta.id,
-                        name=meta.name,
-                        description=meta.description,
-                        created_time=meta.created_time,
                     )
                 )
                 merged_config = None
@@ -745,14 +751,11 @@ def write_deltalake(
         if merged_config is not None:
             meta = snapshot.metadata
             actions.append(
-                Metadata(
-                    schema_string=table_schema.json(),
-                    partition_columns=part_cols,
+                replace(
+                    meta,
                     configuration=merged_config,
-                    id=meta.id,
                     name=name or meta.name,
                     description=description or meta.description,
-                    created_time=meta.created_time,
                 )
             )
         if _ident.identity_fields(table_schema):
@@ -803,22 +806,7 @@ def write_deltalake(
             ),
         )
         if _new_schema is not None:
-            _queued = [a for a in actions if isinstance(a, Metadata)]
-            if _queued:
-                _queued[-1].schema_string = _new_schema
-            else:
-                _m = snapshot.metadata
-                actions.append(
-                    Metadata(
-                        schema_string=_new_schema,
-                        partition_columns=part_cols,
-                        configuration=_m.configuration,
-                        id=_m.id,
-                        name=_m.name,
-                        description=_m.description,
-                        created_time=_m.created_time,
-                    )
-                )
+            amend_metadata(actions, snapshot, schema_string=_new_schema)
     actions.extend(adds)
     n_rows = sum(a.num_records() or 0 for a in adds)
     metrics["numFiles"] = len(adds)
@@ -834,10 +822,13 @@ def write_deltalake(
             # transactional replaceWhere (reference: write/mod.rs:228
             # with_replace_where): the rule gate checked every incoming
             # row against the predicate; existing matching rows go
-            from delta_rs_spark.operators.delete import plan_predicate_removal
+            from delta_rs_spark.operators.delete import (
+                candidate_files,
+                plan_predicate_removal,
+            )
 
             removes, extra_adds, n_removed = plan_predicate_removal(
-                spark, snapshot, table_path, predicate
+                spark, snapshot, table_path, predicate, candidate_files(snapshot, predicate)
             )
             actions.extend(extra_adds)
             actions.extend(removes)

@@ -139,6 +139,35 @@ def test_log_compaction_roundtrip(tmp_table, spark, sample_df):
     assert DeltaTable(tmp_table).count() == 7
 
 
+def test_log_compaction_keeps_domain_metadata(tmp_path):
+    """A compacted range carries the latest DomainMetadata per domain,
+    removals included, so a replay through it keeps the same domains
+    (row-tracking watermark, clustering spec) as commit-by-commit."""
+    import os
+
+    from delta_rs_spark.log.actions import DomainMetadata
+    from delta_rs_spark.operators.log_compaction import compact_logs
+
+    tp = str(tmp_path / "t")
+    commits = [
+        [Protocol(1, 2), Metadata(schema_string=json.dumps({"type": "struct", "fields": []}))],
+        [DomainMetadata("delta.rowTracking", '{"rowIdHighWaterMark": 41}', False)],
+        [DomainMetadata("app.gone", "{}", False)],
+        [DomainMetadata("app.gone", "{}", True)],
+    ]
+    os.makedirs(snap_mod.log_dir(tp))
+    for v, acts in enumerate(commits):
+        with open(snap_mod.commit_file(tp, v), "w") as f:
+            lines = [CommitInfo(operation="WRITE", timestamp=1000 + v)] + acts
+            f.write("\n".join(action_to_line(a) for a in lines) + "\n")
+    want = snap_mod.load_snapshot(tp).domain_metadata
+    compact_logs(tp, 1, 3)
+    snap_mod.clear_snapshot_cache()
+    got = snap_mod.load_snapshot(tp).domain_metadata
+    assert set(got) == set(want) == {"delta.rowTracking"}
+    assert got["delta.rowTracking"].configuration == '{"rowIdHighWaterMark": 41}'
+
+
 def test_log_compaction_bad_range(tmp_table, spark, sample_df):
     from delta_rs_spark.operators.log_compaction import compact_logs
 

@@ -377,6 +377,44 @@ def test_in_commit_timestamps(spark, tmp_path):
     assert snap_mod.version_at_timestamp(table, icts[0]) == 0
 
 
+def test_foreign_ict_differs_from_timestamp(spark, tmp_path):
+    """A commitInfo whose inCommitTimestamp differs from its timestamp
+    (a foreign ICT writer): the ICT is the commit's time for time
+    travel and for the change feed alike — its _commit_timestamp and
+    its timestamp bounds."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    table = str(tmp_path / "ict_foreign")
+    df = spark.range(3).select(F.col("id"))
+    conf = {
+        "delta.enableInCommitTimestamps": "true",
+        "delta.enableChangeDataFeed": "true",
+    }
+    write_deltalake(table, df, configuration=conf)
+    write_deltalake(table, df, mode="append")
+    ict0 = snap_mod.read_commit_info(table, 0).extra["inCommitTimestamp"]
+    ict = (ict0 // 1000 + 2) * 1000  # whole seconds: exact through ISO
+    path = snap_mod.commit_file(table, 1)
+    with open(path) as f:
+        lines = [json.loads(line) for line in f if line.strip()]
+    for obj in lines:
+        if "commitInfo" in obj:
+            obj["commitInfo"]["inCommitTimestamp"] = ict
+            obj["commitInfo"]["timestamp"] = ict + 10**9
+    with open(path, "w") as f:
+        f.write("\n".join(json.dumps(obj) for obj in lines) + "\n")
+
+    assert snap_mod.version_at_timestamp(table, ict) == 1
+    t = DeltaTable(table)
+    feed = t.load_cdf(starting_version=1)
+    stamps = {r.ms for r in feed.selectExpr("unix_millis(_commit_timestamp) AS ms").collect()}
+    assert stamps == {ict}
+    iso = dt.datetime.fromtimestamp(ict / 1000, dt.timezone.utc).isoformat()
+    assert t.load_cdf(starting_version=1, ending_timestamp=iso).count() == 3
+
+
 def test_required_protocol_feature_split():
     """Feature derivation: reader-writer features land in both lists,
     writer-only ones in writerFeatures alone; nothing -> legacy (1,2)."""

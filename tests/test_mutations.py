@@ -355,6 +355,59 @@ def test_mutation_losing_race_conflicts_cleanly(
     assert staging == [] and data == set(live.files)
 
 
+@pytest.mark.parametrize("matched", [True, False], ids=["matched", "no_match"])
+@pytest.mark.parametrize("table", ["cdf", "plain", "dv"])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_mutation_read_set_covers_scanned_files(
+    spark, tmp_path, monkeypatch, op, table, matched
+):
+    """DELETE/UPDATE read every candidate file they scan, not only the
+    ones they rewrite: a racing UPDATE that rewrites a scanned file the
+    mutation leaves alone (file A: ids 1 and 3, whose stats span the
+    predicate's key) lands first, and the mutation must conflict —
+    whether it rewrote the other file or matched nothing at all."""
+    from delta_rs_spark.log import commit as C
+    from delta_rs_spark.log import snapshot as snap_mod
+    from delta_rs_spark.log.commit import ConcurrentDeleteReadError
+
+    path = str(tmp_path / "t")
+    conf = {
+        "cdf": {"delta.enableChangeDataFeed": "true"},
+        "plain": {},
+        "dv": {"delta.enableDeletionVectors": "true"},
+    }[table]
+    schema = "id string, price long"
+    write_deltalake(path, spark.createDataFrame([("1", 0), ("3", 2)], schema).coalesce(1), configuration=conf)
+    write_deltalake(path, spark.createDataFrame([("2", 1), ("4", 3)], schema).coalesce(1), mode="append")
+    t = DeltaTable(path)
+    assert len(t.files()) == 2
+    pred = "id = '2'" if matched else "id = '25'"  # '25' sorts inside both files' id ranges
+    mutate = {
+        "delete": lambda: t.delete(pred),
+        "update": lambda: t.update({"price": "price + 100"}, predicate=pred),
+    }[op]
+    real_commit = C.commit
+    winner = []
+
+    def racing_commit(table_path, actions, operation, read_version, *args, **kwargs):
+        if not winner:
+            winner.append(None)  # the winner's own commit passes through
+            winner[0] = DeltaTable(path).update({"price": "100"}, predicate="id = '3'")
+        return real_commit(table_path, actions, operation, read_version, *args, **kwargs)
+
+    monkeypatch.setattr(C, "commit", racing_commit)
+    with pytest.raises(ConcurrentDeleteReadError):
+        mutate()
+    monkeypatch.setattr(C, "commit", real_commit)
+
+    assert winner and winner[0]["num_updated_rows"] == 1
+    assert snap_mod.load_snapshot(path).version == 2  # the winner's commit
+    rows = sorted((r.id, r.price) for r in DeltaTable(path).to_df().collect())
+    assert rows == [("1", 0), ("2", 1), ("3", 100), ("4", 3)]
+    assert table_tree(path)[1] == []
+    assert persistent_rdds(spark) == 0
+
+
 def test_constraints_enforced_on_dv_update(spark, tmp_path, sample_df):
     """Same enforcement on the deletion-vector UPDATE variant (changed
     rows are appended, not rewritten — they still must satisfy rules)."""

@@ -213,7 +213,7 @@ def test_checkpoint_protocol_shaped(spark, tmp_table, sample_df):
     actions = snap_mod.read_checkpoint(tmp_table, snap.version)
     replayed = snap_mod.Snapshot(table_path=tmp_table)
     for a in actions:
-        replayed.apply(a, snap.version)
+        replayed.apply(a)
     assert set(replayed.files) == set(snap.files)
     assert replayed.partition_columns == ["id"]
 

@@ -72,10 +72,8 @@ def test_cache_hit_returns_isolated_copy(table):
     # mutating a returned snapshot (update_incremental-style apply)
     # must not leak into later loads
     s2.files.clear()
-    s2.commit_timestamps.clear()
     s3 = snap_mod.load_snapshot(table)
     assert set(s3.files) == {"a.parquet"}
-    assert set(s3.commit_timestamps) == {0}
 
 
 def test_incremental_extension_applies_tail_only(table):
@@ -86,10 +84,30 @@ def test_incremental_extension_applies_tail_only(table):
     assert s.version == 2
     assert set(s.files) == {"b.parquet"}
     assert [r.path for r in s.tombstones] == ["a.parquet"]
-    assert set(s.commit_timestamps) == {0, 1, 2}
     # versioned loads still reconstruct history exactly
     s0 = snap_mod.load_snapshot(table, 0)
     assert s0.version == 0 and set(s0.files) == {"a.parquet"}
+
+
+def test_cached_base_with_lost_tail_commit_falls_back_to_checkpoint(table):
+    """A cached base whose replay hits a missing commit (cleaned up
+    below a newer checkpoint) must fall back to the checkpoint base and
+    yield exactly what a cold load does."""
+    _write_commit(table, 1, ["b.parquet"])
+    for v in range(2, 6):
+        _write_commit(table, v, [f"f{v}.parquet"], removes=[f"f{v - 1}.parquet"] if v > 2 else ["a.parquet"])
+        if v == 4:
+            snap_mod.write_checkpoint(table, snap_mod.load_snapshot(table, 4))
+    snap_mod.clear_snapshot_cache()
+    snap_mod.load_snapshot(table, 1)  # the only cached base: v1
+    os.remove(snap_mod.commit_file(table, 3))
+    s = snap_mod.load_snapshot(table, 5)
+    snap_mod.clear_snapshot_cache()
+    cold = snap_mod.load_snapshot(table, 5)
+    assert s.version == cold.version == 5
+    assert set(s.files) == set(cold.files) == {"b.parquet", "f5.parquet"}
+    assert [r.path for r in s.tombstones] == [r.path for r in cold.tombstones]
+    assert (s.metadata, s.protocol) == (cold.metadata, cold.protocol)
 
 
 def test_recreated_table_at_same_path_misses_cache(table):

@@ -145,7 +145,7 @@ def test_time_travel(spark, tmp_table, sample_df):
 def test_timestamp_time_travel(spark, tmp_table, sample_df):
     write_deltalake(tmp_table, sample_df)
     t0 = DeltaTable(tmp_table)
-    ts0 = t0._snapshot.commit_timestamps[0]
+    ts0 = t0.history()[-1]["timestamp"]
     write_deltalake(tmp_table, sample_df, mode="append")
     t = DeltaTable(tmp_table)
     t.load_as_version(dt.datetime.fromtimestamp(ts0 / 1000, dt.timezone.utc))
@@ -447,10 +447,39 @@ def test_update_incremental_applies_tail_only(spark, tmp_table, sample_df, monke
     t.update_incremental()
     assert t.version() == 2
     assert t.count() == 15
-    assert set(t._snapshot.commit_timestamps) == {0, 1, 2}
     # no-op when already at latest
     t.update_incremental()
     assert t.version() == 2
+
+
+def test_update_incremental_across_compacted_range(spark, tmp_table, sample_df, monkeypatch):
+    """update_incremental replays a compacted range whole, as a cold
+    load does: with commit 2 gone, only the 1..3 compacted file can
+    carry the handle from v0 to v3, and it must land on the cold load's
+    files without a full reload."""
+    from delta_rs_spark import table as table_mod
+    from delta_rs_spark.log import snapshot as snap_mod
+
+    write_deltalake(tmp_table, sample_df)
+    t = DeltaTable(tmp_table)
+    write_deltalake(tmp_table, sample_df, mode="append")
+    DeltaTable(tmp_table).delete("id = '1'")
+    write_deltalake(tmp_table, sample_df, mode="append")
+    t.compact_logs(1, 3)
+    os.remove(snap_mod.commit_file(tmp_table, 2))
+
+    def _boom(*a, **k):
+        raise AssertionError("full reload used where incremental expected")
+
+    monkeypatch.setattr(table_mod, "load_snapshot", _boom)
+    monkeypatch.setattr(snap_mod, "load_snapshot", _boom)
+    t.update_incremental()
+    monkeypatch.undo()
+    snap_mod.clear_snapshot_cache()
+    cold = snap_mod.load_snapshot(tmp_table)
+    assert t.version() == cold.version == 3
+    assert set(t._snapshot.files) == set(cold.files)
+    assert t.count() == 13
 
 
 def test_update_incremental_protocol_gate(spark, tmp_table, sample_df):
@@ -480,7 +509,7 @@ def test_load_as_version_datetime_string_formats(spark, tmp_table, sample_df):
     naive strings); tz-aware strings and datetimes travel correctly."""
     write_deltalake(tmp_table, sample_df)
     t0 = DeltaTable(tmp_table)
-    ts0 = t0._snapshot.commit_timestamps[0]
+    ts0 = t0.history()[-1]["timestamp"]
     write_deltalake(tmp_table, sample_df, mode="append")
 
     t = DeltaTable(tmp_table)
