@@ -1,40 +1,48 @@
-"""DELETE — three-tier predicate delete.
+"""DELETE, and the one predicate-mutation core DELETE and UPDATE share.
 
-Mirrors the reference's tiers (reference:
-crates/core/src/operations/delete.rs): no predicate -> metadata-only
-remove-all (:439-455); exactly-evaluable partition-only predicate ->
-metadata-only file removal (:472-535); otherwise scan candidate files
-(stats pruning), locate the files that actually contain matches via the
-``_metadata.file_path`` hidden column, and rewrite only those keeping
-``NOT (predicate IS TRUE)`` rows (:583-596) — null-safe exactly like the
-reference. CDF rows are emitted when enabled (:598-617).
+``plan_mutation`` plans a mutation of the rows matching a predicate
+without committing it; an operator supplies only what a matched row
+becomes — DELETE: one ``delete`` change row and no data row; UPDATE
+(operators/update.py): an ``update_postimage`` row carrying the
+assignments plus an ``update_preimage`` row — and commits the returned
+actions from one site. The core runs the reference's tiers (reference:
+crates/core/src/operations/delete.rs, update.rs):
 
-Scale: phase 1 (util.find_touched_files, one Spark job) collects only
-the set of matched file paths and the matched-row count to the driver
-(O(files), never O(rows)); phase 2 reads only the touched files and
-hands their rows, matched ones tagged "delete", to cdc.write_mutation,
-which rewrites the survivors (and, with CDF, writes the deleted rows as
-change data) in one pass.
+* metadata-only removal (DELETE only): no predicate removes every file
+  (:439-455); an exactly-evaluable partition-only predicate removes the
+  matching files (:472-535);
+* copy-on-write: util.find_touched_files (one Spark job) collects the
+  files holding a match and the match count to the driver (O(files),
+  never O(rows)); one pass over just those files tags each row (NULL for
+  a copied row) through one per-row generator, and cdc.write_mutation
+  writes the data rows and, with change data feed, the change rows
+  (:583-617);
+* deletion vectors (``delta.enableDeletionVectors=true``): one
+  shuffle-free job collects the matched rows' (file, row_index) pairs,
+  ``dv_mark_rows`` marks them dead, and the same tagged rows of just the
+  matched set go to cdc.write_mutation; when a write follows, the
+  matched rows are pinned so the candidates are scanned once (write
+  amplification O(rows matched), beyond the reference, which rewrites
+  whole files).
+
+Every rewrite reads its rows with ``keep_row_ids``, so row-tracking ids
+survive it; a row the mutation changes takes the committing version.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
+from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import TransactionInfo
-from delta_rs_spark.operators.cdc import (
-    CHANGE_TYPE_COL,
-    cdf_enabled,
-    write_change_data,
-    write_mutation,
-)
+from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import find_touched_files, scanned_add_path
 from delta_rs_spark.plans.skipping import (
     col_types_from_schema_json,
@@ -60,81 +68,212 @@ def candidate_files(snapshot: snap_mod.Snapshot, predicate: str | None) -> list[
     )
 
 
-def scan_txn(snapshot: snap_mod.Snapshot, candidates: list[Add]) -> TransactionInfo:
+def scan_txn(
+    snapshot: snap_mod.Snapshot, candidates: list[Add], read_whole_table: bool = False
+) -> TransactionInfo:
     """The read set of a mutation that scanned ``candidates``: every
     candidate file, not only the rewritten ones, so a racing commit that
     removes a scanned file conflicts even when this mutation leaves the
-    file alone (or matches nothing at all)."""
+    file alone (or matches nothing at all). ``read_whole_table``: the
+    mutation's result depends on every row of the table, so under
+    WriteSerializable a racing append conflicts too. The isolation
+    level is the table's ``delta.isolationLevel``."""
     return TransactionInfo(
         blind_append=False,
         read_files={a.path for a in candidates},
+        read_whole_table=read_whole_table,
         isolation_level=snapshot.configuration.get(
             "delta.isolationLevel", "WriteSerializable"
         ),
     )
 
 
-def plan_predicate_removal(
+def _live_rows(adds: list[Add]) -> int:
+    """Rows the files hold that no deletion vector marks dead."""
+    return sum(
+        (a.num_records() or 0) - int((a.deletion_vector or {}).get("cardinality") or 0)
+        for a in adds
+    )
+
+
+def _removes(adds: list[Add], ts: int) -> list[Remove]:
+    return [
+        Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
+        for a in adds
+    ]
+
+
+@dataclass
+class Mutation:
+    """A planned predicate mutation: its actions, not yet committed."""
+
+    dv_tier: bool = False
+    removes: list[Remove] = field(default_factory=list)
+    # touched files re-added with their merged deletion vectors
+    dv_adds: list[Add] = field(default_factory=list)
+    data_adds: list[Add] = field(default_factory=list)
+    change_files: list[AddCDCFile] = field(default_factory=list)
+    n_matched: int = 0
+    # live rows in the rewritten files minus the matched ones
+    n_copied: int = 0
+
+    @property
+    def actions(self) -> list:
+        # removes FIRST: the DV tier tombstones and re-adds the SAME path
+        # in one commit, and snapshot replay is sequential — add-then-
+        # remove would drop the re-added file
+        return [*self.removes, *self.dv_adds, *self.data_adds, *self.change_files]
+
+
+# what a matched row becomes: the change rows it emits, in order. An
+# update's first row is its postimage, the one data row among them.
+_DELETED = ("delete",)
+_UPDATED = ("update_postimage", "update_preimage")
+
+
+def plan_mutation(
     spark: SparkSession,
     snapshot: snap_mod.Snapshot,
-    table_path: str,
-    predicate: str,
+    predicate: str | None,
     candidates: list[Add],
-) -> tuple[list[Remove], list[Add], int]:
-    """Shared by DELETE and replaceWhere: compute (removes, rewrite adds,
-    deleted row count) for removing all rows matching predicate from
-    its ``candidate_files``."""
+    assign: Callable[[DataFrame, Column], DataFrame] | None = None,
+    rules: Sequence = (),
+    deletion_vectors: bool | None = None,
+) -> Mutation:
+    """Plan the mutation of the rows of ``candidates`` (the
+    ``candidate_files`` of ``predicate``; None matches every row).
+
+    ``assign`` None deletes the matched rows. Otherwise it updates
+    them: ``assign(frame, post)`` returns ``frame`` with the new values
+    set on the rows where ``post`` holds (the postimages), every column
+    kept in place. ``rules`` (writer.write_rules) gate the written data
+    rows. ``deletion_vectors`` picks the soft tier; None follows the
+    table's ``delta.enableDeletionVectors``."""
     from delta_rs_spark.table import read_snapshot_df
 
-    ts = now_ms()
-    col_types = col_types_from_schema_json(json.loads(snapshot.schema_string))
-
-    # tier 2: exact partition-only predicate -> metadata-only removal
-    if partition_only_predicate(predicate, snapshot.partition_columns, col_types):
-        removes = [
-            Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in candidates
-        ]
-        # live rows only: a DV'd file's deleted rows are already gone
-        n_deleted = sum(
-            (a.num_records() or 0)
-            - int((a.deletion_vector or {}).get("cardinality") or 0)
-            for a in candidates
+    table_path, ts = snapshot.table_path, now_ms()
+    if assign is None and (
+        not predicate
+        or partition_only_predicate(
+            predicate,
+            snapshot.partition_columns,
+            col_types_from_schema_json(json.loads(snapshot.schema_string)),
         )
-        return removes, [], n_deleted
-
-    # tier 3: candidate scan -> touched files -> rewrite
-    touched, n_deleted = find_touched_files(
-        spark, snapshot, table_path, candidates, predicate
-    )
-    if not touched:
-        return [], [], 0
-    touched_adds = [a for a in candidates if a.path in touched]
-
-    from delta_rs_spark.plans import row_tracking as rt
-
-    if rt.enabled(snapshot.configuration):
-        # survivors are UNMODIFIED: materialize both id and commit
-        # version so the rewrite cannot change either
-        touched_df = rt.read_with_materialized(
-            spark, snapshot, table_path, touched_adds
+    ):
+        return Mutation(removes=_removes(candidates, ts), n_matched=_live_rows(candidates))
+    if deletion_vectors is None:
+        deletion_vectors = dv_write_enabled(snapshot)
+    if not candidates:
+        return Mutation(dv_tier=deletion_vectors)
+    cond = F.expr(predicate) if predicate else F.lit(True)
+    if not deletion_vectors:
+        touched, n_matched = find_touched_files(
+            spark, snapshot, table_path, candidates, predicate
         )
-    else:
-        touched_df = read_snapshot_df(spark, snapshot, table_path, files=touched_adds)
-    # matched rows are tagged "delete" (change data only), survivors
-    # keep a NULL tag (data files only)
-    tagged = touched_df.withColumn(
-        CHANGE_TYPE_COL,
-        F.when(F.expr(predicate), F.lit("delete")).otherwise(
-            F.lit(None).cast("string")
-        ),
-    )
-    data_adds, cdc_actions = write_mutation(tagged, snapshot)
-    new_adds = data_adds + cdc_actions  # type: ignore[operator]
+        touched_adds = [a for a in candidates if a.path in touched]
+        if not touched_adds:
+            return Mutation()
+        frame = read_snapshot_df(
+            spark, snapshot, table_path, files=touched_adds, keep_row_ids=True
+        )
+        data_adds, change_files = _write_rows(frame, cond, snapshot, assign, rules)
+        return Mutation(
+            removes=_removes(touched_adds, ts),
+            data_adds=data_adds,
+            change_files=change_files,
+            n_matched=n_matched,
+            n_copied=_live_rows(touched_adds) - n_matched,
+        )
 
-    removes = [
-        Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in touched_adds
-    ]
-    return removes, new_adds, n_deleted
+    # read_snapshot_df applies existing DVs, so already-deleted rows
+    # cannot be re-matched; only updated rows are written back to data
+    # files, so only they need their row ids
+    matched = read_snapshot_df(
+        spark,
+        snapshot,
+        table_path,
+        files=candidates,
+        file_path_col="__delta_rs_fp",
+        row_index_col="__delta_rs_ri",
+        keep_row_ids=assign is not None,
+    ).filter(cond)
+    writes = assign is not None or cdf_enabled(snapshot)
+    if writes:
+        # the collect below and the write both read the matched rows:
+        # pinned, the scan and filter run once (released in the finally;
+        # deterministic, so recompute-on-eviction is safe)
+        matched = matched.persist()
+    try:
+        # one shuffle-free job: the (file, row index) pairs come back as
+        # Arrow and are grouped by file on the driver
+        pairs = (
+            matched.select("__delta_rs_fp", "__delta_rs_ri")
+            .toArrow()
+            .group_by("__delta_rs_fp")
+            .aggregate([("__delta_rs_ri", "list")])
+        )
+        if not pairs.num_rows:
+            return Mutation(dv_tier=True)
+        by_rel = group_rows_by_file(
+            zip(pairs["__delta_rs_fp"].to_pylist(), pairs["__delta_rs_ri_list"].to_pylist()),
+            table_path,
+            candidates,
+        )
+        removes, dv_adds, n_matched = dv_mark_rows(table_path, by_rel, candidates, ts)
+        data_adds, change_files = (
+            _write_rows(
+                matched.drop("__delta_rs_fp", "__delta_rs_ri"),
+                F.lit(True),
+                snapshot,
+                assign,
+                rules,
+            )
+            if writes
+            else ([], [])
+        )
+    finally:
+        if writes:
+            matched.unpersist(False)
+    return Mutation(
+        dv_tier=True,
+        removes=removes,
+        dv_adds=dv_adds,
+        data_adds=data_adds,
+        change_files=change_files,
+        n_matched=n_matched,
+    )
+
+
+def _write_rows(frame: DataFrame, hit: Column, snapshot, assign, rules):
+    """Write ``frame``'s rows through cdc.write_mutation: a row where
+    ``hit`` holds becomes its change rows (see ``_DELETED`` /
+    ``_UPDATED``), any other row is copied with a NULL tag. One per-row
+    generator, so the frame is read once."""
+    from delta_rs_spark.plans.row_tracking import materialized_names
+    from delta_rs_spark.writer import gate_rules
+
+    tags = _DELETED if assign is None else _UPDATED
+    ct = F.col(CHANGE_TYPE_COL)
+    out = frame.select(
+        "*",
+        F.explode(
+            F.when(hit, F.array(*[F.lit(t) for t in tags])).otherwise(
+                F.array(F.lit(None).cast("string"))
+            )
+        ).alias(CHANGE_TYPE_COL),
+    )
+    if assign is not None:
+        out = assign(out, ct.eqNullSafe(F.lit(_UPDATED[0])))
+    mat_ver = materialized_names(snapshot.configuration)[1]
+    if mat_ver in out.columns:
+        # a changed row takes the committing version: a NULL
+        # materialized version falls back to the new file's
+        # defaultRowCommitVersion (its id stays materialized)
+        out = out.withColumn(
+            mat_ver, F.when(ct.isNull(), F.col(mat_ver)).otherwise(F.lit(None).cast("long"))
+        )
+    out, check = gate_rules(out, rules)
+    return write_mutation(out, snapshot, validate=check)
 
 
 # inline DVs above this serialized size go to a deletion_vector_*.bin
@@ -150,14 +289,14 @@ def dv_write_enabled(snapshot: snap_mod.Snapshot) -> bool:
 
 
 def group_rows_by_file(
-    matched: list, table_path: str, candidates: list[Add]
+    matched, table_path: str, candidates: list[Add]
 ) -> dict[str, list[int]]:
-    """(fp, [row_index]) collect() rows -> {Add.path: row indexes}."""
+    """(scanned file path, [row_index]) pairs -> {Add.path: row indexes}."""
     known = {a.path for a in candidates}
     by_rel: dict[str, list[int]] = {}
-    for r in matched:
-        rel = scanned_add_path(r["fp"], table_path, known)
-        by_rel.setdefault(rel, []).extend(int(i) for i in r["ris"])
+    for fp, ris in matched:
+        rel = scanned_add_path(fp, table_path, known)
+        by_rel.setdefault(rel, []).extend(int(i) for i in ris)
     return by_rel
 
 
@@ -227,60 +366,6 @@ def dv_mark_rows(
     return removes, new_adds, n_marked
 
 
-def plan_dv_delete(
-    spark: SparkSession,
-    snapshot: snap_mod.Snapshot,
-    table_path: str,
-    predicate: str,
-    candidates: list[Add],
-) -> tuple[list[Remove], list[Add], int]:
-    """Soft-delete tier for DV-enabled tables: instead of rewriting the
-    surviving rows of every touched file, mark the matched rows in a
-    deletion vector and re-add the file with the merged DV (Delta
-    PROTOCOL.md "Deletion Vectors"; the remove tombstones the previous
-    (path, DV) pairing and carries the old descriptor). Full-file
-    matches still become plain removes — a fully-dead file needs no DV.
-
-    Scale: the scan collects only (file, row_index) pairs for NEWLY
-    matched rows — O(rows deleted this commit), the quantity DVs exist
-    to keep small (bulk deletes should rewrite; that path stays the
-    default for tables without the feature). Merging with an existing
-    DV unions row-index sets driver-side for the touched files only.
-    """
-    from delta_rs_spark.table import read_snapshot_df
-
-    ts = now_ms()
-    # read_snapshot_df applies existing DVs, so already-deleted rows
-    # cannot be re-matched (their indexes are anti-joined out)
-    df = read_snapshot_df(
-        spark,
-        snapshot,
-        table_path,
-        files=candidates,
-        file_path_col="__delta_rs_fp",
-        row_index_col="__delta_rs_ri",
-    )
-    matched = (
-        df.filter(F.expr(predicate))
-        .groupBy(F.col("__delta_rs_fp").alias("fp"))
-        .agg(F.collect_list("__delta_rs_ri").alias("ris"))
-        .collect()
-    )
-    if not matched:
-        return [], [], 0
-
-    by_rel = group_rows_by_file(matched, table_path, candidates)
-    removes, new_adds, n_deleted = dv_mark_rows(table_path, by_rel, candidates, ts)
-
-    if cdf_enabled(snapshot):
-        # change rows only: there is no data file to write
-        deleted_df = df.filter(F.expr(predicate)).drop(
-            "__delta_rs_fp", "__delta_rs_ri"
-        ).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-        new_adds = new_adds + write_change_data(deleted_df, snapshot)  # type: ignore[operator]
-    return removes, new_adds, n_deleted
-
-
 def delete(
     spark: SparkSession,
     table_path: str,
@@ -292,70 +377,22 @@ def delete(
     from delta_rs_spark.plans.column_mapping import ensure_writable
 
     ensure_writable(snapshot)
-    ts = now_ms()
-
-    if not predicate:
-        # tier 1: metadata-only remove-all (reference: delete.rs:439-455)
-        adds = list(snapshot.files.values())
-        removes = [Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector) for a in adds]
-        n_deleted = snapshot.num_records()
-        metrics = {
-            "num_removed_files": len(removes),
-            "num_added_files": 0,
-            "num_deleted_rows": n_deleted,
-            "num_copied_rows": 0,
-        }
-        op = CommitInfo("DELETE", {"predicate": predicate or ""}, operation_metrics=metrics)
-        commit_mod.commit(
-            table_path,
-            removes,
-            op,
-            snapshot.version,
-            TransactionInfo(
-                blind_append=False,
-                read_whole_table=True,
-            ),
-            commit_properties=commit_properties,
-            post_commit=post_commithook_properties,
-        )
-        return metrics
-
-    col_types = col_types_from_schema_json(json.loads(snapshot.schema_string))
-    use_dv = dv_write_enabled(snapshot) and not partition_only_predicate(
-        predicate, snapshot.partition_columns, col_types
-    )
     candidates = candidate_files(snapshot, predicate)
-    plan = plan_dv_delete if use_dv else plan_predicate_removal
-    removes, new_adds, n_deleted = plan(
-        spark, snapshot, table_path, predicate, candidates
-    )
-    dv_adds = sum(
-        1 for a in new_adds if isinstance(a, Add) and a.deletion_vector
-    )
-    n_copied = (
-        0
-        if use_dv
-        else sum(a.num_records() or 0 for a in new_adds if isinstance(a, Add))
-    )
+    m = plan_mutation(spark, snapshot, predicate, candidates)
     metrics = {
-        "num_removed_files": len(removes),
-        "num_added_files": sum(1 for a in new_adds if isinstance(a, Add)),
-        "num_deleted_rows": n_deleted,
-        "num_copied_rows": n_copied,
+        "num_removed_files": len(m.removes),
+        "num_added_files": len(m.dv_adds) + len(m.data_adds),
+        "num_deleted_rows": m.n_matched,
+        "num_copied_rows": m.n_copied,
     }
-    if use_dv:
-        metrics["num_deletion_vectors_added"] = dv_adds
-    op = CommitInfo("DELETE", {"predicate": predicate}, operation_metrics=metrics)
-    # removes FIRST: a DV update tombstones and re-adds the SAME path in
-    # one commit, and snapshot replay is sequential — add-then-remove
-    # would drop the re-added file (rewrite deletes have disjoint paths,
-    # so the order is free there)
+    if m.dv_tier:
+        metrics["num_deletion_vectors_added"] = len(m.dv_adds)
     commit_mod.commit(
         table_path,
-        list(removes) + list(new_adds),
-        op,
+        m.actions,
+        CommitInfo("DELETE", {"predicate": predicate or ""}, operation_metrics=metrics),
         snapshot.version,
-        scan_txn(snapshot, candidates),
+        scan_txn(snapshot, candidates, read_whole_table=not predicate),
         commit_properties=commit_properties,
         post_commit=post_commithook_properties,
     )

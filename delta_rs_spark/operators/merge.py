@@ -85,44 +85,6 @@ def _sql_literal(v: Any) -> str:
     return str(v)
 
 
-def _recompute_generated(df: DataFrame, schema, cols: list[str], coded_clauses) -> DataFrame:
-    """Compute generated columns on rows an update or insert clause
-    produced, unless that clause assigned the column explicitly —
-    evaluated over the post-clause projection so generation expressions
-    see new values (reference: write/generated_columns.rs applied to
-    merge)."""
-    from delta_rs_spark.writer import GENERATION_KEY
-
-    out = []
-    changed = False
-    for c in cols:
-        gen_expr = (schema[c].metadata or {}).get(GENERATION_KEY)
-        if not gen_expr:
-            out.append(F.col(c))
-            continue
-        recompute_codes = [
-            code
-            for code, cl in coded_clauses
-            if cl.kind in ("update", "insert") and c not in (cl.updates or {})
-        ]
-        if not recompute_codes:
-            out.append(F.col(c))
-            continue
-        changed = True
-        out.append(
-            F.when(F.col(_ACTION).isin(recompute_codes), F.expr(gen_expr))
-            .otherwise(F.col(c))
-            .cast(schema[c].dataType)
-            .alias(c)
-        )
-    if not changed:
-        return df
-    extras = [
-        F.col(f"`{c}`") for c in df.columns if c not in cols and c != _ACTION
-    ]  # e.g. row tracking's materialized columns — pass through
-    return df.select(*out, *extras, F.col(_ACTION))
-
-
 @dataclass
 class _Clause:
     kind: str  # update | delete | insert
@@ -152,14 +114,6 @@ class TableMerger:
     matched: list[_Clause] = field(default_factory=list)
     not_matched: list[_Clause] = field(default_factory=list)
     not_matched_by_source: list[_Clause] = field(default_factory=list)
-
-    def _out_cast(self, expr, target_field):
-        """Assignment result -> target column type. Safe mode + nullable
-        target: failed casts become NULL (try_cast); everything else is
-        the strict ANSI cast that errors on malformed values."""
-        if self.safe_cast and target_field.nullable:
-            return expr.try_cast(target_field.dataType)
-        return expr.cast(target_field.dataType)
 
     # -- clause builders --------------------------------------------------
     def when_matched_update(self, updates: dict[str, str], predicate: str | None = None):
@@ -579,7 +533,13 @@ class TableMerger:
 
     def _execute(self, source_df: DataFrame, pins: list[DataFrame]) -> dict[str, Any]:
         from delta_rs_spark.table import read_snapshot_df
-        from delta_rs_spark.writer import gate_rules, observed_metrics, write_rules
+        from delta_rs_spark.writer import (
+            assignment_cast,
+            gate_rules,
+            observed_metrics,
+            recompute_generated,
+            write_rules,
+        )
 
         spark = self.dt.spark
         table_path = self.dt.table_uri
@@ -775,33 +735,13 @@ class TableMerger:
                     table_path,
                     files=target_adds,
                     file_path_col=_FP,
-                    row_index_col="__delta_rs_ri" if (dv_mode or rt_on) else None,
-                    extra_physical_cols=hidden or None,
-                )
-                if rt_on:
-                    # materialize every target row's CURRENT id/version;
-                    # the projection below keeps the id for updated rows
-                    # and nulls their version (reader falls back to this
+                    row_index_col="__delta_rs_ri" if dv_mode else None,
+                    # every target row's CURRENT id/version; the
+                    # projection below keeps the id for updated rows and
+                    # nulls their version (reader falls back to this
                     # commit's defaultRowCommitVersion)
-                    _fmap = _rt.file_map_df(spark, target_adds, table_path)
-                    t_df = (
-                        t_df.join(
-                            F.broadcast(_fmap),
-                            F.col(_FP) == F.col("__rt_fp"),
-                            "left",
-                        )
-                        .withColumn(
-                            _mat_id,
-                            F.coalesce(
-                                F.col(_mat_id),
-                                F.col("__rt_base") + F.col("__delta_rs_ri"),
-                            ),
-                        )
-                        .withColumn(
-                            _mat_ver, F.coalesce(F.col(_mat_ver), F.col("__rt_ver"))
-                        )
-                        .drop("__rt_fp", "__rt_base", "__rt_ver")
-                    )
+                    keep_row_ids=True,
+                )
                 for f in schema.fields:  # evolved columns read as NULL from old files
                     if f.name not in t_df.columns:
                         t_df = t_df.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -935,8 +875,10 @@ class TableMerger:
                         # cast, which would bypass the safe (try_cast) mode
                         col_expr = F.when(
                             F.col(_ACTION) == code_i,
-                            self._out_cast(
-                                F.expr(upd[c]) if c in upd else F.lit(None), schema[c]
+                            assignment_cast(
+                                F.expr(upd[c]) if c in upd else F.lit(None),
+                                schema[c],
+                                self.safe_cast,
                             ),
                         ).otherwise(col_expr)
                 proj.append(col_expr.cast(schema[c].dataType).alias(c))
@@ -952,7 +894,16 @@ class TableMerger:
                 for i, c in enumerate(cols)
             ] if cdf_on else []
             out = frame.select(*proj, *pre, F.col(_ACTION))
-            out = _recompute_generated(out, schema, cols, coded_clauses)
+
+            def regenerated_by(c: str) -> Column | None:
+                codes = [
+                    code
+                    for code, cl in coded_clauses
+                    if cl.kind in ("update", "insert") and c not in (cl.updates or {})
+                ]
+                return F.col(_ACTION).isin(codes) if codes else None
+
+            out = recompute_generated(out, schema, regenerated_by)
             for c in id_plan:
                 gen_codes = [
                     code
@@ -1117,14 +1068,16 @@ class TableMerger:
         # was read (ADVICE r01: a concurrent DELETE of a
         # scanned-but-not-rewritten file must raise
         # ConcurrentDeleteReadError)
-        txn = scan_txn(snapshot, candidates)
-        txn.read_whole_table = early is None or bool(self.not_matched_by_source)
         commit_mod.commit(
             table_path,
             actions,
             op,
             snapshot.version,
-            txn,
+            scan_txn(
+                snapshot,
+                candidates,
+                read_whole_table=early is None or bool(self.not_matched_by_source),
+            ),
             commit_properties=self.commit_properties,
             post_commit=self.post_commithook_properties,
         )

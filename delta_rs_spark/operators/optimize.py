@@ -100,14 +100,10 @@ class TableOptimizer:
             tb = sum(a.size for a in files)
             tr = sum(a.num_records() or 0 for a in files)
             rows_per_file = max(1, int(tr * target / tb)) if tb and tr else None
-            from delta_rs_spark.plans import row_tracking as _rt
-
-            if _rt.enabled(snapshot.configuration):
-                # pure rearrangement: materialize row ids AND commit
-                # versions so compaction changes neither
-                df = _rt.read_with_materialized(spark, snapshot, table_path, files)
-            else:
-                df = read_snapshot_df(spark, snapshot, table_path, files=files)
+            # pure rearrangement: row ids AND commit versions stay
+            df = read_snapshot_df(
+                spark, snapshot, table_path, files=files, keep_row_ids=True
+            )
             # maxRecordsPerFile only SPLITS task outputs — it never merges
             # them, and an unpartitioned write has one task per input
             # file, so without this coalesce "compaction" reproduced the
@@ -250,12 +246,9 @@ class TableOptimizer:
         if not targets:
             return metrics
         # read through the scan: DVs applied, dead rows do not survive
-        from delta_rs_spark.plans import row_tracking as _rt
-
-        if _rt.enabled(snapshot.configuration):
-            df = _rt.read_with_materialized(spark, snapshot, table_path, targets)
-        else:
-            df = read_snapshot_df(spark, snapshot, table_path, files=targets)
+        df = read_snapshot_df(
+            spark, snapshot, table_path, files=targets, keep_row_ids=True
+        )
         new_adds = write_files(
             df, table_path, part_cols, snapshot.configuration, snapshot.schema_string
         )
@@ -388,13 +381,8 @@ class TableOptimizer:
                 "numFilesSkippedAlreadyClustered": skipped_clustered,
             }
 
-        from delta_rs_spark.plans import row_tracking as _rt
-
-        if _rt.enabled(snapshot.configuration):
-            # Z-ORDER is a rearrangement: ids and versions both survive
-            df = _rt.read_with_materialized(spark, snapshot, table_path, adds)
-        else:
-            df = read_snapshot_df(spark, snapshot, table_path, files=adds)
+        # Z-ORDER is a rearrangement: ids and versions both survive
+        df = read_snapshot_df(spark, snapshot, table_path, files=adds, keep_row_ids=True)
         schema = df.schema
         bits = 8
         bucket_cols = []

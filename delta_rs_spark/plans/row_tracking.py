@@ -16,6 +16,15 @@ reader computes
     row_id             = coalesce(materialized_id,  baseRowId + row_index)
     row_commit_version = coalesce(materialized_ver, defaultRowCommitVersion)
 
+That computation is one scan: ``read_snapshot_df(..., keep_row_ids=True)``
+fills both materialized columns (``fill_row_ids``, the one join against
+the files' baseRowId map). Every rewrite (DELETE, UPDATE, MERGE,
+OPTIMIZE, Z-ORDER, REORG) reads its rows through it and writes them
+back, so ids survive; a row the rewrite changes nulls its materialized
+version, which then falls back to the rewriting commit's
+defaultRowCommitVersion. ``DeltaTable.to_df_with_row_ids`` is the same
+scan with the two columns renamed.
+
 Scale notes: allocation is O(adds) arithmetic on numRecords stats in
 the commit path (no data IO, no snapshot rescan on the happy path — the
 caller's snapshot supplies the watermark; OCC retries advance it from
@@ -164,73 +173,38 @@ def advance_watermark_from(winning: list, watermark: int) -> int:
     return wm
 
 
-def file_map_df(spark, adds: list["Add"], table_path: str) -> DataFrame:
-    """(absolute path, baseRowId, defaultRowCommitVersion) per add —
-    metadata-sized, broadcast into the scan join."""
-    from delta_rs_spark.operators.util import resolve_add_path
-
-    rows = [
-        (
-            resolve_add_path(table_path, a.path),
-            a.base_row_id,
-            a.default_row_commit_version,
-        )
-        for a in adds
-    ]
-    return spark.createDataFrame(
-        rows, "__rt_fp string, __rt_base long, __rt_ver long"
-    )
-
-
-def with_row_ids(
+def fill_row_ids(
     df: DataFrame,
     spark,
     snapshot: "Snapshot",
     table_path: str,
-    adds: list["Add"] | None = None,
-    fp_col: str = "__rt_file",
-    ri_col: str = "__rt_index",
-    id_col: str = ROW_ID_COL,
-    ver_col: str = ROW_VER_COL,
+    adds: list["Add"],
+    fp_col: str,
+    ri_col: str,
 ) -> DataFrame:
-    """Attach ``row_id`` / ``row_commit_version`` to a scan produced by
-    ``read_snapshot_df(..., file_path_col=fp_col, row_index_col=ri_col,
-    extra_physical_cols=materialized_names(...))``. Drops the plumbing
-    columns."""
-    mat_id, mat_ver = materialized_names(snapshot.configuration)
-    files = adds if adds is not None else list(snapshot.files.values())
-    fmap = file_map_df(spark, files, table_path)
-    out = df.join(F.broadcast(fmap), F.col(fp_col) == F.col("__rt_fp"), "left")
-    out = out.withColumn(
-        id_col, F.coalesce(F.col(mat_id), F.col("__rt_base") + F.col(ri_col))
-    ).withColumn(ver_col, F.coalesce(F.col(mat_ver), F.col("__rt_ver")))
-    return out.drop("__rt_fp", "__rt_base", "__rt_ver", fp_col, ri_col, mat_id, mat_ver)
-
-
-def read_with_materialized(spark, snapshot: "Snapshot", table_path: str, files: list):
-    """Scan ``files`` with the two materialized columns POPULATED from
-    each row's CURRENT id/version (existing materialization wins, else
-    baseRowId + row_index / defaultRowCommitVersion). This is the frame
-    a rewrite filters or modifies and hands to write_files — the hidden
-    columns ride into the new parquet, so ids survive the rewrite.
-    Rows the rewrite MODIFIES should null their materialized version
-    (the reader then falls back to the new file's
-    defaultRowCommitVersion — exactly the rewriting commit)."""
-    from delta_rs_spark.table import read_snapshot_df
+    """``df``, a scan of ``adds`` carrying the two materialized columns,
+    each row's file path ``fp_col`` and row index ``ri_col``, with both
+    materialized columns filled from the row's CURRENT id/version: an
+    existing materialization wins, else baseRowId + row_index /
+    defaultRowCommitVersion, from a metadata-sized (path, baseRowId,
+    defaultRowCommitVersion) map broadcast into the scan. Only
+    ``read_snapshot_df(..., keep_row_ids=True)`` calls this."""
+    from delta_rs_spark.operators.util import resolve_add_path
 
     mat_id, mat_ver = materialized_names(snapshot.configuration)
-    df = read_snapshot_df(
-        spark,
-        snapshot,
-        table_path,
-        files=files,
-        file_path_col="__rt_file",
-        row_index_col="__rt_index",
-        extra_physical_cols=[mat_id, mat_ver],
+    fmap = spark.createDataFrame(
+        [
+            (
+                resolve_add_path(table_path, a.path),
+                a.base_row_id,
+                a.default_row_commit_version,
+            )
+            for a in adds
+        ],
+        "__rt_fp string, __rt_base long, __rt_ver long",
     )
-    fmap = file_map_df(spark, files, table_path)
-    df = df.join(F.broadcast(fmap), F.col("__rt_file") == F.col("__rt_fp"), "left")
+    df = df.join(F.broadcast(fmap), F.col(fp_col) == F.col("__rt_fp"), "left")
     df = df.withColumn(
-        mat_id, F.coalesce(F.col(mat_id), F.col("__rt_base") + F.col("__rt_index"))
+        mat_id, F.coalesce(F.col(mat_id), F.col("__rt_base") + F.col(ri_col))
     ).withColumn(mat_ver, F.coalesce(F.col(mat_ver), F.col("__rt_ver")))
-    return df.drop("__rt_fp", "__rt_base", "__rt_ver", "__rt_file", "__rt_index")
+    return df.drop("__rt_fp", "__rt_base", "__rt_ver")

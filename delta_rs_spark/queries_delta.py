@@ -709,9 +709,9 @@ def delta_dv_write_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DV-PRODUCING mutations (soft delete + soft update): on a
     delta.enableDeletionVectors=true table, two predicate DELETEs
     emit/merge deletion vectors and an UPDATE DV-marks the matched rows
-    while appending only their new versions (operators/delete.py
-    plan_dv_delete, operators/update.py _dv_update; Delta PROTOCOL.md
-    "Deletion Vectors"). The scan applies the merged DVs through the
+    while appending only their new versions (the deletion-vector tier of
+    operators/delete.py plan_mutation, which DELETE and UPDATE share;
+    Delta PROTOCOL.md "Deletion Vectors"). The scan applies the merged DVs through the
     row_index anti-join — witnessing encode, descriptor commit,
     (path, DV) tombstoning, and DV-aware read end-to-end. A guard
     asserts the delete phase rewrote nothing."""

@@ -157,7 +157,7 @@ def read_snapshot_df(
     files: list[Add] | None = None,
     file_path_col: str | None = None,
     row_index_col: str | None = None,
-    extra_physical_cols: list[str] | None = None,
+    keep_row_ids: bool = False,
 ) -> DataFrame:
     """Build the scan DataFrame for a snapshot (with file skipping).
 
@@ -166,8 +166,15 @@ def read_snapshot_df(
     (file, row_index) tombstone set — the Spark analogue of the
     reference's per-batch selection vectors
     (crates/core/src/delta_datafusion/table_provider/next/scan/exec.rs:63-108).
+
+    ``keep_row_ids``: on a row-tracking table the frame also carries the
+    two materialized row-tracking columns, filled with each row's
+    current id and commit version (plans.row_tracking.fill_row_ids) —
+    the frame a rewrite writes back so ids survive it. A no-op on other
+    tables.
     """
     from delta_rs_spark.plans import column_mapping as cmap
+    from delta_rs_spark.plans import row_tracking as rt
 
     schema = T.StructType.fromJson(json.loads(snapshot.schema_string))
     mapped = cmap.mapping_mode(snapshot.configuration) in ("name", "id")
@@ -184,14 +191,19 @@ def read_snapshot_df(
     plain = [a for a in adds if not a.deletion_vector]
     dv_adds = [a for a in adds if a.deletion_vector]
     read_schema = cmap.physical_schema(schema) if mapped else schema
-    if extra_physical_cols:
-        # hidden physical LONG columns (row tracking materialization):
-        # requested explicitly, nullable — parquet files without them
-        # yield NULL (Spark schema-on-read fills missing columns)
+    hidden: list[str] = []
+    requested = (file_path_col, row_index_col)
+    if keep_row_ids and rt.enabled(snapshot.configuration):
+        # hidden physical LONG columns, nullable — parquet files without
+        # them yield NULL (Spark schema-on-read fills missing columns);
+        # filling them needs each row's file and index
+        hidden = list(rt.materialized_names(snapshot.configuration))
         read_schema = T.StructType(
             list(read_schema.fields)
-            + [T.StructField(c, T.LongType(), True) for c in extra_physical_cols]
+            + [T.StructField(c, T.LongType(), True) for c in hidden]
         )
+        file_path_col = file_path_col or "__rt_file"
+        row_index_col = row_index_col or "__rt_index"
 
     def to_logical(part_df: DataFrame) -> DataFrame:
         """Physical -> logical names, preserving bound fp/ri columns."""
@@ -199,7 +211,7 @@ def read_snapshot_df(
             return part_df
         extra = [
             c
-            for c in (file_path_col, row_index_col, *(extra_physical_cols or []))
+            for c in (file_path_col, row_index_col, *hidden)
             if c and c in part_df.columns
         ] or None
         return cmap.rename_to_logical(part_df, schema, extra_cols=extra)
@@ -210,7 +222,7 @@ def read_snapshot_df(
             df = df.withColumn(file_path_col, F.lit(None).cast("string"))
         if row_index_col:
             df = df.withColumn(row_index_col, F.lit(None).cast("long"))
-        for c in extra_physical_cols or []:
+        for c in hidden:
             df = df.withColumn(c, F.lit(None).cast("long"))
     else:
         part_phys = [
@@ -323,6 +335,12 @@ def read_snapshot_df(
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        if hidden:
+            df = rt.fill_row_ids(
+                df, spark, snapshot, table_path, adds, file_path_col, row_index_col
+            )
+    if hidden:
+        df = df.drop(*[c for c in (file_path_col, row_index_col) if c not in requested])
     if predicate:
         df = df.filter(F.expr(predicate))
     if columns:
@@ -740,16 +758,11 @@ class DeltaTable:
             )
         mat_id, mat_ver = rt.materialized_names(self._snapshot.configuration)
         df = read_snapshot_df(
-            self.spark,
-            self._snapshot,
-            self.table_uri,
-            predicate,
-            None,
-            file_path_col="__rt_file",
-            row_index_col="__rt_index",
-            extra_physical_cols=[mat_id, mat_ver],
+            self.spark, self._snapshot, self.table_uri, predicate, keep_row_ids=True
         )
-        df = rt.with_row_ids(df, self.spark, self._snapshot, self.table_uri)
+        df = df.withColumnRenamed(mat_id, rt.ROW_ID_COL).withColumnRenamed(
+            mat_ver, rt.ROW_VER_COL
+        )
         if columns:
             df = df.select(*columns, rt.ROW_ID_COL, rt.ROW_VER_COL)
         return df

@@ -429,6 +429,42 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def assignment_cast(expr: Column, field: T.StructField, safe: bool) -> Column:
+    """An UPDATE or MERGE assignment's result -> its target column's
+    type. Safe mode (the reference's error_on_type_mismatch=False) on a
+    nullable target: try_cast, so a failed cast becomes NULL; otherwise
+    the strict ANSI cast that errors on malformed values."""
+    if safe and field.nullable:
+        return expr.try_cast(field.dataType)
+    return expr.cast(field.dataType)
+
+
+def recompute_generated(
+    df: DataFrame, schema: T.StructType, recompute_when
+) -> DataFrame:
+    """Recompute each generated column ``c`` of ``schema`` on the rows
+    where ``recompute_when(c)`` holds (a Column, or None for never) —
+    the rows an UPDATE or MERGE clause produced without assigning ``c``
+    itself. Evaluated over the post-assignment projection, so the
+    generation expressions see the new values (reference:
+    write/generated_columns.rs). Every other column of ``df`` passes
+    through in place."""
+    conds = {}
+    for f in schema.fields:
+        gen_expr = (f.metadata or {}).get(GENERATION_KEY)
+        cond = recompute_when(f.name) if gen_expr else None
+        if cond is not None:
+            conds[f.name] = F.when(cond, F.expr(gen_expr)).otherwise(F.col(f.name))
+    if not conds:
+        return df
+    return df.select(
+        *[
+            conds[c].cast(schema[c].dataType).alias(c) if c in conds else F.col(f"`{c}`")
+            for c in df.columns
+        ]
+    )
+
+
 def _fails(sql: str) -> Column:
     """A row fails a SQL rule unless the rule is TRUE (NULL fails)."""
     return ~F.expr(sql).eqNullSafe(F.lit(True))
@@ -822,18 +858,19 @@ def write_deltalake(
             # transactional replaceWhere (reference: write/mod.rs:228
             # with_replace_where): the rule gate checked every incoming
             # row against the predicate; existing matching rows go
-            from delta_rs_spark.operators.delete import (
-                candidate_files,
-                plan_predicate_removal,
-            )
+            # (rewritten, never soft-deleted: the new rows replace them)
+            from delta_rs_spark.operators.delete import candidate_files, plan_mutation
 
-            removes, extra_adds, n_removed = plan_predicate_removal(
-                spark, snapshot, table_path, predicate, candidate_files(snapshot, predicate)
+            removed = plan_mutation(
+                spark,
+                snapshot,
+                predicate,
+                candidate_files(snapshot, predicate),
+                deletion_vectors=False,
             )
-            actions.extend(extra_adds)
-            actions.extend(removes)
-            metrics["numRemovedFiles"] = len(removes)
-            metrics["numDeletedRows"] = n_removed
+            actions.extend(removed.actions)
+            metrics["numRemovedFiles"] = len(removed.removes)
+            metrics["numDeletedRows"] = removed.n_matched
         else:
             ts = now_ms()
             for add in snapshot.files.values():

@@ -609,16 +609,15 @@ def test_dv_delete_racing_writers_conflict(spark, tmp_path):
         ConcurrentDeleteDeleteError,
         TransactionInfo,
     )
-    from delta_rs_spark.operators.delete import plan_dv_delete
+    from delta_rs_spark.operators.delete import plan_mutation
 
     table = str(tmp_path / "dvrace")
     t = _make_dv_table(spark, table, n_files=1)
     snap0 = snap_mod.load_snapshot(table)
     candidates = list(snap0.files.values())
     # loser plans against snap0 BEFORE the winner commits
-    removes, adds, _ = plan_dv_delete(
-        spark, snap0, table, "id >= 5 AND id < 8", candidates
-    )
+    plan = plan_mutation(spark, snap0, "id >= 5 AND id < 8", candidates)
+    removes, adds = plan.removes, plan.dv_adds
     t.delete("id < 5")  # winner
     with pytest.raises(ConcurrentDeleteDeleteError):
         commit_mod.commit(
@@ -767,6 +766,47 @@ def test_dv_vs_rewrite_differential_random_sequences(spark, tmp_path):
                         .execute()
                     )
             assert state(a) == state(b), (seed, step, kind)
+
+
+def test_dv_and_rewrite_tiers_emit_the_same_change_feed(spark, tmp_path):
+    """The deletion-vector and copy-on-write tiers of one seeded
+    DELETE/UPDATE sequence commit the same change feed: per version,
+    equal multisets of (row, _change_type)."""
+    import random
+    from collections import Counter
+
+    def mk(path, dv):
+        cfg = {"delta.enableChangeDataFeed": "true"}
+        if dv:
+            cfg["delta.enableDeletionVectors"] = "true"
+        df = spark.range(300).select(
+            F.col("id"), (F.col("id") % 7).alias("g"), (F.col("id") * 3).alias("v")
+        )
+        write_deltalake(path, df.repartition(3), configuration=cfg)
+        return DeltaTable(path, spark=spark)
+
+    rng = random.Random(5)
+    rewrite, soft = mk(str(tmp_path / "rewrite"), False), mk(str(tmp_path / "dv"), True)
+    for kind in ("delete", "update", "delete", "update"):
+        if kind == "delete":
+            lo = rng.randrange(0, 250)
+            pred = f"id >= {lo} AND id < {lo + rng.randrange(5, 40)}"
+            for t in (rewrite, soft):
+                t.delete(pred)
+        else:
+            pred = f"g = {rng.randrange(0, 7)}"
+            for t in (rewrite, soft):
+                t.update({"v": "v + 1000"}, predicate=pred)
+
+    def feed(t):
+        t.refresh()
+        return Counter(
+            (r.id, r.g, r.v, r._change_type, r._commit_version)
+            for r in t.load_cdf(starting_version=1).collect()
+        )
+
+    assert any(a.deletion_vector for a in snap_mod.load_snapshot(soft.table_uri).files.values())
+    assert feed(rewrite) == feed(soft)
 
 
 def test_dv_delete_respects_append_only(spark, tmp_path):

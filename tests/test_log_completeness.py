@@ -243,6 +243,50 @@ def test_snapshot_isolation_allows_concurrent_appends(spark, tmp_table, sample_d
     assert v == snap.version + 2
 
 
+@pytest.mark.parametrize("op", ["delete_all", "delete_true", "merge_whole_table"])
+def test_snapshot_isolation_mutation_commits_past_racing_append(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every mutation reads the table's delta.isolationLevel: under
+    SnapshotIsolation a whole-table DELETE (with or without a
+    predicate) and a whole-table MERGE that lose the race to an append
+    still commit, and the appended rows stay."""
+    table = str(tmp_path / "si")
+    write_deltalake(
+        table,
+        spark.range(10).selectExpr("id", "id AS v"),
+        configuration={"delta.isolationLevel": "SnapshotIsolation"},
+    )
+    real_commit = commit_mod.commit
+    raced = []
+
+    def racing_commit(path, actions, operation, read_version, *args, **kwargs):
+        # the append lands between the mutation's snapshot and its commit
+        if operation.operation != "WRITE" and not raced:
+            raced.append(operation.operation)
+            write_deltalake(
+                table, spark.range(100, 103).selectExpr("id", "id AS v"), mode="append"
+            )
+        return real_commit(path, actions, operation, read_version, *args, **kwargs)
+
+    monkeypatch.setattr(commit_mod, "commit", racing_commit)
+    dt = DeltaTable(table, spark=spark)
+    if op == "merge_whole_table":
+        # not-matched-by-source clauses read every target row
+        src = spark.range(5).selectExpr("id", "id AS v")
+        (
+            dt.merge(src, "t.id = s.id", source_alias="s", target_alias="t")
+            .when_matched_delete()
+            .when_not_matched_by_source_delete()
+            .execute()
+        )
+    else:
+        dt.delete(None if op == "delete_all" else "true")
+    assert raced
+    dt = DeltaTable(table, spark=spark)
+    assert sorted(r.id for r in dt.to_df().collect()) == [100, 101, 102]
+
+
 def test_querybuilder_no_reregistration(spark, tmp_table, sample_df, monkeypatch):
     from delta_rs_spark import QueryBuilder
 
