@@ -5,9 +5,10 @@ and without partitions), the data-only write (plain), the pinned
 two-write VARIANT fallback, and the deletion-vector tier. Each bound
 is the measured count: DELETE and UPDATE find their touched files in
 one job (operators.util.find_touched_files) and write without a
-rebalance; MERGE has no discovery pass — its one write frame gates
-rewrites per file (the barrier) and validates, counts and names the
-rewritten files through observe(). No operation may leave a pinned
+rebalance, and their deletion-vector tier collects the matched rows'
+(file, row_index) pairs in one job; MERGE has no discovery pass — its
+one write frame gates rewrites per file (the barrier) and validates,
+counts and names the rewritten files through observe(). No operation may leave a pinned
 frame behind. Write rules ride the same write job, so a constrained
 table runs the unconstrained counts."""
 
@@ -28,8 +29,8 @@ SHAPES = {
     "plain": ({}, False, False, (2, 2, 8)),
     "variant_cdf": (_CDF, True, False, (6, 6, 13)),
     "variant_cdf_partitioned": (_CDF, True, True, (8, 8, 13)),
-    "dv_cdf": ({**_CDF, **_DV}, False, False, (3, 4, 11)),
-    "dv_plain": (_DV, False, False, (2, 4, 11)),
+    "dv_cdf": ({**_CDF, **_DV}, False, False, (2, 2, 11)),
+    "dv_plain": (_DV, False, False, (1, 2, 11)),
     "cdf_partitioned": (_CDF, False, True, (3, 3, 8)),
     "plain_partitioned": ({}, False, True, (3, 3, 8)),
 }
