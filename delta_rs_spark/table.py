@@ -148,6 +148,14 @@ def _normalize_file_path(c: F.Column) -> F.Column:
     return F.coalesce(F.try_url_decode(plus_safe), stripped)
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A frame of ``schema`` with no rows: a parquet scan of no files.
+    An action over it runs one Spark job (a frame built from an empty
+    Python list runs two), and it binds ``_metadata`` and makes every
+    field nullable like any other table read."""
+    return spark.read.schema(schema).parquet()
+
+
 def read_snapshot_df(
     spark: SparkSession,
     snapshot: Snapshot,
@@ -216,130 +224,129 @@ def read_snapshot_df(
         ] or None
         return cmap.rename_to_logical(part_df, schema, extra_cols=extra)
 
-    if not plain and not dv_adds:
-        df = spark.createDataFrame([], schema)
-        if file_path_col:
-            df = df.withColumn(file_path_col, F.lit(None).cast("string"))
-        if row_index_col:
-            df = df.withColumn(row_index_col, F.lit(None).cast("long"))
-        for c in hidden:
-            df = df.withColumn(c, F.lit(None).cast("long"))
-    else:
-        part_phys = [
-            (phys_of or {}).get(pc, pc) for pc in snapshot.partition_columns
-        ]
+    part_phys = [(phys_of or {}).get(pc, pc) for pc in snapshot.partition_columns]
 
-        def read_group(group_adds: list[Add]):
-            """One reader per Hive base: a shallow clone's absolute add
-            paths live under the SOURCE root, so partitioned scans
-            cannot serve clone-local and cloned files with a single
-            basePath — group by the directory above the k=v segments
-            (table-local files group to table_path itself).
+    def read_group(group_adds: list[Add]):
+        """One reader per Hive base: a shallow clone's absolute add
+        paths live under the SOURCE root, so partitioned scans
+        cannot serve clone-local and cloned files with a single
+        basePath — group by the directory above the k=v segments
+        (table-local files group to table_path itself).
 
-            Foreign layouts (delta-spark under column mapping writes
-            random-prefix dirs, NO k=v segments) carry partition values
-            ONLY on the add action — those group by their
-            partitionValues tuple and the values are injected as typed
-            literals (the physical files do not contain the column)."""
-            from delta_rs_spark.operators.util import resolve_add_path
+        Foreign layouts (delta-spark under column mapping writes
+        random-prefix dirs, NO k=v segments) carry partition values
+        ONLY on the add action — those group by their
+        partitionValues tuple and the values are injected as typed
+        literals (the physical files do not contain the column).
 
-            reader = spark.read.schema(read_schema)
-            if not snapshot.partition_columns:
-                return [reader.parquet(*[resolve_add_path(table_path, a.path) for a in group_adds])]
-            groups: dict[tuple, list[str]] = {}
-            for a in group_adds:
-                p = resolve_add_path(table_path, a.path)
-                d = os.path.dirname(p)
-                hive = False
-                while "=" in os.path.basename(d):
-                    hive = True
-                    d = os.path.dirname(d)
-                # non-Hive layout: partition values ride the add action —
-                # key the group by them so each gets its own literals
-                pv_key = (
-                    None
-                    if hive
-                    else tuple(sorted((a.partition_values or {}).items()))
-                )
-                groups.setdefault((d, pv_key), []).append(p)
-            out = []
-            for (base, pv_key), ps in groups.items():
-                g = (
-                    spark.read.schema(read_schema)
-                    .option("basePath", base)
-                    .parquet(*ps)
-                )
-                if pv_key is not None:
-                    pv = dict(pv_key)
-                    for pc in part_phys:
-                        g = g.withColumn(
-                            pc,
-                            F.lit(pv.get(pc)).cast(read_schema[pc].dataType),
-                        )
-                out.append(g)
-            return out
-
+        No file at all reads as a scan of none, its partition columns
+        after the data columns as in a Hive-layout read, so an empty
+        result has the same columns as a non-empty one."""
         from delta_rs_spark.operators.util import resolve_add_path
 
-        parts = []
-        if plain:
-            for p_df in read_group(plain):
-                if file_path_col:
-                    # bound BEFORE any select/union — hidden metadata
-                    # columns do not survive those
-                    p_df = p_df.withColumn(
-                        file_path_col,
-                        _normalize_file_path(F.col("_metadata.file_path")),
-                    )
-                if row_index_col:
-                    p_df = p_df.withColumn(
-                        row_index_col, F.col("_metadata.row_index")
-                    )
-                parts.append(to_logical(p_df))
-        if dv_adds:
-            from delta_rs_spark.plans.deletion_vectors import load_dv_row_indexes
-
-            deleted_rows = []
-            for a in dv_adds:
-                abs_path = resolve_add_path(table_path, a.path)
-                for ri in load_dv_row_indexes(table_path, a.deletion_vector):
-                    deleted_rows.append((abs_path, ri))
-            deleted_df = spark.createDataFrame(
-                deleted_rows, "__dv_fp string, __dv_ri long"
-            )
-            dv_parts = [
-                # metadata columns bound per group BEFORE the union —
-                # they do not survive select/union
-                g.withColumn(
-                    "__fp", _normalize_file_path(F.col("_metadata.file_path"))
-                ).withColumn("__ri", F.col("_metadata.row_index"))
-                for g in read_group(dv_adds)
+        if not group_adds:
+            data = [f for f in read_schema.fields if f.name not in part_phys]
+            return [
+                empty_frame(
+                    spark, T.StructType(data + [read_schema[pc] for pc in part_phys])
+                )
             ]
-            dv_df = dv_parts[0]
-            for extra in dv_parts[1:]:
-                dv_df = dv_df.unionByName(extra)
-            dv_df = dv_df.join(
-                F.broadcast(deleted_df),
-                (F.col("__fp") == F.col("__dv_fp"))
-                & (F.col("__ri") == F.col("__dv_ri")),
-                "left_anti",
+        reader = spark.read.schema(read_schema)
+        if not snapshot.partition_columns:
+            return [reader.parquet(*[resolve_add_path(table_path, a.path) for a in group_adds])]
+        groups: dict[tuple, list[str]] = {}
+        for a in group_adds:
+            p = resolve_add_path(table_path, a.path)
+            d = os.path.dirname(p)
+            hive = False
+            while "=" in os.path.basename(d):
+                hive = True
+                d = os.path.dirname(d)
+            # non-Hive layout: partition values ride the add action —
+            # key the group by them so each gets its own literals
+            pv_key = (
+                None
+                if hive
+                else tuple(sorted((a.partition_values or {}).items()))
             )
-            keep = [f.name for f in read_schema.fields]
+            groups.setdefault((d, pv_key), []).append(p)
+        out = []
+        for (base, pv_key), ps in groups.items():
+            g = (
+                spark.read.schema(read_schema)
+                .option("basePath", base)
+                .parquet(*ps)
+            )
+            if pv_key is not None:
+                pv = dict(pv_key)
+                for pc in part_phys:
+                    g = g.withColumn(
+                        pc,
+                        F.lit(pv.get(pc)).cast(read_schema[pc].dataType),
+                    )
+            out.append(g)
+        return out
+
+    from delta_rs_spark.operators.util import resolve_add_path
+
+    parts = []
+    if plain or not dv_adds:
+        for p_df in read_group(plain):
             if file_path_col:
-                dv_df = dv_df.withColumn(file_path_col, F.col("__fp"))
-                keep = keep + [file_path_col]
+                # bound BEFORE any select/union — hidden metadata
+                # columns do not survive those
+                p_df = p_df.withColumn(
+                    file_path_col,
+                    _normalize_file_path(F.col("_metadata.file_path")),
+                )
             if row_index_col:
-                dv_df = dv_df.withColumn(row_index_col, F.col("__ri"))
-                keep = keep + [row_index_col]
-            parts.append(to_logical(dv_df.drop("__fp", "__ri").select(*keep)))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if hidden:
-            df = rt.fill_row_ids(
-                df, spark, snapshot, table_path, adds, file_path_col, row_index_col
-            )
+                p_df = p_df.withColumn(
+                    row_index_col, F.col("_metadata.row_index")
+                )
+            parts.append(to_logical(p_df))
+    if dv_adds:
+        from delta_rs_spark.plans.deletion_vectors import load_dv_row_indexes
+
+        deleted_rows = []
+        for a in dv_adds:
+            abs_path = resolve_add_path(table_path, a.path)
+            for ri in load_dv_row_indexes(table_path, a.deletion_vector):
+                deleted_rows.append((abs_path, ri))
+        deleted_df = spark.createDataFrame(
+            deleted_rows, "__dv_fp string, __dv_ri long"
+        )
+        dv_parts = [
+            # metadata columns bound per group BEFORE the union —
+            # they do not survive select/union
+            g.withColumn(
+                "__fp", _normalize_file_path(F.col("_metadata.file_path"))
+            ).withColumn("__ri", F.col("_metadata.row_index"))
+            for g in read_group(dv_adds)
+        ]
+        dv_df = dv_parts[0]
+        for extra in dv_parts[1:]:
+            dv_df = dv_df.unionByName(extra)
+        dv_df = dv_df.join(
+            F.broadcast(deleted_df),
+            (F.col("__fp") == F.col("__dv_fp"))
+            & (F.col("__ri") == F.col("__dv_ri")),
+            "left_anti",
+        )
+        keep = [f.name for f in read_schema.fields]
+        if file_path_col:
+            dv_df = dv_df.withColumn(file_path_col, F.col("__fp"))
+            keep = keep + [file_path_col]
+        if row_index_col:
+            dv_df = dv_df.withColumn(row_index_col, F.col("__ri"))
+            keep = keep + [row_index_col]
+        parts.append(to_logical(dv_df.drop("__fp", "__ri").select(*keep)))
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
     if hidden:
+        df = rt.fill_row_ids(
+            df, snapshot, table_path, adds, file_path_col, row_index_col
+        )
         df = df.drop(*[c for c in (file_path_col, row_index_col) if c not in requested])
     if predicate:
         df = df.filter(F.expr(predicate))

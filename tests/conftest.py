@@ -40,8 +40,10 @@ def lineitem(spark):
     return spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
 
 
-def spark_jobs(spark, fn):
-    """Run ``fn()`` and return ``(its result, Spark jobs it ran)``.
+def spark_job_descriptions(spark, fn):
+    """Run ``fn()`` and return ``(its result, the description of each
+    Spark job it ran)``, newest first; a job without a description
+    gives its name.
 
     Jobs are attributed by job-id range — every job newer than the
     newest one seen before the call — read from the status store after
@@ -50,14 +52,25 @@ def spark_jobs(spark, fn):
     job."""
     jsc = spark.sparkContext._jsc.sc()
 
-    def job_ids():
+    def jobs():
         jsc.listenerBus().waitUntilEmpty(30_000)
-        jobs = jsc.statusStore().jobsList(None)  # newest first
-        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+        js = jsc.statusStore().jobsList(None)  # newest first
+        return [js.apply(i) for i in range(js.size())]
 
-    seen = max(job_ids(), default=-1)
+    seen = max((j.jobId() for j in jobs()), default=-1)
     out = fn()
-    return out, sum(1 for j in job_ids() if j > seen)
+    return out, [
+        j.description().get() if j.description().isDefined() else j.name()
+        for j in jobs()
+        if j.jobId() > seen
+    ]
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, Spark jobs it ran)``,
+    counted as in ``spark_job_descriptions``."""
+    out, jobs = spark_job_descriptions(spark, fn)
+    return out, len(jobs)
 
 
 def persistent_rdds(spark) -> int:

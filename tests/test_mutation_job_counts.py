@@ -2,7 +2,9 @@
 (conftest.spark_jobs), on every table shape that routes
 cdc.write_mutation differently: the fused data+CDF writer (CDF, with
 and without partitions), the data-only write (plain), the pinned
-two-write VARIANT fallback, and the deletion-vector tier. Each bound
+two-write VARIANT fallback, and the deletion-vector tier — plus a
+row-tracking CDF table, whose rewrites fill row ids from a literal
+lookup and so run the CDF counts. Each bound
 is the measured count: DELETE and UPDATE find their touched files in
 one job (operators.util.find_touched_files) and write without a
 rebalance, and their deletion-vector tier collects the matched rows'
@@ -33,6 +35,7 @@ SHAPES = {
     "dv_plain": (_DV, False, False, (1, 2, 11)),
     "cdf_partitioned": (_CDF, False, True, (3, 3, 8)),
     "plain_partitioned": ({}, False, True, (3, 3, 8)),
+    "rt_cdf": ({**_CDF, "delta.enableRowTracking": "true"}, False, False, (2, 2, 8)),
 }
 
 
