@@ -84,6 +84,40 @@ def _contention_gate(max_wait_s: int, poll_s: int = 5) -> list[tuple[int, str]]:
     return procs
 
 
+def _recorded_cpus(path: str) -> int:
+    """The ``cpus`` a bench JSON file records; 0 when absent or unreadable."""
+    try:
+        with open(path) as f:
+            return int(json.load(f).get("cpus") or 0)
+    except (OSError, ValueError, TypeError):
+        return 0
+
+
+def archive_slot(here: str, n_cores: int) -> str:
+    """Where this run archives its per-query detail. A round records
+    BENCH_r{N}.json after its main run and then reruns at fewer cores;
+    so a run with fewer cores than the newest BENCH_r{N}.json records
+    is round N's reduced-core run and archives as
+    BENCH_DETAIL_r{N}_c{cpus}.json. Any other run is round N+1's:
+    BENCH_DETAIL_r{N+1}.json, or its _c{cpus} twin when a run with more
+    cores already holds that slot (the main run owns the unsuffixed one)."""
+    import glob
+    import re
+
+    recorded = [
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
+    ]
+    rnd, newest = max(recorded, default=(0, None))
+    if newest is not None and _recorded_cpus(newest) > n_cores:
+        return os.path.join(here, f"BENCH_DETAIL_r{rnd:02d}_c{n_cores}.json")
+    arch = os.path.join(here, f"BENCH_DETAIL_r{rnd + 1:02d}.json")
+    if _recorded_cpus(arch) > n_cores:
+        arch = os.path.join(here, f"BENCH_DETAIL_r{rnd + 1:02d}_c{n_cores}.json")
+    return arch
+
+
 def main() -> None:
     import __spark_entry__ as entry_mod
     from delta_rs_spark.session import drop_cached_intermediates, get_spark
@@ -270,37 +304,9 @@ def main() -> None:
             json.dump(detail, f, indent=1, sort_keys=True)
     except OSError as e:
         print(f"WARN: could not write {detail_path}: {e}", file=sys.stderr)
-    # Per-round archive so future rounds can diff full per-query vectors:
-    # the current round is 1 + the highest BENCH_r{N}.json the driver has
-    # recorded (the driver writes that AFTER running us).
+    # Per-round archive so future rounds can diff full per-query vectors
     try:
-        import glob
-        import re
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        rnd = max(rounds, default=0) + 1
-        arch = os.path.join(here, f"BENCH_DETAIL_r{rnd:02d}.json")
-        # the driver benches the SAME round twice (main run + a reduced
-        # core-count scaling run): never let the second overwrite the
-        # first — a run at a different cpu count archives under a
-        # _c{cpus} suffix (r12's 8-core run clobbered the r13 slot)
-        if os.path.exists(arch):
-            try:
-                with open(arch) as f:
-                    prev_cpus = json.load(f).get("cpus")
-            except (OSError, ValueError):
-                prev_cpus = None
-            # the main (highest-core) run owns the unsuffixed slot;
-            # reduced-core scaling runs archive alongside it
-            if prev_cpus is not None and n_cores < prev_cpus:
-                arch = os.path.join(
-                    here, f"BENCH_DETAIL_r{rnd:02d}_c{n_cores}.json"
-                )
+        arch = archive_slot(os.path.dirname(os.path.abspath(__file__)), n_cores)
         with open(arch, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
     except OSError as e:

@@ -20,6 +20,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL
-from delta_rs_spark.operators.util import resolve_add_path
+from delta_rs_spark.operators.util import resolve_add_path, spark_file_uri
 
 
 def _parse_ts_ms(ts: str) -> int:
@@ -61,7 +62,7 @@ def load_cdf(
     predicate: str | None = None,
     allow_out_of_range: bool = False,
 ) -> DataFrame:
-    from delta_rs_spark.table import empty_frame, read_snapshot_df
+    from delta_rs_spark.table import empty_frame, join_row_pairs, read_snapshot_df
 
     latest = snap_mod.latest_version(table_path)
     if latest is None:
@@ -278,8 +279,8 @@ def load_cdf(
                 )
 
                 rm_by_path = {r.path: r for r in removes}
-                dead_pairs = []  # (abs_path, row_index): newly DV-dead
-                born_pairs = []  # (abs_path, row_index): DV rows REVIVED
+                dead_pairs = []  # (file key, row_index): newly DV-dead
+                born_pairs = []  # (file key, row_index): DV rows REVIVED
                 for path in sorted(pair_paths):
                     a = add_by_path[path]
                     r = rm_by_path[path]
@@ -293,56 +294,32 @@ def load_cdf(
                         if r.deletion_vector
                         else set()
                     )
-                    abs_path = resolve_add_path(table_path, path)
-                    dead_pairs += [(abs_path, ri) for ri in sorted(new_rows - old_rows)]
+                    key = spark_file_uri(resolve_add_path(table_path, path))
+                    dead_pairs += [(key, ri) for ri in sorted(new_rows - old_rows)]
                     # rows dead in the OLD pairing but alive in the NEW
                     # one (RESTORE past a DV delete) become visible again
                     # and must surface as inserts
-                    born_pairs += [(abs_path, ri) for ri in sorted(old_rows - new_rows)]
-                if dead_pairs or born_pairs:
-                    from delta_rs_spark.plans import column_mapping as cmap
-                    from delta_rs_spark.table import _normalize_file_path
-
-                    # column-mapped files carry physical col-<uuid> names:
-                    # read with the physical schema and rename after the
-                    # (file, row_index) join, like the cdc branch above —
-                    # a logical-schema read would yield all-null columns
-                    mapped = cmap.mapping_mode(snap.configuration) != "none"
-                    pair_schema = (
-                        cmap.physical_schema(schema) if mapped else schema
-                    )
-                    reader = spark.read.schema(pair_schema)
-                    if snap.partition_columns:
-                        reader = reader.option("basePath", table_path)
-                    scanned = (
-                        reader.parquet(
-                            *[resolve_add_path(table_path, p) for p in sorted(pair_paths)]
+                    born_pairs += [(key, ri) for ri in sorted(old_rows - new_rows)]
+                # every physical row of the pair files, DVs not applied:
+                # the pairs pick the rows that changed
+                scanned = read_snapshot_df(
+                    spark,
+                    snap,
+                    table_path,
+                    files=[
+                        replace(add_by_path[p], deletion_vector=None)
+                        for p in sorted(pair_paths)
+                    ],
+                    file_path_col="__sfp",
+                    row_index_col="__sri",
+                )
+                for pairs, change in ((dead_pairs, "delete"), (born_pairs, "insert")):
+                    if pairs:
+                        pieces.append(
+                            join_row_pairs(scanned, "__sfp", "__sri", pairs, "inner")
+                            .drop("__sfp", "__sri")
+                            .withColumn(CHANGE_TYPE_COL, F.lit(change))
                         )
-                        .withColumn(
-                            "__sfp",
-                            _normalize_file_path(F.col("_metadata.file_path")),
-                        )
-                        .withColumn("__sri", F.col("_metadata.row_index"))
-                    )
-
-                    def _pair_rows(pairs: list, change: str):
-                        pair_df = spark.createDataFrame(
-                            pairs, "__fp string, __ri long"
-                        )
-                        rows = scanned.join(
-                            F.broadcast(pair_df),
-                            (F.col("__sfp") == F.col("__fp"))
-                            & (F.col("__sri") == F.col("__ri")),
-                            "inner",
-                        ).drop("__sfp", "__sri", "__fp", "__ri")
-                        if mapped:
-                            rows = cmap.rename_to_logical(rows, schema)
-                        return rows.withColumn(CHANGE_TYPE_COL, F.lit(change))
-
-                    if dead_pairs:
-                        pieces.append(_pair_rows(dead_pairs, "delete"))
-                    if born_pairs:
-                        pieces.append(_pair_rows(born_pairs, "insert"))
                 adds = [a for a in adds if a.path not in pair_paths]
                 removes = [r for r in removes if r.path not in pair_paths]
             if adds:

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, Callable, Sequence
+from typing import Any, Callable, Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +43,7 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import TransactionInfo
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
-from delta_rs_spark.operators.util import find_touched_files, scanned_add_path
+from delta_rs_spark.operators.util import add_paths_of, find_touched_files
 from delta_rs_spark.plans.skipping import (
     col_types_from_schema_json,
     partition_only_predicate,
@@ -214,12 +214,12 @@ def plan_mutation(
         )
         if not pairs.num_rows:
             return Mutation(dv_tier=True)
-        by_rel = group_rows_by_file(
-            zip(pairs["__delta_rs_fp"].to_pylist(), pairs["__delta_rs_ri_list"].to_pylist()),
+        removes, dv_adds, n_matched = dv_mark_rows(
             table_path,
+            zip(pairs["__delta_rs_fp"].to_pylist(), pairs["__delta_rs_ri_list"].to_pylist()),
             candidates,
+            ts,
         )
-        removes, dv_adds, n_matched = dv_mark_rows(table_path, by_rel, candidates, ts)
         data_adds, change_files = (
             _write_rows(
                 matched.drop("__delta_rs_fp", "__delta_rs_ri"),
@@ -288,29 +288,19 @@ def dv_write_enabled(snapshot: snap_mod.Snapshot) -> bool:
     )
 
 
-def group_rows_by_file(
-    matched, table_path: str, candidates: list[Add]
-) -> dict[str, list[int]]:
-    """(scanned file path, [row_index]) pairs -> {Add.path: row indexes}."""
-    known = {a.path for a in candidates}
-    by_rel: dict[str, list[int]] = {}
-    for fp, ris in matched:
-        rel = scanned_add_path(fp, table_path, known)
-        by_rel.setdefault(rel, []).extend(int(i) for i in ris)
-    return by_rel
-
-
 def dv_mark_rows(
     table_path: str,
-    by_rel: dict[str, list[int]],
+    pairs: Iterable[tuple[str, Sequence[int]]],
     candidates: list[Add],
     ts: int,
 ) -> tuple[list[Remove], list[Add], int]:
-    """Mark rows dead via deletion vectors: for each file, merge the new
-    row indexes into its existing DV and emit the (remove old pairing,
-    add new pairing) action pair; files left with no live rows become
-    plain removes. Shared by DELETE (matched rows die) and UPDATE
-    (matched rows die here and are re-written with new values)."""
+    """Mark rows dead via deletion vectors: ``pairs`` holds one
+    (scanned file key, [row_index]) entry per file; for each, merge the
+    new row indexes into the file's existing DV and emit the (remove
+    old pairing, add new pairing) action pair; files left with no live
+    rows become plain removes. Shared by DELETE (matched rows die),
+    UPDATE (matched rows die here and are re-written with new values)
+    and MERGE (acted rows die)."""
     from delta_rs_spark.plans.deletion_vectors import (
         encode_bitmap_array,
         inline_dv_descriptor,
@@ -318,11 +308,13 @@ def dv_mark_rows(
         write_dv_file,
     )
 
+    pairs = list(pairs)
+    paths = add_paths_of(table_path, candidates, [fp for fp, _ in pairs])
     known = {a.path: a for a in candidates}
     removes: list[Remove] = []
     new_adds: list[Add] = []
     n_marked = 0
-    for rel, new_rows in by_rel.items():
+    for rel, (_, new_rows) in zip(paths, pairs):
         a = known[rel]
         n_marked += len(new_rows)
         old_dv = a.deletion_vector

@@ -44,7 +44,7 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
-from delta_rs_spark.operators.util import scanned_add_path
+from delta_rs_spark.operators.util import add_paths_of
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
 _ACTION = "__delta_rs_action"
@@ -662,7 +662,6 @@ class TableMerger:
         from delta_rs_spark.operators.delete import (
             dv_mark_rows,
             dv_write_enabled,
-            group_rows_by_file,
             scan_txn,
         )
         from delta_rs_spark.plans import row_tracking as _rt
@@ -999,13 +998,11 @@ class TableMerger:
             # only files with acted rows change; remove tombstones the old
             # (path, DV) pairing, the re-add carries the merged DV —
             # remove precedes its re-add (sequential replay)
-            by_rel = group_rows_by_file(acted_pairs, table_path, target_adds)
-            removes, dv_readds, _ = dv_mark_rows(table_path, by_rel, target_adds, ts)
+            removes, dv_readds, _ = dv_mark_rows(table_path, acted_pairs, target_adds, ts)
             actions.extend(removes)
             actions.extend(dv_readds)
         else:
-            known = {a.path for a in target_adds}
-            rewritten = {scanned_add_path(fp, table_path, known) for fp in touched_fps}
+            rewritten = set(add_paths_of(table_path, target_adds, touched_fps))
             removes = [
                 Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
                 for a in target_adds

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import re
+import unicodedata
 import urllib.parse
 
 from delta_rs_spark.log.actions import Add
@@ -89,43 +90,40 @@ def resolve_add_path(table_path: str, add_path: str) -> str:
     return p
 
 
-def _rel_candidates(
-    file_path: str, table_path: str
-) -> tuple[str, ...]:
-    """A scanned file path (Spark ``_metadata.file_path`` URI, or the
-    already-DECODED ``__fp`` the normalized scan column carries) as
-    Add.path-style keys: the relative raw and URL-unquoted spellings
-    (partition dirs may be stored encoded), the ABSOLUTE spellings — a
-    shallow clone's adds reference source files by absolute path
-    (PROTOCOL.md allows it), and relpath against the clone root would
-    never match them — plus the encoded ``file:`` URI spellings
-    (re-quoted with ``encode_abs_add_path`` so they match clone adds
-    byte-for-byte regardless of which characters the producer escaped;
-    both the as-given and the decoded base are tried because the input
-    may arrive raw or URI-encoded)."""
-    p = _FILE_SCHEME_RE.sub("/", file_path)
-    raw = os.path.relpath(p, table_path).replace(os.sep, "/")
-    phys = urllib.parse.unquote(p)
-    return (
-        raw,
-        urllib.parse.unquote(raw),
-        p,
-        phys,
-        encode_abs_add_path(p),
-        encode_abs_add_path(phys),
-    )
+# characters java.net.URI's multi-argument constructor leaves as they
+# are in a path: unreserved, the path punctuation ";:@&=+$," and "/"
+_URI_PATH_UNSAFE = re.compile(r"[^A-Za-z0-9\-_.!~*'();:@&=+$,/]")
 
 
-def scanned_add_path(fp: str, table_path: str, known) -> str:
-    """A scanned file path (the ``file_path_col`` of read_snapshot_df)
-    back to its Add.path key in ``known``. A path matching none raises —
-    a silent miss would turn a rewrite into data loss."""
-    for cand in _rel_candidates(fp, table_path):
-        if cand in known:
-            return cand
-    raise RuntimeError(
-        f"scanned file {fp} not found among snapshot adds under {table_path}"
-    )
+def _uri_quote(m: re.Match) -> str:
+    ch = m.group()
+    if ch > "\x9f" and unicodedata.category(ch) not in ("Zs", "Zl", "Zp"):
+        return ch  # printable non-ASCII stays as it is
+    return "".join(f"%{b:02X}" for b in ch.encode())
+
+
+def spark_file_uri(path: str) -> str:
+    """A data file's filesystem path -> the string Spark reports for it
+    in ``_metadata.file_path``: ``file:`` and the absolute path quoted by
+    java.net.URI's multi-argument rule (Hadoop's ``Path.toUri``), i.e.
+    ASCII outside the unreserved and path-punctuation sets, spaces and
+    controls as UTF-8 ``%XX``, every other character as it is. The one
+    key a scanned row's file is known by: computed here once per file,
+    so no row's path is ever parsed."""
+    return "file:" + _URI_PATH_UNSAFE.sub(_uri_quote, os.path.abspath(path))
+
+
+def add_paths_of(table_path: str, adds: list[Add], uris) -> list[str]:
+    """The Add.path of each scanned file key in ``uris`` (see
+    ``spark_file_uri``) among ``adds``. A key matching none raises — a
+    silent miss would turn a rewrite into data loss."""
+    by_uri = {spark_file_uri(resolve_add_path(table_path, a.path)): a.path for a in adds}
+    missing = [u for u in uris if u not in by_uri]
+    if missing:
+        raise RuntimeError(
+            f"scanned files {missing} not found among snapshot adds under {table_path}"
+        )
+    return [by_uri[u] for u in uris]
 
 
 def find_touched_files(
@@ -135,10 +133,12 @@ def find_touched_files(
     ``predicate``, matching rows) — None matches every row; the
     reference's find_files (crates/core/src/operations/delete.rs,
     update.rs). One Spark job and no shuffle: the scan reads only the
-    predicate's columns and the file path, a no-op sink drains it, and
-    an ``observe()`` on it collects the file set (O(files), never
-    O(rows)) and the row count. The observation sits in the job's final
-    stage, so AQE cannot drop it (see writer.observed_metrics)."""
+    predicate's columns and each row's file key (``_metadata.file_path``
+    as Spark reports it), a no-op sink drains it, and an ``observe()``
+    on it collects the key set (O(files), never O(rows)) and the row
+    count; ``add_paths_of`` maps the keys back to Adds. The observation
+    sits in the job's final stage, so AQE cannot drop it (see
+    writer.observed_metrics)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -155,8 +155,8 @@ def find_touched_files(
     df.select("__delta_rs_fp").observe(
         obs, F.collect_set("__delta_rs_fp").alias("fps"), F.count(F.lit(1)).alias("n")
     ).write.format("noop").mode("overwrite").save()
-    got, known = obs.get, {a.path for a in candidates}
-    return {scanned_add_path(fp, table_path, known) for fp in got["fps"]}, got["n"]
+    got = obs.get
+    return set(add_paths_of(table_path, candidates, got["fps"])), got["n"]
 
 
 def parse_rfc3339(s: str):

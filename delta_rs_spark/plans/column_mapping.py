@@ -139,6 +139,23 @@ def _physical_type(dtype: T.DataType) -> T.DataType:
     return dtype
 
 
+def _as_nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every nested field, array element and map value
+    nullable, as Spark's parquet read yields it."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_as_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(_as_nullable(dtype.keyType), _as_nullable(dtype.valueType), True)
+    return dtype
+
+
 def physical_schema(schema: T.StructType) -> T.StructType:
     """Logical table schema -> schema with physical names at every level."""
     return _physical_type(schema)
@@ -154,7 +171,9 @@ def rename_to_logical(
     df: DataFrame, schema: T.StructType, extra_cols: list[str] | None = None
 ) -> DataFrame:
     """Physical-name DataFrame -> logical names, nested fields included
-    (positional struct cast renames interior fields for free).
+    (positional struct cast renames interior fields for free). The cast
+    target keeps every nested field nullable: the parquet read made them
+    so, and Spark cannot cast a nullable field to a NOT NULL one.
     ``extra_cols`` are carried through unchanged (e.g. a bound
     file-path column)."""
     cols = []
@@ -162,7 +181,7 @@ def rename_to_logical(
         phys = _physical_name(f)
         c = F.col(f"`{phys}`")
         if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
-            c = c.cast(f.dataType)
+            c = c.cast(_as_nullable(f.dataType))
         cols.append(c.alias(f.name))
     for name in extra_cols or []:
         cols.append(F.col(f"`{name}`"))
@@ -191,15 +210,15 @@ def rename_to_physical(
 ) -> DataFrame:
     """Logical-name DataFrame -> physical names at every level (the
     write-side inverse of rename_to_logical): nested renames ride the
-    positional struct cast. ``extra_cols`` (e.g. row tracking's hidden
-    materialized columns — already physical, never in the table schema)
-    pass through unrenamed."""
+    positional struct cast, to the all-nullable nested type a read
+    yields (a rewrite's rows come from one). ``extra_cols`` (e.g. row
+    tracking's hidden materialized columns — already physical, never in
+    the table schema) pass through unrenamed."""
     cols = []
     for f in schema.fields:
         c = F.col(f"`{f.name}`")
-        pt = _physical_type(f.dataType)
         if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
-            c = c.cast(pt)
+            c = c.cast(_as_nullable(_physical_type(f.dataType)))
         cols.append(c.alias(_physical_name(f)))
     for e in extra_cols or []:
         if e in df.columns:

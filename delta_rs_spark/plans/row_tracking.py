@@ -17,9 +17,11 @@ reader computes
     row_commit_version = coalesce(materialized_ver, defaultRowCommitVersion)
 
 That computation is one scan: ``read_snapshot_df(..., keep_row_ids=True)``
-fills both materialized columns (``fill_row_ids``, a literal lookup of
-each row's file in the files' baseRowId map: no join and no job of its
-own). Every rewrite (DELETE, UPDATE, MERGE, OPTIMIZE, Z-ORDER, REORG)
+binds each row's file key (Spark's raw ``_metadata.file_path``) and row
+index, and fills both materialized columns (``fill_row_ids``, a literal
+lookup of that key in the files' baseRowId map, keyed per file by
+``operators.util.spark_file_uri``: no join, no per-row path parsing and
+no job of its own). Every rewrite (DELETE, UPDATE, MERGE, OPTIMIZE, Z-ORDER, REORG)
 reads its rows through it and writes them back, so ids survive; a row
 the rewrite changes nulls its materialized version, which then falls
 back to the rewriting commit's defaultRowCommitVersion.
@@ -184,11 +186,12 @@ def fill_row_ids(
     ri_col: str,
 ) -> DataFrame:
     """``df``, a scan of ``adds`` carrying the two materialized columns,
-    each row's file path ``fp_col`` and row index ``ri_col``, with both
-    materialized columns filled from the row's CURRENT id/version: an
-    existing materialization wins, else baseRowId + row_index /
-    defaultRowCommitVersion, looked up by the row's file path in a
-    literal (path -> [baseRowId, defaultRowCommitVersion]) map: no join,
+    each row's file key ``fp_col`` (``_metadata.file_path``) and row
+    index ``ri_col``, with both materialized columns filled from the
+    row's CURRENT id/version: an existing materialization wins, else
+    baseRowId + row_index / defaultRowCommitVersion, looked up by the
+    row's file key in a literal (``spark_file_uri`` -> [baseRowId,
+    defaultRowCommitVersion]) map: no join,
     no frame and no broadcast job. The map is split into one bucket per
     file, picked by the path's CRC-32, so a row compares about one key
     however many files the scan covers; one map literal is searched
@@ -196,13 +199,13 @@ def fill_row_ids(
     0.45 s bucketed). The JSON literal is parsed once, when Spark folds
     constants. Only ``read_snapshot_df(..., keep_row_ids=True)`` calls
     this."""
-    from delta_rs_spark.operators.util import resolve_add_path
+    from delta_rs_spark.operators.util import resolve_add_path, spark_file_uri
 
     mat_id, mat_ver = materialized_names(snapshot.configuration)
     n = max(len(adds), 1)
     buckets: list[dict] = [{} for _ in range(n)]
     for a in adds:
-        p = resolve_add_path(table_path, a.path)
+        p = spark_file_uri(resolve_add_path(table_path, a.path))
         buckets[zlib.crc32(p.encode()) % n][p] = [
             a.base_row_id,
             a.default_row_commit_version,

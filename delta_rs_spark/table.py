@@ -12,6 +12,7 @@ split the reference makes between its TableProvider and DataFusion
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
 from typing import Any
@@ -24,7 +25,11 @@ from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import Add, CommitInfo, Metadata, Protocol
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.log.snapshot import Snapshot, load_snapshot
-from delta_rs_spark.operators.util import local_table_path
+from delta_rs_spark.operators.util import (
+    local_table_path,
+    resolve_add_path,
+    spark_file_uri,
+)
 from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
 
 PartitionFilter = tuple[str, str, Any]  # DNF tuples like the reference (table.py:74-78)
@@ -135,25 +140,29 @@ def _dnf_to_sql(filters: list[PartitionFilter] | list[list[PartitionFilter]] | N
     return " OR ".join(f"({d})" for d in disjuncts) if len(disjuncts) > 1 else disjuncts[0]
 
 
-def _normalize_file_path(c: F.Column) -> F.Column:
-    """``_metadata.file_path`` -> comparable raw path: strip the URI
-    scheme (``file:/abs`` vs ``file:///abs`` is an undocumented Hadoop
-    detail) and percent-DECODE (the metadata column is a URI, so spaces
-    and special characters arrive encoded; the python side compares raw
-    filesystem paths). try_url_decode leaves undecodable values as-is."""
-    stripped = F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/*", "/")
-    # URLDecoder's form semantics turn literal '+' into a space, but URI
-    # paths keep '+' literal — protect it before decoding
-    plus_safe = F.regexp_replace(stripped, r"\+", "%2B")
-    return F.coalesce(F.try_url_decode(plus_safe), stripped)
-
-
 def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """A frame of ``schema`` with no rows: a parquet scan of no files.
     An action over it runs one Spark job (a frame built from an empty
     Python list runs two), and it binds ``_metadata`` and makes every
     field nullable like any other table read."""
     return spark.read.schema(schema).parquet()
+
+
+def join_row_pairs(
+    scan: DataFrame, fp_col: str, ri_col: str, pairs: list, how: str
+) -> DataFrame:
+    """``scan``'s rows joined (``how``: ``left_anti`` drops the listed
+    rows, ``inner`` keeps only them) to the ``(file key, row_index)``
+    ``pairs``, matched on the scan's ``fp_col`` (``_metadata.file_path``)
+    and ``ri_col`` (``_metadata.row_index``). The pairs' file keys are
+    ``operators.util.spark_file_uri`` spellings, so both sides compare
+    Spark's own string."""
+    pair_df = scan.sparkSession.createDataFrame(pairs, "__pair_fp string, __pair_ri long")
+    return scan.join(
+        F.broadcast(pair_df),
+        (F.col(fp_col) == F.col("__pair_fp")) & (F.col(ri_col) == F.col("__pair_ri")),
+        how,
+    ).drop("__pair_fp", "__pair_ri")
 
 
 def read_snapshot_df(
@@ -169,10 +178,17 @@ def read_snapshot_df(
 ) -> DataFrame:
     """Build the scan DataFrame for a snapshot (with file skipping).
 
-    Files carrying a deletion vector are scanned with the parquet
-    ``_metadata.row_index`` bound and anti-joined against the decoded
-    (file, row_index) tombstone set — the Spark analogue of the
-    reference's per-batch selection vectors
+    ``file_path_col`` / ``row_index_col`` bind each row's file key and
+    row index: Spark's raw ``_metadata.file_path`` and
+    ``_metadata.row_index``, with no per-row work. The key is the one
+    spelling of a scanned row's file: ``operators.util.spark_file_uri``
+    computes it for an Add, and ``operators.util.add_paths_of`` maps
+    keys back to Adds.
+
+    Files carrying a deletion vector are scanned with both bound and
+    anti-joined (``join_row_pairs``) against the decoded (file key,
+    row_index) tombstone set — the Spark analogue of the reference's
+    per-batch selection vectors
     (crates/core/src/delta_datafusion/table_provider/next/scan/exec.rs:63-108).
 
     ``keep_row_ids``: on a row-tracking table the frame also carries the
@@ -242,8 +258,6 @@ def read_snapshot_df(
         No file at all reads as a scan of none, its partition columns
         after the data columns as in a Hive-layout read, so an empty
         result has the same columns as a non-empty one."""
-        from delta_rs_spark.operators.util import resolve_add_path
-
         if not group_adds:
             data = [f for f in read_schema.fields if f.name not in part_phys]
             return [
@@ -287,62 +301,35 @@ def read_snapshot_df(
             out.append(g)
         return out
 
-    from delta_rs_spark.operators.util import resolve_add_path
+    def bind(g: DataFrame, fp: str | None, ri: str | None) -> DataFrame:
+        """Bound BEFORE any select/union — hidden metadata columns do
+        not survive those."""
+        if fp:
+            g = g.withColumn(fp, F.col("_metadata.file_path"))
+        return g.withColumn(ri, F.col("_metadata.row_index")) if ri else g
 
     parts = []
     if plain or not dv_adds:
-        for p_df in read_group(plain):
-            if file_path_col:
-                # bound BEFORE any select/union — hidden metadata
-                # columns do not survive those
-                p_df = p_df.withColumn(
-                    file_path_col,
-                    _normalize_file_path(F.col("_metadata.file_path")),
-                )
-            if row_index_col:
-                p_df = p_df.withColumn(
-                    row_index_col, F.col("_metadata.row_index")
-                )
-            parts.append(to_logical(p_df))
+        parts = [to_logical(bind(g, file_path_col, row_index_col)) for g in read_group(plain)]
     if dv_adds:
         from delta_rs_spark.plans.deletion_vectors import load_dv_row_indexes
 
-        deleted_rows = []
-        for a in dv_adds:
-            abs_path = resolve_add_path(table_path, a.path)
-            for ri in load_dv_row_indexes(table_path, a.deletion_vector):
-                deleted_rows.append((abs_path, ri))
-        deleted_df = spark.createDataFrame(
-            deleted_rows, "__dv_fp string, __dv_ri long"
+        fp, ri = file_path_col or "__dv_fp", row_index_col or "__dv_ri"
+        dv_df = functools.reduce(
+            DataFrame.unionByName, [bind(g, fp, ri) for g in read_group(dv_adds)]
         )
-        dv_parts = [
-            # metadata columns bound per group BEFORE the union —
-            # they do not survive select/union
-            g.withColumn(
-                "__fp", _normalize_file_path(F.col("_metadata.file_path"))
-            ).withColumn("__ri", F.col("_metadata.row_index"))
-            for g in read_group(dv_adds)
+        deleted = [
+            (spark_file_uri(resolve_add_path(table_path, a.path)), i)
+            for a in dv_adds
+            for i in load_dv_row_indexes(table_path, a.deletion_vector)
         ]
-        dv_df = dv_parts[0]
-        for extra in dv_parts[1:]:
-            dv_df = dv_df.unionByName(extra)
-        dv_df = dv_df.join(
-            F.broadcast(deleted_df),
-            (F.col("__fp") == F.col("__dv_fp"))
-            & (F.col("__ri") == F.col("__dv_ri")),
-            "left_anti",
+        keep = [f.name for f in read_schema.fields] + [
+            c for c in (file_path_col, row_index_col) if c
+        ]
+        parts.append(
+            to_logical(join_row_pairs(dv_df, fp, ri, deleted, "left_anti").select(*keep))
         )
-        keep = [f.name for f in read_schema.fields]
-        if file_path_col:
-            dv_df = dv_df.withColumn(file_path_col, F.col("__fp"))
-            keep = keep + [file_path_col]
-        if row_index_col:
-            dv_df = dv_df.withColumn(row_index_col, F.col("__ri"))
-            keep = keep + [row_index_col]
-        parts.append(to_logical(dv_df.drop("__fp", "__ri").select(*keep)))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = functools.reduce(DataFrame.unionByName, parts)
     if hidden:
         df = rt.fill_row_ids(
             df, snapshot, table_path, adds, file_path_col, row_index_col
@@ -592,8 +579,6 @@ class DeltaTable:
         return [a.path for a in adds]
 
     def file_uris(self, partition_filters: list[PartitionFilter] | None = None) -> list[str]:
-        from delta_rs_spark.operators.util import resolve_add_path
-
         return [
             resolve_add_path(self.table_uri, p)
             for p in self.files(partition_filters)
@@ -1188,8 +1173,6 @@ class DeltaTable:
             if not a.deletion_vector:
                 continue
             deleted = set(load_dv_row_indexes(self.table_uri, a.deletion_vector))
-            from delta_rs_spark.operators.util import resolve_add_path
-
             fs_path = resolve_add_path(self.table_uri, a.path)
             n_physical = a.num_records()
             if n_physical is None:

@@ -71,3 +71,30 @@ def test_contention_gate_returns_after_drain():
         if decoy.poll() is None:
             decoy.kill()
         decoy.wait()
+
+
+def test_archive_slot(tmp_path):
+    """A reduced-core rerun of the newest recorded round archives beside
+    that round (r13's 8-core run once landed in the r14 slot); any other
+    run takes the next round's slot, suffixed when a run with more cores
+    already holds it."""
+    import json
+
+    bench = _import_bench()
+
+    def put(name, cpus):
+        (tmp_path / name).write_text(json.dumps({"cpus": cpus}))
+
+    def slot(n_cores):
+        return os.path.basename(bench.archive_slot(str(tmp_path), n_cores))
+
+    assert slot(32) == "BENCH_DETAIL_r01.json"
+    put("BENCH_r13.json", 32)
+    put("BENCH_r13_c8.json", 8)  # not a round record
+    assert slot(8) == "BENCH_DETAIL_r13_c8.json"
+    assert slot(32) == "BENCH_DETAIL_r14.json"
+    put("BENCH_r13.json", 8)
+    assert slot(8) == "BENCH_DETAIL_r14.json"
+    put("BENCH_DETAIL_r14.json", 32)  # round 14's main run, not yet recorded
+    assert slot(8) == "BENCH_DETAIL_r14_c8.json"
+    assert slot(32) == "BENCH_DETAIL_r14.json"

@@ -511,6 +511,45 @@ def test_mapped_dv_cdf_delete_rows(spark, tmp_path):
     assert all(r.name == f"n{r.id}" for r in dels)  # not null
 
 
+def test_mapped_not_null_nested_fields_read(spark, tmp_path):
+    """NOT NULL nested fields (struct field, array<struct> element, map
+    value struct) on a column-mapped table: the parquet read makes them
+    nullable, and the rename to logical names must cast to a type that
+    allows it — through to_df() and both load_cdf readers (the insert
+    read of an Add, the change-data files of a DELETE)."""
+    from delta_rs_spark import write_deltalake
+
+    path = str(tmp_path / "mapped_nested")
+    df = spark.range(10).selectExpr(
+        "id AS k",
+        "named_struct('a', id) AS s",
+        "array(named_struct('b', id)) AS arr",
+        "map('x', named_struct('c', id)) AS m",
+    )
+    assert not df.schema["s"].dataType["a"].nullable
+    write_deltalake(
+        path,
+        df.coalesce(1),
+        configuration={
+            "delta.columnMapping.mode": "name",
+            "delta.enableChangeDataFeed": "true",
+        },
+    )
+    t = DeltaTable(path, spark=spark)
+
+    def flat(rows):
+        return sorted((r.k, r.s.a, r.arr[0].b, r.m["x"].c) for r in rows)
+
+    assert flat(t.to_df().collect()) == [(i, i, i, i) for i in range(10)]
+    assert flat(t.load_cdf(starting_version=0, ending_version=0).collect()) == [
+        (i, i, i, i) for i in range(10)
+    ]
+    t.delete("k >= 7")
+    feed = t.load_cdf(starting_version=1, ending_version=1).collect()
+    assert {r._change_type for r in feed} == {"delete"}
+    assert flat(feed) == [(i, i, i, i) for i in range(7, 10)]
+
+
 def test_enable_column_mapping_on_existing_table(spark, tmp_path):
     """SET TBLPROPERTIES none -> name on a live table annotates every
     existing field (physical name = current name, delta-spark upgrade

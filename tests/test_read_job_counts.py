@@ -98,7 +98,7 @@ def test_cdf_range_without_changes_runs_one_job(spark, tmp_path):
 def test_row_ids_over_many_files_run_no_extra_job(spark, tmp_path):
     """40 files share 40 lookup buckets, so some bucket holds several
     paths: every row still gets its own file's baseRowId + row_index."""
-    from delta_rs_spark.operators.util import resolve_add_path
+    from delta_rs_spark.operators.util import resolve_add_path, spark_file_uri
     from delta_rs_spark.plans import row_tracking as rt
 
     path = str(tmp_path / "t")
@@ -117,7 +117,10 @@ def test_row_ids_over_many_files_run_no_extra_job(spark, tmp_path):
     rows, jobs = spark_jobs(spark, df.collect)
     assert jobs <= 1, f"a row-id scan ran {jobs} Spark jobs"
     by_file = {
-        resolve_add_path(path, a.path): (a.base_row_id, a.default_row_commit_version)
+        spark_file_uri(resolve_add_path(path, a.path)): (
+            a.base_row_id,
+            a.default_row_commit_version,
+        )
         for a in snap.files.values()
     }
     assert all((r[mat_id] - r.ri, r[mat_ver]) == by_file[r.fp] for r in rows)
