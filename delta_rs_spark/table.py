@@ -144,7 +144,9 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """A frame of ``schema`` with no rows: a parquet scan of no files.
     An action over it runs one Spark job (a frame built from an empty
     Python list runs two), and it binds ``_metadata`` and makes every
-    field nullable like any other table read."""
+    field nullable like any other table read. ``read_snapshot_df``
+    leaves it without the one-file ``coalesce(1)``: an aggregate over
+    it already runs one job."""
     return spark.read.schema(schema).parquet()
 
 
@@ -196,6 +198,18 @@ def read_snapshot_df(
     current id and commit version (plans.row_tracking.fill_row_ids) —
     the frame a rewrite writes back so ids survive it. A no-op on other
     tables.
+
+    A read of exactly one file of at most min(
+    ``spark.sql.files.maxPartitionBytes``, ``spark.sql.files.openCostInBytes``)
+    bytes ends in ``coalesce(1)``. Spark plans a file scan with unknown
+    partitioning, so an aggregate, group-by, window or sort above it
+    would add an ``Exchange SinglePartition`` that AQE runs as a job of
+    its own; ``Coalesce 1`` reports ``SinglePartition``, and the query
+    runs in one job with no shuffle. The rule is exact: Spark's
+    ``FilePartition.maxSplitBytes`` is never below that minimum, so the
+    file is always one split (one task) already, and with a default
+    parallelism of 2 or more a read of two or more non-empty files is
+    never one partition, so no parallel read is narrowed.
     """
     from delta_rs_spark.plans import column_mapping as cmap
     from delta_rs_spark.plans import row_tracking as rt
@@ -339,6 +353,10 @@ def read_snapshot_df(
         df = df.filter(F.expr(predicate))
     if columns:
         df = df.select(*columns)
+    conf = spark._jsparkSession.sessionState().conf()  # parses size units
+    one_split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    if len(adds) == 1 and adds[0].size <= one_split:
+        df = df.coalesce(1)
     return df
 
 

@@ -221,21 +221,46 @@ def test_diff_differential_fuzz(spark, tmp_path, seed, config):
             )
 
 
+def _diff_after_update(spark, path, predicate):
+    """``diff(["k"], 0)`` after one UPDATE of a 200-row table: the
+    churned file count per side, the Spark jobs ``diff()`` ran, the
+    executed plan and the diff frame."""
+    from conftest import spark_jobs
+
+    dt = _mk(spark, path, [(i, "a", i) for i in range(200)])
+    dt.update({"val": "val + 1"}, predicate=predicate)
+    dt.update_incremental()
+    old_churn, new_churn = churned_files(load_snapshot(path, 0), load_snapshot(path, 1))
+    d, jobs = spark_jobs(spark, lambda: dt.diff(["k"], 0))
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    return (len(old_churn), len(new_churn)), jobs, plan.split("== Initial Plan ==")[0], d
+
+
 def test_diff_plan_reuses_aggregation_shuffle(spark, tmp_path):
     """The uniqueness guard lives in a key-grouped aggregation whose
     partitioning the full-outer join must REUSE: exactly one Exchange
     per side, none added for the join (eqNullSafe would repartition on
     (coalesce, isnull) and double the shuffles), and no eager job runs
-    at diff() call time."""
-    path = str(tmp_path / "t")
-    dt = _mk(spark, path, [(i, "a", i) for i in range(200)])
-    dt.update({"val": "val + 1"}, predicate="k < 20")
-    dt.update_incremental()
-    d = dt.diff(["k"], 0)  # must not launch a job
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
+    at diff() call time. The churn spans 2 files per side, so each side
+    scans more than one partition."""
+    churn, jobs, plan, d = _diff_after_update(
+        spark, str(tmp_path / "t"), "k < 20 OR k >= 180"
+    )
+    assert min(churn) >= 2
+    assert jobs == 0
     assert plan.count("Exchange") == 2
     assert "Python" not in plan
+    assert d.count() == 40
+
+
+def test_diff_of_one_file_churn_has_no_exchange(spark, tmp_path):
+    """One churned file per side reads as one partition (the one-file
+    coalesce in read_snapshot_df), so the key-grouped aggregations and
+    the full-outer join need no shuffle at all."""
+    churn, jobs, plan, d = _diff_after_update(spark, str(tmp_path / "t"), "k < 20")
+    assert churn == (1, 1)
+    assert jobs == 0
+    assert plan.count("Exchange") == 0
     assert d.count() == 20
 
 

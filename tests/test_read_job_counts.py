@@ -125,3 +125,87 @@ def test_row_ids_over_many_files_run_no_extra_job(spark, tmp_path):
     }
     assert all((r[mat_id] - r.ri, r[mat_ver]) == by_file[r.fp] for r in rows)
     assert sorted(r[mat_id] for r in rows) == list(range(200))
+
+
+def _four_file_table(spark, path, conf, partitioned):
+    """4 one-file appends, keys [100p, 100p + 100) with p = 0..3."""
+    for p in range(4):
+        write_deltalake(
+            path,
+            spark.range(100 * p, 100 * p + 100)
+            .selectExpr("id AS k", f"CAST({p} AS INT) AS p")
+            .coalesce(1),
+            mode="append" if p else "error",
+            configuration=None if p else conf,
+            partition_by=["p"] if partitioned and not p else None,
+        )
+    return DeltaTable(path, spark=spark)
+
+
+@pytest.mark.parametrize(
+    "conf,partitioned",
+    [({}, False), ({}, True), ({**_RT, **_CMAP}, True)],
+    ids=["plain", "partitioned", "row_tracking_mapped_partitioned"],
+)
+def test_one_file_point_read_runs_one_job(spark, tmp_path, conf, partitioned):
+    """Skipping (stats on the plain table, partition pruning on the
+    others) narrows ``p = 1`` to one file, which reads as one partition
+    that reports it: the aggregate above it needs no exchange."""
+    path = str(tmp_path / "t")
+    dt = _four_file_table(spark, path, conf, partitioned)
+    assert len(dt.files()) == 4
+    df = dt.to_df(predicate="p = 1")
+    assert len(df.inputFiles()) == 1
+    row, jobs = spark_jobs(spark, lambda: df.agg(F.count("*"), F.sum("k")).collect())
+    assert tuple(row[0]) == (100, sum(range(100, 200)))
+    assert jobs <= 1, f"a one-file point read's aggregate ran {jobs} Spark jobs"
+
+
+def test_one_file_dv_read_runs_only_the_broadcast_job(spark, tmp_path):
+    """A one-file read whose file carries a deletion vector: the
+    tombstone broadcast is its one extra job."""
+    path = str(tmp_path / "t")
+    write_deltalake(
+        path,
+        spark.range(0, 1000).selectExpr("id AS k").coalesce(1),
+        configuration={"delta.enableDeletionVectors": "true"},
+    )
+    dt = DeltaTable(path, spark=spark)
+    dt.delete("k % 10 = 0")
+    dt.refresh()
+    (add,) = dt._snapshot.files.values()
+    assert add.deletion_vector
+    df = dt.to_df()
+    row, jobs = spark_jobs(spark, lambda: df.agg(F.count("*"), F.sum("k")).collect())
+    assert tuple(row[0]) == (900, sum(k for k in range(1000) if k % 10))
+    assert jobs <= 2, f"a one-file DV read's aggregate ran {jobs} Spark jobs"
+
+
+def test_one_file_above_one_split_keeps_spark_partitions(spark, tmp_path):
+    """A file larger than min(maxPartitionBytes, openCostInBytes) may be
+    split, so its read keeps Spark's partitioning: no Coalesce, and more
+    than one partition once the split size is below the file size. The
+    same file under the default sizes reads as one coalesced partition."""
+    path = str(tmp_path / "t")
+    write_deltalake(
+        path, spark.range(0, 20000).selectExpr("id AS k", "rand(1) AS x").coalesce(1)
+    )
+    dt = DeltaTable(path, spark=spark)
+    (add,) = dt._snapshot.files.values()
+    assert add.size > 64 * 1024
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    df = dt.to_df()
+    assert "Coalesce" in plan(df) and df.rdd.getNumPartitions() == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        df = dt.to_df()
+        assert "Coalesce" not in plan(df)
+        assert df.rdd.getNumPartitions() > 1
+        assert df.agg(F.count("*")).first()[0] == 20000
+    finally:
+        spark.conf.set(key, old)
