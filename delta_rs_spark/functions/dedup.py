@@ -629,11 +629,11 @@ def dedup_against_fingerprint_index(
     fingerprint is already in the index, then keep-first (min id) within
     the batch itself.
 
-    Scale shape: the probe is a left-anti join of the (small) batch
-    against the index on fp — the batch side broadcasts when it fits,
-    and the index is never rewritten or rescanned beyond this join. The
-    within-batch pass is one fp window. History size only enters
-    through the one join."""
+    Scale shape: the probe is a left-anti join of the batch against the
+    index on fp, planned as a broadcast of the index side (BuildRight):
+    every call reads the whole index and broadcasts it. The index is
+    never rewritten. The within-batch pass is one fp window. History
+    size only enters through the one join."""
     from delta_rs_spark.functions.text import fingerprint
     from delta_rs_spark.table import DeltaTable
 
@@ -659,12 +659,7 @@ def update_fingerprint_index(spark, index_path: str, new_df: DataFrame,
     rows = new_df.select(
         F.col(id_col).alias("id"), fingerprint(text_col).alias("fp")
     )
-    # rebalance: ingest batches arrive persisted with the probe
-    # window's partitioning (one tiny file per cache partition per
-    # append — the index the NEXT batch probes); size-adaptive output
-    # keeps the index file count O(batches), not O(batches x shuffle
-    # partitions) (guide §6)
-    write_deltalake(index_path, rows.hint("rebalance"), mode="append")
+    write_deltalake(index_path, rows, mode="append")
 
 
 def _band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:

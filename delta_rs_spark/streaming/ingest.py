@@ -15,9 +15,14 @@ corpus-sized):
    txn contract (writer txn app_id/version = streaming batch id, so a
    replayed batch is a no-op);
 4. append the survivors' fingerprints to the index — AFTER the corpus
-   append, so a crash between the two replays the batch (corpus append
-   dedupes via txn, index append re-adds the same fps, which is
-   harmless for an anti-join index).
+   append, so a crash between the two replays the batch. The index rows
+   are read back from the Add files of the corpus commit that carries
+   this batch's Txn: one file read, not a second run of the probe and
+   gate. When the newest corpus commit is not this call's (a replay the
+   Txn made a no-op, or a commit that landed after ours) the survivors
+   are recomputed instead; the index has not moved since the corpus
+   write, so the probe keeps the same docs — none, when the batch's
+   index append had landed before.
 
 ``process_corpus_batch`` is the single batch processor; the live
 stream (``start_corpus_ingest``) and the deterministic batch replay
@@ -29,10 +34,12 @@ stream-vs-replay differential test and the driver-gate oracle rely on.
 from __future__ import annotations
 
 from collections.abc import Iterable
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from delta_rs_spark.log import snapshot as snap_mod
 
 
 def process_corpus_batch(
@@ -93,34 +100,49 @@ def process_corpus_batch(
     )
     fails = reduce(lambda a, b: a | b, [cond.eqNullSafe(True) for _, cond in gate])
     kept = fresh.filter(~fails)
-    # The survivor frame is consumed 2-3x below (corpus append, fp index
-    # append, optional band index append) — pin the batch-sized result so
-    # the probe + gate pipeline runs once per batch, not once per sink.
-    # persist, not localCheckpoint: the pin is released right here after
-    # the sinks consume it (r13 unpersist contract — a long-lived ingest
-    # stream must not accumulate one pinned batch per micro-batch), and
-    # DataFrame.unpersist cannot release a localCheckpoint. Recompute on
-    # eviction is deterministic (probe joins over fixed inputs).
-    kept = kept.persist()
-    try:
-        # exactly-once: the txn (app_id, batch_id) makes replays no-ops.
-        # rebalance: the pinned survivor frame keeps the probe window's
-        # shuffle partitioning (32 tiny files per micro-batch append,
-        # which every later batch's index probe re-lists); AQE re-splits
-        # to advisory-size output files — one file per small batch,
-        # properly-sized files at production batch sizes (guide §6)
-        write_deltalake(
-            corpus_path,
-            kept.hint("rebalance"),
-            mode="append",
-            txn_app_id=app_id,
-            txn_version=batch_id,
-        )
-        update_fingerprint_index(spark, index_path, kept, text_col, id_col)
-        if band_index_path is not None:
-            update_band_index(spark, band_index_path, kept, text_col, id_col)
-    finally:
-        kept.unpersist(False)
+    # exactly-once: the txn (app_id, batch_id) makes replays no-ops
+    before = snap_mod.latest_version(corpus_path)
+    write_deltalake(
+        corpus_path, kept, mode="append", txn_app_id=app_id, txn_version=batch_id
+    )
+    added = _committed_rows(
+        spark, corpus_path, before, app_id, batch_id, [id_col, text_col]
+    )
+    survivors = kept if added is None else added
+    update_fingerprint_index(spark, index_path, survivors, text_col, id_col)
+    if band_index_path is not None:
+        update_band_index(spark, band_index_path, survivors, text_col, id_col)
+
+
+def _committed_rows(spark, corpus_path, before, app_id, batch_id, columns):
+    """The rows the newest corpus commit added, read from its own Add
+    files, when that commit is newer than ``before`` and carries
+    ``Txn(app_id, batch_id)``; else None.
+
+    A write the Txn made a no-op leaves the version at ``before``, and
+    the newest commit may then be this batch's own from an earlier run
+    whose index append also landed: reading it back would index its rows
+    a second time, so that case takes None, and the caller's recomputed
+    survivors (none, against an index that holds them)."""
+    from delta_rs_spark.log.actions import Add, Txn
+    from delta_rs_spark.table import read_snapshot_df
+
+    v = snap_mod.latest_version(corpus_path)
+    if v == before:
+        return None
+    actions = snap_mod.read_commit_actions(corpus_path, v)
+    if not any(
+        isinstance(a, Txn) and (a.app_id, a.version) == (app_id, batch_id)
+        for a in actions
+    ):
+        return None
+    return read_snapshot_df(
+        spark,
+        snap_mod.load_snapshot(corpus_path, v),
+        corpus_path,
+        columns=columns,
+        files=[a for a in actions if isinstance(a, Add)],
+    )
 
 
 def start_corpus_ingest(
@@ -146,21 +168,11 @@ def start_corpus_ingest(
     later batches see them. Both probes stay batch-vs-index joins; the
     historical text is never rescanned."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        process_corpus_batch(
-            batch_df,
-            batch_id,
-            corpus_path,
-            index_path,
-            text_col=text_col,
-            id_col=id_col,
-            lang=lang,
-            min_quality=min_quality,
-            min_tokens=min_tokens,
-            app_id=app_id,
-            band_index_path=band_index_path,
-        )
-
+    process = partial(
+        process_corpus_batch, corpus_path=corpus_path, index_path=index_path,
+        text_col=text_col, id_col=id_col, lang=lang, min_quality=min_quality,
+        min_tokens=min_tokens, app_id=app_id, band_index_path=band_index_path,
+    )
     return (
         stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
@@ -185,17 +197,10 @@ def replay_corpus_ingest(
     (batch_id = position). Used by the driver-gate oracle query and the
     stream-vs-replay differential test; also the recovery tool for
     re-running a bounded ingest window without the streaming engine."""
+    process = partial(
+        process_corpus_batch, corpus_path=corpus_path, index_path=index_path,
+        text_col=text_col, id_col=id_col, lang=lang, min_quality=min_quality,
+        min_tokens=min_tokens, app_id=app_id, band_index_path=band_index_path,
+    )
     for batch_id, batch_df in enumerate(batches):
-        process_corpus_batch(
-            batch_df,
-            batch_id,
-            corpus_path,
-            index_path,
-            text_col=text_col,
-            id_col=id_col,
-            lang=lang,
-            min_quality=min_quality,
-            min_tokens=min_tokens,
-            app_id=app_id,
-            band_index_path=band_index_path,
-        )
+        process(batch_df, batch_id)

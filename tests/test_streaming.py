@@ -1296,3 +1296,117 @@ def test_read_append_stream_max_bytes_per_trigger(spark, tmp_path, sample_df):
     batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(batches) >= 3
     spark.catalog.dropTempView("mbt_out")
+
+
+_INGEST_WORDS = "cat dog boat river king queen sun moon grain salt iron tea wool fish".split()
+
+
+def _ingest_batches(spark):
+    """Two micro-batches of 150 English docs: the second re-sends 30
+    (20 %) of the first's texts under new ids."""
+    import random
+
+    rng = random.Random(13)
+
+    def text(i):
+        words = rng.choices(_INGEST_WORDS, k=12)
+        return f"the {' and the '.join(words)} went to the market with {i} " * 2
+
+    first = [(i, text(i)) for i in range(150)]
+    resent = rng.sample(range(150), 30)
+    second = [(150 + j, first[i][1]) for j, i in enumerate(resent)]
+    second += [(i, text(i)) for i in range(180, 300)]
+    return [spark.createDataFrame(b, "doc_id long, text string") for b in (first, second)]
+
+
+def _ids(path, col):
+    return sorted(r[0] for r in DeltaTable(path).to_df(columns=[col]).collect())
+
+
+def test_ingest_batch_job_count(spark, tmp_path):
+    """A micro-batch against a non-empty index runs at most 4 Spark jobs:
+    the index broadcast, the probe window's shuffle, the corpus write,
+    and the index write, which reads its rows back from the one file the
+    corpus commit added. Each table gains one file, and no frame stays
+    pinned."""
+    from conftest import persistent_rdds, spark_jobs
+
+    from delta_rs_spark.functions.dedup import build_fingerprint_index
+    from delta_rs_spark.streaming.ingest import process_corpus_batch
+
+    first, second = _ingest_batches(spark)
+    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "fpidx")
+    build_fingerprint_index(first.limit(0), index)
+    process_corpus_batch(first, 0, corpus, index)
+
+    def n_files():
+        return len(DeltaTable(corpus).files()), len(DeltaTable(index).files())
+
+    before, pinned = n_files(), persistent_rdds(spark)
+    _, jobs = spark_jobs(spark, lambda: process_corpus_batch(second, 1, corpus, index))
+    assert jobs <= 4
+    assert n_files() == (before[0] + 1, before[1] + 1)
+    assert persistent_rdds(spark) == pinned
+    want = list(range(150)) + list(range(180, 300))
+    assert _ids(corpus, "doc_id") == _ids(index, "id") == want
+
+
+def test_ingest_crash_between_corpus_and_index_commits(spark, tmp_path, monkeypatch):
+    """Fault point: the process dies after a batch's corpus commit and
+    before its index commit. Replaying the batch converges to the
+    no-fault state: the corpus Txn makes the append a no-op, so the
+    index rows come from the recomputed survivors (the newest corpus
+    commit is not the replay's), and a second replay adds nothing."""
+    from conftest import persistent_rdds, table_tree
+
+    from delta_rs_spark.functions import dedup
+    from delta_rs_spark.log.snapshot import latest_version
+    from delta_rs_spark.streaming import ingest
+
+    batches = _ingest_batches(spark)
+    pinned = persistent_rdds(spark)
+    read_back = []
+    committed_rows = ingest._committed_rows
+
+    def spy(*args):
+        rows = committed_rows(*args)
+        read_back.append(rows is not None)
+        return rows
+
+    monkeypatch.setattr(ingest, "_committed_rows", spy)
+
+    def tables(name):
+        corpus, index = str(tmp_path / f"{name}_corpus"), str(tmp_path / f"{name}_idx")
+        dedup.build_fingerprint_index(batches[0].limit(0), index)
+        ingest.process_corpus_batch(batches[0], 0, corpus, index)
+        return corpus, index
+
+    want_corpus, want_index = tables("nofault")
+    ingest.process_corpus_batch(batches[1], 1, want_corpus, want_index)
+    assert read_back == [True, True]
+
+    corpus, index = tables("fault")
+
+    def die(*args, **kwargs):
+        raise RuntimeError("process died before the index commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "update_fingerprint_index", die)
+        with pytest.raises(RuntimeError, match="died"):
+            ingest.process_corpus_batch(batches[1], 1, corpus, index)
+    # the corpus committed, the index did not
+    assert (latest_version(corpus), latest_version(index)) == (1, 1)
+
+    del read_back[:]
+    ingest.process_corpus_batch(batches[1], 1, corpus, index)
+    assert read_back == [False]  # the replay indexes the recomputed survivors
+    assert latest_version(corpus) == 1  # the Txn made the append a no-op
+    want = _ids(want_corpus, "doc_id")
+    assert _ids(corpus, "doc_id") == want
+    assert _ids(index, "id") == want == _ids(want_index, "id")
+    assert table_tree(corpus)[1] == table_tree(index)[1] == []
+    assert persistent_rdds(spark) == pinned
+
+    ingest.process_corpus_batch(batches[1], 1, corpus, index)
+    assert latest_version(corpus) == 1
+    assert _ids(index, "id") == want
