@@ -1241,6 +1241,43 @@ def _hashed_logit_q(bias: float, weights: list[float]) -> Column:
     )
 
 
+def _hashed_residual(bias: float, weights: list[float]) -> Column:
+    """p - y for each (features ⋈ label) row: p is the sigmoid, snapped
+    to the 1e-6 grid, of the doc's logit, an id-window sum of the
+    quantized per-row contributions."""
+    zq = F.sum(_hashed_logit_q(bias, weights)).over(W.partitionBy("id"))
+    z = zq.cast("double") / F.lit(1e9)
+    p = F.round((F.lit(1.0) / (F.lit(1.0) + F.exp(-z))) * F.lit(1e6)) / F.lit(1e6)
+    return p - F.col("y")
+
+
+def _hashed_step(
+    spy: DataFrame, d: Column, bias: float, weights: list[float], lr: float
+) -> tuple[float, list[float]]:
+    """One gradient-descent step from (bias, weights) with residual
+    ``d``: per-bucket gradient sums on the 1e9 integer grid (one job),
+    then the update on the driver."""
+    grows = (
+        spy.select(
+            "bucket",
+            F.round((d * F.col("x")) * F.lit(1e9)).cast("long").alias("__gq"),
+        )
+        .groupBy("bucket")
+        .agg(F.sum("__gq").alias("s"), F.count(F.lit(1)).alias("c"))
+        .collect()
+    )
+    # the intercept row count IS the doc count (one bias row per doc)
+    n = next(float(r["c"]) for r in grows if int(r["bucket"]) == -1)
+    w = list(weights)
+    for r in grows:
+        b = int(r["bucket"])
+        if b == -1:
+            bias = bias - lr * (float(r["s"]) / 1e9 / n)
+        else:
+            w[b] = w[b] - lr * (float(r["s"]) / 1e9 / n)
+    return bias, w
+
+
 def train_hashed_classifier(
     df: DataFrame,
     label: Column,
@@ -1270,8 +1307,6 @@ def train_hashed_classifier(
     with the scoring pass.
 
     Returns (bias, weights[n_buckets])."""
-    from pyspark.sql import Window as W
-
     sp = (
         features
         if features is not None
@@ -1293,30 +1328,8 @@ def train_hashed_classifier(
             # over the whole feature frame (r13, guide §2.4).
             d = F.lit(0.5) - F.col("y")
         else:
-            zq = F.sum(_hashed_logit_q(bias, w)).over(W.partitionBy("id"))
-            z = zq.cast("double") / F.lit(1e9)
-            p = (
-                F.round((F.lit(1.0) / (F.lit(1.0) + F.exp(-z))) * F.lit(1e6))
-                / F.lit(1e6)
-            )
-            d = p - F.col("y")
-        grows = (
-            spy.select(
-                "bucket",
-                F.round((d * F.col("x")) * F.lit(1e9)).cast("long").alias("__gq"),
-            )
-            .groupBy("bucket")
-            .agg(F.sum("__gq").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        # the intercept row count IS the doc count (one bias row per doc)
-        n = next(float(r["c"]) for r in grows if int(r["bucket"]) == -1)
-        for r in grows:
-            b = int(r["bucket"])
-            if b == -1:
-                bias = bias - lr * (float(r["s"]) / 1e9 / n)
-            else:
-                w[b] = w[b] - lr * (float(r["s"]) / 1e9 / n)
+            d = _hashed_residual(bias, w)
+        bias, w = _hashed_step(spy, d, bias, w, lr)
     spy.unpersist()
     return bias, w
 

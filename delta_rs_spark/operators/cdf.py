@@ -6,7 +6,8 @@ plan :22-30; python surface python/deltalake/table.py:448-484)
 
 Per commit in range:
 * commits carrying AddCDCFile actions -> read those files (they already
-  contain ``_change_type``);
+  contain ``_change_type``) through ``table.read_snapshot_df``, as the
+  data files of a snapshot whose schema carries ``_change_type``;
 * otherwise dataChange Adds -> synthesize ``insert`` rows from the added
   files, and dataChange Removes -> synthesize ``delete`` rows by reading
   the removed files (valid until VACUUM).
@@ -31,6 +32,7 @@ from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL
 from delta_rs_spark.operators.util import resolve_add_path, spark_file_uri
+from delta_rs_spark.plans.skipping import candidate_files
 
 
 def _parse_ts_ms(ts: str) -> int:
@@ -49,6 +51,18 @@ def _commit_ts_ms(table_path: str, version: int) -> int:
     against and reads as unbounded, so the per-version filter decides."""
     ts = snap_mod.commit_timestamp(table_path, version)
     return 2**62 if ts is None else ts
+
+
+def _change_data_snapshot(snap: snap_mod.Snapshot) -> snap_mod.Snapshot:
+    """``snap``'s metadata with ``_change_type`` appended to its schema:
+    the table that a commit's change-data files are the data files of."""
+    schema = json.loads(snap.schema_string)
+    schema["fields"].append(
+        {"name": CHANGE_TYPE_COL, "type": "string", "nullable": True, "metadata": {}}
+    )
+    out = snap_mod.Snapshot(table_path=snap.table_path)
+    out.metadata = replace(snap.metadata, schema_string=json.dumps(schema))
+    return out
 
 
 def load_cdf(
@@ -134,49 +148,6 @@ def load_cdf(
         else:
             snap = snap_mod.Snapshot(table_path=table_path)
 
-    # file-level pruning (reference load_cdf.rs:64-68, :357-359 —
-    # "used ONLY to prune files by their partition values"): the
-    # partition-only conjuncts of ``predicate`` drop CDC/Add/Remove
-    # files from non-matching partitions BEFORE any read; the full
-    # predicate still runs as the residual row filter at the end, so
-    # non-partition conjuncts and inexact ones cost nothing in
-    # correctness. Without this a partition-scoped load_cdf pays a full
-    # range scan.
-    from delta_rs_spark.plans.skipping import (
-        col_types_from_schema_json,
-        parse_conjuncts,
-    )
-
-    pred_conjuncts = parse_conjuncts(predicate) if predicate else []
-
-    def _partition_prune(actions_list, snap):
-        if not pred_conjuncts:
-            return actions_list
-        pcols = snap.partition_columns
-        if not pcols:
-            return actions_list
-        from delta_rs_spark.plans import column_mapping as cmap
-
-        ctypes = col_types_from_schema_json(json.loads(snap.schema_string))
-        physical_of = cmap.snapshot_physical_of(snap)
-        part_conj = [c for c in pred_conjuncts if c.col in pcols]
-        if not part_conj:
-            return actions_list
-
-        def _may_match(a) -> bool:
-            pv = getattr(a, "partition_values", None)
-            if pv is None:
-                return True  # e.g. a Remove without extended metadata
-            for c in part_conj:
-                key = (physical_of or {}).get(c.col, c.col)
-                if key not in pv:
-                    # value not recorded: an absent key would read as
-                    # NULL and wrongly prune — keep conservatively
-                    return True
-            return all(c.keep(a, pcols, ctypes, physical_of) for c in part_conj)
-
-        return [a for a in actions_list if _may_match(a)]
-
     parts: list[DataFrame] = []
     for v in range(starting_version, ending_version + 1):
         try:
@@ -190,7 +161,6 @@ def load_cdf(
         snap.version = v
         if snap.metadata is None:
             continue
-        schema = T.StructType.fromJson(json.loads(snap.schema_string))
         ts_ms = snap_mod.commit_timestamp(
             table_path, v, next((a for a in actions if isinstance(a, CommitInfo)), None)
         )
@@ -204,67 +174,31 @@ def load_cdf(
             continue
         ts_col = F.timestamp_millis(F.lit(ts_ms))
 
-        raw_cdc = [a for a in actions if isinstance(a, AddCDCFile)]
-        cdc = _partition_prune(raw_cdc, snap)
-        adds = _partition_prune(
-            [a for a in actions if isinstance(a, Add) and a.data_change], snap
-        )
-        removes = _partition_prune(
-            [a for a in actions if isinstance(a, Remove) and a.data_change], snap
-        )
-        if raw_cdc and not cdc:
-            # the commit's changes all live in pruned partitions; falling
-            # through would wrongly re-synthesize from Add/Remove
-            continue
-
-        if cdc:
-            from delta_rs_spark.plans import column_mapping as cmap
-
-            mapped = cmap.mapping_mode(snap.configuration) != "none"
-            read_schema = cmap.physical_schema(schema) if mapped else schema
-            phys_of = cmap.logical_to_physical(schema) if mapped else {}
-            # change-data parquet files NEVER contain the partition
-            # columns physically (delta-spark and this engine both write
-            # them partition-dir style); the values ride the AddCDCFile
-            # action's partitionValues — group by that tuple and inject
-            # typed literals, exactly like read_snapshot_df's non-Hive
-            # groups. Reading with a schema that includes the partition
-            # column would silently yield NULLs (the pre-r12 bug the
-            # reference's cdf-table corpus exposed).
-            part_phys = [
-                phys_of.get(pc, pc) for pc in snap.partition_columns or []
-            ]
-            cdc_schema = T.StructType(
-                [f for f in read_schema.fields if f.name not in part_phys]
-                + [T.StructField(CHANGE_TYPE_COL, T.StringType(), True)]
-            )
-            groups: dict[tuple, list[str]] = {}
-            for c in cdc:
-                key = tuple(sorted((c.partition_values or {}).items()))
-                groups.setdefault(key, []).append(
-                    resolve_add_path(table_path, c.path)
-                )
-            gdfs = []
-            for pv_key, paths in groups.items():
-                g = spark.read.schema(cdc_schema).parquet(*paths)
-                pv = dict(pv_key)
-                for pc in part_phys:
-                    g = g.withColumn(
-                        pc, F.lit(pv.get(pc)).cast(read_schema[pc].dataType)
-                    )
-                gdfs.append(
-                    g.select(
-                        [f.name for f in read_schema.fields] + [CHANGE_TYPE_COL]
-                    )
-                )
-            df = gdfs[0]
-            for g in gdfs[1:]:
-                df = df.unionByName(g)
-            if mapped:
-                df = cmap.rename_to_logical(
-                    df, schema, extra_cols=[CHANGE_TYPE_COL]
-                )
+        # file-level pruning (reference load_cdf.rs:64-68, :357-359):
+        # files whose partition values or stats rule the predicate out
+        # are dropped BEFORE any read; the full predicate still runs on
+        # the rows at the end, so inexact pruning costs no correctness
+        raw_cdc = [
+            Add(c.path, c.size, 0, partition_values=c.partition_values)
+            for c in actions
+            if isinstance(c, AddCDCFile)
+        ]
+        if raw_cdc:
+            cdc_snap = _change_data_snapshot(snap)
+            cdc = candidate_files(cdc_snap, predicate, raw_cdc)
+            if not cdc:
+                # the commit's changes all live in pruned files; falling
+                # through would wrongly re-synthesize from Add/Remove
+                continue
+            # change-data files hold the table's columns plus
+            # _change_type, partition columns in the directory names or
+            # on the action only, like data files
+            df = read_snapshot_df(spark, cdc_snap, table_path, files=cdc)
         else:
+            adds = candidate_files(
+                snap, predicate, [a for a in actions if isinstance(a, Add) and a.data_change]
+            )
+            removes = [a for a in actions if isinstance(a, Remove) and a.data_change]
             pieces = []
             # DV update pairs (same path removed+added in one commit, e.g.
             # a soft DELETE without CDF enabled): the change set is the
@@ -348,6 +282,7 @@ def load_cdf(
                                 partition_values=dict(r.partition_values or {}),
                             )
                         )
+                rm_adds = candidate_files(pre_snap, predicate, rm_adds)
                 if rm_adds:
                     deleted = read_snapshot_df(spark, pre_snap, table_path, files=rm_adds)
                     pieces.append(deleted.withColumn(CHANGE_TYPE_COL, F.lit("delete")))

@@ -31,7 +31,6 @@ survive it; a row the mutation changes takes the committing version.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Sequence
 
@@ -44,28 +43,7 @@ from delta_rs_spark.log.actions import Add, AddCDCFile, CommitInfo, Remove, now_
 from delta_rs_spark.log.commit import TransactionInfo
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import add_paths_of, find_touched_files
-from delta_rs_spark.plans.skipping import (
-    col_types_from_schema_json,
-    partition_only_predicate,
-    prune_files,
-)
-
-
-def candidate_files(snapshot: snap_mod.Snapshot, predicate: str | None) -> list[Add]:
-    """The live files whose partition values and stats may hold rows
-    matching ``predicate`` — every file when there is none."""
-    from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-    adds = list(snapshot.files.values())
-    if not predicate:
-        return adds
-    return prune_files(
-        adds,
-        predicate,
-        snapshot.partition_columns,
-        col_types_from_schema_json(json.loads(snapshot.schema_string)),
-        snapshot_physical_of(snapshot),
-    )
+from delta_rs_spark.plans.skipping import candidate_files, partition_only_predicate
 
 
 def scan_txn(
@@ -154,11 +132,7 @@ def plan_mutation(
     table_path, ts = snapshot.table_path, now_ms()
     if assign is None and (
         not predicate
-        or partition_only_predicate(
-            predicate,
-            snapshot.partition_columns,
-            col_types_from_schema_json(json.loads(snapshot.schema_string)),
-        )
+        or partition_only_predicate(predicate, snapshot)
     ):
         return Mutation(removes=_removes(candidates, ts), n_matched=_live_rows(candidates))
     if deletion_vectors is None:

@@ -144,27 +144,20 @@ def table_diff(
 
     old_churn, new_churn = churned_files(snap_old, snap_new)
     if partition_filter:
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
         from delta_rs_spark.plans.skipping import (
-            col_types_from_schema_json,
+            candidate_files,
             partition_only_predicate,
-            prune_files,
         )
 
         def scope(snap, churn):
-            part_cols = snap.partition_columns
-            col_types = col_types_from_schema_json(json.loads(snap.schema_string))
-            if not partition_only_predicate(partition_filter, part_cols, col_types):
+            if not partition_only_predicate(partition_filter, snap):
                 raise DeltaError(
                     f"partition_filter {partition_filter!r} must be an exact "
-                    f"partition-only predicate over {part_cols} in both "
-                    "versions (file-level pruning on anything weaker would "
-                    "silently include non-matching rows)"
+                    f"partition-only predicate over {snap.partition_columns} "
+                    "in both versions (file-level pruning on anything weaker "
+                    "would silently include non-matching rows)"
                 )
-            return prune_files(
-                churn, partition_filter, part_cols, col_types,
-                snapshot_physical_of(snap),
-            )
+            return candidate_files(snap, partition_filter, churn)
 
         old_churn = scope(snap_old, old_churn)
         new_churn = scope(snap_new, new_churn)

@@ -45,7 +45,7 @@ from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import add_paths_of
-from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
+from delta_rs_spark.plans.skipping import candidate_files
 
 _ACTION = "__delta_rs_action"
 _TMARK = "__delta_rs_t"
@@ -615,19 +615,10 @@ class TableMerger:
                         id_plan[f.name] = {"step": step, "explicit": False}
 
         all_adds = list(snapshot.files.values())
-        col_types = col_types_from_schema_json(
-            __import__("json").loads(snapshot.schema_string)
-        )
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
         # num_source_rows (metrics-only) rides the early-filter
         # aggregation when that makes a complete pass
         early = self._strip_target_only_predicate(source_df, part_cols)
-        candidates = (
-            prune_files(all_adds, early, part_cols, col_types, snapshot_physical_of(snapshot))
-            if early
-            else all_adds
-        )
+        candidates = candidate_files(snapshot, early, all_adds)
         if len(candidates) > self._UNION_MIN_FILES:
             # the plain early filter left many files — a multi-modal
             # source key set (index maintenance: low-id updates + high-id
@@ -636,13 +627,7 @@ class TableMerger:
             # pass, only paid here where it can actually save file scans)
             union_pred = self._interval_union_predicate(source_df, part_cols)
             if union_pred:
-                candidates = prune_files(
-                    candidates,
-                    union_pred,
-                    part_cols,
-                    col_types,
-                    snapshot_physical_of(snapshot),
-                )
+                candidates = candidate_files(snapshot, union_pred, candidates)
 
         # ---- target files: every file a match can live in ---------------
         # (with not-matched-by-source clauses, every file); the write

@@ -30,6 +30,7 @@ from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import CommitInfo, Remove, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
+from delta_rs_spark.plans.skipping import candidate_files
 
 DEFAULT_TARGET_SIZE = 256 * 1024 * 1024  # reference default delta.targetFileSize-ish
 
@@ -51,7 +52,6 @@ class TableOptimizer:
         post_commithook_properties=None,
     ) -> dict[str, Any]:
         from delta_rs_spark.table import _dnf_to_sql, read_snapshot_df
-        from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
         from delta_rs_spark.writer import write_files
 
         spark = self.dt.spark
@@ -64,19 +64,8 @@ class TableOptimizer:
         target = target_size or int(
             snapshot.configuration.get("delta.targetFileSize", DEFAULT_TARGET_SIZE)
         )
-
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-        adds = list(snapshot.files.values())
         pred = _dnf_to_sql(partition_filters)
-        if pred:
-            adds = prune_files(
-                adds,
-                pred,
-                part_cols,
-                col_types_from_schema_json(__import__("json").loads(snapshot.schema_string)),
-                snapshot_physical_of(snapshot),
-            )
+        adds = candidate_files(snapshot, pred)
         small = [a for a in adds if a.size < target]
         # group by partition: a partition with a single small file needs no work
         by_part: dict[tuple, list] = {}
@@ -200,10 +189,6 @@ class TableOptimizer:
         writes to purge). Rows do not change logically, so adds/removes
         commit with dataChange=false (appendOnly tables stay writable,
         like OPTIMIZE)."""
-        from delta_rs_spark.plans.skipping import (
-            col_types_from_schema_json,
-            prune_files,
-        )
         from delta_rs_spark.table import _dnf_to_sql, read_snapshot_df
         from delta_rs_spark.writer import write_files
 
@@ -214,20 +199,8 @@ class TableOptimizer:
 
         ensure_writable(snapshot)
         part_cols = snapshot.partition_columns
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-        adds = list(snapshot.files.values())
         pred = _dnf_to_sql(partition_filters)
-        if pred:
-            adds = prune_files(
-                adds,
-                pred,
-                part_cols,
-                col_types_from_schema_json(
-                    __import__("json").loads(snapshot.schema_string)
-                ),
-                snapshot_physical_of(snapshot),
-            )
+        adds = candidate_files(snapshot, pred)
 
         def ratio(a) -> float:
             n = a.num_records() or 0
@@ -319,7 +292,6 @@ class TableOptimizer:
         live rows keep the curve order); REORG PURGE rewrites drop
         tags, so purged files naturally re-enter the next increment."""
         from delta_rs_spark.table import _dnf_to_sql, read_snapshot_df
-        from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
         from delta_rs_spark.writer import write_files
 
         if not columns:
@@ -346,18 +318,8 @@ class TableOptimizer:
             if c in part_cols:
                 raise DeltaError(f"cannot z-order by partition column {c}")
 
-        from delta_rs_spark.plans.column_mapping import snapshot_physical_of
-
-        adds = list(snapshot.files.values())
         pred = _dnf_to_sql(partition_filters)
-        if pred:
-            adds = prune_files(
-                adds,
-                pred,
-                part_cols,
-                col_types_from_schema_json(__import__("json").loads(snapshot.schema_string)),
-                snapshot_physical_of(snapshot),
-            )
+        adds = candidate_files(snapshot, pred)
         spec = f"{curve}:{','.join(columns)}"
         skipped_clustered = 0
         if incremental:

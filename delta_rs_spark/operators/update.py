@@ -27,7 +27,8 @@ from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
 from delta_rs_spark.log.actions import CommitInfo
 from delta_rs_spark.log.commit import DeltaError
-from delta_rs_spark.operators.delete import candidate_files, plan_mutation, scan_txn
+from delta_rs_spark.operators.delete import plan_mutation, scan_txn
+from delta_rs_spark.plans.skipping import candidate_files
 
 
 def update(

@@ -32,10 +32,9 @@ def mapping_mode(configuration: dict[str, str]) -> str:
 
 def snapshot_physical_of(snapshot) -> dict[str, str] | None:
     """logical->physical top-level name map for a snapshot, or None when
-    column mapping is off. Every prune_files / partition-values lookup
-    against a snapshot's Add actions must pass this: their
-    partitionValues/stats are keyed by PHYSICAL names, so a logical-name
-    lookup on a mapped table silently prunes every file."""
+    column mapping is off. A snapshot's Add actions key their
+    partitionValues/stats by PHYSICAL names, so a logical-name lookup on
+    a mapped table silently prunes every file."""
     import json as _json
 
     if mapping_mode(snapshot.configuration) not in ("name", "id"):

@@ -15,6 +15,7 @@ predicate at scan time).
 from __future__ import annotations
 
 import datetime as dt
+import json
 import re
 from typing import Any
 
@@ -223,16 +224,6 @@ _TYPE_SAMPLES: dict[str, Any] = {
     "timestamp": dt.datetime(1970, 1, 1),
     "timestamp_ntz": dt.datetime(1970, 1, 1),
 }
-
-
-def col_types_from_schema_json(schema_json: dict) -> dict[str, str]:
-    """Map top-level column name -> Spark typeName from a schema dict."""
-    out = {}
-    for f in schema_json.get("fields", []):
-        t = f.get("type")
-        if isinstance(t, str):
-            out[f["name"]] = t.split("(")[0]
-    return out
 
 
 def _coerce_literal(lit: Any, like: Any) -> Any:
@@ -502,18 +493,49 @@ def prune_files(
     return out
 
 
-def partition_only_predicate(
-    predicate: str,
-    partition_columns: list[str],
-    col_types: dict[str, str] | None = None,
-) -> bool:
-    """True if every conjunct parses, references only partition columns,
-    and is exactly evaluable in the column's type — the reference's
-    metadata-only fast path test (delete.rs:472-535)."""
+def _snapshot_col_types(snapshot) -> dict[str, str]:
+    """Top-level column name -> Spark typeName of a snapshot's schema."""
+    out = {}
+    for f in json.loads(snapshot.schema_string).get("fields", []):
+        t = f.get("type")
+        if isinstance(t, str):
+            out[f["name"]] = t.split("(")[0]
+    return out
+
+
+def candidate_files(
+    snapshot, predicate: str | None, files: list[Add] | None = None
+) -> list[Add]:
+    """The files whose partition values and stats may hold rows matching
+    ``predicate`` — every file when there is none. ``files`` defaults to
+    the snapshot's live Adds; any list given is judged by the snapshot's
+    partition columns, column types and column-mapping names. The one
+    pruning entry: scans, mutations, OPTIMIZE, diff and the change feed
+    all plan their files here."""
+    from delta_rs_spark.plans.column_mapping import snapshot_physical_of
+
+    adds = list(snapshot.files.values()) if files is None else list(files)
+    if not predicate:
+        return adds
+    return prune_files(
+        adds,
+        predicate,
+        snapshot.partition_columns,
+        _snapshot_col_types(snapshot),
+        snapshot_physical_of(snapshot),
+    )
+
+
+def partition_only_predicate(predicate: str, snapshot) -> bool:
+    """True if every conjunct parses, references only the snapshot's
+    partition columns, and is exactly evaluable in the column's type —
+    the reference's metadata-only fast path test (delete.rs:472-535)."""
     parts = split_conjuncts(predicate)
     conjuncts = parse_conjuncts(predicate)
     if len(parts) != len(conjuncts):
         return False
+    col_types = _snapshot_col_types(snapshot)
     return all(
-        c.col in partition_columns and c.exact_on(col_types) for c in conjuncts
+        c.col in snapshot.partition_columns and c.exact_on(col_types)
+        for c in conjuncts
     )

@@ -1,9 +1,11 @@
 """DeltaTable — versioned table handle (reference: python/deltalake/table.py:157).
 
 Scan path: snapshot file list -> partition pruning + stats skipping
-(plans/skipping.py) -> one ``spark.read.parquet`` over the surviving
-files with the table schema and ``basePath`` so Hive-layout partition
-values are injected as typed columns. Everything downstream (residual
+(``plans.skipping.candidate_files``, the one pruning entry, keyed on the
+snapshot) -> one ``spark.read.parquet`` over the surviving files with
+the table schema and ``basePath`` so Hive-layout partition values are
+injected as typed columns. ``read_snapshot_df`` is the one reader of
+table files: data files, and change-data files for load_cdf. Everything downstream (residual
 filters, projection, row-group pruning) is Catalyst's job — the same
 split the reference makes between its TableProvider and DataFusion
 (crates/core/src/delta_datafusion/table_provider/next/mod.rs:711-814).
@@ -30,7 +32,7 @@ from delta_rs_spark.operators.util import (
     resolve_add_path,
     spark_file_uri,
 )
-from delta_rs_spark.plans.skipping import col_types_from_schema_json, prune_files
+from delta_rs_spark.plans.skipping import candidate_files
 
 PartitionFilter = tuple[str, str, Any]  # DNF tuples like the reference (table.py:74-78)
 
@@ -217,15 +219,7 @@ def read_snapshot_df(
     schema = T.StructType.fromJson(json.loads(snapshot.schema_string))
     mapped = cmap.mapping_mode(snapshot.configuration) in ("name", "id")
     phys_of = cmap.logical_to_physical(schema) if mapped else None
-    adds = files if files is not None else list(snapshot.files.values())
-    if predicate:
-        adds = prune_files(
-            adds,
-            predicate,
-            snapshot.partition_columns,
-            col_types_from_schema_json(json.loads(snapshot.schema_string)),
-            phys_of,
-        )
+    adds = candidate_files(snapshot, predicate, files)
     plain = [a for a in adds if not a.deletion_vector]
     dv_adds = [a for a in adds if a.deletion_vector]
     read_schema = cmap.physical_schema(schema) if mapped else schema

@@ -859,7 +859,8 @@ def write_deltalake(
             # with_replace_where): the rule gate checked every incoming
             # row against the predicate; existing matching rows go
             # (rewritten, never soft-deleted: the new rows replace them)
-            from delta_rs_spark.operators.delete import candidate_files, plan_mutation
+            from delta_rs_spark.operators.delete import plan_mutation
+            from delta_rs_spark.plans.skipping import candidate_files
 
             removed = plan_mutation(
                 spark,

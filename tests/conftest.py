@@ -15,6 +15,23 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_analytic_pins():
+    """Analytic library functions pin bounded derived frames by design
+    (session.drop_cached_intermediates); release them when each module
+    ends, so a later module's persistent-RDD checks start from zero
+    whatever the test order. A module that never started Spark has
+    nothing to release."""
+    yield
+    from pyspark.sql import SparkSession
+
+    from delta_rs_spark.session import drop_cached_intermediates
+
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        drop_cached_intermediates(spark)
+
+
 @pytest.fixture
 def tmp_table(tmp_path):
     return str(tmp_path / "table")

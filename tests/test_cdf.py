@@ -162,3 +162,55 @@ def test_cdf_partition_predicate_full_commit_pruned(spark, tmp_path):
     t.update({"n": "n + 1"}, predicate="cat = '0'")   # v1 touches cat=0 only
     got = t.load_cdf(starting_version=1, predicate="cat = '1'").collect()
     assert got == []
+
+
+def test_cdf_column_mapped_partition_predicate(spark, tmp_path):
+    """Change-data files of a column-mapped, partitioned table sit in
+    Hive dirs named by the PHYSICAL partition column and hold physical
+    column names; the feed reads them like data files. A partition-scoped
+    feed returns that partition's rows under logical names after every
+    file of the other partition is deleted from disk, and the unscoped
+    feed then fails."""
+    import glob
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from delta_rs_spark.log.snapshot import load_snapshot
+    from delta_rs_spark.plans.column_mapping import logical_to_physical
+
+    path = str(tmp_path / "cdf_mapped")
+    base = spark.range(20).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("cat"), F.lit(0).alias("n")
+    )
+    write_deltalake(
+        path,
+        base.repartition(1),
+        partition_by=["cat"],
+        configuration={**CDF_CONF, "delta.columnMapping.mode": "name"},
+    )
+    t = DeltaTable(path, spark=spark)
+    t.update({"n": "n + 1"}, predicate="id >= 10")  # v1: cdc files in both partitions
+    schema = T.StructType.fromJson(json.loads(load_snapshot(path).schema_string))
+    phys = logical_to_physical(schema)["cat"]
+    assert phys != "cat"
+    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    assert any(f"_change_data{os.sep}{phys}=1{os.sep}" in p for p in files)
+    victims = [p for p in files if f"{os.sep}{phys}=1{os.sep}" not in p]
+    assert any("_change_data" in p for p in victims)
+    for p in victims:
+        os.remove(p)
+
+    feed = t.load_cdf(starting_version=1, predicate="cat = '1'")
+    assert {"id", "cat", "n", "_change_type"} <= set(feed.columns)
+    assert phys not in feed.columns
+    got = sorted((r["_change_type"], r["id"], r["cat"], r["n"]) for r in feed.collect())
+    odd = range(11, 20, 2)
+    assert got == sorted(
+        [("update_preimage", i, "1", 0) for i in odd]
+        + [("update_postimage", i, "1", 1) for i in odd]
+    )
+    with pytest.raises(Exception):
+        t.load_cdf(starting_version=1).collect()

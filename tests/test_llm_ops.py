@@ -23,14 +23,18 @@ SF = "/root/testdata/sf0.001"
 def docs(spark):
     from delta_rs_spark.sources.tpch import load_table
 
-    return load_table(spark, SF, "documents").cache()
+    df = load_table(spark, SF, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
     from delta_rs_spark.sources.tpch import load_table
 
-    return load_table(spark, SF, "embeddings").cache()
+    df = load_table(spark, SF, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_dedup_exact_removes_copies(spark, docs):
@@ -292,6 +296,7 @@ def test_tfidf_top_terms_rank_and_scores(spark, docs):
     # the minimum possible idf so its tfidf <= tf * 1.0 is false only
     # when idf > 1; smoothed idf >= 1 always
     assert out.filter(F.col("tfidf") < F.col("tf")).count() == 0
+    out.unpersist()
 
 
 def test_vocabulary_stats_counts(spark, docs):
@@ -1084,6 +1089,27 @@ def test_hashed_classifier_separates_planted_classes(spark):
         df, F.col("doc_id") < 100, n_buckets=64, n_iter=2
     )
     assert bias == bias2 and w == w2
+
+
+def test_hashed_classifier_first_step_fast_path_matches_window(spark):
+    """The trainer's first step uses p = 0.5 in place of the id-window
+    logit. With an all-zero model the window yields that constant
+    exactly, so the gradients, and the model after one step, match
+    the windowed step bit for bit."""
+    pos = [(i, f"the quick brown fox {i} jumps over the lazy dog") for i in range(12)]
+    neg = [(i + 100, f"zzz qqq vvv {i} kkk xxx www") for i in range(9)]
+    df = spark.createDataFrame(pos + neg + [(200, "")], ["doc_id", "text"])
+    label = F.col("doc_id") < 100
+    fast = X.train_hashed_classifier(df, label, n_buckets=16, n_iter=1, lr=0.7)
+    ydoc = df.select(
+        F.col("doc_id").alias("id"),
+        F.when(label, F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
+    )
+    spy = X.hashed_ngram_features(df, n_buckets=16).join(ydoc, "id")
+    zero = [0.0] * 16
+    windowed = X._hashed_step(spy, X._hashed_residual(0.0, zero), 0.0, zero, 0.7)
+    assert fast == windowed
+    assert fast[0] != 0.0 and any(fast[1])
 
 
 def test_hashed_classifier_empty_doc_bias_only(spark):

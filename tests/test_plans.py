@@ -10,25 +10,13 @@ production run at 1000x the data.
 import io
 from contextlib import redirect_stdout
 
-import pytest
 from pyspark.sql import functions as F
 
 from delta_rs_spark import DeltaTable, write_deltalake
 from delta_rs_spark.queries import registry
-from delta_rs_spark.session import drop_cached_intermediates
 from delta_rs_spark.sources.tpch import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _release_analytic_pins(spark):
-    """The library functions planned here pin bounded derived frames by
-    design (session.drop_cached_intermediates); release them when the
-    module ends, so a later module's persistent-RDD checks start from
-    zero whatever the test order."""
-    yield
-    drop_cached_intermediates(spark)
 
 
 def plan_of(df, mode="formatted") -> str:
