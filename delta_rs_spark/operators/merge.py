@@ -6,11 +6,13 @@ WHEN clauses compiled to a CASE action column :1214-1216,1287-1402;
 python surface python/deltalake/table.py:1403-1851). Execution has three
 phases:
 
-* early filter (merge/filter.rs): one aggregation over the source gives
-  min/max (or the distinct partition values) of the equi-join keys, and
-  the target files are pruned by stats/partitions to the candidates
-  (with not-matched-by-source clauses every file is a target file: those
-  clauses touch unmatched target rows anywhere);
+* early filter (merge/filter.rs): the job that fills the source's pin
+  also observes the source's row count and the min/max of its equi-join
+  keys (a partition key's distinct values take one more pass, over the
+  filled pin), and the target files are pruned by stats/partitions to
+  the candidates (with not-matched-by-source clauses every file is a
+  target file: those clauses touch unmatched target rows anywhere; an
+  empty source without them leaves no candidate);
 * one write pass: target rows of the target files FULL OUTER JOIN the
   source (left outer without not-matched clauses; the source alone, or
   anti-joined to the candidates for insert-only merges, when no target
@@ -36,6 +38,7 @@ import functools
 from dataclasses import dataclass, field, replace
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
 
@@ -298,8 +301,27 @@ class TableMerger:
     _UNION_MAX_COVER = 0.75
     _UNION_MIN_FILES = 8
 
+    def _source_summary(self) -> list[Column]:
+        """The source's row count and, per equi-join pair, the min, max
+        and NULL count of its source column: the aggregates the early
+        filter reads (``__cnt``, ``mn{i}``, ``mx{i}``, ``nn{i}``)."""
+        aggs = [F.count(F.lit(1)).alias("__cnt")]
+        for i, (_tc, sc, _ns) in enumerate(self._equi_join_pairs()):
+            aggs.append(F.min(sc).alias(f"mn{i}"))
+            aggs.append(F.max(sc).alias(f"mx{i}"))
+            aggs.append(F.sum(F.col(sc).isNull().cast("long")).alias(f"nn{i}"))
+        return aggs
+
+    def _summarize(self, source_df: DataFrame) -> dict[str, Any]:
+        """``_source_summary`` in one aggregation pass, for a source
+        whose summary was not observed."""
+        return source_df.agg(*self._source_summary()).first().asDict()
+
     def _strip_target_only_predicate(
-        self, source_df: DataFrame, part_cols: list[str]
+        self,
+        source_df: DataFrame,
+        part_cols: list[str],
+        summary: dict[str, Any] | None = None,
     ) -> str | None:
         """Early-filter construction (reference: merge/filter.rs
         try_construct_early_filter + generalize_filter): for equi-join
@@ -312,64 +334,37 @@ class TableMerger:
           would over-include;
         - non-partition columns get min/max BETWEEN on the file stats.
 
-        Both come from ONE grouped aggregation over the source (group by
-        the partition-pair columns, min/max the stats-pair columns);
-        above _PARTITION_IN_CAP distinct combinations everything falls
-        back to one global min/max pass. Source NULL keys never
-        equi-match, so dropping them from the lists is exact — EXCEPT
-        for ``<=>`` (EqualNullSafe) pairs, where a NULL key matches NULL
-        partitions/stats: those pairs prune only when the source side
-        provably has no NULLs (checked in the same aggregation), else
-        the conjunct is skipped. Only safe when the predicate is a pure
-        conjunction — an OR/NOT branch would make the extracted pairs
-        non-binding and over-prune (skip entirely then)."""
-        static = self._static_target_conjuncts()
+        The bounds come from ``summary`` (``_source_summary``, observed
+        while the source's pin fills; one aggregation pass when not
+        given). The distinct partition values take one grouped pass over
+        the source; above _PARTITION_IN_CAP distinct combinations the
+        partition columns fall back to min/max BETWEEN too. Source NULL
+        keys never equi-match, so dropping them from the lists is exact
+        — EXCEPT for ``<=>`` (EqualNullSafe) pairs, where a NULL key
+        matches NULL partitions/stats: those pairs prune only when the
+        source side provably has no NULLs, else the conjunct is skipped.
+        Only safe when the predicate is a pure conjunction — an OR/NOT
+        branch would make the extracted pairs non-binding and over-prune
+        (skip entirely then)."""
+        conj = self._static_target_conjuncts()
         pairs = self._equi_join_pairs()
-        # stats bounds stash: the interval-union refinement (second
-        # prune stage in execute()) reuses this invocation's min/max
-        # aggregates instead of re-running them as a fresh job
-        self._stats_bounds: dict[str, tuple[str, bool, Any, Any, int]] = {}
-        # source row count, stashed when an aggregation here makes a
-        # complete pass anyway (metrics-only; None = caller counts)
-        self._n_source: int | None = None
-        if not pairs:
-            # static-only filter (reference filter.rs: "return our filter
-            # with static only predicates")
-            return " AND ".join(static) if static else None
+        if summary is None:
+            summary = self._summarize(source_df)
         part_set = set(part_cols)
-        part_pairs = [p for p in pairs if p[0] in part_set]
-        stats_pairs = [p for p in pairs if p[0] not in part_set]
-
-        def _between(tc: str, mns: list, mxs: list, n_null: int, ns: bool) -> str | None:
-            if not mns or not mxs or (ns and n_null):
-                return None
-            return (
-                f"{tc} >= {_sql_literal(min(mns))}"
-                f" AND {tc} <= {_sql_literal(max(mxs))}"
-            )
-
+        part_pairs = [(i, *p) for i, p in enumerate(pairs) if p[0] in part_set]
+        in_listed: set[int] = set()
         if part_pairs:
             cap = self._PARTITION_IN_CAP
-            keys = [
-                F.col(sc).alias(f"p{i}")
-                for i, (_tc, sc, _ns) in enumerate(part_pairs)
-            ]
-            aggs = [F.count(F.lit(1)).alias("__cnt")]
-            for i, (_tc, sc, ns) in enumerate(stats_pairs):
-                aggs.append(F.min(sc).alias(f"mn{i}"))
-                aggs.append(F.max(sc).alias(f"mx{i}"))
-                aggs.append(
-                    F.sum(F.col(sc).isNull().cast("long")).alias(f"nn{i}")
-                )
-            grouped = source_df.groupBy(*keys).agg(*aggs)
-            rows = grouped.limit(cap + 1).collect()
-            if rows and len(rows) <= cap:
-                # the group set is complete, so the per-group counts sum
-                # to the source row count — no separate count job
-                self._n_source = sum(int(r["__cnt"]) for r in rows)
-                conj = list(static)
-                for i, (tc, _sc, ns) in enumerate(part_pairs):
+            rows = (
+                source_df.select(*[F.col(sc).alias(f"p{i}") for i, _tc, sc, _ns in part_pairs])
+                .distinct()
+                .limit(cap + 1)
+                .collect()
+            )
+            if len(rows) <= cap:
+                for i, tc, _sc, ns in part_pairs:
                     raw = {r[f"p{i}"] for r in rows}
+                    in_listed.add(i)
                     if ns and None in raw:
                         continue  # null key matches null partitions: no prune
                     vals = raw - {None}
@@ -380,47 +375,15 @@ class TableMerger:
                             ordered = sorted(vals, key=repr)
                         lits = ", ".join(_sql_literal(v) for v in ordered)
                         conj.append(f"{tc} IN ({lits})")
-                for i, (tc, sc, ns) in enumerate(stats_pairs):
-                    # the group set is complete (<= cap), so min/max over
-                    # the per-group aggregates equals the global bounds
-                    mns = [r[f"mn{i}"] for r in rows if r[f"mn{i}"] is not None]
-                    mxs = [r[f"mx{i}"] for r in rows if r[f"mx{i}"] is not None]
-                    n_null = sum(int(r[f"nn{i}"] or 0) for r in rows)
-                    self._stats_bounds[tc] = (
-                        sc,
-                        ns,
-                        min(mns) if mns else None,
-                        max(mxs) if mxs else None,
-                        n_null,
-                    )
-                    b = _between(tc, mns, mxs, n_null, ns)
-                    if b:
-                        conj.append(b)
-                return " AND ".join(conj) if conj else None
-        aggs = [F.count(F.lit(1)).alias("__cnt")]
-        for i, (_tc, sc, ns) in enumerate(pairs):
-            aggs.append(F.min(sc).alias(f"mn{i}"))
-            aggs.append(F.max(sc).alias(f"mx{i}"))
-            aggs.append(F.sum(F.col(sc).isNull().cast("long")).alias(f"nn{i}"))
-        row = source_df.agg(*aggs).collect()[0]
-        self._n_source = int(row["__cnt"])
-        conj = list(static)
-        for i, (tc, sc, ns) in enumerate(pairs):
-            mn, mx = row[f"mn{i}"], row[f"mx{i}"]
-            self._stats_bounds[tc] = (sc, ns, mn, mx, int(row[f"nn{i}"] or 0))
-            b = _between(
-                tc,
-                [mn] if mn is not None else [],
-                [mx] if mx is not None else [],
-                int(row[f"nn{i}"] or 0),
-                ns,
-            )
-            if b:
-                conj.append(b)
+        for i, (tc, _sc, ns) in enumerate(pairs):
+            mn, mx = summary[f"mn{i}"], summary[f"mx{i}"]
+            if i in in_listed or mn is None or (ns and summary[f"nn{i}"]):
+                continue
+            conj.append(f"{tc} >= {_sql_literal(mn)} AND {tc} <= {_sql_literal(mx)}")
         return " AND ".join(conj) if conj else None
 
     def _interval_union_predicate(
-        self, source_df: DataFrame, part_cols: list[str]
+        self, source_df: DataFrame, part_cols: list[str], summary: dict[str, Any]
     ) -> str | None:
         """Second-stage candidate refinement (r11): the early filter's
         min/max BETWEEN collapses a MULTI-MODAL source key set into one
@@ -445,18 +408,18 @@ class TableMerger:
         # _equi_join_pairs only binds members of the top-level And chain
         # (an OR-rooted predicate yields no pairs), so every pair here
         # is a binding conjunct — same safety argument as the early
-        # filter itself. The min/max bounds come from the stash the
-        # early-filter aggregation already computed this invocation —
-        # only the bucket-occupancy pass is a new job.
+        # filter itself. The min/max bounds come from the source summary
+        # the early filter read — only the bucket-occupancy pass is a
+        # new job.
         part_set = set(part_cols)
-        bounds = getattr(self, "_stats_bounds", {})
         conj: list[str] = []
         B = self._UNION_BUCKETS
-        for tc, (sc, ns, mn, mx, n_null) in bounds.items():
+        for i, (tc, sc, ns) in enumerate(self._equi_join_pairs()):
             if tc in part_set:
                 continue
-            if ns and n_null:
+            if ns and summary[f"nn{i}"]:
                 continue  # NULL-safe pair with source NULLs: no prune
+            mn, mx = summary[f"mn{i}"], summary[f"mx{i}"]
             ok_types = (
                 isinstance(mn, (int, float))
                 and isinstance(mx, (int, float))
@@ -519,19 +482,31 @@ class TableMerger:
         return " AND ".join(conj) if conj else None
 
     def execute(self) -> dict[str, Any]:
-        from delta_rs_spark.writer import _to_spark_df
+        from delta_rs_spark.writer import _to_spark_df, observed_metrics
 
-        # every frame pinned during the merge is released on all paths,
-        # a failed validation included
-        source_df = _to_spark_df(self.source, self.dt.spark).persist()
-        pins = [source_df]
+        # One pass over the source fills its pin and observes the early
+        # filter's bounds and the source row count (reference:
+        # merge/filter.rs aggregates the source it holds in memory). A
+        # source the caller cached is observed over that cache and not
+        # pinned twice. Every frame pinned during the merge is released
+        # on all paths, a failed validation included.
+        raw = _to_spark_df(self.source, self.dt.spark)
+        obs = Observation()
+        observed = raw.observe(obs, *self._source_summary())
+        caller_pinned = raw.storageLevel != StorageLevel.NONE
+        source_df = raw if caller_pinned else observed.persist()
+        pins = [] if caller_pinned else [source_df]
         try:
-            return self._execute(source_df, pins)
+            observed.write.format("noop").mode("overwrite").save()
+            summary = observed_metrics(obs) or self._summarize(source_df)
+            return self._execute(source_df, summary, pins)
         finally:
             for p in pins:
                 p.unpersist()
 
-    def _execute(self, source_df: DataFrame, pins: list[DataFrame]) -> dict[str, Any]:
+    def _execute(
+        self, source_df: DataFrame, summary: dict[str, Any], pins: list[DataFrame]
+    ) -> dict[str, Any]:
         from delta_rs_spark.table import read_snapshot_df
         from delta_rs_spark.writer import (
             assignment_cast,
@@ -615,17 +590,22 @@ class TableMerger:
                         id_plan[f.name] = {"step": step, "explicit": False}
 
         all_adds = list(snapshot.files.values())
-        # num_source_rows (metrics-only) rides the early-filter
-        # aggregation when that makes a complete pass
-        early = self._strip_target_only_predicate(source_df, part_cols)
-        candidates = candidate_files(snapshot, early, all_adds)
+        num_source_rows = int(summary["__cnt"])
+        if num_source_rows or self.not_matched_by_source:
+            early = self._strip_target_only_predicate(source_df, part_cols, summary)
+            candidates = candidate_files(snapshot, early, all_adds)
+            read_whole_table = early is None or bool(self.not_matched_by_source)
+        else:
+            # an empty source matches and inserts nothing: no target
+            # file can hold a row the merge acts on
+            candidates, read_whole_table = [], False
         if len(candidates) > self._UNION_MIN_FILES:
             # the plain early filter left many files — a multi-modal
             # source key set (index maintenance: low-id updates + high-id
             # appends) defeats a single min/max interval; try the
             # interval-union refinement (one extra change-batch-sized
             # pass, only paid here where it can actually save file scans)
-            union_pred = self._interval_union_predicate(source_df, part_cols)
+            union_pred = self._interval_union_predicate(source_df, part_cols, summary)
             if union_pred:
                 candidates = candidate_files(snapshot, union_pred, candidates)
 
@@ -708,7 +688,7 @@ class TableMerger:
         new_adds: list[Add] = []
         cdc_actions: list = []
         has_target = bool(target_adds)
-        if has_target or self.not_matched:
+        if has_target or (self.not_matched and num_source_rows):
             if has_target:
                 # the fp column is bound inside the scan (before any
                 # select/union/alias — hidden metadata columns do not
@@ -940,12 +920,15 @@ class TableMerger:
 
             # the rule gate skips preimage/delete rows
             out, rules_ok = gate_rules(out, write_rules(snapshot))
-            if not part_cols:
-                # the frame leaves a join over the pinned source (and in
-                # DV mode is pinned itself): a cached input keeps its
-                # cache partitioning, which defeats AQE coalescing —
-                # rebalance to size-adaptive output files (guide §6;
-                # partitioned writes repartition by partition value)
+            if not part_cols and (dv_mode or not has_target):
+                # the write reads a pinned frame directly (the source
+                # when no target file is read, DV mode's pinned frame):
+                # a cached input keeps its cache partitioning, which
+                # defeats AQE coalescing — rebalance to size-adaptive
+                # output files (guide §6). Otherwise the barrier
+                # window's hash exchange is the last shuffle before the
+                # write and AQE coalesces it to the same advisory size;
+                # partitioned writes repartition by partition value.
                 out = out.hint("rebalance")
 
             def validate() -> None:
@@ -995,11 +978,6 @@ class TableMerger:
             ]
             actions.extend(removes)
 
-        num_source_rows = self._n_source
-        if num_source_rows is None:
-            # the early filter never made a complete source pass; the
-            # source is cached, so this is a cheap cached count
-            num_source_rows = source_df.count()
         n_updated = sum(tally.get(c, 0) for c in matched_upd_codes)
         metrics = {
             "num_source_rows": num_source_rows,
@@ -1055,11 +1033,7 @@ class TableMerger:
             actions,
             op,
             snapshot.version,
-            scan_txn(
-                snapshot,
-                candidates,
-                read_whole_table=early is None or bool(self.not_matched_by_source),
-            ),
+            scan_txn(snapshot, candidates, read_whole_table=read_whole_table),
             commit_properties=self.commit_properties,
             post_commit=self.post_commithook_properties,
         )

@@ -1,9 +1,10 @@
-"""MERGE internals: num_source_rows rides the early-filter aggregation
-when that pass is complete, and falls back to a cached count otherwise;
-duplicate-match validation and the per-action counts ride the write
-frame's observe(). These tests pin the METRIC VALUES through every
-branch so the fusion can never drift them, and pin that a failed
-validation leaves nothing behind."""
+"""MERGE internals: num_source_rows and the early filter's bounds are
+observed in the one pass that fills the source's pin, whatever the
+join predicate; duplicate-match validation and the per-action counts
+ride the write frame's observe(). These tests pin the METRIC VALUES
+through every branch so the fusion can never drift them, pin that a
+failed validation leaves nothing behind, and pin that the source is
+evaluated once and cached once."""
 
 import pytest
 from conftest import persistent_rdds, table_tree
@@ -59,8 +60,8 @@ def test_source_count_on_partition_join(spark, tmp_path):
 
 
 def test_source_count_fallback_without_equi_pairs(spark, target):
-    # a predicate with no target=source equi pair -> _strip returns
-    # early with no aggregation; the fallback cached count must serve
+    # a predicate with no target=source equi pair: the early filter has
+    # no bounds to read, and the count still comes from the pin's fill
     src = spark.range(3).selectExpr(
         "id + 100 AS id", "id % 4 AS part", "id AS v"
     )
@@ -286,3 +287,67 @@ def test_no_match_merge_inserts_from_source_alone(spark, tmp_path, monkeypatch):
     assert len(calls) == 1, "only the write frame may scan the candidates"
     got = {r["id"]: r["v"] for r in DeltaTable(path, spark=spark).to_spark().collect()}
     assert len(got) == 102 and got[51] == 1 and got[151] == 2
+
+
+def test_nondeterministic_source_is_evaluated_once(spark, tmp_path):
+    """A source whose join key comes from rand(seed): the early filter's
+    bounds, the join and the counts all read the one evaluation the pin
+    holds, so the counts equal what the written rows show."""
+    path = str(tmp_path / "t")
+    # 4 files of even keys in disjoint ranges
+    for lo in range(0, 8000, 2000):
+        write_deltalake(
+            path,
+            spark.range(lo, lo + 2000, 2).selectExpr("id AS k", "0L AS v").coalesce(1),
+            mode="append" if lo else "error",
+        )
+    # unique keys in 1990..4989, about half of them even (present)
+    src = spark.range(600).selectExpr(
+        "1990 + id * 5 + CAST(floor(rand(7) * 5) AS BIGINT) AS k", "-1L AS v"
+    )
+    m = (
+        DeltaTable(path, spark=spark)
+        .merge(src, "t.k = s.k", source_alias="s", target_alias="t")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    rows = DeltaTable(path, spark=spark).to_spark().collect()
+    keys = [r.k for r in rows]
+    assert len(keys) == len(set(keys))
+    written = [r.k for r in rows if r.v == -1]
+    assert m["num_source_rows"] == len(written) == 600
+    assert m["num_target_rows_updated"] == sum(1 for k in written if k % 2 == 0)
+    assert m["num_target_rows_inserted"] == sum(1 for k in written if k % 2)
+    assert len(keys) == 4000 + m["num_target_rows_inserted"]
+    assert persistent_rdds(spark) == 0
+
+
+def test_caller_pinned_source_is_not_pinned_twice(spark, target, monkeypatch):
+    """A source the caller already cached (the index syncs' shape) is
+    read from that cache: MERGE adds no cached copy of its own and
+    leaves the caller's entry for the caller to release."""
+    from pyspark import StorageLevel
+
+    from delta_rs_spark.operators import merge as merge_mod
+    from delta_rs_spark.session import drop_cached_intermediates
+
+    drop_cached_intermediates(spark)
+    at_write = []
+    real = merge_mod.write_mutation
+
+    def spy(df, *args, **kw):
+        at_write.append(persistent_rdds(spark))
+        return real(df, *args, **kw)
+
+    monkeypatch.setattr(merge_mod, "write_mutation", spy)
+    src = spark.range(5, 12).selectExpr("id", "id % 4 AS part", "id * 100 AS v").persist()
+    try:
+        m = _merge(spark, target, src)
+        assert (m["num_source_rows"], m["num_target_rows_updated"]) == (7, 7)
+        assert at_write == [1]
+        assert src.storageLevel != StorageLevel.NONE
+        assert persistent_rdds(spark) == 1
+    finally:
+        src.unpersist()
+    assert persistent_rdds(spark) == 0

@@ -8,11 +8,14 @@ lookup and so run the CDF counts. Each bound
 is the measured count: DELETE and UPDATE find their touched files in
 one job (operators.util.find_touched_files) and write without a
 rebalance, and their deletion-vector tier collects the matched rows'
-(file, row_index) pairs in one job; MERGE has no discovery pass — its
-one write frame gates rewrites per file (the barrier) and validates,
-counts and names the rewritten files through observe(). No operation may leave a pinned
-frame behind. Write rules ride the same write job, so a constrained
-table runs the unconstrained counts."""
+(file, row_index) pairs in one job. MERGE fills its source pin in one
+job that also observes the early filter's bounds and the source row
+count; it has no discovery pass — its one write frame gates rewrites
+per file (the barrier) and validates, counts and names the rewritten
+files through observe() — and its write is rebalanced only where it
+reads a pinned frame directly (no target file, or DV mode). No
+operation may leave a pinned frame behind. Write rules ride the same
+write job, so a constrained table runs the unconstrained counts."""
 
 import duckdb
 import pytest
@@ -27,15 +30,15 @@ _DV = {"delta.enableDeletionVectors": "true"}
 # shape -> (configuration, VARIANT column, partitioned, job bounds for
 # DELETE, UPDATE, upsert MERGE)
 SHAPES = {
-    "cdf": (_CDF, False, False, (2, 2, 8)),
-    "plain": ({}, False, False, (2, 2, 8)),
-    "variant_cdf": (_CDF, True, False, (6, 6, 13)),
-    "variant_cdf_partitioned": (_CDF, True, True, (8, 8, 13)),
-    "dv_cdf": ({**_CDF, **_DV}, False, False, (2, 2, 11)),
-    "dv_plain": (_DV, False, False, (1, 2, 11)),
-    "cdf_partitioned": (_CDF, False, True, (3, 3, 8)),
-    "plain_partitioned": ({}, False, True, (3, 3, 8)),
-    "rt_cdf": ({**_CDF, "delta.enableRowTracking": "true"}, False, False, (2, 2, 8)),
+    "cdf": (_CDF, False, False, (2, 2, 5)),
+    "plain": ({}, False, False, (2, 2, 5)),
+    "variant_cdf": (_CDF, True, False, (6, 6, 10)),
+    "variant_cdf_partitioned": (_CDF, True, True, (8, 8, 11)),
+    "dv_cdf": ({**_CDF, **_DV}, False, False, (2, 2, 9)),
+    "dv_plain": (_DV, False, False, (1, 2, 9)),
+    "cdf_partitioned": (_CDF, False, True, (3, 3, 6)),
+    "plain_partitioned": ({}, False, True, (3, 3, 6)),
+    "rt_cdf": ({**_CDF, "delta.enableRowTracking": "true"}, False, False, (2, 2, 5)),
 }
 
 
@@ -64,9 +67,26 @@ def _table(spark, path, shape="cdf"):
     return DeltaTable(path, spark=spark)
 
 
+def _write_plans(monkeypatch):
+    """The analyzed plan of every frame MERGE hands to its writer."""
+    from delta_rs_spark.operators import merge as merge_mod
+
+    plans = []
+    real = merge_mod.write_mutation
+
+    def spy(df, *args, **kw):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return real(df, *args, **kw)
+
+    monkeypatch.setattr(merge_mod, "write_mutation", spy)
+    return plans
+
+
 @pytest.mark.parametrize("shape", list(SHAPES))
-def test_one_file_upsert_job_count(spark, tmp_path, shape):
+def test_one_file_upsert_job_count(spark, tmp_path, monkeypatch, shape):
+    conf, _, partitioned, _ = SHAPES[shape]
     dt = _table(spark, str(tmp_path / "t"), shape)
+    plans = _write_plans(monkeypatch)
     src = (
         spark.range(2100, 2500)
         .selectExpr(*_columns(shape))
@@ -82,6 +102,81 @@ def test_one_file_upsert_job_count(spark, tmp_path, shape):
     assert (m["num_target_rows_updated"], m["num_target_rows_inserted"]) == (200, 200)
     assert m["num_target_files_removed"] == 1
     assert jobs <= SHAPES[shape][3][2], f"one-file upsert ran {jobs} Spark jobs"
+    assert persistent_rdds(spark) == 0
+    # the write reads the barrier window's exchange, which AQE coalesces;
+    # only DV mode's pinned frame needs the rebalance (partitioned
+    # writes repartition by partition value)
+    (plan,) = plans
+    rebalanced = "RebalancePartitions" in plan
+    assert rebalanced == (_DV.items() <= conf.items() and not partitioned)
+
+
+@pytest.mark.parametrize(
+    "clauses",
+    [("when_not_matched_insert_all",), ("when_matched_update_all", "when_not_matched_insert_all")],
+    ids=["insert_only", "no_candidate_upsert"],
+)
+def test_merge_without_target_files_job_count(spark, tmp_path, monkeypatch, clauses):
+    """Source keys beyond every file's range leave no target file: the
+    write reads the pinned source directly, so it keeps the rebalance
+    that coalesces the cache's partitions into one file."""
+    dt = _table(spark, str(tmp_path / "t"))
+    plans = _write_plans(monkeypatch)
+    src = spark.range(9000, 9400).selectExpr("id AS k", "-1L AS v")
+
+    def merge():
+        b = dt.merge(src, "t.k = s.k", source_alias="s", target_alias="t")
+        for c in clauses:
+            b = getattr(b, c)()
+        return b.execute()
+
+    m, jobs = spark_jobs(spark, merge)
+    assert (m["num_target_rows_inserted"], m["num_target_files_scanned"]) == (400, 0)
+    assert m["num_target_files_added"] == 1
+    assert jobs <= 3, f"400-row merge without target files ran {jobs} Spark jobs"
+    (plan,) = plans
+    assert "RebalancePartitions" in plan
+    assert persistent_rdds(spark) == 0
+
+
+@pytest.mark.parametrize("shape", ["cdf", "dv_plain"])
+def test_empty_source_merge_scans_no_file(spark, tmp_path, shape):
+    """An empty source matches and inserts nothing, so MERGE reads no
+    target file and writes nothing; it still commits a MERGE version
+    with all-zero row counts."""
+    path = str(tmp_path / "t")
+    dt = _table(spark, path, shape)
+    before = set(dt.files())
+    src = spark.range(0).selectExpr("id AS k", "-1L AS v")
+    m, jobs = spark_jobs(
+        spark,
+        lambda: dt.merge(src, "t.k = s.k", source_alias="s", target_alias="t")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute(),
+    )
+    assert jobs <= 1, f"empty-source MERGE ran {jobs} Spark jobs"
+    expected = {
+        "num_source_rows": 0,
+        "num_target_rows_inserted": 0,
+        "num_target_rows_updated": 0,
+        "num_target_rows_deleted": 0,
+        "num_target_rows_copied": 0,
+        "num_target_rows_updated_by_source_miss": 0,
+        "num_target_files_added": 0,
+        "num_target_files_removed": 0,
+        "num_target_files_scanned": 0,
+        "num_target_files_skipped_during_scan": 4,
+        "num_output_rows": 0,
+    }
+    if shape == "dv_plain":
+        expected["num_deletion_vectors_added"] = 0
+    assert m == expected
+    dt = DeltaTable(path, spark=spark)
+    assert dt.version() == 4 and set(dt.files()) == before
+    entry = dt.history()[0]
+    assert (entry["version"], entry["operation"]) == (4, "MERGE")
+    assert entry["operationMetrics"] == expected
     assert persistent_rdds(spark) == 0
 
 
@@ -129,7 +224,7 @@ def test_constrained_table_job_counts(spark, tmp_path):
         .execute(),
     )
     assert (m["num_target_rows_updated"], m["num_target_rows_inserted"]) == (200, 200)
-    assert jobs <= 8, f"one-file upsert ran {jobs} Spark jobs"
+    assert jobs <= 5, f"one-file upsert ran {jobs} Spark jobs"
 
 
 def test_barrier_keeps_candidate_without_match(spark, tmp_path):
