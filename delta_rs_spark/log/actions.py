@@ -177,6 +177,19 @@ class Add:
         s = self.stats_dict()
         return None if s is None else s.get("numRecords")
 
+    def remove(self, ts: int, data_change: bool = True) -> Remove:
+        """The tombstone of this file: it carries the deletion vector,
+        since file identity under deletionVectors is the (path, dvId)
+        pair (PROTOCOL.md), and vacuum retires the DV sidecar with it."""
+        return Remove(
+            self.path,
+            ts,
+            data_change,
+            self.partition_values,
+            self.size,
+            deletion_vector=self.deletion_vector,
+        )
+
 
 @dataclass
 class Remove:

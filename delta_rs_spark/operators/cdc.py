@@ -8,9 +8,10 @@ tracker (operations/cdc.rs:14-51): when
 ``delta.enableChangeDataFeed=true`` the change rows land as parquet
 under ``_change_data/`` and AddCDCFile actions commit alongside the
 data actions. ``write_mutation`` alone picks the writer: the fused
-one-job data+CDC writer, the two-write fallback for VARIANT tables, or
-a data-only write. Readers synthesize insert/delete rows for plain
-append / overwrite commits (see operators/cdf.py).
+one-job data+CDC writer for every table with CDF, else a data-only
+write. Both stage their files and move them in with
+``writer.move_staged``. Readers synthesize insert/delete rows for
+plain append / overwrite commits (see operators/cdf.py).
 """
 
 from __future__ import annotations
@@ -62,13 +63,6 @@ def cdf_enabled(snapshot: Snapshot) -> bool:
     )
 
 
-def can_fuse_cdc_write(snapshot: Snapshot) -> bool:
-    """Whether ``write_mutation`` may use the single-job fused data+CDC
-    writer: every table except one with VARIANT columns, which pyarrow
-    cannot write inside the fused writer's tasks."""
-    return '"variant"' not in (snapshot.schema_string or "").lower()
-
-
 def write_mutation(
     df: DataFrame, snapshot: Snapshot, validate=None
 ) -> tuple[list, list[AddCDCFile]]:
@@ -86,39 +80,23 @@ def write_mutation(
     the first write."""
     from delta_rs_spark.writer import write_files
 
-    table_path, part_cols = snapshot.table_path, snapshot.partition_columns
-
-    def write_data(data: DataFrame) -> list:
-        return write_files(
-            data,
-            table_path,
-            part_cols,
-            snapshot.configuration,
-            snapshot.schema_string,
-            validate=validate,
-        )
-
-    ct = F.col(CHANGE_TYPE_COL)
-    if CHANGE_TYPE_COL not in df.columns:
-        return write_data(df), []
-    if not cdf_enabled(snapshot):
-        return write_data(df.filter(is_data_row(ct)).drop(CHANGE_TYPE_COL)), []
-    if can_fuse_cdc_write(snapshot):
-        return write_data_and_change_files(
-            df, table_path, part_cols, snapshot, validate=validate
-        )
-    # VARIANT: two writes read the frame, so it is pinned and both see
-    # one evaluation (identity values included)
-    df = df.persist()
-    try:
-        adds = write_data(df.filter(is_data_row(ct)).drop(CHANGE_TYPE_COL))
-        return adds, write_change_data(df.filter(ct.isin(*_CDC_INCLUDE)), snapshot)
-    finally:
-        df.unpersist(False)
+    if CHANGE_TYPE_COL in df.columns and cdf_enabled(snapshot):
+        return write_data_and_change_files(df, snapshot, validate=validate)
+    if CHANGE_TYPE_COL in df.columns:
+        df = df.filter(is_data_row(F.col(CHANGE_TYPE_COL))).drop(CHANGE_TYPE_COL)
+    adds = write_files(
+        df,
+        snapshot.table_path,
+        snapshot.partition_columns,
+        snapshot.configuration,
+        snapshot.schema_string,
+        validate=validate,
+    )
+    return adds, []
 
 
 def write_data_and_change_files(
-    df, table_path: str, part_cols: list[str], snapshot: Snapshot, validate=None
+    df: DataFrame, snapshot: Snapshot, validate=None
 ) -> tuple[list, list[AddCDCFile]]:
     """ONE Spark job writes a mutation's rewritten data files AND its
     change-data files from a single evaluation of ``df`` (guide §1.2 /
@@ -136,19 +114,26 @@ def write_data_and_change_files(
     file into staging and before any file leaves it; if it raises, the
     staging directory is discarded and the error propagates.
 
-    Returns (data Adds with footer stats, AddCDCFiles). Layout is
-    byte-compatible with write_files + write_change_data: data files in
-    Hive ``k=v`` dirs (partition columns stripped from file contents),
-    CDC files under ``_change_data/`` with ``_change_type`` inside and
-    row-tracking's hidden materialized columns dropped."""
+    Each task writes into Hive ``k=v`` directories under the staging
+    directory's ``d/`` (data) and ``c/`` (change data); the driver moves
+    both trees in with ``writer.move_staged``, so the layout is
+    write_files': data files in ``k=v`` dirs (partition columns
+    stripped from file contents), CDC files under ``_change_data/``
+    with ``_change_type`` inside and row-tracking's hidden materialized
+    columns dropped. VARIANT columns reach the tasks as
+    ``struct<value, metadata>`` binaries, which Spark reads back as
+    VARIANT.
+
+    Returns (data Adds with footer stats, AddCDCFiles)."""
     import json as _json
 
     from pyspark.sql import types as T
 
     from delta_rs_spark.plans import column_mapping as cmap
     from delta_rs_spark.plans.row_tracking import materialized_names
-    from delta_rs_spark.writer import _encode_partition_value, data_file_adds
+    from delta_rs_spark.writer import _encode_partition_value, data_file_adds, move_staged
 
+    table_path, part_cols = snapshot.table_path, snapshot.partition_columns
     cfg = snapshot.configuration
     schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
     hidden = [c for c in df.columns if c in materialized_names(cfg)]
@@ -163,10 +148,9 @@ def write_data_and_change_files(
     work = df
     if part_cols:
         # co-locate each partition's rows into few tasks (same map-side
-        # file-count control as write_files) and carry the DIRECTORY
-        # string form of every partition value alongside the row — the
-        # Delta serialization of a partition value is its SQL string
-        # cast, which Spark's k=v readers parse back
+        # file-count control as write_files) and carry the string form
+        # of every partition value alongside the row: the Delta
+        # serialization of a partition value is its SQL string cast
         pv_names = [f"__pv_{i}" for i in range(len(part_cols))]
         work = df.repartition(*[F.col(f"`{c}`") for c in part_cols]).select(
             "*",
@@ -177,182 +161,75 @@ def write_data_and_change_files(
         )
 
     stage = os.path.join(table_path, f"_staging_fused_{uuid.uuid4().hex}")
-    ct_col = CHANGE_TYPE_COL
-    data_drop = list(pv_names) + list(part_cols) + [ct_col]
-    cdc_drop = list(pv_names) + list(part_cols) + list(hidden)
-    n_parts = len(part_cols)
-    cdc_include = _CDC_INCLUDE
+    data_drop = [*pv_names, *part_cols, CHANGE_TYPE_COL]
+    cdc_drop = [*pv_names, *part_cols, *hidden]
 
     def _task(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        writers: dict = {}  # (kind, pv_tuple) -> (ParquetWriter, path)
+        writers: dict = {}  # (kind, k=v segments) -> ParquetWriter
 
         def _write(kind: str, tbl: "pa.Table") -> None:
-            drop = data_drop if kind == "d" else cdc_drop
-            if n_parts:
-                import pandas as pd
+            drop = [c for c in (data_drop if kind == "d" else cdc_drop) if c in tbl.column_names]
+            if not pv_names:
+                _append((kind,), tbl.drop_columns(drop))
+                return
+            keys = tbl.select(pv_names).to_pandas()
+            groups = keys.groupby(pv_names, dropna=False, sort=False).indices
+            for pv, idx in groups.items():
+                pv = pv if isinstance(pv, tuple) else (pv,)
+                segs = [
+                    f"{c}={_encode_partition_value(None if v is None or v != v else v)}"
+                    for c, v in zip(part_cols, pv)
+                ]
+                _append((kind, *segs), tbl.take(idx).drop_columns(drop))
 
-                kdf = tbl.select(pv_names).to_pandas()
-                grouped = kdf.groupby(pv_names, dropna=False, sort=False)
-                for pv_key, idx in grouped.indices.items():
-                    if n_parts == 1:
-                        pv_key = (pv_key,)
-                    pv = tuple(
-                        None if (v is None or v != v) else str(v)
-                        for v in pv_key
-                    )
-                    piece = tbl.take(idx).drop_columns(
-                        [c for c in drop if c in tbl.column_names]
-                    )
-                    _append(kind, pv, piece)
-            else:
-                _append(
-                    kind,
-                    (),
-                    tbl.drop_columns([c for c in drop if c in tbl.column_names]),
-                )
-
-        def _append(kind: str, pv: tuple, piece: "pa.Table") -> None:
+        def _append(segs: tuple, piece: "pa.Table") -> None:
             if piece.num_rows == 0:
                 return
-            key = (kind, pv)
-            ent = writers.get(key)
-            if ent is None:
-                fn = os.path.join(
-                    stage, f"{kind}-{uuid.uuid4().hex}.snappy.parquet"
-                )
-                ent = (
-                    pq.ParquetWriter(fn, piece.schema, compression="snappy"),
-                    fn,
-                )
-                writers[key] = ent
-            ent[0].write_table(piece)
+            w = writers.get(segs)
+            if w is None:
+                # directories below the driver's stage only: a task that
+                # outlives a failed job must not recreate a removed stage
+                d = stage
+                for seg in segs:
+                    d = os.path.join(d, seg)
+                    try:
+                        os.mkdir(d)
+                    except FileExistsError:
+                        pass
+                fn = os.path.join(d, f"{uuid.uuid4().hex}.snappy.parquet")
+                w = writers[segs] = pq.ParquetWriter(fn, piece.schema, compression="snappy")
+            w.write_table(piece)
 
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
-            ct = tbl[ct_col]
+            ct = tbl[CHANGE_TYPE_COL]
             # is_in yields null for a NULL tag: no change row
-            cdc_mask = pc.fill_null(
-                pc.is_in(ct, value_set=pa.array(cdc_include)), False
-            )
+            cdc_mask = pc.fill_null(pc.is_in(ct, value_set=pa.array(_CDC_INCLUDE)), False)
             _write("d", tbl.filter(is_data_row(ct)))
             _write("c", tbl.filter(cdc_mask))
-
-        out_kind, out_path, out_pv = [], [], []
-        for (kind, pv), (w, fn) in writers.items():
+        for w in writers.values():
             w.close()
-            out_kind.append(kind)
-            out_path.append(fn)
-            out_pv.append(_json.dumps(list(pv)))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_kind, type=pa.string()),
-                pa.array(out_path, type=pa.string()),
-                pa.array(out_pv, type=pa.string()),
-            ],
-            names=["kind", "path", "pv"],
-        )
+        yield from ()
 
-    cdc_out_dir = os.path.join(table_path, CDC_DIR)
-    moved_data: list[tuple[str, str, dict[str, str | None]]] = []
-    cdc_actions: list[AddCDCFile] = []
-    os.makedirs(stage, exist_ok=True)
+    os.makedirs(stage)
     try:
-        file_rows = work.mapInArrow(
-            _task, "kind string, path string, pv string"
-        ).collect()
+        work.mapInArrow(_task, "n long").collect()
         if validate is not None:
             validate()
-        for r in file_rows:
-            pv_list = _json.loads(r["pv"])
-            part_vals = dict(zip(part_cols, pv_list))
-            seg = [
-                f"{c}={_encode_partition_value(v)}"
-                for c, v in zip(part_cols, pv_list)
-            ]
-            if r["kind"] == "d":
-                dst_dir = os.path.join(table_path, *seg) if seg else table_path
-                os.makedirs(dst_dir, exist_ok=True)
-                dst = os.path.join(
-                    dst_dir, f"part-{uuid.uuid4().hex}.snappy.parquet"
-                )
-                os.rename(r["path"], dst)
-                moved_data.append(
-                    (dst, os.path.relpath(dst, table_path), part_vals)
-                )
-            else:
-                dst_dir = os.path.join(cdc_out_dir, *seg) if seg else cdc_out_dir
-                os.makedirs(dst_dir, exist_ok=True)
-                dst = os.path.join(
-                    dst_dir, f"cdc-{uuid.uuid4().hex}.snappy.parquet"
-                )
-                os.rename(r["path"], dst)
-                cdc_actions.append(
-                    AddCDCFile(
-                        path=os.path.relpath(dst, table_path).replace(
-                            os.sep, "/"
-                        ),
-                        size=os.path.getsize(dst),
-                        partition_values=part_vals,
-                    )
-                )
+        moved = move_staged(os.path.join(stage, "d"), table_path, "part")
+        moved_cdc = move_staged(os.path.join(stage, "c"), table_path, "cdc", CDC_DIR)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-    adds = data_file_adds(df.sparkSession, moved_data, cfg, snapshot.schema_string)
-    return adds, cdc_actions
-
-
-def write_change_data(change_df: DataFrame, snapshot: Snapshot) -> list[AddCDCFile]:
-    """Write change rows (carrying _change_type) under _change_data/
-    with Spark's writer, in the fused writer's layout: PHYSICAL column
-    names on column-mapped tables (Delta protocol: change data follows
-    the table's column mapping; load_cdf renames back); on partitioned
-    tables one ``k=v`` directory per partition, the partition columns
-    kept out of the files, their values on the AddCDCFile action's
-    partitionValues, which load_cdf prunes by (reference
-    load_cdf.rs:357-359); row tracking's hidden columns dropped."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from delta_rs_spark.plans import column_mapping as cmap
-    from delta_rs_spark.plans.row_tracking import materialized_names
-    from delta_rs_spark.writer import move_staged
-
-    cfg = snapshot.configuration
-    # row tracking's hidden materialized columns ride rewrite frames;
-    # change consumers never see physical row ids. The names come from
-    # the table CONFIGURATION — a foreign writer may not follow our
-    # '_row-id-col-' prefix convention.
-    hidden = [c for c in change_df.columns if c in materialized_names(cfg)]
-    if hidden:
-        change_df = change_df.drop(*hidden)
-    part_cols = snapshot.partition_columns
-    if cmap.mapping_mode(cfg) != "none":
-        schema = T.StructType.fromJson(_json.loads(snapshot.schema_string))
-        change_df = cmap.rename_to_physical(
-            change_df, schema, extra_cols=[CHANGE_TYPE_COL]
-        )
-        phys = cmap.logical_to_physical(schema)
-        part_cols = [phys.get(c, c) for c in part_cols]
-    stage = os.path.join(snapshot.table_path, f"_staging_cdc_{uuid.uuid4().hex}")
-    w = change_df.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    try:
-        w.parquet(stage)
-        moved = move_staged(stage, snapshot.table_path, "cdc", CDC_DIR)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return [
+    adds = data_file_adds(df.sparkSession, moved, cfg, snapshot.schema_string)
+    return adds, [
         AddCDCFile(
             path=rel.replace(os.sep, "/"),
             size=os.path.getsize(dst),
             partition_values=part_vals,
         )
-        for dst, rel, part_vals in moved
+        for dst, rel, part_vals in moved_cdc
     ]

@@ -235,7 +235,7 @@ def clone_table(
         # refresh: keep the target's identity + history; tombstone every
         # current file (DV descriptor included — (path, dvId) is the
         # file identity) and never downgrade the protocol
-        from delta_rs_spark.log.actions import Remove, now_ms
+        from delta_rs_spark.log.actions import now_ms
 
         meta.id = dst_snap.metadata.id
         old_proto = dst_snap.protocol or Protocol()
@@ -260,17 +260,7 @@ def clone_table(
             ),
         )
         ts = now_ms()
-        removes = [
-            Remove(
-                a.path,
-                ts,
-                True,
-                a.partition_values,
-                a.size,
-                deletion_vector=a.deletion_vector,
-            )
-            for a in dst_snap.files.values()
-        ]
+        removes = [a.remove(ts) for a in dst_snap.files.values()]
         read_version = dst_snap.version
     op = CommitInfo(
         "CLONE",

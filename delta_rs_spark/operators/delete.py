@@ -74,13 +74,6 @@ def _live_rows(adds: list[Add]) -> int:
     )
 
 
-def _removes(adds: list[Add], ts: int) -> list[Remove]:
-    return [
-        Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
-        for a in adds
-    ]
-
-
 @dataclass
 class Mutation:
     """A planned predicate mutation: its actions, not yet committed."""
@@ -134,7 +127,7 @@ def plan_mutation(
         not predicate
         or partition_only_predicate(predicate, snapshot)
     ):
-        return Mutation(removes=_removes(candidates, ts), n_matched=_live_rows(candidates))
+        return Mutation(removes=[a.remove(ts) for a in candidates], n_matched=_live_rows(candidates))
     if deletion_vectors is None:
         deletion_vectors = dv_write_enabled(snapshot)
     if not candidates:
@@ -152,7 +145,7 @@ def plan_mutation(
         )
         data_adds, change_files = _write_rows(frame, cond, snapshot, assign, rules)
         return Mutation(
-            removes=_removes(touched_adds, ts),
+            removes=[a.remove(ts) for a in touched_adds],
             data_adds=data_adds,
             change_files=change_files,
             n_matched=n_matched,
@@ -295,16 +288,7 @@ def dv_mark_rows(
         old_rows = load_dv_row_indexes(table_path, old_dv) if old_dv else []
         all_rows = sorted(set(old_rows) | set(new_rows))
         live = (a.num_records() or 0) - len(all_rows)
-        removes.append(
-            Remove(
-                a.path,
-                ts,
-                True,
-                a.partition_values,
-                a.size,
-                deletion_vector=old_dv,
-            )
-        )
+        removes.append(a.remove(ts))
         if live <= 0 and a.num_records() is not None:
             continue  # fully dead: plain remove, no re-add
         data = encode_bitmap_array(all_rows)

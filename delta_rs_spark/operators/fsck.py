@@ -11,7 +11,7 @@ from typing import Any
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import CommitInfo, Remove, now_ms
+from delta_rs_spark.log.actions import CommitInfo, now_ms
 from delta_rs_spark.log.commit import TransactionInfo
 from delta_rs_spark.operators.util import resolve_add_path
 
@@ -48,13 +48,7 @@ def repair(table_path: str, dry_run: bool = False) -> dict[str, Any]:
     }
     if dry_run or not missing:
         return result
-    removes = [
-        Remove(
-            a.path, ts, True, a.partition_values, a.size,
-            deletion_vector=a.deletion_vector,
-        )
-        for a in missing
-    ]
+    removes = [a.remove(ts) for a in missing]
     op = CommitInfo(
         "FSCK",
         {"dryRun": dry_run},

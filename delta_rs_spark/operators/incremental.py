@@ -250,52 +250,37 @@ def maintain_aggregate(
         | (F.col("d_nvals") != 0)
         | (F.col("d_total").isNotNull() & (F.col("d_total") != 0))
     )
-    # MERGE scans its source several times (metrics, partition
-    # IN-list, apply); without a persist each scan
-    # re-runs the whole delta derivation — the CDF range read (or the
-    # diff leg's two snapshot reads + churned-file union) plus the
-    # groupBy. The deltas frame is per-GROUP-sized (bounded by the
-    # change batch), so pinning it is the same O(churn) envelope the
-    # merge itself carries (the index_sync persist rationale, r10).
-    deltas = deltas.persist()
     pred = " AND ".join(f"t.`{g}` <=> s.`{g}`" for g in group_cols)
     inserts = {g: f"s.`{g}`" for g in group_cols}
     inserts.update(
         {"total": "s.d_total", "n_rows": "s.d_n", "n_vals": "s.d_nvals"}
     )
-    try:
-        m = (
-            agg.merge(
-                deltas,
-                pred,
-                source_alias="s",
-                target_alias="t",
-                commit_properties=CommitProperties(
-                    app_transactions=[(app_id, latest)]
-                ),
-            )
-            .when_matched_delete(predicate="t.n_rows + s.d_n = 0")
-            .when_matched_update(
-                {
-                    # sum-over-group semantics: NULL iff zero non-null
-                    # values remain; else NULLs are additive identities.
-                    "total": (
-                        "CASE WHEN t.n_vals + s.d_nvals = 0 THEN NULL "
-                        "ELSE coalesce(t.total, 0) + coalesce(s.d_total, 0) END"
-                    ),
-                    "n_rows": "t.n_rows + s.d_n",
-                    "n_vals": "t.n_vals + s.d_nvals",
-                }
-            )
-            .when_not_matched_insert(inserts, predicate="s.d_n > 0")
-            .execute()
+    m = (
+        agg.merge(
+            deltas,
+            pred,
+            source_alias="s",
+            target_alias="t",
+            commit_properties=CommitProperties(
+                app_transactions=[(app_id, latest)]
+            ),
         )
-    finally:
-        # a merge failure here is RETRYABLE by design (e.g. a concurrent
-        # writer hit the aggregate table and OCC raised); without the
-        # finally the cached frame would leak for the session's life
-        # (r11 ADVICE)
-        deltas.unpersist(False)
+        .when_matched_delete(predicate="t.n_rows + s.d_n = 0")
+        .when_matched_update(
+            {
+                # sum-over-group semantics: NULL iff zero non-null
+                # values remain; else NULLs are additive identities.
+                "total": (
+                    "CASE WHEN t.n_vals + s.d_nvals = 0 THEN NULL "
+                    "ELSE coalesce(t.total, 0) + coalesce(s.d_total, 0) END"
+                ),
+                "n_rows": "t.n_rows + s.d_n",
+                "n_vals": "t.n_vals + s.d_nvals",
+            }
+        )
+        .when_not_matched_insert(inserts, predicate="s.d_n > 0")
+        .execute()
+    )
     return {
         "initialized": False,
         "applied_through": latest,

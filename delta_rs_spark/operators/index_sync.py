@@ -194,37 +194,21 @@ def sync_fingerprint_index(
         fingerprint(text_col).alias("fp"),
         F.col(_CT).alias("__act"),
     )
-    # MERGE scans its source several times (early filter, apply,
-    # insert path); re-running this frame per scan
-    # multiplies the whole change derivation — the diff leg's snapshot
-    # reads + two aggs + full-outer join, and (r12) equally the CDF
-    # leg's range read + final-state window + per-row fingerprint md5.
-    # Persist the change-batch-sized result (O(churn), the same bound
-    # the merge itself carries) and release it after the apply.
-    finals = finals.persist()
-    try:
-        m = (
-            idx.merge(
-                finals,
-                "t.id <=> s.id",
-                source_alias="s",
-                target_alias="t",
-                commit_properties=CommitProperties(
-                    app_transactions=[(app_id, latest)]
-                ),
-            )
-            .when_matched_delete(predicate="s.__act = 'delete'")
-            .when_matched_update({"fp": "s.fp"})
-            .when_not_matched_insert(
-                {"id": "s.id", "fp": "s.fp"}, predicate="s.__act != 'delete'"
-            )
-            .execute()
+    m = (
+        idx.merge(
+            finals,
+            "t.id <=> s.id",
+            source_alias="s",
+            target_alias="t",
+            commit_properties=CommitProperties(app_transactions=[(app_id, latest)]),
         )
-    finally:
-        # unpersist even when the merge raises: an OCC conflict here is
-        # retryable and must not leak the cached frame (r11 ADVICE on
-        # the incremental-agg twin of this pattern)
-        finals.unpersist(False)
+        .when_matched_delete(predicate="s.__act = 'delete'")
+        .when_matched_update({"fp": "s.fp"})
+        .when_not_matched_insert(
+            {"id": "s.id", "fp": "s.fp"}, predicate="s.__act != 'delete'"
+        )
+        .execute()
+    )
     return {
         "initialized": False,
         "applied_through": latest,
@@ -313,8 +297,8 @@ def sync_band_index(
         )
         finals = _final_states(changes, id_col)
     else:
-        # persist: the sig/sigless/delete branches below and the MERGE's
-        # own multi-scan each re-evaluate this frame (see fp sync)
+        # persist: the sig/sigless/delete branches below each
+        # re-evaluate this frame
         finals = _diff_final_states(
             spark, source_path, last, latest, id_col, text_col
         ).persist()
@@ -349,15 +333,10 @@ def sync_band_index(
             F.lit("delete").alias("__act"),
         )
     )
-    # persist the BANDED source frame (r12, both legs — the ivf sync's
-    # rationale): every MERGE scan would otherwise re-run the MinHash
-    # signature computation (num_perm md5 lanes per doc) on top of the
-    # change derivation. O(churn x bands)-sized, released in finally.
-    src_frame = upserts.unionByName(dels).persist()
     try:
         m = (
             idx.merge(
-                src_frame,
+                upserts.unionByName(dels),
                 "t.id <=> s.id AND t.band <=> s.band",
                 source_alias="s",
                 target_alias="t",
@@ -374,7 +353,6 @@ def sync_band_index(
             .execute()
         )
     finally:
-        src_frame.unpersist(False)
         if resolved == "diff":
             finals.unpersist(False)
     return {
@@ -608,34 +586,22 @@ def sync_ivf_index(
         F.lit(None).cast("int").alias("list"),
         F.lit("delete").alias("__act"),
     )
-    # persist the ASSIGNED source frame on BOTH legs (unlike the fp/band
-    # syncs, which persist only the diff reconstruction): MERGE scans
-    # its source several times, and here every scan would re-run the
-    # centroid-assignment pandas UDF over the change batch on top of
-    # the CDF range read — measured 5.4s -> 2.5s at 1k changes.
-    # O(churn)-sized, released in the finally.
-    src_frame = live.unionByName(dels).persist()
-    try:
-        m = (
-            idx.merge(
-                src_frame,
-                "t.id <=> s.id",
-                source_alias="s",
-                target_alias="t",
-                commit_properties=CommitProperties(
-                    app_transactions=[(app_id, latest)]
-                ),
-            )
-            .when_matched_delete(predicate="s.__act = 'delete'")
-            .when_matched_update({"vec": "s.vec", "list": "s.list"})
-            .when_not_matched_insert(
-                {"id": "s.id", "vec": "s.vec", "list": "s.list"},
-                predicate="s.__act != 'delete'",
-            )
-            .execute()
+    m = (
+        idx.merge(
+            live.unionByName(dels),
+            "t.id <=> s.id",
+            source_alias="s",
+            target_alias="t",
+            commit_properties=CommitProperties(app_transactions=[(app_id, latest)]),
         )
-    finally:
-        src_frame.unpersist(False)
+        .when_matched_delete(predicate="s.__act = 'delete'")
+        .when_matched_update({"vec": "s.vec", "list": "s.list"})
+        .when_not_matched_insert(
+            {"id": "s.id", "vec": "s.vec", "list": "s.list"},
+            predicate="s.__act != 'delete'",
+        )
+        .execute()
+    )
     out = _result(False, int(m["num_source_rows"]))
     out["metrics"] = m
     return out

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
+from delta_rs_spark.log.actions import Add, CommitInfo, now_ms
 from delta_rs_spark.log.commit import DeltaError
 from delta_rs_spark.operators.cdc import CHANGE_TYPE_COL, cdf_enabled, write_mutation
 from delta_rs_spark.operators.util import add_paths_of
@@ -971,11 +971,7 @@ class TableMerger:
             actions.extend(dv_readds)
         else:
             rewritten = set(add_paths_of(table_path, target_adds, touched_fps))
-            removes = [
-                Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
-                for a in target_adds
-                if a.path in rewritten
-            ]
+            removes = [a.remove(ts) for a in target_adds if a.path in rewritten]
             actions.extend(removes)
 
         n_updated = sum(tally.get(c, 0) for c in matched_upd_codes)

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import CommitInfo, Remove, now_ms
+from delta_rs_spark.log.actions import CommitInfo, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.plans.skipping import candidate_files
 
@@ -111,13 +111,7 @@ class TableOptimizer:
             for a in new_adds:
                 a.data_change = False
             ts = now_ms()
-            removes = [
-                Remove(
-                    a.path, ts, False, a.partition_values, a.size,
-                    deletion_vector=a.deletion_vector,
-                )
-                for a in files
-            ]
+            removes = [a.remove(ts, data_change=False) for a in files]
             return new_adds, removes
 
         def commit_batch(new_adds: list, removes: list, read_version: int) -> int:
@@ -228,13 +222,7 @@ class TableOptimizer:
         ts = now_ms()
         for a in new_adds:
             a.data_change = False
-        removes = [
-            Remove(
-                a.path, ts, False, a.partition_values, a.size,
-                deletion_vector=a.deletion_vector,
-            )
-            for a in targets
-        ]
+        removes = [a.remove(ts, data_change=False) for a in targets]
         metrics["numFilesAdded"] = len(new_adds)
         metrics["numFilesRemoved"] = len(removes)
         op = CommitInfo(
@@ -447,13 +435,7 @@ class TableOptimizer:
                 # clustering OPTIMIZE outputs carry the provider
                 a.clustering_provider = _provider
         ts = now_ms()
-        removes = [
-            Remove(
-                a.path, ts, False, a.partition_values, a.size,
-                deletion_vector=a.deletion_vector,
-            )
-            for a in adds
-        ]
+        removes = [a.remove(ts, data_change=False) for a in adds]
         metrics = {
             "numFilesAdded": len(new_adds),
             "numFilesRemoved": len(removes),

@@ -16,7 +16,7 @@ from typing import Any
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import Add, CommitInfo, Remove, now_ms
+from delta_rs_spark.log.actions import CommitInfo, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.operators.util import resolve_add_path
 
@@ -65,12 +65,7 @@ def restore(
             continue
         if cur is None or cur.deletion_vector != add.deletion_vector:
             if cur is not None:
-                removes.append(
-                    Remove(
-                        path, ts, True, cur.partition_values, cur.size,
-                        deletion_vector=cur.deletion_vector,
-                    )
-                )
+                removes.append(cur.remove(ts))
             add.data_change = True
             re_adds.append(add)
             restored += 1
@@ -79,12 +74,7 @@ def restore(
         if path not in old.files:
             # carry the current DV descriptor so vacuum's dv_tombstoned
             # reclamation can retire the sidecar with the tombstone
-            removes.append(
-                Remove(
-                    path, ts, True, add.partition_values, add.size,
-                    deletion_vector=add.deletion_vector,
-                )
-            )
+            removes.append(add.remove(ts))
             removed += 1
     # removes first: same-path tombstone + re-add pairs replay in order
     actions: list = removes + re_adds

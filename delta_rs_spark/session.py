@@ -97,8 +97,11 @@ def drop_cached_intermediates(spark: SparkSession) -> int:
     composing many analytic queries accumulates the plan-participating
     ones. Call this between queries once their results are consumed
     (bench.py does exactly this before each timed sample). Returns the
-    number of RDDs released."""
+    number of RDDs released. The CacheManager is cleared too: an entry
+    left behind would make a later frame with the same plan report,
+    and rebuild, the pin."""
     it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
+    spark.catalog.clearCache()
     n = 0
     while it.hasNext():
         it.next().getValue().unpersist(False)

@@ -458,7 +458,7 @@ class DeltaTable:
         ``dt.optimize.cluster()`` Hilbert-clusters by them. Mutually
         exclusive with ``partition_by``."""
         from delta_rs_spark.log import commit as commit_mod
-        from delta_rs_spark.log.actions import Remove, now_ms
+        from delta_rs_spark.log.actions import now_ms
         from delta_rs_spark.log.commit import TransactionInfo
         from delta_rs_spark.schema import Schema as MirrorSchema
         from delta_rs_spark.schema import StructType as MirrorStruct
@@ -483,10 +483,7 @@ class DeltaTable:
             prev = load_snapshot(path)
             read_version = prev.version
             ts = now_ms()
-            actions.extend(
-                Remove(a.path, ts, True, a.partition_values, a.size, deletion_vector=a.deletion_vector)
-                for a in prev.files.values()
-            )
+            actions.extend(a.remove(ts) for a in prev.files.values())
         os.makedirs(path, exist_ok=True)
         # column mapping on create: assign ids + physical names
         # (delta-spark behavior); protocol features derive from
@@ -857,7 +854,7 @@ class DeltaTable:
         modification_time/data_change/partition_values/stats. Returns
         the committed version."""
         from delta_rs_spark.log import commit as commit_mod
-        from delta_rs_spark.log.actions import Remove, now_ms
+        from delta_rs_spark.log.actions import now_ms
         from delta_rs_spark.log.commit import TransactionInfo
         from delta_rs_spark.plans.column_mapping import ensure_writable
 
@@ -887,10 +884,7 @@ class DeltaTable:
         commit_actions: list = list(adds)
         if mode == "overwrite":
             ts = now_ms()
-            commit_actions += [
-                Remove(f.path, ts, True, f.partition_values, f.size)
-                for f in self._snapshot.files.values()
-            ]
+            commit_actions += [a.remove(ts) for a in self._snapshot.files.values()]
         op = CommitInfo(
             operation="WRITE",
             operation_parameters={

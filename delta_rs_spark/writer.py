@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from delta_rs_spark.log import commit as commit_mod
 from delta_rs_spark.log import snapshot as snap_mod
-from delta_rs_spark.log.actions import Add, CommitInfo, Metadata, Remove, Txn, now_ms
+from delta_rs_spark.log.actions import Add, CommitInfo, Metadata, Txn, now_ms
 from delta_rs_spark.log.commit import DeltaError, TransactionInfo
 from delta_rs_spark.log.stats import collect_stats_parallel, stats_config, stats_json
 from delta_rs_spark.operators.util import local_table_path
@@ -874,16 +874,7 @@ def write_deltalake(
             metrics["numDeletedRows"] = removed.n_matched
         else:
             ts = now_ms()
-            for add in snapshot.files.values():
-                actions.append(
-                    Remove(
-                        add.path,
-                        deletion_timestamp=ts,
-                        data_change=True,
-                        partition_values=add.partition_values,
-                        size=add.size,
-                    )
-                )
+            actions.extend(a.remove(ts) for a in snapshot.files.values())
             metrics["numRemovedFiles"] = len(snapshot.files)
 
     if txn_app_id is not None and txn_version is not None:

@@ -971,3 +971,39 @@ def test_restore_remove_carries_dv_descriptor(spark, tmp_path):
     for p in dv_paths:
         assert p in removes
         assert removes[p].deletion_vector is not None
+
+
+@pytest.mark.parametrize("api", ["write_deltalake", "create_write_transaction"])
+def test_overwrite_tombstones_dv_files_with_their_descriptor(spark, tmp_path, api):
+    """An overwrite removes each file at its (path, deletion vector)
+    identity: the Remove of a file that carries a DV carries that DV."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    write_deltalake(
+        path,
+        spark.range(0, 100, numPartitions=2).selectExpr("id", "id * 2 AS v"),
+        configuration={"delta.enableDeletionVectors": "true"},
+    )
+    dt = DeltaTable(path)
+    dt.delete("id % 10 = 0")
+    live = snap_mod.load_snapshot(path).files
+    assert all(a.deletion_vector for a in live.values())
+    if api == "write_deltalake":
+        write_deltalake(path, spark.range(5).selectExpr("id", "id AS v"), mode="overwrite")
+    else:
+        pq.write_table(pa.table({"id": [7], "v": [7]}), os.path.join(path, "ext.parquet"))
+        dt.refresh()
+        dt.create_write_transaction(
+            [{"path": "ext.parquet", "size": os.path.getsize(os.path.join(path, "ext.parquet"))}],
+            mode="overwrite",
+        )
+    with open(os.path.join(path, "_delta_log", "00000000000000000002.json")) as f:
+        removes = [json.loads(ln)["remove"] for ln in f if '"remove"' in ln]
+    assert {r["path"]: r.get("deletionVector") for r in removes} == {
+        p: a.deletion_vector for p, a in live.items()
+    }
+    assert DeltaTable(path).to_df().count() == (5 if api == "write_deltalake" else 1)

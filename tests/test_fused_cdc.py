@@ -10,7 +10,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_rs_spark import DeltaTable, write_deltalake
-from delta_rs_spark.operators.cdc import can_fuse_cdc_write
+from delta_rs_spark.operators import cdc
+
+
+def _fused_writes(monkeypatch):
+    """One entry per call of the fused data+CDC writer."""
+    calls = []
+    real = cdc.write_data_and_change_files
+
+    def spy(*args, **kw):
+        calls.append(1)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(cdc, "write_data_and_change_files", spy)
+    return calls
 
 
 def _parquet_cols(path):
@@ -119,12 +132,11 @@ def test_fused_merge_upsert_counts_and_cdf(spark, tmp_table):
     assert kinds["update_postimage"] == set(range(15, 20))
 
 
-def test_write_rules_take_the_fused_writer(spark, tmp_table):
+def test_write_rules_take_the_fused_writer(spark, tmp_table, monkeypatch):
     """A CHECK constraint rides the fused writer's job (the rule gate's
     observe()), so a constrained CDF table fuses, stays correct, and a
     violating UPDATE still fails without committing."""
     from delta_rs_spark.log.commit import DeltaError
-    from delta_rs_spark.log.snapshot import load_snapshot
 
     write_deltalake(
         tmp_table,
@@ -133,8 +145,9 @@ def test_write_rules_take_the_fused_writer(spark, tmp_table):
     )
     t = DeltaTable(tmp_table)
     t.alter.add_constraint({"v_nonneg": "v >= 0"})
-    assert can_fuse_cdc_write(load_snapshot(tmp_table))
+    fused = _fused_writes(monkeypatch)
     t.delete("id >= 8")
+    assert len(fused) == 1
     assert {r["id"] for r in t.to_spark().collect()} == set(range(8))
     got = t.load_cdf(starting_version=2, ending_version=2).collect()
     assert {r["id"] for r in got if r["_change_type"] == "delete"} == {8, 9}
@@ -167,13 +180,12 @@ def test_rule_gate_skips_preimage_rows(spark, tmp_table):
     }
 
 
-def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
-    """VARIANT columns are the one case the fused writer cannot serve
-    (pyarrow cannot write them): DELETE, UPDATE and an upsert MERGE on a
-    VARIANT CDF table take the two-write fallback and emit the same
-    table rows and change rows."""
-    from delta_rs_spark.log.snapshot import load_snapshot
-
+def test_variant_cdf_mutations_take_the_fused_writer(spark, tmp_table, monkeypatch):
+    """DELETE, UPDATE and an upsert MERGE on a VARIANT CDF table take
+    the fused writer (its tasks get each VARIANT as a
+    struct<value, metadata> of binaries, which pyarrow writes and Spark
+    reads back as VARIANT) and emit the same table rows and change
+    rows."""
     write_deltalake(
         tmp_table,
         spark.range(0, 10).selectExpr(
@@ -182,7 +194,7 @@ def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
         configuration={"delta.enableChangeDataFeed": "true"},
     )
     t = DeltaTable(tmp_table)
-    assert not can_fuse_cdc_write(load_snapshot(tmp_table))
+    fused = _fused_writes(monkeypatch)
 
     def kinds(version):
         got = {}
@@ -204,6 +216,7 @@ def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
         .execute()
     )
     assert kinds(3) == {"insert": 4, "update_preimage": 3, "update_postimage": 3}
+    assert len(fused) == 3
     t.refresh()
     got = {
         r["id"]: (r["v"], r["k"])
@@ -216,12 +229,11 @@ def test_variant_cdf_mutations_take_the_two_write_path(spark, tmp_table):
 
 
 def test_change_only_write_keeps_partition_columns_out_of_cdc_files(spark, tmp_path):
-    """The Spark change-data write (a VARIANT table's two-write
-    fallback, a DV table's DELETE) lays out CDC files like the fused
-    writer: partition values in ``k=v`` directories and on the
-    AddCDCFile action, never inside the file (load_cdf reads them as
-    directory values). Schemas are read with Spark: pyarrow cannot
-    read VARIANT footers."""
+    """The fused writer lays out CDC files for a VARIANT table's DELETE
+    and for a DV table's change-only DELETE alike: partition values in
+    ``k=v`` directories and on the AddCDCFile action, never inside the
+    file (load_cdf reads them as directory values). Schemas are read
+    with Spark, which reads the VARIANT column by its own name."""
     cdf = {"delta.enableChangeDataFeed": "true"}
     for name, extra, conf in (
         ("variant", ["parse_json(concat('{\"k\":', id, '}')) AS doc"], cdf),
@@ -288,6 +300,24 @@ def test_drop_cached_intermediates_releases_plan_pins(spark):
     n = drop_cached_intermediates(spark)
     assert n > 0
     assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_drop_cached_intermediates_clears_the_cache_manager(spark):
+    """A drop leaves no CacheManager entry behind, so a later frame
+    with a dropped pin's plan, never persisted itself, is not cached."""
+    from pyspark import StorageLevel
+
+    from delta_rs_spark.session import drop_cached_intermediates
+
+    def frame():
+        return spark.range(0, 50).selectExpr("id", "id * 3 AS v")
+
+    pinned = frame().persist()
+    pinned.count()
+    drop_cached_intermediates(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert frame().storageLevel == StorageLevel.NONE
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
 def test_rebalanced_writes_bound_output_file_count(spark, tmp_table, tmp_path):

@@ -1,10 +1,10 @@
 """Spark job counts of one-file mutations, counted by job-id range
 (conftest.spark_jobs), on every table shape that routes
-cdc.write_mutation differently: the fused data+CDF writer (CDF, with
-and without partitions), the data-only write (plain), the pinned
-two-write VARIANT fallback, and the deletion-vector tier — plus a
-row-tracking CDF table, whose rewrites fill row ids from a literal
-lookup and so run the CDF counts. Each bound
+cdc.write_mutation or its callers differently: the fused data+CDF
+writer (CDF, with and without partitions, and with VARIANT columns,
+which its tasks write too), the data-only write (plain), and the
+deletion-vector tier — plus a row-tracking CDF table, whose rewrites
+fill row ids from a literal lookup and so run the CDF counts. Each bound
 is the measured count: DELETE and UPDATE find their touched files in
 one job (operators.util.find_touched_files) and write without a
 rebalance, and their deletion-vector tier collects the matched rows'
@@ -32,8 +32,8 @@ _DV = {"delta.enableDeletionVectors": "true"}
 SHAPES = {
     "cdf": (_CDF, False, False, (2, 2, 5)),
     "plain": ({}, False, False, (2, 2, 5)),
-    "variant_cdf": (_CDF, True, False, (6, 6, 10)),
-    "variant_cdf_partitioned": (_CDF, True, True, (8, 8, 11)),
+    "variant_cdf": (_CDF, True, False, (2, 2, 5)),
+    "variant_cdf_partitioned": (_CDF, True, True, (3, 3, 6)),
     "dv_cdf": ({**_CDF, **_DV}, False, False, (2, 2, 9)),
     "dv_plain": (_DV, False, False, (1, 2, 9)),
     "cdf_partitioned": (_CDF, False, True, (3, 3, 6)),
@@ -100,7 +100,7 @@ def test_one_file_upsert_job_count(spark, tmp_path, monkeypatch, shape):
         .execute(),
     )
     assert (m["num_target_rows_updated"], m["num_target_rows_inserted"]) == (200, 200)
-    assert m["num_target_files_removed"] == 1
+    assert (m["num_target_files_removed"], m["num_target_files_added"]) == (1, 1)
     assert jobs <= SHAPES[shape][3][2], f"one-file upsert ran {jobs} Spark jobs"
     assert persistent_rdds(spark) == 0
     # the write reads the barrier window's exchange, which AQE coalesces;

@@ -273,8 +273,8 @@ def test_constraints_enforced_on_update_and_merge(spark, tmp_path, sample_df):
 )
 def test_failed_write_job_leaves_no_staging(spark, tmp_path, sample_df, cdf, variant):
     """A task failure inside the write job of an UPDATE or a MERGE (the
-    fused writer, the data-only write, the VARIANT two-write route)
-    leaves no staging dir — VACUUM never reclaims one — commits nothing
+    fused writer, with and without VARIANT columns, and the data-only
+    write) leaves no staging dir — VACUUM never reclaims one — commits nothing
     and leaves no pinned frame."""
     path = str(tmp_path / "t")
     write_deltalake(
